@@ -341,7 +341,7 @@ object AssembleTimed {
   }
 }
 
-/** Growable parallel buffers for (block_idx, block-array) pairs. */
+/** Growable parallel buffers for (offset, value-run) pairs. */
 final class BlockBuf(var idx: Array[Long], var blocks: Array[Array[Double]],
                      var n: Int) {
   def add(i: Long, b: Array[Double]): Unit = {
@@ -357,7 +357,7 @@ final class BlockBuf(var idx: Array[Long], var blocks: Array[Array[Double]],
 }
 
 object BlockBuf {
-  /** Packed wire format shared by the array-payload aggregates:
+  /** Packed wire format of the fragment buffer:
     * n, then n x (idx: Long, len: Int, len doubles). */
   def write(buf: BlockBuf): Array[Byte] = {
     var bytes = 4 + 12 * buf.n
@@ -396,45 +396,44 @@ object BlockBuf {
   }
 }
 
-/** Native block reassembly: collects (block_idx, values-array) pairs and
-  * emits the arrays CONCATENATED in block_idx order — the array-payload
-  * sibling of `assemble_series`, replacing the last
-  * `flatten(transform(array_sort(collect_list(struct(block_idx, block)))))`
-  * site (blocked-CAR segment reassembly). Groups there are small (nBlocks
-  * rows per segment), but array_sort runs Catalyst's INTERPRETED struct
-  * comparator per element pair and collect_list copies every block into an
-  * InternalRow first; this buffer keeps the block arrays primitive and
-  * places them by index in O(n) (block_idx is dense by construction —
-  * posexplode of a grouped() split). Gappy/duplicate indices (not produced
-  * by any caller, but contract-checked) fall back to a sort by
-  * (block_idx, insertion order). */
-/** Shared machinery for the (bigint, array<double>) → array<double> buffer
-  * aggregates ([[AssembleBlocks]] / [[AssembleFragments]]): same input
-  * contract and type check, same null policy (null key or null array = no
-  * slot, like collect_list; null ELEMENTS become NaN — the missing-sample
-  * encoding), same BlockBuf accumulation and wire format. Subclasses differ
-  * ONLY in eval's placement semantics (index-ordered concat vs offset-run
-  * placement) plus the case-class copy plumbing Catalyst requires. */
-abstract class BlockPairAggregate
+/** Native fragment assembly: inputs are (sample offset, packed value-run)
+  * pairs where each run covers offsets [off, off+len); eval emits the
+  * samples ordered by offset. Two callers: the reduce side of the two-level
+  * chunked ingest (`Windowing.windowLong`), and blocked-CAR segment
+  * reassembly, whose `blockSize`-sample blocks sit at offset
+  * `block_idx * blockSize`. Exactly `assemble_series`' semantics lifted
+  * from single samples to runs: a perfectly dense offset set (every slot in
+  * [minOff, maxEnd) written exactly once) places each run in O(len); gaps,
+  * overlaps, or duplicates fall back to a sort of the runs by (offset,
+  * insertion order) — for disjoint runs that is the same
+  * samples-sorted-by-t compaction assemble_series produces. Null policy
+  * like collect_list: a null offset or null run is no slot; null ELEMENTS
+  * become NaN, the missing-sample encoding. */
+case class AssembleFragments(off: Expression, vals: Expression,
+                             mutableAggBufferOffset: Int = 0,
+                             inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[BlockBuf] with BinaryLike[Expression] {
 
+  override def left: Expression = off
+  override def right: Expression = vals
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullable: Boolean = true
+  override def prettyName: String = "assemble_fragments"
 
-  override def checkInputDataTypes(): TypeCheckResult = right.dataType match {
-    case ArrayType(DoubleType, _) if left.dataType == LongType =>
+  override def checkInputDataTypes(): TypeCheckResult = vals.dataType match {
+    case ArrayType(DoubleType, _) if off.dataType == LongType =>
       TypeCheckResult.TypeCheckSuccess
     case _ => TypeCheckResult.TypeCheckFailure(
       s"$prettyName expects (bigint, array<double>), got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
+        s"(${off.dataType.simpleString}, ${vals.dataType.simpleString})")
   }
 
   override def createAggregationBuffer(): BlockBuf =
     new BlockBuf(new Array[Long](16), new Array[Array[Double]](16), 0)
 
   override def update(buf: BlockBuf, input: InternalRow): BlockBuf = {
-    val i = left.eval(input)
-    val v = right.eval(input)
+    val i = off.eval(input)
+    val v = vals.eval(input)
     if (i != null && v != null) {
       val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
       val out = new Array[Double](arr.numElements())
@@ -456,110 +455,6 @@ abstract class BlockPairAggregate
 
   override def serialize(buf: BlockBuf): Array[Byte] = BlockBuf.write(buf)
   override def deserialize(bytes: Array[Byte]): BlockBuf = BlockBuf.read(bytes)
-
-  /** Total sample count across all buffered blocks. */
-  protected final def totalLen(buf: BlockBuf): Long = {
-    var total = 0L
-    var i = 0
-    while (i < buf.n) { total += buf.blocks(i).length; i += 1 }
-    total
-  }
-
-  /** Shared cold path: runs sorted by (idx, insertion order) — boxed, but
-    * never taken by well-formed callers — then concatenated. */
-  protected final def sortedConcat(buf: BlockBuf, total: Long): Array[Double] = {
-    if (total > Int.MaxValue) throw new IllegalArgumentException(
-      s"$prettyName group holds $total samples; arrays cap at ${Int.MaxValue}")
-    concatByOrder(buf, Array.range(0, buf.n).sortBy(i => (buf.idx(i), i)), total.toInt)
-  }
-
-  /** Concatenate the buffered blocks in the given visit order. */
-  protected final def concatByOrder(buf: BlockBuf, order: Array[Int],
-                                    total: Int): Array[Double] = {
-    val out = new Array[Double](total)
-    var off = 0
-    var i = 0
-    while (i < buf.n) {
-      val b = buf.blocks(order(i))
-      System.arraycopy(b, 0, out, off, b.length)
-      off += b.length
-      i += 1
-    }
-    out
-  }
-}
-
-case class AssembleBlocks(blockIdx: Expression, block: Expression,
-                          mutableAggBufferOffset: Int = 0,
-                          inputAggBufferOffset: Int = 0)
-  extends BlockPairAggregate {
-
-  override def left: Expression = blockIdx
-  override def right: Expression = block
-  override def prettyName: String = "assemble_blocks"
-
-  override def eval(buf: BlockBuf): Any = {
-    val n = buf.n
-    if (n == 0) return null
-    var minI = Long.MaxValue
-    var maxI = Long.MinValue
-    var i = 0
-    while (i < n) {
-      val v = buf.idx(i)
-      if (v < minI) minI = v
-      if (v > maxI) maxI = v
-      i += 1
-    }
-    var order: Array[Int] = null
-    if (maxI - minI + 1 == n) {
-      // dense indices: O(n) placement, duplicate detection like AssembleSeries
-      val slotOf = new Array[Int](n)
-      val seen = new Array[Boolean](n)
-      var dense = true
-      i = 0
-      while (dense && i < n) {
-        val s = (buf.idx(i) - minI).toInt
-        if (seen(s)) dense = false
-        else { seen(s) = true; slotOf(s) = i }
-        i += 1
-      }
-      if (dense) order = slotOf
-    }
-    val total = totalLen(buf)
-    // gappy or duplicated block_idx -> shared cold contract-violation path
-    // (which also owns the arrays-cap guard)
-    val out = if (order != null && total <= Int.MaxValue)
-                concatByOrder(buf, order, total.toInt)
-              else sortedConcat(buf, total)
-    UnsafeArrayData.fromPrimitiveArray(out)
-  }
-
-  override def withNewMutableAggBufferOffset(offset: Int): AssembleBlocks =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): AssembleBlocks =
-    copy(inputAggBufferOffset = offset)
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): AssembleBlocks =
-    copy(blockIdx = newLeft, block = newRight)
-}
-
-/** Native fragment assembly — the reduce side of the two-level chunked
-  * ingest (`Windowing.windowLong`): inputs are (sample offset, packed
-  * value-run) pairs where each run covers offsets [off, off+len); eval
-  * emits the samples ordered by offset. Exactly `assemble_series`'
-  * semantics lifted from single samples to runs: a perfectly dense offset
-  * set (every slot in [minOff, maxEnd) written exactly once) places each
-  * run in O(len); gaps, overlaps, or duplicates fall back to a sort of the
-  * runs by (offset, insertion order) — for disjoint runs that is the same
-  * samples-sorted-by-t compaction assemble_series produces. */
-case class AssembleFragments(off: Expression, vals: Expression,
-                             mutableAggBufferOffset: Int = 0,
-                             inputAggBufferOffset: Int = 0)
-  extends BlockPairAggregate {
-
-  override def left: Expression = off
-  override def right: Expression = vals
-  override def prettyName: String = "assemble_fragments"
 
   override def eval(buf: BlockBuf): Any = {
     val n = buf.n
@@ -602,7 +497,7 @@ case class AssembleFragments(off: Expression, vals: Expression,
       if (ok) out = placed
     }
     if (out == null) {
-      // gappy/overlapping runs: shared cold path, runs sorted by (offset,
+      // gappy/overlapping runs: cold path, runs sorted by (offset,
       // insertion order). CONTRACT: overlap input (duplicate t_idx upstream)
       // is malformed; the fallback orders at RUN granularity only — whole
       // runs concatenate in (offset, arrival) order, samples are not
@@ -612,6 +507,24 @@ case class AssembleFragments(off: Expression, vals: Expression,
       out = sortedConcat(buf, total)
     }
     UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  /** Runs sorted by (offset, insertion order) — boxed, but never taken by
+    * well-formed callers — then concatenated. */
+  private def sortedConcat(buf: BlockBuf, total: Long): Array[Double] = {
+    if (total > Int.MaxValue) throw new IllegalArgumentException(
+      s"$prettyName group holds $total samples; arrays cap at ${Int.MaxValue}")
+    val order = Array.range(0, buf.n).sortBy(i => (buf.idx(i), i))
+    val out = new Array[Double](total.toInt)
+    var pos = 0
+    var i = 0
+    while (i < buf.n) {
+      val b = buf.blocks(order(i))
+      System.arraycopy(b, 0, out, pos, b.length)
+      pos += b.length
+      i += 1
+    }
+    out
   }
 
   override def withNewMutableAggBufferOffset(offset: Int): AssembleFragments =
@@ -639,10 +552,6 @@ object SeriesAssembleFunctions {
       exprs => AssembleTimed(exprs(0), exprs(1), exprs(2)),
       "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "assemble_blocks",
-      exprs => AssembleBlocks(exprs(0), exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "assemble_fragments",
       exprs => AssembleFragments(exprs(0), exprs(1)),
       "built-in")
@@ -660,14 +569,6 @@ object SeriesAssembleFunctions {
                     ts: Column, eventId: Column, value: Column): Column = {
     register(spark)
     call_function("assemble_timed", ts, eventId, value)
-  }
-
-  /** block arrays concatenated in blockIdx order (O(n) placement when
-    * blockIdx is dense). */
-  def assembleBlocks(spark: org.apache.spark.sql.SparkSession,
-                     blockIdx: Column, block: Column): Column = {
-    register(spark)
-    call_function("assemble_blocks", blockIdx, block)
   }
 
   /** value-runs placed by sample offset (O(n) when offsets tile densely). */

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Column, Row}
 import org.apache.spark.sql.functions._
 
+import graft.store.NwbStore.isSingle
+
 /** Common average referencing — the engine's flagship cross-channel
   * aggregate, in pure Spark SQL (no UDF, fully codegen-able).
   *
@@ -90,19 +92,6 @@ object CommonReferencing {
       .withColumn("value", diff)
       .drop("car")
   }
-
-  /** `precision` knob shared by every CAR form — the reference threads
-    * `precision` through CAR itself (common_referencing.py:11-23 via
-    * utils.py:9-31): 'single' casts inputs to float32 and ACCUMULATES the
-    * trimmed nanmean in float32; 'double' (our default) keeps float64 so
-    * results stay exactly reproducible against float64 oracles. */
-  private[graft] def isSingle(precision: String): Boolean =
-    precision.toLowerCase match {
-      case "single" => true
-      case "double" => false
-      case other => throw new IllegalArgumentException(
-        s"`precision` should be either `single` or `double`. Got $other.")
-    }
 
   /** Long-form CAR at scale: pack the long frame into bounded disjoint
     * windows (Windowing.windowLong, context 0 — the trimmed mean is
@@ -199,15 +188,16 @@ object CommonReferencing {
   }
 
   /** Reassemble per-key segments from blocks in block order — native
-    * assemble_blocks (packed buffers, O(n) dense placement), not
+    * assemble_fragments with each block placed at sample offset
+    * `block_idx * blockSize` (packed buffers, O(n) dense placement), not
     * array_sort(collect_list(struct)) with its interpreted per-pair struct
     * comparator. Groups here are small (nBlocks rows), but this sits on the
     * reassembly path of every blocked-CAR query. */
-  private def reassemble(blocks: DataFrame, keys: Seq[String]): DataFrame =
+  private def reassemble(blocks: DataFrame, keys: Seq[String], blockSize: Int): DataFrame =
     blocks
       .groupBy(keys.head, keys.tail: _*)
-      .agg(graft.functions.SeriesAssembleFunctions.assembleBlocks(
-        blocks.sparkSession, col("block_idx").cast("long"), col("block"))
+      .agg(graft.functions.SeriesAssembleFunctions.assembleFragments(
+        blocks.sparkSession, col("block_idx").cast("long") * blockSize, col("block"))
         .as("values"))
 
   /** Subtract CAR on a SegmentFrame via fixed-size time blocks instead of
@@ -248,7 +238,7 @@ object CommonReferencing {
       .select(col("series"), col("cb._1").as("channel"), col("band"),
         col("rate"), col("startingTime"), col("block_idx"), col("cb._2").as("block"))
 
-    reassemble(referenced, Seq("series", "channel", "band", "rate", "startingTime"))
+    reassemble(referenced, Seq("series", "channel", "band", "rate", "startingTime"), blockSize)
   }
 
   /** The CAR trace itself as a channel-less SegmentFrame (channel = null) —
@@ -273,7 +263,7 @@ object CommonReferencing {
       .agg(collect_list(struct(col("channel"), col("block"))).as("chBlocks"))
       .select(col("series"), col("band"), col("rate"), col("startingTime"),
         col("block_idx"), carUdf(col("chBlocks")).as("block"))
-    reassemble(carBlocks, Seq("series", "band", "rate", "startingTime"))
+    reassemble(carBlocks, Seq("series", "band", "rate", "startingTime"), blockSize)
       .select(col("series"), lit(null).cast("int").as("channel"), col("band"),
         col("rate"), col("startingTime"), col("values"))
   }

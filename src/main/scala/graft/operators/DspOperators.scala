@@ -6,6 +6,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import graft.dsp.{Signal, Signal32, Kernels}
 import graft.dsp.Signal.{PadSpec, FastPad}
+import graft.store.NwbStore.isSingle
 
 /** The per-segment spectral operators: each is a narrow `DataFrame =>
   * DataFrame` map over SegmentFrame rows (no shuffle), with the FFT math in
@@ -15,10 +16,6 @@ import graft.dsp.Signal.{PadSpec, FastPad}
   * expressions so codegen and pushdown keep working.
   */
 object DspOperators {
-
-  private def requirePrecision(precision: String): Unit =
-    require(precision == "single" || precision == "double",
-      s"`precision` should be either `single` or `double`. Got $precision.")
 
   /** Cast a trace to float32 with an optional pre-scale — the reference's
     * `X.astype(dtype(X, precision))` entry cast (utils.py:9-31). */
@@ -46,9 +43,8 @@ object DspOperators {
     * Ref semantics: /root/reference/src/process_nwb/resample.py:105-153. */
   def resample(segments: DataFrame, newFreq: Double, npad: PadSpec = FastPad,
                preScale: Double = 1.0, precision: String = "double"): DataFrame = {
-    requirePrecision(precision)
     val f =
-      if (precision == "single") udf { (values: Array[Double], rate: Double) =>
+      if (isSingle(precision)) udf { (values: Array[Double], rate: Double) =>
         toF64(Signal32.resample(toF32(values, preScale), newFreq, rate, npad))
       }
       else udf { (values: Array[Double], rate: Double) =>
@@ -73,9 +69,8 @@ object DspOperators {
                           npad: PadSpec = FastPad,
                           continuousProfile: Boolean = false,
                           precision: String = "double"): DataFrame = {
-    requirePrecision(precision)
     val f =
-      if (precision == "single") udf { (values: Array[Double], rate: Double) =>
+      if (isSingle(precision)) udf { (values: Array[Double], rate: Double) =>
         toF64(Signal32.notch(toF32(values, 1.0), rate, noiseHz, npad, continuousProfile))
       }
       else udf { (values: Array[Double], rate: Double) =>
@@ -155,9 +150,8 @@ object DspOperators {
                        hgOnly: Boolean = true, npad: PadSpec = FastPad,
                        fftNormLength: Option[Int] = None,
                        precision: String = "double"): DataFrame = {
-    requirePrecision(precision)
     val f =
-      if (precision == "single") udf { (values: Array[Double], rate: Double) =>
+      if (isSingle(precision)) udf { (values: Array[Double], rate: Double) =>
         val plan = Signal.padPlan(values.length, npad)
         val padded = values.length + plan.padTotal
         val fb = cachedFilterbank(filters, padded, rate, hgOnly)
@@ -203,13 +197,12 @@ object DspOperators {
                        kernels: Seq[Option[(Int, Double) => Array[Double]]],
                        npad: PadSpec, fftNormLength: Option[Int],
                        precision: String): DataFrame = {
-    requirePrecision(precision)
     def built(n: Int, rate: Double): Array[Array[Double]] = kernels.map {
       case Some(build) => Kernels.l2Normalize(build(n, rate))
       case None        => null
     }.toArray
     val f =
-      if (precision == "single") udf { (values: Array[Double], rate: Double) =>
+      if (isSingle(precision)) udf { (values: Array[Double], rate: Double) =>
         val plan = Signal.padPlan(values.length, npad)
         val n = values.length + plan.padTotal
         val scale = fftNormLength.fold(1.0)(ref => math.sqrt(n.toDouble / ref))
@@ -275,10 +268,9 @@ object DspOperators {
     * period should offset past the edge. */
   def zscoreSegments(segments: DataFrame, baselineSamples: Int,
                      precision: String, baselineOffset: Int): DataFrame = {
-    requirePrecision(precision)
     require(baselineOffset >= 0, s"negative baselineOffset: $baselineOffset")
     val f =
-      if (graft.operators.CommonReferencing.isSingle(precision))
+      if (isSingle(precision))
         // float32 compute (reference precision='single', utils.py:9-31):
         // two-pass mean/std like np.mean/np.std over a float32 array —
         // the one-pass s2/n - mu^2 form cancels catastrophically in f32

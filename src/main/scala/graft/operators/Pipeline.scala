@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.dsp.Signal.{PadSpec, FastPad}
 import graft.model.Frames
+import graft.store.NwbStore
 
 /** The end-to-end preprocessing pipeline — the engine's equivalent of
   * `preprocess_block` (/root/reference/src/process_nwb/pipelines.py:15-111):
@@ -14,9 +15,11 @@ import graft.model.Frames
   * The reference's `all_steps=False` "fused in-memory path"
   * (pipelines.py:83-98) is simply Catalyst's lazy DAG here: nothing
   * materializes until a sink runs. Its `all_steps=True` materializing path is
-  * `Store.*` writing each intermediate. Its chunked deferred execution
-  * (SURVEY.md §3.3) is Spark's native partition-parallel execution over
-  * channel rows.
+  * `Store.storePreprocessBlock`, the only writer of the four derived tables.
+  * The folder driver (`graft.tools.PreprocessFolder`, the reference's
+  * scripts/preprocess_folder) is a loop over these two and runs no operator
+  * itself. Its chunked deferred execution (SURVEY.md §3.3) is Spark's native
+  * partition-parallel execution over channel rows.
   */
 object Pipeline {
 
@@ -70,7 +73,7 @@ object Pipeline {
   def highGammaTrace(waveletAmp: DataFrame, baselineSamples: Int = 125,
                      precision: String = "double"): DataFrame = {
     val z = DspOperators.zscoreSegments(waveletAmp, baselineSamples, precision)
-    val single = precision == "single"
+    val single = NwbStore.isSingle(precision)
     val avgBands = udf { (rows: Seq[org.apache.spark.sql.Row]) =>
       val byBand = rows.map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
       val n = byBand.map(_._2.length).min
@@ -110,36 +113,47 @@ object Pipeline {
   }
 }
 
-/** Parquet sink with the reference's derived-series naming convention
-  * (`downsampled_`, `CAR_ln_`, `wvlt_amp_`, `wvlt_phase_` prefixes —
-  * SURVEY.md S3): each store writes one table under
-  * `<root>/preprocessing/<prefix><series>` and returns the frame for further
-  * chaining, mirroring the `store_*` functions' transform+write+return shape.
+/** The all-steps writer — the reference's `store_*` functions and the only
+  * code that materializes the derived series: each store writes one table
+  * through [[graft.store.NwbStore]] under `<root>/preprocessing/<prefix><series>`
+  * with the reference's naming convention (`downsampled_`, `CAR_ln_`,
+  * `wvlt_amp_`, `wvlt_phase_` prefixes — SURVEY.md S3) and returns the frame
+  * for further chaining, mirroring the `store_*` functions'
+  * transform+write+return shape. `precision` applies at storage too
+  * (`NwbStore.withPrecision`: float32 tables under "single"); wavelet tables
+  * are partitioned by channel.
   */
 object Store {
 
-  def write(df: DataFrame, root: String, name: String,
-            partitionCols: Seq[String] = Seq.empty): DataFrame = {
-    val w = df.write.mode("overwrite").option("compression", "zstd")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(s"$root/preprocessing/$name")
-    df
+  private def write(df: DataFrame, root: String, name: String, precision: String,
+                    partitionByChannel: Boolean = false): NwbStore = {
+    val store = new NwbStore(root, df.sparkSession)
+    store.writeProcessing(name, NwbStore.withPrecision(df, precision), partitionByChannel)
+    store
   }
 
   /** Write, then return the STORED table (a parquet scan) rather than the
     * input's lazy lineage: chained consumers re-read the materialized
     * bytes instead of re-running the upstream FFT chain — which also makes
-    * it safe to unpersist any cache that fed the write. */
-  private def writeRead(df: DataFrame, root: String, name: String): DataFrame = {
-    write(df, root, name)
-    df.sparkSession.read.parquet(s"$root/preprocessing/$name")
+    * it safe to unpersist any cache that fed the write. The read-back keeps
+    * the input's column order (a partition column reads back last) and
+    * widens float32 storage back to array<double> — exact, since
+    * single-precision ops emit float32-representable values — so every
+    * chained step computes on the values it would have received in memory. */
+  private def writeRead(df: DataFrame, root: String, name: String, precision: String,
+                        partitionByChannel: Boolean = false): DataFrame = {
+    val back = write(df, root, name, precision, partitionByChannel).readProcessing(name)
+    back.select(df.columns.map(back(_)): _*)
+      .withColumn("values", col("values").cast("array<double>"))
   }
 
   def storeResample(raw: DataFrame, root: String, series: String, newFreq: Double,
                     npad: PadSpec = FastPad, preScale: Double = 1.0,
-                    precision: String = "double"): DataFrame =
-    write(DspOperators.resample(raw, newFreq, npad, preScale, precision),
-      root, s"downsampled_$series")
+                    precision: String = "double"): DataFrame = {
+    val resampled = DspOperators.resample(raw, newFreq, npad, preScale, precision)
+    write(resampled, root, s"downsampled_$series", precision)
+    resampled
+  }
 
   /** `store_subtract_CAR` parity (common_referencing.py:71-129): writes the
     * referenced data as `CAR_<series>` and the average itself as the
@@ -154,9 +168,9 @@ object Store {
     val cached = segments.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     try {
       write(CommonReferencing.carSegments(cached, nChannels, meanFrac, roundFunc = roundFunc,
-        precision = precision), root, "CAR")
+        precision = precision), root, "CAR", precision)
       writeRead(CommonReferencing.subtractCarSegments(cached, nChannels, meanFrac,
-        roundFunc = roundFunc, precision = precision), root, s"CAR_$series")
+        roundFunc = roundFunc, precision = precision), root, s"CAR_$series", precision)
     } finally cached.unpersist()
   }
 
@@ -174,9 +188,9 @@ object Store {
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     try {
       write(CommonReferencing.carSegments(notched, nChannels, meanFrac, roundFunc = roundFunc,
-        precision = precision), root, s"CAR_of_$series")
+        precision = precision), root, s"CAR_of_$series", precision)
       writeRead(CommonReferencing.subtractCarSegments(notched, nChannels, meanFrac,
-        roundFunc = roundFunc, precision = precision), root, s"CAR_ln_$series")
+        roundFunc = roundFunc, precision = precision), root, s"CAR_ln_$series", precision)
     } finally notched.unpersist()
   }
 
@@ -188,7 +202,8 @@ object Store {
     * `wvlt_amp_CAR_ln_downsampled_S`. Every Config field the in-memory
     * `Pipeline.preprocessBlock` honors (rates, filters, meanFrac, noiseHz,
     * npad, scaling, precision) is threaded through the stores, so the
-    * stored tables equal the functional path's intermediates. Returns the
+    * stored tables equal the functional path's intermediates (stored as
+    * float32 under "single"). Returns the
     * amplitude frame (read from its stored table). */
   def storePreprocessBlock(raw: DataFrame, root: String, series: String, nChannels: Int,
                            config: Pipeline.Config = Pipeline.Config()): DataFrame = {
@@ -230,12 +245,14 @@ object Store {
       val amp = DspOperators.amplitude(wvlt)
       writeRead(postResampleRate.fold(amp)(fr =>
           DspOperators.resample(amp, fr, npad, precision = precision)),
-        root, s"wvlt_amp_$series")
+        root, s"wvlt_amp_$series", precision, partitionByChannel = true)
     } else {
       val cached = wvlt.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
       try {
-        val amp = writeRead(DspOperators.amplitude(cached), root, s"wvlt_amp_$series")
-        write(DspOperators.phase(cached), root, s"wvlt_phase_$series")
+        val amp = writeRead(DspOperators.amplitude(cached), root, s"wvlt_amp_$series",
+          precision, partitionByChannel = true)
+        write(DspOperators.phase(cached), root, s"wvlt_phase_$series", precision,
+          partitionByChannel = true)
         amp
       } finally cached.unpersist()
     }

@@ -134,16 +134,23 @@ final class NwbStore(val root: String, spark: SparkSession) {
 
 object NwbStore {
 
-  /** Precision cast at the storage boundary — the reference's
-    * `precision='single'` mode (utils.py:9-31): compute in double, store
-    * float32. */
-  def withPrecision(df: DataFrame, precision: String): DataFrame = precision match {
-    case "double" => df
-    case "single" =>
-      if (df.columns.contains("values"))
-        df.withColumn("values", col("values").cast("array<float>"))
-      else df.withColumn("value", col("value").cast("float"))
+  /** The one precision rule, shared by every op with a `precision`
+    * argument and by the storage cast: the reference's `dtype(X, precision)`
+    * (utils.py:9-31) accepts exactly `single` (float32) or `double`
+    * (float64), case-sensitively, and rejects anything else. */
+  private[graft] def isSingle(precision: String): Boolean = precision match {
+    case "single" => true
+    case "double" => false
     case other => throw new IllegalArgumentException(
       s"`precision` should be either `single` or `double`. Got $other.")
   }
+
+  /** Precision cast at the storage boundary — the reference's
+    * `precision='single'` mode (utils.py:9-31): compute in double, store
+    * float32. */
+  def withPrecision(df: DataFrame, precision: String): DataFrame =
+    if (!isSingle(precision)) df
+    else if (df.columns.contains("values"))
+      df.withColumn("values", col("values").cast("array<float>"))
+    else df.withColumn("value", col("value").cast("float"))
 }

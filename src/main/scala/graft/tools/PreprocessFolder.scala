@@ -2,19 +2,25 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import graft.store.NwbStore
-import graft.operators.{Pipeline, DspOperators, CommonReferencing}
-import graft.model.Frames
+import graft.operators.{Pipeline, Store}
 
-/** Folder driver — the engine's `scripts/preprocess_folder`: map the full
-  * preprocessing pipeline over every session store under a root directory.
-  * Where the reference loops files serially in one process, each session
-  * here is one lazy Spark DAG over partition-parallel channel rows; sessions
-  * are independent so a scheduler can also run them concurrently.
+/** Folder driver — the engine's `scripts/preprocess_folder`: a loop over
+  * every session store under a root directory that hands each one to the
+  * library's single preprocessing chain and runs no operator itself. By
+  * default it writes `Pipeline.preprocessBlock`'s fused result (the
+  * reference's all_steps=False); with --all-steps it calls
+  * `Store.storePreprocessBlock`, the only all-steps writer. Raw data is not
+  * rescaled. Where the reference loops files serially in one process, each
+  * session here is one lazy Spark DAG over partition-parallel channel rows;
+  * sessions are independent so a scheduler can also run them concurrently.
   *
   * Usage: PreprocessFolder <root> [--initial-rate R] [--final-rate R]
   *        [--filters rat|human|changlab] [--all-steps] [--acq-name NAME]
   *        [--precision single|double]
   * <root> contains one subdirectory per session, each an NwbStore layout.
+  * Tables land in the session's preprocessing namespace under the
+  * reference's accreted names; the fused path writes only
+  * `wvlt_amp_CAR_ln_downsampled_<acq>`, partitioned by channel.
   */
 object PreprocessFolder {
 
@@ -40,44 +46,20 @@ object PreprocessFolder {
     a
   }
 
-  /** One session: resample -> store; notch+CAR -> store (fused like the
-    * reference's store_linenoise_notch_CAR); wavelet amplitude -> store. */
+  /** One session: `--precision` selects the compute precision of every
+    * step and the storage width of every table. */
   def preprocessStore(store: NwbStore, a: Args): Unit = {
     val raw = store.readAcquisition(a.acqName)
     val nCh = raw.select("channel").distinct().count().toInt
-    val cast = (df: org.apache.spark.sql.DataFrame) => NwbStore.withPrecision(df, a.precision)
-
-    // --precision single runs the reference's float32 COMPUTE mode through
-    // the spectral ops (utils.py:9-31), not just the storage cast
-    val down = DspOperators.resample(raw, a.initialRate, precision = a.precision)
-    val notched = DspOperators.applyLinenoiseNotch(down, precision = a.precision)
-    val referenced = CommonReferencing.subtractCarSegments(notched, nCh)
-    val amp = DspOperators.amplitude(
-      DspOperators.waveletTransform(referenced, a.filters, hgOnly = true,
-        precision = a.precision))
-    val ampResampled = DspOperators.resample(amp, a.finalRate, precision = a.precision)
-
-    def writeWavelet(): Unit =
+    val config = Pipeline.Config(initialRate = a.initialRate, finalRate = Some(a.finalRate),
+      filters = a.filters, scaling = 1.0, precision = a.precision)
+    if (a.allSteps) Store.storePreprocessBlock(raw, store.root, a.acqName, nCh, config)
+    else
       // reference naming accretes the consumed series name:
       // wvlt_amp_ + CAR_ln_downsampled_<acq> (wavelet_transform.py:389,410)
-      store.writeProcessing(s"wvlt_amp_CAR_ln_downsampled_${a.acqName}", cast(ampResampled),
+      store.writeProcessing(s"wvlt_amp_CAR_ln_downsampled_${a.acqName}",
+        NwbStore.withPrecision(Pipeline.preprocessBlock(raw, nCh, config), a.precision),
         partitionByChannel = true)
-
-    if (a.allSteps) {
-      // three consumers share the resample+notch lineage (CAR_ln write,
-      // CAR_of write, wavelet chain): persist it for the duration so the
-      // most expensive FFT pass runs once, like Store.storeLinenoiseNotchCar
-      val cached = notched.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      try {
-        store.writeProcessing(s"downsampled_${a.acqName}", cast(down))
-        // reference's store_linenoise_notch_CAR writes the referenced data
-        // AND the CAR average itself (pipelines.py:148-170)
-        store.writeProcessing(s"CAR_ln_downsampled_${a.acqName}", cast(referenced))
-        store.writeProcessing(s"CAR_of_downsampled_${a.acqName}",
-          cast(CommonReferencing.carSegments(cached, nCh)))
-        writeWavelet()
-      } finally cached.unpersist()
-    } else writeWavelet()
   }
 
   def main(argv: Array[String]): Unit = {

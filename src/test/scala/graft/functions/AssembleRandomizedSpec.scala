@@ -84,7 +84,10 @@ class AssembleRandomizedSpec extends AnyFunSuite {
     assert(got.getSeq[Long](1) == model.map(_._1))
   }
 
-  test("assemble_blocks concatenates in block_idx order on random splits") {
+  // blocked-CAR reassembly feeds assemble_fragments fixed-size blocks at
+  // offset block_idx * blockSize; with variable-length blocks placed at
+  // idx * (max block length) most groups take the gappy cold path
+  test("assemble_fragments concatenates blocks at idx x max-length offsets on random splits") {
     val rnd = new scala.util.Random(20260813L)
     for (trial <- 0 until 25) {
       val nBlocks = 1 + rnd.nextInt(40)
@@ -92,22 +95,24 @@ class AssembleRandomizedSpec extends AnyFunSuite {
       val blocks = (0 until nBlocks).map { i =>
         (i.toLong, Array.fill(1 + rnd.nextInt(20))(rnd.nextInt(1000) / 7.0))
       }
+      val maxLen = blocks.map(_._2.length).max
       val model = blocks.sortBy(_._1).flatMap(_._2)
       val parts = 1 + rnd.nextInt(7)
-      val got = rnd.shuffle(blocks).toDF("block_idx", "block").repartition(parts)
+      val got = rnd.shuffle(blocks).map { case (i, b) => (i * maxLen, b) }
+        .toDF("off", "block").repartition(parts)
         .groupBy(lit(1))
-        .agg(SeriesAssembleFunctions.assembleBlocks(spark, $"block_idx", $"block")
+        .agg(SeriesAssembleFunctions.assembleFragments(spark, $"off", $"block")
           .as("values"))
         .head().getSeq[Double](1)
       assert(got == model, s"trial $trial (nBlocks=$nBlocks, parts=$parts)")
     }
   }
 
-  test("assemble_blocks survives gappy and offset block indices (cold path)") {
+  test("assemble_fragments survives gappy and offset block indices (cold path)") {
     val blocks = Seq((7L, Array(1.0, 2.0)), (3L, Array(3.0)), (12L, Array(4.0, 5.0)))
-    val got = blocks.toDF("block_idx", "block")
+    val got = blocks.map { case (i, b) => (i * 2, b) }.toDF("off", "block")
       .groupBy(lit(1))
-      .agg(SeriesAssembleFunctions.assembleBlocks(spark, $"block_idx", $"block")
+      .agg(SeriesAssembleFunctions.assembleFragments(spark, $"off", $"block")
         .as("values"))
       .head().getSeq[Double](1)
     assert(got == Seq(3.0, 1.0, 2.0, 4.0, 5.0))

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 /** Scale soak (dev main, not a test): drives the 100 TB ingest shape —
   * LongFrame -> windowLong (bounded windows, ONE sample shuffle) -> blocked
   * CAR -> notch -> wavelet amplitude -> crossfade stitch — at 64 ch x 10 M
-  * samples (640 M points), an order of magnitude past PerfSmoke, and
+  * samples (640 M points), an order of magnitude past 64 ch x 1 M, and
   * measures what the plan-level scale arguments only reason about:
   * per-stage wall time, the max single task duration (stragglers/skew), max
   * task result size (driver materialization guard), and shuffle volume.

@@ -317,8 +317,10 @@ class SparkOperatorsSpec extends AnyFunSuite {
     val hgD = collectTraces(Pipeline.highGammaTrace(ampBands, 125))
     assert(hgS.values.forall(isF32), "single high-gamma trace not float32-valued")
     close(hgS, hgD, "high-gamma band average")
-    intercept[IllegalArgumentException](
-      CommonReferencing.subtractCarSegments(raw, 8, precision = "half"))
+    // the reference's precision rule is case-sensitive: "Single" is rejected too
+    for (bad <- Seq("half", "Single"))
+      intercept[IllegalArgumentException](
+        CommonReferencing.subtractCarSegments(raw, 8, precision = bad))
   }
 
   test("bucketed dense index equals single-window row_number") {

@@ -110,6 +110,32 @@ class StoreAndStreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("folder driver: fused wavelet table == Pipeline.preprocessBlock unscaled, both precisions") {
+    import graft.operators.Pipeline
+    val raw = Synthetic.segments(spark, 1.0, 4, 2000.0, seed = 13)
+    def traces(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("channel"), col("band"), col("values").cast("array<double>")).collect()
+        .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2)).toMap
+    for (precision <- Seq("double", "single")) {
+      val root = Files.createTempDirectory("fused").toString
+      graft.streaming.StreamingOps.deleteOnExit(java.nio.file.Paths.get(root))
+      val store = new NwbStore(s"$root/sess0", spark)
+      store.writeAcquisition("ECoG", raw)
+      PreprocessFolder.preprocessStore(store, PreprocessFolder.parse(Array(root,
+        "--initial-rate", "1000", "--final-rate", "250", "--filters", "human",
+        "--precision", precision)))
+      val expected = NwbStore.withPrecision(Pipeline.preprocessBlock(raw, 4,
+        Pipeline.Config(initialRate = 1000.0, finalRate = Some(250.0), filters = "human",
+          scaling = 1.0, precision = precision)), precision)
+      val stored = traces(store.readProcessing("wvlt_amp_CAR_ln_downsampled_ECoG"))
+      val want = traces(expected)
+      val differing = want.keys.count(k => !stored.get(k).contains(want(k)))
+      assert(want.nonEmpty && stored.keySet == want.keySet)
+      assert(differing == 0, s"driver diverges from preprocessBlock at precision $precision: " +
+        s"$differing of ${want.size} traces differ")
+    }
+  }
+
   test("storeSubtractCar: CAR_<s> + literal CAR tables; CAR trace reconstructs the subtraction") {
     import graft.operators.{Store, CommonReferencing}
     val root = Files.createTempDirectory("subcar").toString
