@@ -4,19 +4,17 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{AssembleSeries, AssembleTimed, ComplexAmplitude, ComplexPhase, FloorDotE9, RewriteFloorDotE9, TrimmedMeanNan}
+import graft.functions.{AssembleSeries, AssembleTimed, ComplexAmplitude, ComplexPhase, FloorDotE9, RewriteFloorDotE9}
 
 /** Library integration point for `spark.sql.extensions=graft.GraftExtensions`
   * (or `SparkSession.builder().withExtensions(new GraftExtensions)`):
   * injects the engine's native Catalyst functions into the session's
   * function registry at build time, so pure-SQL users get them without the
   * per-DataFrame registration the Column API performs lazily
-  * (ComplexArrayFunctions.register / TrimmedMeanFunctions.register).
+  * (ComplexArrayFunctions.register / SeriesAssembleFunctions.register).
   *
   *  - `complex_amplitude(re, im)` / `complex_phase(re, im)` — codegen
   *    elementwise |z| / arg(z) over parallel double arrays
-  *  - `trimmed_mean_nan(value, nExclude[, nKeep[, single]])` — one-pass
-  *    trimmed nanmean aggregate (the CAR aggregate)
   *  - `assemble_series(t_idx, value)` — packed-buffer series assembly
   *    ordered by t_idx (O(n) placement for dense indices)
   *  - `assemble_timed(ts, event_id, value)` — packed-buffer assembly
@@ -45,13 +43,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("complex_phase"),
       new ExpressionInfo(classOf[ComplexPhase].getName, "complex_phase"),
       (exprs: Seq[Expression]) => ComplexPhase(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("trimmed_mean_nan"),
-      new ExpressionInfo(classOf[TrimmedMeanNan].getName, "trimmed_mean_nan"),
-      (exprs: Seq[Expression]) => TrimmedMeanNan(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        if (exprs.length > 2) exprs(2).eval().asInstanceOf[Number].intValue() else -1,
-        if (exprs.length > 3) exprs(3).eval().asInstanceOf[Boolean] else false)))
     ext.injectFunction((
       FunctionIdentifier("assemble_series"),
       new ExpressionInfo(classOf[AssembleSeries].getName, "assemble_series"),

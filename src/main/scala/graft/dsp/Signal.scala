@@ -260,9 +260,11 @@ object Signal {
 
   /** Trimmed mean across one time-point's channel values: sort, drop
     * nExclude from each end, mean the middle (NaNs excluded like np.nanmean).
-    * Ref: `CAR` common_referencing.py:11-42. Used by the pure-Scala spec
-    * oracle; the Spark operator expresses the same thing in SQL. */
+    * Ref: `CAR` common_referencing.py:11-42. The plain-Scala reference the
+    * specs check the blocked Spark kernel (CommonReferencing) against;
+    * `meanFrac` outside (0, 1] is rejected by both. */
   def trimmedMean(values: Array[Double], meanFrac: Double = 0.95): Double = {
+    require(meanFrac > 0.0 && meanFrac <= 1.0, s"mean_frac=$meanFrac outside (0, 1]")
     val clean = values.filterNot(_.isNaN)
     val n = values.length
     if (meanFrac == 1.0) return clean.sum / clean.length

@@ -67,8 +67,8 @@ case class AssembleSeries(tIdx: Expression, value: Expression,
     val v = value.eval(input)
     // null t_idx = no slot: skip. null VALUE at a real slot = missing
     // sample: keep the position as NaN (dropping it would silently shift
-    // every later sample; the join-form CAR legitimately yields nulls for
-    // absent channels, and NaN is the reference's missing-sample encoding)
+    // every later sample; a left join legitimately yields nulls for
+    // absent rows, and NaN is the reference's missing-sample encoding)
     if (t != null)
       buf.add(t.asInstanceOf[Long],
         if (v == null) Double.NaN else v.asInstanceOf[Double])
@@ -536,7 +536,7 @@ case class AssembleFragments(off: Expression, vals: Expression,
     copy(off = newLeft, vals = newRight)
 }
 
-/** Column API + SQL registration, same pattern as TrimmedMeanFunctions.
+/** Column API + SQL registration, same pattern as ComplexArrayFunctions.
   * Registration is unguarded: createOrReplaceTempFunction is idempotent and
   * per-session, so "already registered" bookkeeping (which would need a
   * session identity key) buys nothing. */

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Column}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 import java.util.concurrent.ConcurrentHashMap
 
@@ -120,7 +121,7 @@ object DspOperators {
     }
 
   private def explodeBands(segments: DataFrame,
-                           f: org.apache.spark.sql.expressions.UserDefinedFunction): DataFrame = {
+                           f: UserDefinedFunction): DataFrame = {
     // streaming crossfade windows carry per-sample timestamps; the wavelet
     // preserves sample count, so the column stays aligned and rides through
     // for StreamingOps.stitchTimeWindows
@@ -149,24 +150,10 @@ object DspOperators {
   def waveletTransform(segments: DataFrame, filters: String = "rat",
                        hgOnly: Boolean = true, npad: PadSpec = FastPad,
                        fftNormLength: Option[Int] = None,
-                       precision: String = "double"): DataFrame = {
-    val f =
-      if (isSingle(precision)) udf { (values: Array[Double], rate: Double) =>
-        val plan = Signal.padPlan(values.length, npad)
-        val padded = values.length + plan.padTotal
-        val fb = cachedFilterbank(filters, padded, rate, hgOnly)
-        val scale = fftNormLength.fold(1.0)(ref => math.sqrt(padded.toDouble / ref))
-        packBands32(Signal32.waveletBands(toF32(values, 1.0), fb.kernels, npad), scale)
-      }
-      else udf { (values: Array[Double], rate: Double) =>
-        val plan = Signal.padPlan(values.length, npad)
-        val padded = values.length + plan.padTotal
-        val fb = cachedFilterbank(filters, padded, rate, hgOnly)
-        val scale = fftNormLength.fold(1.0)(ref => math.sqrt(padded.toDouble / ref))
-        packBands(Signal.waveletBands(values, fb.kernels, npad), scale)
-      }
-    explodeBands(segments, f)
-  }
+                       precision: String = "double"): DataFrame =
+    explodeBands(segments, bandsUdf(npad, fftNormLength, precision) { (padded, rate) =>
+      cachedFilterbank(filters, padded, rate, hgOnly).kernels
+    })
 
   /** Wavelet transform against a USER-SUPPLIED kernel list — the reference's
     * `get_filterbank` list passthrough (wavelet_transform.py:104-105): band
@@ -180,42 +167,29 @@ object DspOperators {
   def waveletTransform(segments: DataFrame,
                        kernels: Seq[Option[(Int, Double) => Array[Double]]],
                        npad: PadSpec): DataFrame =
-    waveletTransform(segments, kernels, npad, fftNormLength = None)
+    explodeBands(segments, bandsUdf(npad, None, "double") { (padded, rate) =>
+      kernels.map {
+        case Some(build) => Kernels.l2Normalize(build(padded, rate))
+        case None        => null
+      }.toArray
+    })
 
-  /** Kernel-list variant with the windowing-invariant normalization pin
-    * (see the named-filterbank overload's scaladoc). */
-  def waveletTransform(segments: DataFrame,
-                       kernels: Seq[Option[(Int, Double) => Array[Double]]],
-                       npad: PadSpec, fftNormLength: Option[Int]): DataFrame =
-    waveletTransform(segments, kernels, npad, fftNormLength, "double")
-
-  /** Kernel-list variant with the precision option (no default args here —
-    * Scala allows them on only one overload per name, the named-filterbank
-    * one). Kernels are built in float64 either way; `"single"` runs the
-    * float32 transform (see the named overload). */
-  def waveletTransform(segments: DataFrame,
-                       kernels: Seq[Option[(Int, Double) => Array[Double]]],
-                       npad: PadSpec, fftNormLength: Option[Int],
-                       precision: String): DataFrame = {
-    def built(n: Int, rate: Double): Array[Array[Double]] = kernels.map {
-      case Some(build) => Kernels.l2Normalize(build(n, rate))
-      case None        => null
-    }.toArray
-    val f =
-      if (isSingle(precision)) udf { (values: Array[Double], rate: Double) =>
-        val plan = Signal.padPlan(values.length, npad)
-        val n = values.length + plan.padTotal
-        val scale = fftNormLength.fold(1.0)(ref => math.sqrt(n.toDouble / ref))
-        packBands32(Signal32.waveletBands(toF32(values, 1.0), built(n, rate), npad), scale)
-      }
-      else udf { (values: Array[Double], rate: Double) =>
-        val plan = Signal.padPlan(values.length, npad)
-        val n = values.length + plan.padTotal
-        val scale = fftNormLength.fold(1.0)(ref => math.sqrt(n.toDouble / ref))
-        packBands(Signal.waveletBands(values, built(n, rate), npad), scale)
-      }
-    explodeBands(segments, f)
-  }
+  /** The per-segment band UDF behind both `waveletTransform` overloads:
+    * pad per `npad`, take the kernels `kernelsFor(paddedLen, rate)`, run
+    * the float64 or float32 (`precision = "single"`) transform and rescale
+    * by the `fftNormLength` pin. */
+  private def bandsUdf(npad: PadSpec, fftNormLength: Option[Int], precision: String)(
+      kernelsFor: (Int, Double) => Array[Array[Double]]): UserDefinedFunction =
+    if (isSingle(precision)) udf { (values: Array[Double], rate: Double) =>
+      val padded = values.length + Signal.padPlan(values.length, npad).padTotal
+      val scale = fftNormLength.fold(1.0)(ref => math.sqrt(padded.toDouble / ref))
+      packBands32(Signal32.waveletBands(toF32(values, 1.0), kernelsFor(padded, rate), npad), scale)
+    }
+    else udf { (values: Array[Double], rate: Double) =>
+      val padded = values.length + Signal.padPlan(values.length, npad).padTotal
+      val scale = fftNormLength.fold(1.0)(ref => math.sqrt(padded.toDouble / ref))
+      packBands(Signal.waveletBands(values, kernelsFor(padded, rate), npad), scale)
+    }
 
   /** Amplitude of a complex (re, im) wavelet frame — native Catalyst
     * expression with whole-stage codegen (graft.functions.ComplexAmplitude;

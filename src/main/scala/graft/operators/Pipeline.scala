@@ -163,14 +163,13 @@ object Store {
     * table, so chaining after the unpersist does not recompute lineage. */
   def storeSubtractCar(segments: DataFrame, root: String, series: String,
                        nChannels: Int, meanFrac: Double = 0.95,
-                       roundFunc: Double => Double = math.ceil,
                        precision: String = "double"): DataFrame = {
     val cached = segments.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     try {
-      write(CommonReferencing.carSegments(cached, nChannels, meanFrac, roundFunc = roundFunc,
-        precision = precision), root, "CAR", precision)
+      write(CommonReferencing.carSegments(cached, nChannels, meanFrac, precision = precision),
+        root, "CAR", precision)
       writeRead(CommonReferencing.subtractCarSegments(cached, nChannels, meanFrac,
-        roundFunc = roundFunc, precision = precision), root, s"CAR_$series", precision)
+        precision = precision), root, s"CAR_$series", precision)
     } finally cached.unpersist()
   }
 
@@ -181,16 +180,15 @@ object Store {
     * returned frame reads the stored table (see writeRead). */
   def storeLinenoiseNotchCar(segments: DataFrame, root: String, series: String,
                              nChannels: Int, meanFrac: Double = 0.95,
-                             roundFunc: Double => Double = math.ceil,
                              noiseHz: Double = 60.0, npad: PadSpec = FastPad,
                              precision: String = "double"): DataFrame = {
     val notched = DspOperators.applyLinenoiseNotch(segments, noiseHz, npad, precision = precision)
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     try {
-      write(CommonReferencing.carSegments(notched, nChannels, meanFrac, roundFunc = roundFunc,
-        precision = precision), root, s"CAR_of_$series", precision)
+      write(CommonReferencing.carSegments(notched, nChannels, meanFrac, precision = precision),
+        root, s"CAR_of_$series", precision)
       writeRead(CommonReferencing.subtractCarSegments(notched, nChannels, meanFrac,
-        roundFunc = roundFunc, precision = precision), root, s"CAR_ln_$series", precision)
+        precision = precision), root, s"CAR_ln_$series", precision)
     } finally notched.unpersist()
   }
 

@@ -52,11 +52,11 @@ object DspRelational {
           }
         }
         val planted = seg.withColumn("values", plant(col("channel"), col("values")))
-        // the scale path, segment-native: the same bounded-window blocked CAR
-        // that subtractCarLongBlocked runs, entered via the NARROW
-        // windowSegments explode — the input is already assembled segments,
-        // so re-deriving a long frame just to re-shuffle it back into
-        // windows (round 2's plan) would pay a second sample-level shuffle
+        // the scale path, segment-native: the blocked CAR over bounded
+        // windows, entered via the NARROW windowSegments explode — the input
+        // is already assembled segments, so re-deriving a long frame just to
+        // re-shuffle it back into windows would pay a second sample-level
+        // shuffle
         val referenced = CommonReferencing.subtractCarSegments(
           Windowing.windowSegments(planted, stride = 8192, context = 0),
           nChannels = 8, meanFrac = 0.95, blockSize = 8192)

@@ -36,7 +36,7 @@ final class NwbStore(val root: String, spark: SparkSession) {
 
   /** Bucketed variant of the processing sink: co-locates rows by channel at
     * WRITE time (`bucketBy` + in-bucket sort), so every downstream
-    * channel-keyed join — CAR join-form, electrode attach, aligning two
+    * channel-keyed join — electrode attach, aligning two
     * derived series — reads both sides pre-partitioned and skips the
     * shuffle entirely (plan-asserted in StoreAndStreamingSpec). The 100 TB
     * shape: pay the partitioning once at the sink, reuse it across every

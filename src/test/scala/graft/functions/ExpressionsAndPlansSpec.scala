@@ -64,11 +64,6 @@ class ExpressionsAndPlansSpec extends AnyFunSuite {
       val amp = ext.sql("SELECT complex_amplitude(array(3.0d), array(4.0d)) AS a")
         .collect().head.getSeq[Double](0)
       assert(amp == Seq(5.0))
-      // trimmed_mean_nan(v, 1): sorted [1,2,3,100] -> kept [2,3] -> 2.5
-      val tm = ext.sql(
-        "SELECT trimmed_mean_nan(v, 1) FROM VALUES (1.0d),(2.0d),(3.0d),(100.0d) AS t(v)")
-        .collect().head.getDouble(0)
-      assert(tm == 2.5)
       val asm = ext.sql(
         "SELECT assemble_series(t, v) FROM VALUES (2L, 30.0d),(0L, 10.0d),(1L, 20.0d) AS t(t, v)")
         .collect().head.getSeq[Double](0)

@@ -8,8 +8,9 @@ import graft.model.{Frames, Synthetic}
 import graft.dsp.Signal
 
 /** Spark-layer ports of the reference's pipeline/equivalence tests
-  * (tests/test_pipeline.py, tests/test_utils.py) plus SQL-vs-Scala parity
-  * for the CAR aggregate. */
+  * (tests/test_pipeline.py, tests/test_utils.py) plus parity of the blocked
+  * CAR kernel (`subtractCarSegments`/`carSegments`) with the plain-Scala
+  * reference `Signal.trimmedMean`, computed per time point. */
 class SparkOperatorsSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -47,82 +48,87 @@ class SparkOperatorsSpec extends AnyFunSuite {
     assert(again sameElements ref, "generator is not deterministic")
   }
 
-  // --- SQL trimmed mean == Scala oracle ------------------------------------
-  test("SQL CAR trimmed mean matches Signal.trimmedMean exactly") {
+  // --- blocked CAR == Signal.trimmedMean per time point --------------------
+  /** A one-series SegmentFrame from channel-major traces (band null). */
+  private def segmentsOf(byCh: Seq[Array[Double]]): DataFrame = {
     import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    val nCh = 100
-    val rows = for (t <- 0 until 20; ch <- 0 until nCh)
-      yield ("s", t.toLong, ch, rnd.nextDouble() * 200 - 100)
-    val long = rows.toDF("series", "t_idx", "channel", "value")
-    val got = CommonReferencing.car(long, nCh, 0.95)
-      .orderBy("t_idx").collect().map(_.getDouble(2))
-    val byT = rows.groupBy(_._2).toSeq.sortBy(_._1)
-      .map { case (_, rs) => Signal.trimmedMean(rs.map(_._4).toArray, 0.95) }
-    got.zip(byT).foreach { case (a, b) => assert(a == b, s"$a != $b") }
-    // ramp fixture: 3 time points x 100 channels, CAR = 49.5 with outliers
-    val ramp = (for (t <- 0 until 3; ch <- 0 until 100) yield {
-      val v = if (ch == 0) -100.0 else if (ch == 99) 111.0 else ch.toDouble
-      ("r", t.toLong, ch, v)
-    }).toDF("series", "t_idx", "channel", "value")
-    val cars = CommonReferencing.car(ramp, 100, 0.95).collect().map(_.getDouble(2))
-    assert(cars.forall(_ == 49.5))
+    byCh.zipWithIndex.map { case (v, ch) => ("s", ch, null: Integer, 400.0, 0.0, v) }
+      .toDF("series", "channel", "band", "rate", "startingTime", "values")
   }
 
-  test("long-form CAR null/NaN semantics match np.nanmean (sort-last, trim, skip)") {
-    import spark.implicits._
+  /** The reference CAR: Signal.trimmedMean of each time point's channel values. */
+  private def referenceCar(byCh: Seq[Array[Double]], meanFrac: Double): Array[Double] =
+    byCh.head.indices.map(t => Signal.trimmedMean(byCh.map(_(t)).toArray, meanFrac)).toArray
+
+  private def carTrace(df: DataFrame, nCh: Int, meanFrac: Double,
+                       blockSize: Int = 8192): Array[Double] =
+    CommonReferencing.carSegments(df, nCh, meanFrac, blockSize)
+      .select("values").head().getSeq[Double](0).toArray
+
+  /** Asserts carSegments and subtractCarSegments agree with the reference
+    * CAR: exactly, or within `tol` relative (NaN where the reference is NaN). */
+  private def checkCar(byCh: Seq[Array[Double]], meanFrac: Double, blockSize: Int = 8192,
+                       tol: Double = 0.0): Unit = {
+    def same(a: Double, b: Double) = (a.isNaN && b.isNaN) ||
+      math.abs(a - b) <= tol * math.max(1.0, math.abs(b))
+    val nCh = byCh.length
+    val ref = referenceCar(byCh, meanFrac)
+    val df = segmentsOf(byCh)
+    val car = carTrace(df, nCh, meanFrac, blockSize)
+    assert(car.length == ref.length)
+    car.zip(ref).zipWithIndex.foreach { case ((a, b), t) =>
+      assert(same(a, b), s"meanFrac=$meanFrac t=$t: CAR $a != reference $b")
+    }
+    val referenced = collectTraces(
+      CommonReferencing.subtractCarSegments(df, nCh, meanFrac, blockSize))
+    assert(referenced.keySet == byCh.indices.map(_ -> None).toSet)
+    for (ch <- byCh.indices; t <- ref.indices) {
+      val (a, b) = (referenced((ch, None))(t), byCh(ch)(t) - ref(t))
+      assert(same(a, b), s"meanFrac=$meanFrac ch=$ch t=$t: referenced $a != $b")
+    }
+  }
+
+  test("blocked CAR matches Signal.trimmedMean exactly (random channels, outlier ramp)") {
+    val rnd = new scala.util.Random(7)
+    checkCar(Seq.fill(100)(Array.fill(20)(rnd.nextDouble() * 200 - 100)), 0.95)
+    // ramp fixture: 3 time points x 100 channels, CAR = 49.5 with outliers
+    val ramp = (0 until 100).map { ch =>
+      Array.fill(3)(if (ch == 0) -100.0 else if (ch == 99) 111.0 else ch.toDouble)
+    }
+    checkCar(ramp, 0.95)
+    assert(carTrace(segmentsOf(ramp), 100, 0.95).forall(_ == 49.5))
+  }
+
+  test("blocked CAR NaN semantics match np.nanmean (sort-last, trim, skip)") {
     // common_referencing.py:34-41: sort puts NaN last, trim 1 from each end,
     // nanmean skips any NaN still inside the kept window
-    val oneNull = Seq[(String, Long, Int, java.lang.Double)](
-      ("s", 0L, 0, 10.0), ("s", 0L, 1, 2.0), ("s", 0L, 2, 5.0), ("s", 0L, 3, null),
-      ("s", 0L, 4, 7.0), ("s", 0L, 5, 1.0), ("s", 0L, 6, 9.0), ("s", 0L, 7, 4.0))
-      .toDF("series", "t_idx", "channel", "value")
+    val N = Double.NaN
+    val oneNaN = Seq(10.0, 2.0, 5.0, N, 7.0, 1.0, 9.0, 4.0).map(Array(_))
     // sorted [1,2,4,5,7,9,10,NaN] -> kept [2,4,5,7,9,10] -> 37/6
-    assert(CommonReferencing.car(oneNull, 8, 0.95).head().getDouble(2) == 37.0 / 6)
-    val twoNull = Seq[(String, Long, Int, java.lang.Double)](
-      ("s", 0L, 0, 10.0), ("s", 0L, 1, 2.0), ("s", 0L, 2, null), ("s", 0L, 3, null),
-      ("s", 0L, 4, 7.0), ("s", 0L, 5, 1.0), ("s", 0L, 6, 9.0), ("s", 0L, 7, 4.0))
-      .toDF("series", "t_idx", "channel", "value")
+    assert(carTrace(segmentsOf(oneNaN), 8, 0.95).head == 37.0 / 6)
+    checkCar(oneNaN, 0.95)
+    val twoNaN = Seq(10.0, 2.0, N, N, 7.0, 1.0, 9.0, 4.0).map(Array(_))
     // sorted [1,2,4,7,9,10,NaN,NaN] -> kept [2,4,7,9,10,NaN] -> nanmean 32/5
-    assert(CommonReferencing.car(twoNull, 8, 0.95).head().getDouble(2) == 32.0 / 5)
+    assert(carTrace(segmentsOf(twoNaN), 8, 0.95).head == 32.0 / 5)
+    checkCar(twoNaN, 0.95)
     // meanFrac=1.0 degenerates to nanmean over all channels
-    assert(CommonReferencing.car(oneNull, 8, 1.0).head().getDouble(2) == 38.0 / 7)
+    assert(carTrace(segmentsOf(oneNaN), 8, 1.0).head == 38.0 / 7)
+    checkCar(oneNaN, 1.0)
   }
 
-  test("native TypedImperativeAggregate trimmed mean == pure-SQL form, nulls included") {
-    import spark.implicits._
+  test("blocked CAR == Signal.trimmedMean across meanFrac with planted NaNs") {
     val rnd = new scala.util.Random(23)
     val nCh = 16
-    val rows = (for (t <- 0 until 50; ch <- 0 until nCh) yield {
-      val v: java.lang.Double =
-        if ((t * nCh + ch) % 13 == 0) null else rnd.nextDouble() * 50 - 25
-      ("s", t.toLong, ch, v)
-    }).filter { case (_, t, ch, _) =>
-      // ragged groups: whole channel rows ABSENT (not null) for some t —
-      // the SQL slice keeps [nExclude, nExclude+nKeep) of however many rows
-      // exist; the native form must window identically, not trim both ends
-      !(t % 7 == 0 && ch >= nCh - 1 - (t % 3).toInt)
+    val byCh = (0 until nCh).map { ch =>
+      Array.tabulate(50)(t => if ((t * nCh + ch) % 13 == 0) Double.NaN
+        else rnd.nextDouble() * 50 - 25)
     }
-    val long = rows.toDF("series", "t_idx", "channel", "value")
-    for (mf <- Seq(0.95, 0.8, 1.0)) {
-      val sql = long.groupBy("series", "t_idx")
-        .agg(CommonReferencing.trimmedMeanAgg(nCh, mf).as("car"))
-        .orderBy("t_idx").collect().map(_.getDouble(2))
-      val native = long.groupBy("series", "t_idx")
-        .agg(CommonReferencing.trimmedMeanAggNative(spark, nCh, mf).as("car"))
-        .orderBy("t_idx").collect().map(_.getDouble(2))
-      sql.zip(native).zipWithIndex.foreach { case ((a, b), i) =>
-        if (mf < 1.0)
-          // both forms sum the kept middle in sorted order -> bit-equal
-          assert(a == b || (a.isNaN && b.isNaN), s"meanFrac=$mf t=$i: sql $a != native $b")
-        else
-          // meanFrac=1: SQL avg accumulates in partial-agg order, native in
-          // sorted order — FP addition order differs at the ulp level (numpy
-          // nanmean itself sums unsorted here; no order is canonical)
-          assert(math.abs(a - b) <= 1e-12 * math.max(1.0, math.abs(b)),
-            s"meanFrac=$mf t=$i: sql $a !~ native $b")
-      }
-    }
+    // both sum the kept middle in sorted order -> bit-equal
+    for (mf <- Seq(0.95, 0.8)) checkCar(byCh, mf)
+    // meanFrac=1: the reference sums in input order, the kernel in sorted
+    // order — FP addition order differs at the ulp level (numpy nanmean
+    // itself sums unsorted here; no order is canonical)
+    checkCar(byCh, 1.0, tol = 1e-12)
   }
 
   test("user-supplied kernel list: gaussian builders == named filterbank; None == analytic signal") {
@@ -155,40 +161,28 @@ class SparkOperatorsSpec extends AnyFunSuite {
       s"analytic envelope of pure cosine != amplitude: ${env.take(5).mkString(",")}")
   }
 
-  test("subtractCarLongBlocked == join-form subtractCar incl. planted nulls") {
-    import spark.implicits._
+  test("blocked CAR == Signal.trimmedMean across block boundaries (multi-block)") {
+    // 700 samples at blockSize 256 -> 3 blocks, the last one ragged;
+    // planted NaNs on channel 3 every 97th sample
     val rnd = new scala.util.Random(23)
-    val rows = for (t <- 0L until 700L; ch <- 0 until 8) yield
-      ("s", ch, null: Integer, 400.0, 0.0, t,
-        if (ch == 3 && t % 97 == 0) null.asInstanceOf[java.lang.Double]
-        else java.lang.Double.valueOf(rnd.nextDouble() * 100 - 50))
-    val long = rows.toDF("series", "channel", "band", "rate", "startingTime", "t_idx", "value")
-    def collectVals(df: org.apache.spark.sql.DataFrame) =
-      df.select("t_idx", "channel", "value").collect()
-        .map(r => (r.getLong(0), r.getInt(1)) ->
-          (if (r.isNullAt(2)) Double.NaN else r.getDouble(2))).toMap
-    val joinForm = collectVals(CommonReferencing.subtractCar(long, 8))
-    // stride 256 forces multiple windows over the 700-sample trace
-    val blocked = collectVals(CommonReferencing.subtractCarLongBlocked(long, 8, stride = 256))
-    assert(joinForm.keySet == blocked.keySet && joinForm.size == 700 * 8)
-    for (k <- joinForm.keySet) {
-      val (a, b) = (joinForm(k), blocked(k))
-      assert((a.isNaN && b.isNaN) || math.abs(a - b) < 1e-12, s"diverges at $k: $a vs $b")
+    val planted = (0 until 8).map { ch =>
+      Array.tabulate(700)(t => if (ch == 3 && t % 97 == 0) Double.NaN
+        else rnd.nextDouble() * 100 - 50)
     }
+    checkCar(planted, 0.95, blockSize = 256)
+    // synthetic ECoG, 400 samples at blockSize 64 -> 7 blocks
+    val raw = collectTraces(Synthetic.segments(spark, 1.0, 8, 400.0, seed = 21))
+    checkCar((0 until 8).map(ch => raw((ch, None))), 0.95, blockSize = 64)
   }
 
-  test("blocked segment CAR == long-form SQL CAR (small blockSize forces multi-block)") {
-    val raw = Synthetic.segments(spark, 1.0, 8, 400.0, seed = 21)
-    val blocked = CommonReferencing.subtractCarSegments(raw, 8, 0.95, blockSize = 64)
-    val longForm = Frames.toSegments(
-      CommonReferencing.subtractCar(Frames.toLong(raw), 8, 0.95))
-    val a = collectTraces(blocked)
-    val b = collectTraces(longForm)
-    assert(a.keySet == b.keySet && a.nonEmpty)
-    for (k <- a.keySet) {
-      assert(a(k).length == b(k).length)
-      val worst = a(k).zip(b(k)).map { case (x, y) => math.abs(x - y) }.max
-      assert(worst == 0.0, s"blocked CAR diverges at $k by $worst")
+  test("meanFrac outside (0, 1] is rejected at call time by the CAR and its reference") {
+    val raw = Synthetic.segments(spark, 0.5, 8, 400.0, seed = 21)
+    for (bad <- Seq(1.5, 0.0, -0.5, Double.NaN)) {
+      intercept[IllegalArgumentException](
+        CommonReferencing.subtractCarSegments(raw, 8, meanFrac = bad))
+      intercept[IllegalArgumentException](
+        CommonReferencing.carSegments(raw, 8, meanFrac = bad))
+      intercept[IllegalArgumentException](Signal.trimmedMean(Array.fill(8)(1.0), bad))
     }
   }
 
@@ -297,13 +291,6 @@ class SparkOperatorsSpec extends AnyFunSuite {
     val trS = CommonReferencing.carSegments(raw, 8, precision = "single")
     assert(trS.select("values").collect()
       .forall(r => isF32(r.getSeq[Double](0).toArray)), "single CAR trace not f32-valued")
-    // join-form CAR via the native trimmed-mean aggregate's single flag
-    val longF = Frames.toLong(raw)
-    val joinS = Frames.toSegments(CommonReferencing.subtractCar(longF, 8, precision = "single"))
-    val joinD = Frames.toSegments(CommonReferencing.subtractCar(longF, 8))
-    val (js, jd) = (collectTraces(joinS), collectTraces(joinD))
-    assert(js.values.forall(isF32), "single join-form CAR output not float32-valued")
-    close(js, jd, "join-form CAR")
     // z-score in float32
     val zS = collectTraces(DspOperators.zscoreSegments(carS, 125, precision = "single"))
     val zD = collectTraces(DspOperators.zscoreSegments(carD, 125))
