@@ -10,7 +10,8 @@ import graft.dsp.Signal
 /** Spark-layer ports of the reference's pipeline/equivalence tests
   * (tests/test_pipeline.py, tests/test_utils.py) plus parity of the blocked
   * CAR kernel (`subtractCarSegments`/`carSegments`) with the plain-Scala
-  * reference `Signal.trimmedMean`, computed per time point. */
+  * reference `Signal.trimmedMean`, computed per time point, and with an
+  * independent long-form SQL CAR subtracted through a join. */
 class SparkOperatorsSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -161,18 +162,63 @@ class SparkOperatorsSpec extends AnyFunSuite {
       s"analytic envelope of pure cosine != amplitude: ${env.take(5).mkString(",")}")
   }
 
-  test("blocked CAR == Signal.trimmedMean across block boundaries (multi-block)") {
+  /** An independent long-form SQL CAR, subtracted through a join: per
+    * (series, t_idx) sort the channel values (null as NaN, NaN last), keep
+    * [nExclude, nCh - nExclude) and average the non-NaN ones in sorted order.
+    * Returns the LongFrame with `value` replaced by value - car. */
+  private def joinFormSubtractCar(long: DataFrame, nCh: Int, meanFrac: Double): DataFrame = {
+    val nExclude = math.ceil(nCh * (1.0 - meanFrac) / 2.0).toInt
+    val car = long.groupBy("series", "t_idx")
+      .agg(array_sort(collect_list(coalesce(col("value"), lit(Double.NaN)))).as("sorted"))
+      .select(col("series"), col("t_idx"),
+        filter(slice(col("sorted"), nExclude + 1, nCh - 2 * nExclude), x => !isnan(x)).as("kept"))
+      .select(col("series"), col("t_idx"),
+        (aggregate(col("kept"), lit(0.0), (acc, x) => acc + x) / size(col("kept"))).as("car"))
+    long.join(car, Seq("series", "t_idx"))
+      .withColumn("value", coalesce(col("value"), lit(Double.NaN)) - col("car"))
+      .drop("car")
+  }
+
+  test("subtractCarLongBlocked == join-form subtractCar incl. planted nulls") {
     // 700 samples at blockSize 256 -> 3 blocks, the last one ragged;
-    // planted NaNs on channel 3 every 97th sample
+    // planted nulls (NaN in segment form) on channel 3 every 97th sample
     val rnd = new scala.util.Random(23)
     val planted = (0 until 8).map { ch =>
       Array.tabulate(700)(t => if (ch == 3 && t % 97 == 0) Double.NaN
         else rnd.nextDouble() * 100 - 50)
     }
     checkCar(planted, 0.95, blockSize = 256)
+    val segs = segmentsOf(planted)
+    val long = Frames.toLong(segs)
+      .withColumn("value", when(isnan(col("value")), lit(null)).otherwise(col("value")))
+    assert(long.filter(col("value").isNull).count() == 8, "nulls not planted")
+    def collectVals(df: DataFrame) =
+      df.select("t_idx", "channel", "value").collect()
+        .map(r => (r.getInt(0).toLong, r.getInt(1)) -> r.getDouble(2)).toMap
+    val joinForm = collectVals(joinFormSubtractCar(long, 8, 0.95))
+    val blocked = collectVals(Frames.toLong(
+      CommonReferencing.subtractCarSegments(segs, 8, 0.95, blockSize = 256)))
+    assert(joinForm.keySet == blocked.keySet && joinForm.size == 700 * 8)
+    for (k <- joinForm.keySet) {
+      val (a, b) = (joinForm(k), blocked(k))
+      assert((a.isNaN && b.isNaN) || math.abs(a - b) < 1e-12, s"diverges at $k: $a vs $b")
+    }
+  }
+
+  test("blocked segment CAR == long-form SQL CAR (small blockSize forces multi-block)") {
     // synthetic ECoG, 400 samples at blockSize 64 -> 7 blocks
-    val raw = collectTraces(Synthetic.segments(spark, 1.0, 8, 400.0, seed = 21))
-    checkCar((0 until 8).map(ch => raw((ch, None))), 0.95, blockSize = 64)
+    val raw = Synthetic.segments(spark, 1.0, 8, 400.0, seed = 21)
+    val blocked = collectTraces(CommonReferencing.subtractCarSegments(raw, 8, 0.95, blockSize = 64))
+    val longForm = collectTraces(Frames.toSegments(
+      joinFormSubtractCar(Frames.toLong(raw), 8, 0.95)))
+    assert(blocked.keySet == longForm.keySet && blocked.nonEmpty)
+    for (k <- blocked.keySet) {
+      assert(blocked(k).length == longForm(k).length)
+      val worst = blocked(k).zip(longForm(k)).map { case (x, y) => math.abs(x - y) }.max
+      assert(worst == 0.0, s"blocked CAR diverges at $k by $worst")
+    }
+    val rawTraces = collectTraces(raw)
+    checkCar((0 until 8).map(ch => rawTraces((ch, None))), 0.95, blockSize = 64)
   }
 
   test("meanFrac outside (0, 1] is rejected at call time by the CAR and its reference") {
