@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{AssembleSeries, AssembleTimed, ComplexAmplitude, ComplexPhase, FloorDotE9, RewriteFloorDotE9}
 
 /** Library integration point for `spark.sql.extensions=graft.GraftExtensions`
-  * (or `SparkSession.builder().withExtensions(new GraftExtensions)`):
+  * (or `withExtensions(new GraftExtensions)` on a session builder):
   * injects the engine's native Catalyst functions into the session's
   * function registry at build time, so pure-SQL users get them without the
   * per-DataFrame registration the Column API performs lazily

@@ -1,0 +1,31 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The one session conf of the mains (`Bench`, `Verify`, `Inspect`):
+  * `local[$SPARK_GRAFT_CPUS]` (default 4) with shuffle partitions = cpus,
+  * UTC session time zone, UI off, AQE on, nanosecond parquet timestamps
+  * read as longs, and a raised ObjectHashAggregate fallback threshold.
+  * Any other `spark.*` conf can still be set per run as a JVM system
+  * property (`GRAFT_JAVA_OPTS="-Dspark.x=y"`, see build.sbt). */
+object Session {
+
+  def build(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // keep the assembly aggregates hash-based: the default 128-key
+      // threshold silently downgrades ObjectHashAggregate to sort-based
+      // aggregation once a partition holds >128 groups (e.g. the
+      // channel x hour-bucket assembly at sf0.1), sorting every sample row
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+}

@@ -178,16 +178,4 @@ object Frames {
       (i, 1.0, 2.0, 3.0, -i.toDouble, "cortex", "none", "Grid"))
       .toDF("id", "x", "y", "z", "imp", "location", "filtering", "group")
   }
-
-  /** Attach electrode metadata to a frame keyed by channel: the classic
-    * small-dimension broadcast join (SURVEY.md J2). */
-  def withElectrodes(df: DataFrame, electrodes: DataFrame): DataFrame =
-    df.join(broadcast(electrodes.withColumnRenamed("id", "channel")), Seq("channel"))
-
-  /** Band metadata dimension for a wavelet output (SURVEY.md J3). */
-  def bandDimension(spark: org.apache.spark.sql.SparkSession,
-                    cfs: Array[Double], sds: Array[Double]): DataFrame = {
-    import spark.implicits._
-    cfs.indices.map(i => (i, cfs(i), sds(i))).toDF("band", "cf", "sd")
-  }
 }

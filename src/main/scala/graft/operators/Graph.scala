@@ -34,8 +34,23 @@ object Graph {
     * against each other and the same oracles (q167/q218 vs q346/q347). */
   val LocalEdgeCapKey = "graft.graph.localEdgeCap"
 
-  private def localEdgeCap(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption(LocalEdgeCapKey).map(_.toLong).getOrElse(2000000L)
+  /** Largest local-tier edge count: the tiers index both endpoints of
+    * every edge (plus the seeds) in one JVM array. */
+  private val MaxLocalEdges = (Int.MaxValue - 8) / 2
+
+  private def localEdgeCap(spark: org.apache.spark.sql.SparkSession): Long = {
+    val cap = spark.conf.getOption(LocalEdgeCapKey).map(_.toLong).getOrElse(2000000L)
+    require(cap <= MaxLocalEdges,
+      s"$LocalEdgeCapKey = $cap exceeds the local tiers' array bound $MaxLocalEdges")
+    cap
+  }
+
+  /** Array length `n` for a local tier, rejected above the JVM array
+    * bound instead of overflowing Int. */
+  private def localArrayLength(n: Long): Int = {
+    require(n <= Int.MaxValue - 8, s"local graph tier needs $n slots, above the JVM array bound")
+    n.toInt
+  }
 
   /** Conf key: node-count cap under which a per-round survivor/frontier
     * set is broadcast into the edge-list joins instead of shuffling the
@@ -299,7 +314,7 @@ object Graph {
   def boundedSssp(edges: DataFrame, seeds: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters in [1,50], got $iters")
     import org.apache.spark.storage.StorageLevel
-    val spark = edges.sparkSession
+    val cap = localEdgeCap(edges.sparkSession)
     // persist before counting: edges is often an expensive lazy frame and
     // the tier count must not re-run it for the tier that consumes it next
     val e = edges.select(col("a").cast("long").as("a"),
@@ -307,7 +322,7 @@ object Graph {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nEdges = e.count()
     val result =
-      if (nEdges <= localEdgeCap(spark)) ssspLocal(e, seeds, iters)
+      if (nEdges <= cap) ssspLocal(e, seeds, iters)
       else ssspRounds(e, seeds, iters, nEdges)
     e.unpersist() // both tiers end pinned/materialized — safe to drop
     result
@@ -341,7 +356,7 @@ object Graph {
       }
       val nE = ea.size()
       // distinct sorted node ids over both endpoints and the seeds
-      val allIds = new Array[Long](2 * nE + seedIds.size())
+      val allIds = new Array[Long](localArrayLength(2L * nE + seedIds.size()))
       var i = 0
       while (i < nE) {
         allIds(2 * i) = ea.get(i); allIds(2 * i + 1) = eb.get(i); i += 1
@@ -430,13 +445,13 @@ object Graph {
   def boundedKCorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 20, s"rounds in [1,20], got $rounds")
     import org.apache.spark.storage.StorageLevel
-    val spark = edges.sparkSession
+    val cap = localEdgeCap(edges.sparkSession)
     val e0 = edges.select(col("a").cast("long").as("a"),
         col("b").cast("long").as("b"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nEdges = e0.count()
     val result =
-      if (nEdges <= localEdgeCap(spark)) kCoreLocal(e0, k, rounds)
+      if (nEdges <= cap) kCoreLocal(e0, k, rounds)
       else kCoreRounds(e0, k, rounds)
     e0.unpersist()
     result
@@ -462,7 +477,7 @@ object Graph {
       val ebL = new java.util.ArrayList[Long]()
       it.foreach { case (a, b) => eaL.add(a); ebL.add(b) }
       val nE0 = eaL.size()
-      val allIds = new Array[Long](2 * nE0)
+      val allIds = new Array[Long](localArrayLength(2L * nE0))
       var i = 0
       while (i < nE0) {
         allIds(2 * i) = eaL.get(i); allIds(2 * i + 1) = ebL.get(i); i += 1

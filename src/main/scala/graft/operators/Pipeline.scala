@@ -216,12 +216,6 @@ object Store {
       precision = config.precision)
   }
 
-  def storeWaveletAmplitude(segments: DataFrame, root: String, series: String,
-                            filters: String = "rat", hgOnly: Boolean = true,
-                            postResampleRate: Option[Double] = None): DataFrame =
-    storeWaveletTransform(segments, root, series, filters, hgOnly,
-      absOnly = true, postResampleRate)
-
   /** `store_wavelet_transform` parity (wavelet_transform.py:383-446): writes
     * `wvlt_amp_<series>`; with `absOnly=false` also `wvlt_phase_<series>`
     * (metric='phase', :424-441). Phase + post-resample is rejected exactly

@@ -113,10 +113,9 @@ object Windowing {
 
   /** The narrow map-side level of the two-level ingest: pack consecutive
     * samples into membership-uniform runs (<= FragCap) per trace, one open
-    * buffer per trace per partition. Package-visible so IngestProbe can
-    * time this stage in isolation. */
-  private[operators] def fragments(long: DataFrame, stride: Int,
-                                   context: Int): org.apache.spark.sql.Dataset[Frag] = {
+    * buffer per trace per partition. */
+  private def fragments(long: DataFrame, stride: Int,
+                        context: Int): org.apache.spark.sql.Dataset[Frag] = {
     val spark = long.sparkSession
     import spark.implicits._
     // CONTRACT: this cast canonicalizes the LongFrame metadata column types —

@@ -57,16 +57,6 @@ final class NwbStore(val root: String, spark: SparkSession) {
       .format("parquet")
       .saveAsTable(s"${prefixFor(tablePrefix)}_$name")
 
-  /** DSv2 variant of the processing sink ([[graft.sources.NwbSink]]): the
-    * same parquet namespace written through the connector's two-phase
-    * commit protocol — task-staged files published only at job commit, so
-    * task retries and speculative attempts never leave partial output in
-    * the series directory (the guarantee a 1000-executor write needs).
-    * Read back with [[readProcessing]] as usual. */
-  def writeProcessingV2(name: String, df: DataFrame): Unit =
-    df.write.format("graft-nwb").mode("overwrite")
-      .save(dir("preprocessing", name))
-
   /** Catalog read-back of a bucketed series: `spark.read.parquet` on the
     * path would drop the bucketing metadata; the table read keeps it. */
   def readProcessingBucketed(name: String, tablePrefix: String = ""): DataFrame =

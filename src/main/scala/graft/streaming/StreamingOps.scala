@@ -706,11 +706,37 @@ object StreamingOps {
     * THE way to open a raw events stream: the normalizeTsNanos wrap is what
     * absorbs the harness's timestamp-type generations, and a hand-rolled
     * readStream that forgets it reintroduces the micros-ts regression. */
-  def eventsStream(spark: SparkSession, eventsDir: String): DataFrame = {
+  def eventsStream(spark: SparkSession, eventsDir: String): DataFrame =
+    openEvents(spark, eventsDir, oneFilePerBatch = false)
+
+  /** The one stream opener behind [[eventsStream]] and the `runTo*`
+    * drivers; `oneFilePerBatch` sets `maxFilesPerTrigger = 1` (the
+    * `Ordered` staging contract). */
+  private def openEvents(spark: SparkSession, eventsDir: String,
+                         oneFilePerBatch: Boolean): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = spark.read.parquet(eventsDir).schema
+    val reader = spark.readStream.schema(schema)
     graft.model.Frames.normalizeTsNanos(
-      spark.readStream.schema(schema).parquet(eventsDir))
+      (if (oneFilePerBatch) reader.option("maxFilesPerTrigger", "1") else reader)
+        .parquet(eventsDir))
+  }
+
+  /** Runs `transform(stream)` to the memory table `queryName` under
+    * Trigger.AvailableNow and returns the table. */
+  private def toMemory(spark: SparkSession, stream: DataFrame,
+                       transform: DataFrame => DataFrame, queryName: String,
+                       outputMode: OutputMode): DataFrame = {
+    withStreamParts(spark) {
+      val q = transform(stream).writeStream
+        .outputMode(outputMode)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .format("memory")
+        .queryName(queryName)
+        .start()
+      q.awaitTermination()
+    }
+    spark.table(queryName)
   }
 
   /** Drive a streaming query from a static events directory to a memory
@@ -721,22 +747,9 @@ object StreamingOps {
     * output distributed. */
   def runToMemory(spark: SparkSession, eventsDir: String, queryName: String,
                   transform: DataFrame => DataFrame,
-                  outputMode: OutputMode = OutputMode.Append): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsDir).schema
-    val stream = graft.model.Frames.normalizeTsNanos(
-      spark.readStream.schema(schema).parquet(eventsDir))
-    withStreamParts(spark) {
-      val q = transform(stream).writeStream
-        .outputMode(outputMode)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .format("memory")
-        .queryName(queryName)
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(queryName)
-  }
+                  outputMode: OutputMode = OutputMode.Append): DataFrame =
+    toMemory(spark, openEvents(spark, eventsDir, oneFilePerBatch = false),
+      transform, queryName, outputMode)
 
   /** [[runToMemory]] with ONE FILE PER MICRO-BATCH in modification-time
     * order (the [[runToParquetOrdered]] staging contract for Update-mode
@@ -746,23 +759,9 @@ object StreamingOps {
   def runToMemoryOrdered(spark: SparkSession, eventsDir: String,
                          queryName: String,
                          transform: DataFrame => DataFrame,
-                         outputMode: OutputMode = OutputMode.Append): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsDir).schema
-    val stream = graft.model.Frames.normalizeTsNanos(
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(eventsDir))
-    withStreamParts(spark) {
-      val q = transform(stream).writeStream
-        .outputMode(outputMode)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .format("memory")
-        .queryName(queryName)
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(queryName)
-  }
+                         outputMode: OutputMode = OutputMode.Append): DataFrame =
+    toMemory(spark, openEvents(spark, eventsDir, oneFilePerBatch = true),
+      transform, queryName, outputMode)
 
   /** State-store provider conf keys (public Spark confs, stable since 3.2).
     * The default HDFSBackedStateStoreProvider keeps every store's working
@@ -800,13 +799,9 @@ object StreamingOps {
     * the shape that survives unbounded output (a memory sink is
     * driver-bounded by definition). */
   def runToParquet(spark: SparkSession, eventsDir: String, queryName: String,
-                   transform: DataFrame => DataFrame): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsDir).schema
-    val stream = graft.model.Frames.normalizeTsNanos(
-      spark.readStream.schema(schema).parquet(eventsDir))
-    runStreamToParquet(spark, transform(stream), queryName)
-  }
+                   transform: DataFrame => DataFrame): DataFrame =
+    runStreamToParquet(spark,
+      transform(openEvents(spark, eventsDir, oneFilePerBatch = false)), queryName)
 
   /** [[runToParquet]] with ONE FILE PER MICRO-BATCH in modification-time
     * order (oldest first — the file source's default ordering under
@@ -817,14 +812,9 @@ object StreamingOps {
     * drops anything because the watermark starts at the epoch. */
   def runToParquetOrdered(spark: SparkSession, eventsDir: String,
                           queryName: String,
-                          transform: DataFrame => DataFrame): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsDir).schema
-    val stream = graft.model.Frames.normalizeTsNanos(
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(eventsDir))
-    runStreamToParquet(spark, transform(stream), queryName)
-  }
+                          transform: DataFrame => DataFrame): DataFrame =
+    runStreamToParquet(spark,
+      transform(openEvents(spark, eventsDir, oneFilePerBatch = true)), queryName)
 
   /** Stage a frame as ONE parquet file named `name` inside `stageDir` with
     * an explicit modification time — the unit of micro-batch staging for

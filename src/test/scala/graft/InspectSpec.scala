@@ -1,0 +1,78 @@
+package graft
+
+import java.nio.file.{Files, Path}
+
+import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.SparkSession
+
+/** The library entry points of the mains: `Inspect plan|profile` (plan
+  * file, census line, per-job metrics, name check) and `Bench.run`'s
+  * summary pointer to the persisted per-query file. */
+class InspectSpec extends AnyFunSuite {
+
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .appName("inspect-spec")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    .getOrCreate()
+
+  private val sf = "/root/testdata/sf0.001"
+  private val q21 = "q21_car_trimmed_mean"
+
+  private def tempDir(prefix: String): Path = {
+    val d = Files.createTempDirectory(prefix)
+    graft.streaming.StreamingOps.deleteOnExit(d)
+    d
+  }
+
+  test("Inspect plan writes the formatted plan and one census line") {
+    val out = tempDir("inspect_plan")
+    val lines = Inspect.plan(spark, sf, out, Seq(q21))
+    val plan = Files.readString(out.resolve(s"$q21.txt"))
+    assert(plan.contains("== Physical Plan =="), plan.take(500))
+    assert(lines.size == 1)
+    assert(lines.head.matches(s"\\[plan\\] $q21 exchanges=\\d+ reused=\\d+ " +
+      "broadcastJoins=\\d+ sortMergeJoins=\\d+ fileScans=[1-9]\\d* cartesian=0 .*"),
+      lines.head)
+  }
+
+  test("Inspect profile records the last run's jobs with task time") {
+    val out = tempDir("inspect_profile")
+    val Seq((name, jobs)) = Inspect.profile(spark, sf, out, Seq(q21))
+    assert(name == q21)
+    assert(jobs.nonEmpty && jobs.forall(_.phase == s"$q21#2"))
+    assert(jobs.exists(_.taskMs > 0), jobs.map(_.line).mkString("\n"))
+    assert(jobs.forall(_.wallMs >= 0))
+    assert(Files.readString(out.resolve(s"$q21.final.txt")).contains("isFinalPlan=true"))
+    assert(Files.readAllLines(out.resolve(s"$q21.jobs.txt")).size == jobs.size)
+  }
+
+  test("Inspect and Bench reject an unknown query name before anything runs") {
+    val out = tempDir("inspect_reject").resolve("out")
+    val e = intercept[IllegalArgumentException](
+      Inspect.main(Array("profile", sf, out.toString, s"$q21,q21_car_trimmed_maen")))
+    assert(e.getMessage.contains("q21_car_trimmed_maen"))
+    assert(!Files.exists(out))
+    intercept[IllegalArgumentException](Bench.select(Some("q01_pricing_sumary")))
+    assert(Bench.select(None).toSet == SparkEntry.queries.keySet)
+    assert(Bench.select(None).size == SparkEntry.all.size)
+  }
+
+  test("Bench summary points at the per-query file only when this run wrote it") {
+    val dir = tempDir("bench_last_run")
+    val unwritable = dir.resolve("no_such_dir").resolve("BENCH_LAST_RUN.json")
+    val failed = Bench.run(spark, sf, Seq("q01_pricing_summary"), unwritable)
+    assert(failed.contains("\"n_queries\":1"), failed)
+    assert(failed.endsWith("\"queries_file\":null}"), failed)
+
+    val file = dir.resolve("BENCH_LAST_RUN.json")
+    Files.writeString(file, "stale per-query times of an earlier run\n")
+    val ok = Bench.run(spark, sf, Seq("q01_pricing_summary"), file)
+    assert(ok.endsWith("\"queries_file\":\"BENCH_LAST_RUN.json\"}"), ok)
+    val written = Files.readString(file)
+    assert(written.startsWith("{\"metric\":\"total\"") &&
+      written.contains("\"q01_pricing_summary\":"), written)
+  }
+}

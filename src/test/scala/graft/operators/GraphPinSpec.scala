@@ -5,16 +5,17 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** r19 optimization internals:
-  *  - pinByKey must still deliver a HashPartitioning + in-partition
-  *    ordering on the checkpointed frame now that the AQE-off bracket is
-  *    THREAD-scoped (cloned SQLConf) instead of session-global;
+  *  - pinByKey must deliver a HashPartitioning + in-partition ordering on
+  *    the pinned frame, which `PinnedLayout` declares on its LogicalRDD
+  *    (with AQE on, no conf is toggled);
   *  - the session's own adaptive.enabled must be untouched by a pin;
   *  - the partition count must derive from the caller-known row count
   *    (capped at the session conf);
   *  - the broadcast and shuffled triangle tiers (closedOrientedWedges
   *    dispatch) must produce identical censuses / per-node coefficients;
   *  - the dense-array local tiers (kCoreLocal, ssspLocal) must equal the
-  *    distributed round loops on the same graph.
+  *    distributed round loops on the same graph, and a local-tier cap
+  *    their Int-indexed arrays cannot hold is rejected at call time.
   */
 class GraphPinSpec extends AnyFunSuite {
 
@@ -109,5 +110,16 @@ class GraphPinSpec extends AnyFunSuite {
       finally spark.conf.unset(Graph.LocalEdgeCapKey)
     assert(local === dist)
     assert(local.nonEmpty)
+  }
+
+  test("a local-tier edge cap above the Int array bound is rejected at call time") {
+    val edges = graph(20, 40).toDF("a", "b")
+      .withColumn("w", lit(1L))
+    val seeds = Seq(0L).toDF("v")
+    spark.conf.set(Graph.LocalEdgeCapKey, "2000000000")
+    try {
+      intercept[IllegalArgumentException](Graph.boundedSssp(edges, seeds, iters = 2))
+      intercept[IllegalArgumentException](Graph.boundedKCorePeel(edges, k = 2, rounds = 2))
+    } finally spark.conf.unset(Graph.LocalEdgeCapKey)
   }
 }

@@ -1,10 +1,8 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicLong
-import java.util.concurrent.atomic.LongAdder
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+
+import graft.JobMetrics
 import org.apache.spark.sql.functions._
 
 /** Soak for the round-10 stateful streaming operators (dev main, not a
@@ -32,17 +30,7 @@ object SessionSoak {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val maxResultBytes = new AtomicLong(0)
-    val spill = new LongAdder
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          maxResultBytes.getAndAccumulate(m.resultSize, math.max)
-          spill.add(m.memoryBytesSpilled + m.diskBytesSpilled)
-        }
-      }
-    })
+    val metrics = JobMetrics.attach(spark)
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime()
       val r = f
@@ -118,9 +106,11 @@ object SessionSoak {
     val nJoined = time("count joined matches")(joined.count())
     println(s"[sessoak] interval-join matches: $nJoined")
 
-    println(f"[sessoak] max task result -> driver: ${maxResultBytes.get / 1024.0}%.0f KiB; " +
-      f"spill ${spill.sum / 1e9}%.2f GB")
-    assert(maxResultBytes.get < 64L * 1024 * 1024, "driver materialization leak")
+    metrics.settle()
+    val all = JobMetrics.total(metrics.jobs)
+    println(f"[sessoak] max task result -> driver: ${all.maxResultBytes / 1024.0}%.0f KiB; " +
+      f"spill ${all.spill / 1e9}%.2f GB")
+    assert(all.maxResultBytes < 64L * 1024 * 1024, "driver materialization leak")
     assert(nStreamed > 0 && nJoined > 0)
     spark.stop()
   }

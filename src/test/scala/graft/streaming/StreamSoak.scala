@@ -1,10 +1,8 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicLong
-import java.util.concurrent.atomic.LongAdder
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+
+import graft.JobMetrics
 import org.apache.spark.sql.functions._
 
 /** Streaming soak (dev main, not a test): drives the streaming ingest at
@@ -37,21 +35,7 @@ object StreamSoak {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val maxTaskMs = new AtomicLong(0)
-    val maxResultBytes = new AtomicLong(0)
-    val shuffleWrite = new LongAdder
-    val spill = new LongAdder
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          maxTaskMs.getAndAccumulate(m.executorRunTime, math.max)
-          maxResultBytes.getAndAccumulate(m.resultSize, math.max)
-          shuffleWrite.add(m.shuffleWriteMetrics.bytesWritten)
-          spill.add(m.memoryBytesSpilled + m.diskBytesSpilled)
-        }
-      }
-    })
+    val metrics = JobMetrics.attach(spark)
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime()
       val r = f
@@ -105,12 +89,14 @@ object StreamSoak {
     }
     val expected = nCh * maxKeep * winSamples
     println(s"[ssoak] stitched samples in closed blocks: $total (expect $expected)")
-    println(f"[ssoak] max task: ${maxTaskMs.get / 1000.0}%.1f s; " +
-      f"max task result -> driver: ${maxResultBytes.get / 1024.0}%.0f KiB; " +
-      f"shuffle write ${shuffleWrite.sum / 1e9}%.2f GB; " +
-      f"spill ${spill.sum / 1e9}%.2f GB")
+    metrics.settle()
+    val all = JobMetrics.total(metrics.jobs)
+    println(f"[ssoak] task time: ${all.taskMs / 1000.0}%.1f s; " +
+      f"max task result -> driver: ${all.maxResultBytes / 1024.0}%.0f KiB; " +
+      f"shuffle write ${all.shuffleWrite / 1e9}%.2f GB; " +
+      f"spill ${all.spill / 1e9}%.2f GB")
     assert(total == expected, s"lost samples: $total != $expected")
-    assert(maxResultBytes.get < 64L * 1024 * 1024, "driver materialization leak")
+    assert(all.maxResultBytes < 64L * 1024 * 1024, "driver materialization leak")
     spark.stop()
   }
 }

@@ -107,9 +107,9 @@ def main():
               "a quieter day and commit best-of-N.")
     else:
         print("\nverdict: SUSPECT CODE — the touched queries rose beyond "
-              "the controls' band. Diff the executed plans "
-              "(Test/runMain graft.PlanAudit with PLAN_AUDIT_EXECUTE=1) "
-              "and the _colhash artifacts before/after.")
+              "the controls' band. Diff the per-job breakdowns and the "
+              "AQE-final plans (runMain graft.Inspect profile <sf> <out> "
+              "<touched>) and the _colhash artifacts before/after.")
 
 
 if __name__ == "__main__":
