@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode, LocalTableScanExec, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, FileScan}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExchangeExec, ShuffleExchangeLike}
@@ -113,8 +113,12 @@ object Inspect {
   }
 
   /** Exchanges (shuffle + broadcast), reused exchanges, broadcast and
-    * sort-merge joins, file scans and cartesian products in a physical
-    * plan, counted through AQE wrappers, query stages and subqueries. */
+    * sort-merge joins, file scans, cartesian products, RDD scans and local
+    * table scans in a physical plan, counted through AQE wrappers, query
+    * stages and subqueries. RDD scans are the pinned frames (`LogicalRDD`)
+    * a builder materialized while it ran; local scans are rows it
+    * collected and rebuilt as a local relation (q143's census row).
+    * Without them the plan of such a query reads as all zeros. */
   def census(plan: SparkPlan): String = {
     def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
@@ -129,8 +133,11 @@ object Inspect {
     val smJoins = n { case _: SortMergeJoinExec => }
     val scans = n { case _: FileSourceScanExec =>
       case b: BatchScanExec if b.scan.isInstanceOf[FileScan] => }
+    val rddScans = n { case _: RDDScanExec => }
+    val localScans = n { case _: LocalTableScanExec => }
     val cartesian = n { case _: CartesianProductExec => }
     s"exchanges=$exchanges reused=$reused broadcastJoins=$bcastJoins " +
-      s"sortMergeJoins=$smJoins fileScans=$scans cartesian=$cartesian"
+      s"sortMergeJoins=$smJoins fileScans=$scans cartesian=$cartesian " +
+      s"rddScans=$rddScans localScans=$localScans"
   }
 }

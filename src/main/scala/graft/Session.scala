@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one session conf of the mains (`Bench`, `Verify`, `Inspect`):
+/** The one session conf of the mains (`Bench`, `Verify`, `Inspect`, and
+  * the test-scope `SessionSoak`/`StreamSoak`):
   * `local[$SPARK_GRAFT_CPUS]` (default 4) with shuffle partitions = cpus,
   * UTC session time zone, UI off, AQE on, nanosecond parquet timestamps
   * read as longs, and a raised ObjectHashAggregate fallback threshold.
@@ -10,8 +11,10 @@ import org.apache.spark.sql.SparkSession
   * property (`GRAFT_JAVA_OPTS="-Dspark.x=y"`, see build.sbt). */
 object Session {
 
+  /** Cores of the local master, `SPARK_GRAFT_CPUS` (default 4). */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
   def build(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -22,6 +22,20 @@ import graft.store.NwbStore.isSingle
   * mean per time point. A second shuffle reassembles the blocks into
   * segments. `Signal.trimmedMean` is the plain-Scala reference the specs
   * check this kernel against.
+  *
+  * Placement of the referenced segments: the reassembly shuffle of
+  * `subtractCarSegments` decides the parallelism of everything downstream
+  * of CAR (wavelet, amplitude, final resample, write — the heaviest stage
+  * of the preprocessing chain, one channel row at a time). A hash exchange
+  * is wrong there: it carries only a few MB, so AQE coalesces it by bytes
+  * onto 1–3 tasks, and channels that do hash apart can still collide. The
+  * exchange is therefore placed by channel id (`repartitionById`) onto
+  * `min(nChannels, shuffle partitions)` partitions: an explicit partition
+  * count that AQE never coalesces, with channel `c` of a series at
+  * partition `(h + c) mod n`, `h` a hash of the series keys, so one series
+  * puts one channel per task and several series rotate over all `n`
+  * partitions. Balance assumes dense channel ids (0..nChannels-1), the
+  * SegmentFrame convention; sparse ids stay correct, only less even.
   */
 object CommonReferencing {
 
@@ -124,7 +138,17 @@ object CommonReferencing {
     * by `carOfBlock`, and reassembled into channel segments by a second
     * shuffle — measured ~10x faster than a per-sample aggregate + join at
     * 64ch x 1M samples. Block boundaries change nothing: the trimmed mean
-    * is per time point. */
+    * is per time point.
+    *
+    * The reassembly shuffle is placed by channel id, not hashed: row
+    * `_pid = pmod(hash(series, band, rate, startingTime), n) + channel`
+    * goes to partition `_pid mod n`, `n = min(nChannels, shuffle
+    * partitions)`. A hash exchange here is coalesced by AQE to 1–3 tasks
+    * (it moves a few MB), which then run every downstream per-channel
+    * stage; an explicit count is never coalesced. `_pid` is also a
+    * grouping key of the reassembly, so the id-placed exchange satisfies
+    * the aggregate and the plan keeps its two exchanges. Even balance
+    * assumes dense channel ids 0..nChannels-1. */
   def subtractCarSegments(segments: DataFrame, nChannels: Int,
                           meanFrac: Double = 0.95, blockSize: Int = 8192,
                           precision: String = "double"): DataFrame = {
@@ -145,7 +169,13 @@ object CommonReferencing {
       .select(col("series"), col("cb._1").as("channel"), col("band"),
         col("rate"), col("startingTime"), col("block_idx"), col("cb._2").as("block"))
 
-    reassemble(referenced, Seq("series", "channel", "band", "rate", "startingTime"), blockSize)
+    val n = math.min(nChannels, segments.sparkSession.sessionState.conf.numShufflePartitions)
+    val placed = referenced
+      .withColumn("_pid", pmod(hash(col("series"), col("band"), col("rate"),
+        col("startingTime")), lit(n)) + col("channel"))
+      .repartitionById(n, col("_pid"))
+    reassemble(placed, Seq("series", "channel", "band", "rate", "startingTime", "_pid"),
+      blockSize).drop("_pid")
   }
 
   /** The CAR trace itself as a channel-less SegmentFrame (channel = null) —

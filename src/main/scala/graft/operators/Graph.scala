@@ -195,7 +195,10 @@ object Graph {
       val n = spark.sessionState.conf.numShufflePartitions
       val oriented = orient(
         e.join(broadcast(degA), "a").join(broadcast(degB), "b"))
-      val adjU = oriented.groupBy(col("src")).agg(collect_list(col("dst")).as("nu"))
+      // pinned so both broadcasts read one aggregate: adjV renames adjU,
+      // so no exchange reuse applies and each broadcast subtree would run
+      // its own collect_list aggregate job
+      val adjU = oriented.groupBy(col("src")).agg(collect_list(col("dst")).as("nu")).pin
       val adjV = adjU.select(col("src").as("dst"), col("nu").as("nv"))
       // inner joins: src always holds >= 1 out-neighbor; a dst with no
       // out-list cannot witness a triangle (empty intersection) — dropping

@@ -50,7 +50,9 @@ object PreprocessFolder {
     * step and the storage width of every table. */
   def preprocessStore(store: NwbStore, a: Args): Unit = {
     val raw = store.readAcquisition(a.acqName)
-    val nCh = raw.select("channel").distinct().count().toInt
+    // one job: distinct().count() runs three under AQE; null counts as one
+    // value, as it does there
+    val nCh = raw.select("channel").collect().map(_.get(0)).distinct.length
     val config = Pipeline.Config(initialRate = a.initialRate, finalRate = Some(a.finalRate),
       filters = a.filters, scaling = 1.0, precision = a.precision)
     if (a.allSteps) Store.storePreprocessBlock(raw, store.root, a.acqName, nCh, config)

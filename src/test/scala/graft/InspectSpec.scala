@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 
 /** The library entry points of the mains: `Inspect plan|profile` (plan
-  * file, census line, per-job metrics, name check) and `Bench.run`'s
-  * summary pointer to the persisted per-query file. */
+  * file, census line with pinned and locally built inputs, per-job metrics,
+  * name check) and `Bench.run`'s summary pointer to the persisted
+  * per-query file. */
 class InspectSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -36,6 +37,18 @@ class InspectSpec extends AnyFunSuite {
     assert(lines.head.matches(s"\\[plan\\] $q21 exchanges=\\d+ reused=\\d+ " +
       "broadcastJoins=\\d+ sortMergeJoins=\\d+ fileScans=[1-9]\\d* cartesian=0 .*"),
       lines.head)
+  }
+
+  test("Inspect plan counts the inputs a builder materialized (q143, q167)") {
+    val out = tempDir("inspect_plan_pinned")
+    val Seq(q143, q167) = Inspect.plan(spark, sf,
+      out, Seq("q143_triangle_census", "q167_sssp_reach"))
+    // the triangle census is one locally built row: only a local scan
+    assert(q143.startsWith("[plan] q143_triangle_census exchanges=0 reused=0 " +
+      "broadcastJoins=0 sortMergeJoins=0 fileScans=0 cartesian=0 rddScans=0 " +
+      "localScans=1 "), q143)
+    // the SSSP rounds end in a pinned frame the plan reads
+    assert(q167.matches(".* fileScans=0 .* rddScans=[1-9]\\d* .*"), q167)
   }
 
   test("Inspect profile records the last run's jobs with task time") {

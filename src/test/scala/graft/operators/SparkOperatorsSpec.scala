@@ -4,6 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import org.apache.spark.sql.functions._
 
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, ShufflePartitionIdPassThrough}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+
 import graft.model.{Frames, Synthetic}
 import graft.dsp.Signal
 
@@ -11,13 +15,15 @@ import graft.dsp.Signal
   * (tests/test_pipeline.py, tests/test_utils.py) plus parity of the blocked
   * CAR kernel (`subtractCarSegments`/`carSegments`) with the plain-Scala
   * reference `Signal.trimmedMean`, computed per time point, and with an
-  * independent long-form SQL CAR subtracted through a join. */
+  * independent long-form SQL CAR subtracted through a join; and the
+  * channel-id placement of the post-CAR reassembly shuffle. */
 class SparkOperatorsSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .appName("operators-spec")
     .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.adaptive.enabled", "true")
     .config("spark.ui.enabled", "false")
     .config("spark.sql.session.timeZone", "UTC")
     // harness events.parquet carries TIMESTAMP(NANOS); read as long nanos
@@ -249,6 +255,59 @@ class SparkOperatorsSpec extends AnyFunSuite {
       val worst = x.zip(y).map { case (u, v) => math.abs(u - v) / math.max(1e-12, math.abs(v)) }.max
       assert(worst < 1e-9, s"segment $k diverges: $worst")
     }
+  }
+
+  // --- post-CAR placement: the per-channel stages run on every core -------
+  /** preprocessBlock over 8 synthetic channels held as a local relation, so
+    * the only exchanges in its plan are the pipeline's own (the generator
+    * adds a round-robin one). */
+  private def preprocessed8ch: DataFrame = {
+    val synthetic = Synthetic.segments(spark, 1.0, 8, 2000.0, seed = 3)
+    val raw = spark.createDataFrame(
+      java.util.Arrays.asList(synthetic.collect(): _*), synthetic.schema)
+    Pipeline.preprocessBlock(raw, 8, Pipeline.Config(initialRate = 1000.0,
+      finalRate = Some(250.0), filters = "human", hgOnly = true, scaling = 1.0))
+  }
+
+  test("preprocessBlock plans two exchanges; the reassembly one is id-placed on 4 partitions") {
+    val partitionings = (preprocessed8ch.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }).collect { case e: ShuffleExchangeLike => e.outputPartitioning }
+    assert(partitionings.size == 2, partitionings.mkString("\n"))
+    assert(partitionings.collect { case p: ShufflePartitionIdPassThrough => p.numPartitions }
+      == Seq(4), partitionings.mkString("\n"))
+    assert(partitionings.count(_.isInstanceOf[HashPartitioning]) == 1,
+      partitionings.mkString("\n"))
+  }
+
+  test("preprocessBlock's post-CAR stage runs one task per shuffle partition under AQE") {
+    val metrics = graft.JobMetrics.attach(spark)
+    try {
+      val rows = graft.JobMetrics.phase(spark, "post-car")(preprocessed8ch.collect())
+      assert(rows.length == 8 * 8)
+      metrics.settle()
+      // the last job is the result stage: reassembly, wavelet, amplitude,
+      // final resample (the map stages before it ran as their own jobs)
+      val last = metrics.jobs("post-car").last
+      assert(last.tasks == 4, metrics.jobs("post-car").map(_.line).mkString("\n"))
+    } finally spark.sparkContext.removeSparkListener(metrics)
+  }
+
+  test("subtractCarSegments puts one channel of every series in each partition") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(5)
+    val segs = (for (s <- 0 until 8; ch <- 0 until 4)
+      yield (s"s$s", ch, null: Integer, 400.0, 0.0, Array.fill(100)(rnd.nextDouble())))
+      .toDF("series", "channel", "band", "rate", "startingTime", "values")
+    val perPartition = CommonReferencing.subtractCarSegments(segs, 4, 0.95)
+      .select(spark_partition_id().as("pid"), col("series"), col("channel"))
+      .collect().groupBy(_.getInt(0))
+    assert(perPartition.keySet == Set(0, 1, 2, 3), perPartition.keySet)
+    assert(perPartition.values.forall(_.length == 8),
+      perPartition.map { case (p, rs) => p -> rs.length })
+    // each partition holds one channel of each series
+    assert(perPartition.values.forall(_.map(_.getString(1)).toSet.size == 8))
   }
 
   // --- end-to-end physics: the minimum slice of SURVEY.md §7 ---------------

@@ -1,8 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-
-import graft.JobMetrics
+import graft.{JobMetrics, Session}
 import org.apache.spark.sql.functions._
 
 /** Soak for the round-10 stateful streaming operators (dev main, not a
@@ -13,6 +11,8 @@ import org.apache.spark.sql.functions._
   * session count.
   *
   * Run: sbt "Test/runMain graft.streaming.SessionSoak [nUsers] [nEvents]"
+  * on `graft.Session`'s session (`local[$SPARK_GRAFT_CPUS]`, default 4),
+  * with that many stream state partitions.
   */
 object SessionSoak {
 
@@ -20,14 +20,9 @@ object SessionSoak {
     val nUsers = if (args.length > 0) args(0).toInt else 100000
     val nEvents = if (args.length > 1) args(1).toLong else 20000000L
     // at soak volume the shuffle parallelism matters more than commit
-    // fan-out (same trade as StreamSoak)
-    sys.props("spark.graft.stream.parts") = "32"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    // fan-out (same trade as StreamSoak): one state partition per core
+    sys.props("spark.graft.stream.parts") = Session.cpus
+    val spark = Session.build()
     spark.sparkContext.setLogLevel("ERROR")
 
     val metrics = JobMetrics.attach(spark)

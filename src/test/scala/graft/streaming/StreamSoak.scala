@@ -1,8 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-
-import graft.JobMetrics
+import graft.{JobMetrics, Session}
 import org.apache.spark.sql.functions._
 
 /** Streaming soak (dev main, not a test): drives the streaming ingest at
@@ -16,23 +14,21 @@ import org.apache.spark.sql.functions._
   *
   * Run: SPARK_DRIVER_MEM=32g sbt "Test/runMain graft.streaming.StreamSoak
   *   [nChannels] [nSamplesPerChannel]"
+  * on `graft.Session`'s session (`local[$SPARK_GRAFT_CPUS]`, default 4),
+  * with that many stream state partitions.
   */
 object StreamSoak {
 
   def main(args: Array[String]): Unit = {
     // the soak shuffles tens of millions of samples through the windowed
-    // assembly: full parallelism matters more than state-commit fan-out
-    // (the opposite trade from the tiny staged bench streams)
-    sys.props("spark.graft.stream.parts") = "32"
+    // assembly: one state partition per core, so full parallelism beats
+    // state-commit fan-out (the opposite trade from the tiny staged bench
+    // streams) without queueing tasks behind the cores
+    sys.props("spark.graft.stream.parts") = Session.cpus
     val nCh = if (args.length > 0) args(0).toInt else 8
     val nSamples = if (args.length > 1) args(1).toLong else 2000000L
     val rate = 1000.0 // 1 kHz -> 1 ms = 1e6 ns between samples
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.build()
     spark.sparkContext.setLogLevel("ERROR")
 
     val metrics = JobMetrics.attach(spark)
