@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one session conf of the mains (`Bench`, `Verify`, `Inspect`, and
-  * the test-scope `SessionSoak`/`StreamSoak`):
+/** The one session conf of the mains (`Bench`, `Verify`, `Inspect`,
+  * `tools.PreprocessFolder`, and the test-scope `SessionSoak`/`StreamSoak`):
   * `local[$SPARK_GRAFT_CPUS]` (default 4) with shuffle partitions = cpus,
   * UTC session time zone, UI off, AQE on, nanosecond parquet timestamps
   * read as longs, and a raised ObjectHashAggregate fallback threshold.

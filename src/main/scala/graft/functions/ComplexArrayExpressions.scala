@@ -88,16 +88,12 @@ case class ComplexPhase(left: Expression, right: Expression) extends ComplexArra
 }
 
 /** Column API + SQL registration, so operator code can call these without
-  * setup. Registration is unguarded: createOrReplaceTempFunction is
-  * idempotent and per-session, so "already registered" bookkeeping buys
-  * nothing. */
+  * setup; each name is registered once per session ([[registerIfAbsent]]). */
 object ComplexArrayFunctions {
 
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "complex_amplitude", exprs => ComplexAmplitude(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "complex_phase", exprs => ComplexPhase(exprs(0), exprs(1)), "built-in")
+    registerIfAbsent(spark, "complex_amplitude")(exprs => ComplexAmplitude(exprs(0), exprs(1)))
+    registerIfAbsent(spark, "complex_phase")(exprs => ComplexPhase(exprs(0), exprs(1)))
   }
 
   def complexAmplitude(df: org.apache.spark.sql.DataFrame, re: Column, im: Column): Column = {

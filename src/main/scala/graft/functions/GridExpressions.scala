@@ -120,12 +120,11 @@ case class FloorDotE9(left: Expression, right: Expression,
 }
 
 /** Column API + per-session SQL registration (the ComplexArrayFunctions
-  * pattern — createOrReplaceTempFunction is idempotent). */
+  * pattern, [[registerIfAbsent]]). */
 object GridFunctions {
 
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "floor_dot_e9", exprs => FloorDotE9(exprs(0), exprs(1)), "built-in")
+    registerIfAbsent(spark, "floor_dot_e9")(exprs => FloorDotE9(exprs(0), exprs(1)))
 
   /** Engine-exact 6-decimal readout: floor(x·1e6 + 0.5)/1e6. Unlike
     * `round(x, 6)` — which Spark evaluates decimal-exactly (BigDecimal

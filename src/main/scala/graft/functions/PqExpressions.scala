@@ -158,14 +158,11 @@ object PqFunctions {
   }
 
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "adc_dot_e9",
-      exprs => AdcDotE9(exprs(0), exprs(1), toLut3(exprs(2))), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "adc_norm_e9",
+    registerIfAbsent(spark, "adc_dot_e9")(
+      exprs => AdcDotE9(exprs(0), exprs(1), toLut3(exprs(2))))
+    registerIfAbsent(spark, "adc_norm_e9")(
       exprs => AdcNormE9(exprs(0),
-        org.apache.spark.sql.catalyst.expressions.Literal(0),
-        toLut2(exprs(1))), "built-in")
+        org.apache.spark.sql.catalyst.expressions.Literal(0), toLut2(exprs(1))))
   }
 
   def adcDotE9(df: org.apache.spark.sql.DataFrame, codes: Column, qi: Column,

@@ -536,25 +536,16 @@ case class AssembleFragments(off: Expression, vals: Expression,
     copy(off = newLeft, vals = newRight)
 }
 
-/** Column API + SQL registration, same pattern as ComplexArrayFunctions.
-  * Registration is unguarded: createOrReplaceTempFunction is idempotent and
-  * per-session, so "already registered" bookkeeping (which would need a
-  * session identity key) buys nothing. */
+/** Column API + SQL registration, same pattern as ComplexArrayFunctions:
+  * each name is registered once per session ([[registerIfAbsent]]). */
 object SeriesAssembleFunctions {
 
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "assemble_series",
-      exprs => AssembleSeries(exprs(0), exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "assemble_timed",
-      exprs => AssembleTimed(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "assemble_fragments",
-      exprs => AssembleFragments(exprs(0), exprs(1)),
-      "built-in")
+    registerIfAbsent(spark, "assemble_series")(exprs => AssembleSeries(exprs(0), exprs(1)))
+    registerIfAbsent(spark, "assemble_timed")(
+      exprs => AssembleTimed(exprs(0), exprs(1), exprs(2)))
+    registerIfAbsent(spark, "assemble_fragments")(
+      exprs => AssembleFragments(exprs(0), exprs(1)))
   }
 
   /** values ordered by tIdx (O(n) placement when tIdx is dense). */

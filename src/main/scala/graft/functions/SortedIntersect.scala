@@ -110,9 +110,7 @@ object SortedIntersectFunctions {
   val registeredName = "_graft_sorted_intersect_size"
 
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      registeredName,
-      exprs => SortedIntersectSize(exprs(0), exprs(1)), "built-in")
+    registerIfAbsent(spark, registeredName)(exprs => SortedIntersectSize(exprs(0), exprs(1)))
 
   def sortedIntersectSize(df: org.apache.spark.sql.DataFrame,
                           a: Column, b: Column): Column = {

@@ -191,10 +191,12 @@ object Graph {
       // The probe side is round-robin fanned to the session's parallelism
       // (its lineage is a handful of pinned partitions at bench scale; the
       // exchange moves nEdges rows, the cheapest place to buy the heavy
-      // stage's parallelism — the fanOutScan rationale).
+      // stage's parallelism — the fanOutScan rationale). The oriented
+      // edges are pinned, so the two orienting joins run once for both
+      // consumers: adjU's aggregate and the probe side.
       val n = spark.sessionState.conf.numShufflePartitions
       val oriented = orient(
-        e.join(broadcast(degA), "a").join(broadcast(degB), "b"))
+        e.join(broadcast(degA), "a").join(broadcast(degB), "b")).pin
       // pinned so both broadcasts read one aggregate: adjV renames adjU,
       // so no exchange reuse applies and each broadcast subtree would run
       // its own collect_list aggregate job

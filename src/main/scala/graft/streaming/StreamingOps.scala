@@ -683,23 +683,50 @@ object StreamingOps {
         col("win_idx"), combine(col("parts")).as("values"))
   }
 
-  /** State partition count for the staged bench/verify streams. A stateful
-    * streaming query commits every state-store partition each micro-batch
-    * (a stream-stream join commits FOUR stores per partition), so at
-    * test-data state volumes the commit fan-out dominates wall time —
-    * measured 3.3 s vs 9.0 s steady-state on the q104 join at 8 vs 32
-    * partitions over identical state. The count is pinned at query START
-    * (it lives in the checkpoint), so it scopes to the stream without
-    * touching the surrounding batch plan; a production deployment sizes it
-    * to state volume instead (results are partitioning-invariant). */
-  private def streamStateParts: String =
-    sys.props.getOrElse("spark.graft.stream.parts",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8"))
+  /** State partitions for one stream query: the bytes of the file-stream
+    * sources it reads over the session's
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` (64 MB by default),
+    * rounded up and clamped to [1, `spark.sql.shuffle.partitions`]. Every
+    * state partition commits each micro-batch, and state holds at most what
+    * was read, so input bytes bound the state of every stateful operator.
+    * Each source directory is listed once on the driver; a query with no
+    * file source keeps the session's count. */
+  private def stateParts(query: DataFrame): Int = {
+    val spark = query.sparkSession
+    val conf = spark.sessionState.conf
+    val dirs = query.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.streaming.runtime.StreamingRelation =>
+        r.dataSource.options.get("path")
+    }.flatten.distinct
+    if (dirs.isEmpty) conf.numShufflePartitions
+    else {
+      val hadoop = spark.sessionState.newHadoopConf()
+      val bytes = dirs.map { d =>
+        val p = new org.apache.hadoop.fs.Path(d)
+        p.getFileSystem(hadoop).getContentSummary(p).getLength
+      }.sum
+      val advisory = conf.getConf(
+        org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+      math.min(conf.numShufflePartitions.toLong, (bytes + advisory - 1) / advisory)
+        .max(1L).toInt
+    }
+  }
 
-  private def withStreamParts[T](spark: SparkSession)(f: => T): T = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamStateParts)
-    try f finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  /** Starts `query` with [[stateParts]] state partitions. Spark clones the
+    * session when it builds the query (the `StreamExecution` constructor)
+    * and reads the stateful partition count from that clone, so the conf
+    * is set only around `start()`: the caller's session keeps its own
+    * count while the query runs. A fresh checkpoint records the count in
+    * its offset log; a query resumed from an existing checkpoint keeps the
+    * recorded count whatever this rule gives (every `runTo*` driver makes
+    * a fresh checkpoint). */
+  private def startSized(query: DataFrame)(
+      start: => org.apache.spark.sql.streaming.StreamingQuery)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val conf = query.sparkSession.conf
+    val prev = conf.get("spark.sql.shuffle.partitions")
+    conf.set("spark.sql.shuffle.partitions", stateParts(query).toString)
+    try start finally conf.set("spark.sql.shuffle.partitions", prev)
   }
 
   /** Build a ts-normalized file-stream source over an events directory —
@@ -727,15 +754,13 @@ object StreamingOps {
   private def toMemory(spark: SparkSession, stream: DataFrame,
                        transform: DataFrame => DataFrame, queryName: String,
                        outputMode: OutputMode): DataFrame = {
-    withStreamParts(spark) {
-      val q = transform(stream).writeStream
-        .outputMode(outputMode)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .format("memory")
-        .queryName(queryName)
-        .start()
-      q.awaitTermination()
-    }
+    val query = transform(stream)
+    startSized(query)(query.writeStream
+      .outputMode(outputMode)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .format("memory")
+      .queryName(queryName)
+      .start()).awaitTermination()
     spark.table(queryName)
   }
 
@@ -841,16 +866,13 @@ object StreamingOps {
     val out = java.nio.file.Files.createTempDirectory(s"stream_sink_$queryName")
     deleteOnExit(out)
     val dataDir = out.resolve("data").toString
-    withStreamParts(spark) {
-      val q = transformed.writeStream
-        .outputMode(OutputMode.Append)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .format("parquet")
-        .option("path", dataDir)
-        .option("checkpointLocation", out.resolve("ckpt").toString)
-        .start()
-      q.awaitTermination()
-    }
+    startSized(transformed)(transformed.writeStream
+      .outputMode(OutputMode.Append)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .format("parquet")
+      .option("path", dataDir)
+      .option("checkpointLocation", out.resolve("ckpt").toString)
+      .start()).awaitTermination()
     // a query that closed no windows writes only _spark_metadata — return
     // an empty frame of the right schema instead of failing parquet schema
     // inference (the memory sink this replaced returned an empty table)

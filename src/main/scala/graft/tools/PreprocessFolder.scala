@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.store.NwbStore
 import graft.operators.{Pipeline, Store}
 
@@ -18,6 +17,7 @@ import graft.operators.{Pipeline, Store}
   *        [--filters rat|human|changlab] [--all-steps] [--acq-name NAME]
   *        [--precision single|double]
   * <root> contains one subdirectory per session, each an NwbStore layout.
+  * The session is `graft.Session`'s (`local[$SPARK_GRAFT_CPUS]`, default 4).
   * Tables land in the session's preprocessing namespace under the
   * reference's accreted names; the fused path writes only
   * `wvlt_amp_CAR_ln_downsampled_<acq>`, partitioned by channel.
@@ -66,14 +66,7 @@ object PreprocessFolder {
 
   def main(argv: Array[String]): Unit = {
     val a = parse(argv)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build()
     val fs = new org.apache.hadoop.fs.Path(a.root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val sessions = fs.listStatus(new org.apache.hadoop.fs.Path(a.root))

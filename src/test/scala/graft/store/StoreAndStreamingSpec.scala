@@ -315,6 +315,71 @@ class StoreAndStreamingSpec extends AnyFunSuite {
       assert(n == orig(ch).length, s"stitched wavelet sample count differs on channel $ch")
   }
 
+  test("stream state partitions are sized from the staged input; the caller's count is untouched") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    // 4 ch x 3 s at 1 kHz, one 1 s file per micro-batch, then a far-future
+    // flush file that closes the data windows and an empty one to evict them
+    val stage = Files.createTempDirectory("sized_stream")
+    StreamingOps.deleteOnExit(stage)
+    val events = spark.range(12000).select($"id".as("event_id"),
+      ($"id" % 4).as("user_id"), ($"id" / 4).cast("long").multiply(1000000L).as("ts"),
+      (sin($"id" / 40.0) + $"id" % 4).as("value"))
+    val t0 = System.currentTimeMillis() - 60000L
+    for (f <- 0 until 3)
+      StreamingOps.stageFileAs(events.filter($"ts" >= f * 1000000000L &&
+        $"ts" < (f + 1) * 1000000000L), stage, s"b$f.parquet", t0 + 1000L * f)
+    val flush = events.limit(4).select(($"event_id" + 100000L).as("event_id"), $"user_id",
+      lit(1000500000000L).as("ts"), lit(0.0).as("value"))
+    StreamingOps.stageFileAs(flush, stage, "flush.parquet", t0 + 3000L)
+    StreamingOps.stageFileAs(flush.filter(lit(false)), stage, "z_evict.parquet", t0 + 4000L)
+    val bytes = stage.toFile.listFiles.map(_.length).sum
+
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(Seq[Int], String)]
+    var done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      def onQueryProgress(e: QueryProgressEvent): Unit = seen.synchronized {
+        seen += ((e.progress.stateOperators.map(_.numShufflePartitions.toInt).toSeq,
+          spark.conf.get("spark.sql.shuffle.partitions")))
+      }
+      def onQueryTerminated(e: QueryTerminatedEvent): Unit = done.countDown()
+    }
+    // one streamed + stitched recording: (state partitions per batch, the
+    // caller's count seen while it ran, stitched values per channel)
+    def run(name: String) = {
+      seen.clear(); done = new java.util.concurrent.CountDownLatch(1)
+      val out = StreamingOps.runToParquetOrdered(spark, stage.toString, name,
+        df => StreamingOps.windowedSegmentsStream(df, nChannels = 4, rate = 1000.0,
+          windowDur = "1 second", watermark = "2 seconds", contextDur = "100 milliseconds"))
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      val stitched = StreamingOps.stitchTimeWindows(out, "1 second", "100 milliseconds")
+        .select($"channel", $"win_idx", $"values").collect().groupBy(_.getInt(0))
+        .map { case (ch, rs) => ch -> rs.sortBy(_.getLong(1)).flatMap(_.getSeq[Double](2)).toSeq }
+      seen.synchronized((seen.flatMap(_._1).distinct.toSeq, seen.map(_._2).distinct.toSeq,
+        stitched))
+    }
+    spark.streams.addListener(listener)
+    try {
+      val (parts1, callerConf1, out1) = run("sized_default")
+      assert(parts1 == Seq(1), s"a $bytes B input should run on 1 state partition")
+      assert(callerConf1 == Seq("4"), "the caller's shuffle partitions moved while the query ran")
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+      assert(out1.keySet == Set(0, 1, 2, 3) && out1.values.forall(_.length == 3000))
+      // a smaller advisory size: min(cores, ceil(bytes / advisory)) partitions
+      val advisory = (bytes + 2) / 3
+      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", advisory.toString)
+      val (parts3, callerConf3, out3) =
+        try run("sized_small_advisory")
+        finally spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+      assert(parts3 == Seq(math.min(4L, (bytes + advisory - 1) / advisory).toInt))
+      assert(parts3.head > 1)
+      assert(callerConf3 == Seq("4"))
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+      assert(out3 == out1, "stitched output depends on the state partition count")
+    } finally spark.streams.removeListener(listener)
+  }
+
   test("streaming: stateful running channel stats converge to batch stats") {
     val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .select(pmod($"user_id", lit(4)).cast("int").as("channel"),

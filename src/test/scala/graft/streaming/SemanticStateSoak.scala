@@ -55,7 +55,6 @@ object SemanticStateSoak {
         s"(got $nVectors / $nCells)")
     val perCell = (nVectors / nCells).toInt
 
-    sys.props("spark.graft.stream.parts") = "32"
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.ui.enabled", "false")

@@ -11,17 +11,15 @@ import org.apache.spark.sql.functions._
   * session count.
   *
   * Run: sbt "Test/runMain graft.streaming.SessionSoak [nUsers] [nEvents]"
-  * on `graft.Session`'s session (`local[$SPARK_GRAFT_CPUS]`, default 4),
-  * with that many stream state partitions.
+  * on `graft.Session`'s session (`local[$SPARK_GRAFT_CPUS]`, default 4);
+  * the stream's state partitions are sized from its staged input
+  * (`StreamingOps`).
   */
 object SessionSoak {
 
   def main(args: Array[String]): Unit = {
     val nUsers = if (args.length > 0) args(0).toInt else 100000
     val nEvents = if (args.length > 1) args(1).toLong else 20000000L
-    // at soak volume the shuffle parallelism matters more than commit
-    // fan-out (same trade as StreamSoak): one state partition per core
-    sys.props("spark.graft.stream.parts") = Session.cpus
     val spark = Session.build()
     spark.sparkContext.setLogLevel("ERROR")
 

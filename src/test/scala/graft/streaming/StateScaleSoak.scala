@@ -29,8 +29,6 @@ object StateScaleSoak {
     val nEvents = if (args.length > 0) args(0).toLong else 12000000L
     val nDistinct = if (args.length > 1) args(1).toLong else 4000000L
     val nBatches = if (args.length > 2) args(2).toInt else 4
-    // state-commit fan-out: one store per shuffle partition per operator
-    sys.props("spark.graft.stream.parts") = "32"
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.ui.enabled", "false")

@@ -14,17 +14,13 @@ import org.apache.spark.sql.functions._
   *
   * Run: SPARK_DRIVER_MEM=32g sbt "Test/runMain graft.streaming.StreamSoak
   *   [nChannels] [nSamplesPerChannel]"
-  * on `graft.Session`'s session (`local[$SPARK_GRAFT_CPUS]`, default 4),
-  * with that many stream state partitions.
+  * on `graft.Session`'s session (`local[$SPARK_GRAFT_CPUS]`, default 4);
+  * the stream's state partitions are sized from its staged input
+  * (`StreamingOps`).
   */
 object StreamSoak {
 
   def main(args: Array[String]): Unit = {
-    // the soak shuffles tens of millions of samples through the windowed
-    // assembly: one state partition per core, so full parallelism beats
-    // state-commit fan-out (the opposite trade from the tiny staged bench
-    // streams) without queueing tasks behind the cores
-    sys.props("spark.graft.stream.parts") = Session.cpus
     val nCh = if (args.length > 0) args(0).toInt else 8
     val nSamples = if (args.length > 1) args(1).toLong else 2000000L
     val rate = 1000.0 // 1 kHz -> 1 ms = 1e6 ns between samples
