@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{AssembleSeries, AssembleTimed, ComplexAmplitude, ComplexPhase, FloorDotE9, RewriteFloorDotE9}
+import graft.functions.{AssembleSeries, AssembleTimed, ComplexAmplitude, ComplexPhase, DspFunctions, FloorDotE9, RewriteFloorDotE9}
 
 /** Library integration point for `spark.sql.extensions=graft.GraftExtensions`
   * (or `withExtensions(new GraftExtensions)` on a session builder):
@@ -22,6 +22,9 @@ import graft.functions.{AssembleSeries, AssembleTimed, ComplexAmplitude, Complex
   *  - `floor_dot_e9(a, b)` — codegen exact-grid inner product
   *    Σ floor(aᵢ·bᵢ·1e9) over float/double arrays (cosine rescoring,
   *    energy norms)
+  *  - `segment_resample`, `segment_notch`, `wavelet_bands`,
+  *    `wavelet_amplitude` — the per-segment spectral kernels over
+  *    (values, rate) with literal parameters (graft.functions.DspFunctions)
   *
   * ONE optimizer rule is injected — [[graft.functions.RewriteFloorDotE9]],
   * which substitutes the native codegen'd `floor_dot_e9` for the portable
@@ -55,5 +58,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("floor_dot_e9"),
       new ExpressionInfo(classOf[FloorDotE9].getName, "floor_dot_e9"),
       (exprs: Seq[Expression]) => FloorDotE9(exprs(0), exprs(1))))
+    for ((name, cls, build) <- DspFunctions.builders)
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
   }
 }

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode, LocalTableScanExec, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, FileScan}
@@ -118,7 +119,9 @@ object Inspect {
     * stages and subqueries. RDD scans are the pinned frames (`LogicalRDD`)
     * a builder materialized while it ran; local scans are rows it
     * collected and rebuilt as a local relation (q143's census row).
-    * Without them the plan of such a query reads as all zeros. */
+    * Without them the plan of such a query reads as all zeros. `udfs`
+    * counts the Scala UDF expressions in the nodes' expressions: each one
+    * is a boxed boundary its input and output cross row by row. */
   def census(plan: SparkPlan): String = {
     def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
@@ -136,8 +139,9 @@ object Inspect {
     val rddScans = n { case _: RDDScanExec => }
     val localScans = n { case _: LocalTableScanExec => }
     val cartesian = n { case _: CartesianProductExec => }
+    val udfs = all.map(_.expressions.map(_.collect { case u: ScalaUDF => u }.size).sum).sum
     s"exchanges=$exchanges reused=$reused broadcastJoins=$bcastJoins " +
       s"sortMergeJoins=$smJoins fileScans=$scans cartesian=$cartesian " +
-      s"rddScans=$rddScans localScans=$localScans"
+      s"rddScans=$rddScans localScans=$localScans udfs=$udfs"
   }
 }

@@ -3,9 +3,9 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, BinaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, BinaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native Catalyst expressions for the complex-trace hot path: elementwise
@@ -48,7 +48,7 @@ abstract class ComplexArrayOp extends BinaryExpression {
       out(i) = scalarOp(re.getDouble(i), im.getDouble(i))
       i += 1
     }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -62,7 +62,7 @@ abstract class ComplexArrayOp extends BinaryExpression {
          |for (int $i = 0; $i < $n; $i++) {
          |  $out[$i] = ${scalarJava(s"$re.getDouble($i)", s"$im.getDouble($i)")};
          |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
+         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
        """.stripMargin
     })
 }

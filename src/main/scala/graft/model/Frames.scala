@@ -27,6 +27,13 @@ object Frames {
 
   val SegmentCols = Seq("series", "channel", "band", "rate", "startingTime", "values")
 
+  /** The SegmentFrame schema, as `NwbStore.writeAcquisition` writes it and
+    * `readAcquisition` reads it back without inferring it from the files. */
+  val SegmentSchema: org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType.fromDDL(
+      "series string, channel int, band int, rate double, startingTime double, " +
+        "values array<double>")
+
   /** Normalize an events frame's `ts` column to long NANOS regardless of the
     * physical parquet type the harness wrote. Two generations exist:
     * TIMESTAMP(NANOS), which Spark 4 only reads under

@@ -1,41 +1,25 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Column}
-import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
-import java.util.concurrent.ConcurrentHashMap
 
-import graft.dsp.{Signal, Signal32, Kernels}
+import graft.dsp.{Signal, Kernels}
 import graft.dsp.Signal.{PadSpec, FastPad}
+import graft.functions.{DspFunctions, DspKernels}
 import graft.store.NwbStore.isSingle
 
 /** The per-segment spectral operators: each is a narrow `DataFrame =>
   * DataFrame` map over SegmentFrame rows (no shuffle), with the FFT math in
-  * graft.dsp. These are the only Scala UDFs in the engine's hot path — Spark
-  * has no FFT primitive (SURVEY.md §7 "built-in vs custom"); everything
-  * around them (amplitude, phase, joins, aggregations) stays in Catalyst
-  * expressions so codegen and pushdown keep working.
+  * graft.dsp. Resample, notch and the named-filterbank wavelet run as native
+  * Catalyst expressions over primitive arrays (graft.functions.DspFunctions;
+  * Spark has no FFT primitive, SURVEY.md §7 "built-in vs custom"), as do
+  * amplitude and phase, so codegen and pushdown keep working around them.
+  * Scala UDFs remain for the user-kernel wavelet, z-score and Welch PSD.
   */
 object DspOperators {
 
-  /** Cast a trace to float32 with an optional pre-scale — the reference's
-    * `X.astype(dtype(X, precision))` entry cast (utils.py:9-31). */
-  private def toF32(values: Array[Double], preScale: Double): Array[Float] = {
-    val out = new Array[Float](values.length)
-    var i = 0
-    while (i < values.length) { out(i) = (values(i) * preScale).toFloat; i += 1 }
-    out
-  }
-
-  private def toF64(values: Array[Float]): Array[Double] = {
-    val out = new Array[Double](values.length)
-    var i = 0
-    while (i < values.length) { out(i) = values(i); i += 1 }
-    out
-  }
-
   /** Resample every segment to `newFreq` (per-row rate-aware). `preScale`
-    * folds a unit conversion (e.g. V -> µV ×1e6) into the same UDF pass so
+    * folds a unit conversion (e.g. V -> µV ×1e6) into the same array pass so
     * the pipeline needs no separate interpreted `transform` HOF.
     * `precision="single"` computes in float32 end to end (the reference's
     * default mode, utils.py:9-31) — values in the returned array<double>
@@ -44,20 +28,14 @@ object DspOperators {
     * Ref semantics: /root/reference/src/process_nwb/resample.py:105-153. */
   def resample(segments: DataFrame, newFreq: Double, npad: PadSpec = FastPad,
                preScale: Double = 1.0, precision: String = "double"): DataFrame = {
-    val f =
-      if (isSingle(precision)) udf { (values: Array[Double], rate: Double) =>
-        toF64(Signal32.resample(toF32(values, preScale), newFreq, rate, npad))
-      }
-      else udf { (values: Array[Double], rate: Double) =>
-        val in = if (preScale == 1.0) values else values.map(_ * preScale)
-        Signal.resample(in, newFreq, rate, npad)
-      }
+    val f = DspFunctions.resample(segments, col("values"), col("rate"), newFreq, preScale,
+      npad, precision)
     // resampling changes the sample count, so a per-sample timestamp column
     // from streaming crossfade windows no longer aligns — drop it so a
     // downstream stitchTimeWindows fails fast on the missing column instead
     // of silently mis-weighting (length-preserving ops keep it)
     segments.drop("sample_ts")
-      .withColumn("values", f(col("values"), col("rate")))
+      .withColumn("values", f)
       .withColumn("rate", lit(newFreq))
   }
 
@@ -69,68 +47,26 @@ object DspOperators {
   def applyLinenoiseNotch(segments: DataFrame, noiseHz: Double = 60.0,
                           npad: PadSpec = FastPad,
                           continuousProfile: Boolean = false,
-                          precision: String = "double"): DataFrame = {
-    val f =
-      if (isSingle(precision)) udf { (values: Array[Double], rate: Double) =>
-        toF64(Signal32.notch(toF32(values, 1.0), rate, noiseHz, npad, continuousProfile))
-      }
-      else udf { (values: Array[Double], rate: Double) =>
-        Signal.notch(values, rate, noiseHz, npad, continuousProfile)
-      }
-    segments.withColumn("values", f(col("values"), col("rate")))
-  }
+                          precision: String = "double"): DataFrame =
+    segments.withColumn("values", DspFunctions.notch(segments, col("values"), col("rate"),
+      noiseHz, npad, continuousProfile, precision))
 
-  /** One wavelet output band: complex trace as parallel re/im arrays so
-    * amplitude/phase stay pure-SQL (`zip_with` + `hypot`/`atan2`). */
-  final case class BandTrace(band: Int, re: Array[Double], im: Array[Double])
-
-  // Executor-local filterbank cache: kernels depend on the PADDED length and
-  // rate; computing all bands for a channel inside one task is the
-  // reference's per-channel spectrum memoization (wavelet_transform.py:198-207)
-  // by construction.
-  private val fbCache = new ConcurrentHashMap[(String, Int, Double, Boolean), Kernels.Filterbank]()
-  private[operators] def cachedFilterbank(filters: String, paddedLen: Int, rate: Double,
-                                          hgOnly: Boolean): Kernels.Filterbank =
-    fbCache.computeIfAbsent((filters, paddedLen, rate, hgOnly),
-      _ => Kernels.filterbank(filters, paddedLen, rate, hgOnly))
-
-  private def packBands(bands: Array[Array[Double]], scale: Double = 1.0): Seq[BandTrace] =
-    bands.indices.map { b =>
-      val z = bands(b)
-      val n = z.length / 2
-      val re = new Array[Double](n)
-      val im = new Array[Double](n)
-      var i = 0
-      while (i < n) { re(i) = z(2 * i) * scale; im(i) = z(2 * i + 1) * scale; i += 1 }
-      BandTrace(b, re, im)
-    }
-
-  private def packBands32(bands: Array[Array[Float]], scale: Double): Seq[BandTrace] =
-    bands.indices.map { b =>
-      val z = bands(b)
-      val n = z.length / 2
-      val re = new Array[Double](n)
-      val im = new Array[Double](n)
-      var i = 0
-      while (i < n) {
-        re(i) = (z(2 * i) * scale).toFloat.toDouble
-        im(i) = (z(2 * i + 1) * scale).toFloat.toDouble
-        i += 1
-      }
-      BandTrace(b, re, im)
-    }
-
-  private def explodeBands(segments: DataFrame,
-                           f: UserDefinedFunction): DataFrame = {
-    // streaming crossfade windows carry per-sample timestamps; the wavelet
-    // preserves sample count, so the column stays aligned and rides through
-    // for StreamingOps.stitchTimeWindows
+  /** One row per band of the struct array `bands`: the key columns, the
+    * band's traces (`re`, `im`, or the amplitude's `values`) and
+    * `sample_ts` if present. Streaming crossfade windows carry per-sample
+    * timestamps; the wavelet preserves sample count, so the column stays
+    * aligned and rides through for StreamingOps.stitchTimeWindows. The
+    * amplitude form keeps the column order of
+    * `amplitude(waveletTransform(...))`. */
+  private def explodeBands(segments: DataFrame, bands: Column,
+                           amplitudeOnly: Boolean): DataFrame = {
     val extras = segments.columns.filter(_ == "sample_ts").map(col).toSeq
+    val keys = Seq(col("series"), col("channel"), col("bt.band").as("band"),
+      col("rate"), col("startingTime"))
     segments
-      .withColumn("bt", explode(f(col("values"), col("rate"))))
-      .select(Seq(col("series"), col("channel"), col("bt.band").as("band"),
-        col("rate"), col("startingTime"), col("bt.re").as("re"), col("bt.im").as("im"))
-        ++ extras: _*)
+      .withColumn("bt", explode(bands))
+      .select((if (amplitudeOnly) keys ++ extras :+ col("bt.values").as("values")
+               else keys ++ Seq(col("bt.re").as("re"), col("bt.im").as("im")) ++ extras): _*)
   }
 
   /** Wavelet transform: explodes each channel segment into one row per band
@@ -151,9 +87,20 @@ object DspOperators {
                        hgOnly: Boolean = true, npad: PadSpec = FastPad,
                        fftNormLength: Option[Int] = None,
                        precision: String = "double"): DataFrame =
-    explodeBands(segments, bandsUdf(npad, fftNormLength, precision) { (padded, rate) =>
-      cachedFilterbank(filters, padded, rate, hgOnly).kernels
-    })
+    explodeBands(segments, DspFunctions.waveletBands(segments, col("values"), col("rate"),
+      filters, hgOnly, npad, fftNormLength, precision, amplitudeOnly = false), amplitudeOnly = false)
+
+  /** `amplitude(waveletTransform(...))` in one step: the same rows, columns
+    * and values, bit for bit, without materializing the complex bands —
+    * each band's amplitude is computed from (re, im) as the wavelet emits
+    * them. The reference's abs-only `store_wavelet_transform` path
+    * (wavelet_transform.py:383-446). */
+  def waveletAmplitude(segments: DataFrame, filters: String = "rat",
+                       hgOnly: Boolean = true, npad: PadSpec = FastPad,
+                       fftNormLength: Option[Int] = None,
+                       precision: String = "double"): DataFrame =
+    explodeBands(segments, DspFunctions.waveletBands(segments, col("values"), col("rate"),
+      filters, hgOnly, npad, fftNormLength, precision, amplitudeOnly = true), amplitudeOnly = true)
 
   /** Wavelet transform against a USER-SUPPLIED kernel list — the reference's
     * `get_filterbank` list passthrough (wavelet_transform.py:104-105): band
@@ -163,33 +110,26 @@ object DspOperators {
     * `(paddedLen, rate) => kernel` rather than prebuilt arrays; each built
     * kernel is L2-normalized like the reference's `f / norm(f)` (:320).
     * Kernel construction is O(nBands·paddedLen) per segment — same order as
-    * one band's FFT — so no cross-row cache is needed. */
+    * one band's FFT — so no cross-row cache is needed. The builders are
+    * Scala functions, which a registered SQL function cannot carry, so this
+    * overload stays a Scala UDF (float64 only). */
   def waveletTransform(segments: DataFrame,
                        kernels: Seq[Option[(Int, Double) => Array[Double]]],
-                       npad: PadSpec): DataFrame =
-    explodeBands(segments, bandsUdf(npad, None, "double") { (padded, rate) =>
-      kernels.map {
+                       npad: PadSpec): DataFrame = {
+    val f = udf { (values: Array[Double], rate: Double) =>
+      val padded = values.length + Signal.padPlan(values.length, npad).padTotal
+      val built = kernels.map {
         case Some(build) => Kernels.l2Normalize(build(padded, rate))
         case None        => null
       }.toArray
-    })
-
-  /** The per-segment band UDF behind both `waveletTransform` overloads:
-    * pad per `npad`, take the kernels `kernelsFor(paddedLen, rate)`, run
-    * the float64 or float32 (`precision = "single"`) transform and rescale
-    * by the `fftNormLength` pin. */
-  private def bandsUdf(npad: PadSpec, fftNormLength: Option[Int], precision: String)(
-      kernelsFor: (Int, Double) => Array[Array[Double]]): UserDefinedFunction =
-    if (isSingle(precision)) udf { (values: Array[Double], rate: Double) =>
-      val padded = values.length + Signal.padPlan(values.length, npad).padTotal
-      val scale = fftNormLength.fold(1.0)(ref => math.sqrt(padded.toDouble / ref))
-      packBands32(Signal32.waveletBands(toF32(values, 1.0), kernelsFor(padded, rate), npad), scale)
+      Signal.waveletBands(values, built, npad).toSeq.zipWithIndex.map { case (z, b) =>
+        val (re, im) = DspKernels.split(z)
+        (b, re, im)
+      }
     }
-    else udf { (values: Array[Double], rate: Double) =>
-      val padded = values.length + Signal.padPlan(values.length, npad).padTotal
-      val scale = fftNormLength.fold(1.0)(ref => math.sqrt(padded.toDouble / ref))
-      packBands(Signal.waveletBands(values, kernelsFor(padded, rate), npad), scale)
-    }
+    explodeBands(segments, f(col("values"), col("rate"))
+      .cast("array<struct<band:int,re:array<double>,im:array<double>>>"), amplitudeOnly = false)
+  }
 
   /** Amplitude of a complex (re, im) wavelet frame — native Catalyst
     * expression with whole-stage codegen (graft.functions.ComplexAmplitude;

@@ -188,10 +188,13 @@ object Graph {
       // self-join materialized (then hash-probed per row: 100 s of task
       // time at sf0.1) never exist; per-edge work is O(|N+(u)| + |N+(v)|),
       // bounded by the O(sqrt(2m)) orientation bound under any skew.
-      // The probe side is round-robin fanned to the session's parallelism
-      // (its lineage is a handful of pinned partitions at bench scale; the
-      // exchange moves nEdges rows, the cheapest place to buy the heavy
-      // stage's parallelism — the fanOutScan rationale). The oriented
+      // The probe side is hash-fanned on (src, dst) to the session's
+      // parallelism (its lineage is a handful of pinned partitions at bench
+      // scale; the exchange moves nEdges rows, the cheapest place to buy the
+      // heavy stage's parallelism — the fanOutScan rationale). A round-robin
+      // repartition would sort every input partition first
+      // (`spark.sql.execution.sortBeforeRepartition`); the edges are
+      // distinct, so the hash spreads them as evenly. The oriented
       // edges are pinned, so the two orienting joins run once for both
       // consumers: adjU's aggregate and the probe side.
       val n = spark.sessionState.conf.numShufflePartitions
@@ -205,7 +208,7 @@ object Graph {
       // inner joins: src always holds >= 1 out-neighbor; a dst with no
       // out-list cannot witness a triangle (empty intersection) — dropping
       // its edge row changes nothing
-      oriented.repartition(n)
+      oriented.repartition(n, col("src"), col("dst"))
         .join(broadcast(adjU), Seq("src"))
         .join(broadcast(adjV), Seq("dst"))
         .select(col("src"), col("dst").as("x"),

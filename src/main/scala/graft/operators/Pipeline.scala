@@ -51,9 +51,8 @@ object Pipeline {
       precision = config.precision)
     val referenced = CommonReferencing.subtractCarSegments(notched, nChannels, config.meanFrac,
       precision = config.precision)
-    val wavelet = DspOperators.waveletTransform(referenced, config.filters, config.hgOnly,
+    val amp = DspOperators.waveletAmplitude(referenced, config.filters, config.hgOnly,
       config.npad, precision = config.precision)
-    val amp = DspOperators.amplitude(wavelet)
     config.finalRate match {
       case Some(fr) => DspOperators.resample(amp, fr, config.npad,
         precision = config.precision)
@@ -231,15 +230,15 @@ object Store {
                             precision: String = "double"): DataFrame = {
     require(absOnly || postResampleRate.isEmpty,
       "Wavelet phase should not be resampled.")
-    val wvlt = DspOperators.waveletTransform(segments, filters, hgOnly, npad,
-      precision = precision)
     if (absOnly) {
-      val amp = DspOperators.amplitude(wvlt)
+      val amp = DspOperators.waveletAmplitude(segments, filters, hgOnly, npad,
+        precision = precision)
       writeRead(postResampleRate.fold(amp)(fr =>
           DspOperators.resample(amp, fr, npad, precision = precision)),
         root, s"wvlt_amp_$series", precision, partitionByChannel = true)
     } else {
-      val cached = wvlt.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+      val cached = DspOperators.waveletTransform(segments, filters, hgOnly, npad,
+        precision = precision).persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
       try {
         val amp = writeRead(DspOperators.amplitude(cached), root, s"wvlt_amp_$series",
           precision, partitionByChannel = true)

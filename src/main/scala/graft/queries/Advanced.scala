@@ -1281,8 +1281,7 @@ object Advanced {
       // lineage holds the FFT work.
       (s, dir) => {
         val seg = Frames.eventsToSegments(table(s, dir, "events"), 8, 1000.0)
-        val amp = DspOperators.amplitude(
-          DspOperators.waveletTransform(seg, "human", hgOnly = true))
+        val amp = DspOperators.waveletAmplitude(seg, "human", hgOnly = true)
         val long = Frames.toLong(amp)
           .select(col("channel"), col("band"), col("t_idx"),
             floor(round(col("value"), 6) * 1000).cast("long").as("am"))
@@ -4172,8 +4171,8 @@ object Advanced {
       // (q201/q118). Census: burst count, samples, longest run, mean run.
       (s, dir) => {
         val seg = Frames.eventsToSegments(table(s, dir, "events"), 8, 1000.0)
-        val env = Frames.toLong(DspOperators.amplitude(
-            DspOperators.waveletTransform(seg, "human", hgOnly = true)))
+        val env = Frames.toLong(
+            DspOperators.waveletAmplitude(seg, "human", hgOnly = true))
           .select(col("channel"), col("t_idx"),
             expr("CAST(floor(round(value, 6) * 1000) AS BIGINT)").as("am"))
           .groupBy("channel", "t_idx").agg(sum("am").as("e"))
@@ -4261,8 +4260,8 @@ object Advanced {
       // integer comparisons, no percentile machinery.
       (s, dir) => {
         val seg = Frames.eventsToSegments(table(s, dir, "events"), 8, 1000.0)
-        val pw = Frames.toLong(DspOperators.amplitude(
-            DspOperators.waveletTransform(seg, "human", hgOnly = true)))
+        val pw = Frames.toLong(
+            DspOperators.waveletAmplitude(seg, "human", hgOnly = true))
           .select(col("channel"), col("band"),
             expr("CAST(floor(round(value, 6) * round(value, 6) * 1000) AS BIGINT)")
               .as("pm"))

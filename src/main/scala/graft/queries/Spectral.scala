@@ -160,8 +160,8 @@ object Spectral {
       Some(SpectralOracles.q31())),
 
     QueryDef("q32_wavelet_amplitude", "F8-F11 wavelet filterbank amplitude (human, hg-only)",
-      (s, dir) => toLongRounded(DspOperators.amplitude(
-        DspOperators.waveletTransform(segments(s, dir), "human", hgOnly = true))),
+      (s, dir) => toLongRounded(
+        DspOperators.waveletAmplitude(segments(s, dir), "human", hgOnly = true)),
       Some(SpectralOracles.q32())),
 
     QueryDef("q33_pipeline_high_gamma", "S1-S3/ST1-ST2 full preprocess_block + tutorial tail",

@@ -62,11 +62,11 @@ object StreamingQueries {
     val (stage, maxTu) = stageAndMaxTu(s, dir)
     val streamed = StreamingOps.runToParquet(s, stage,
       s"q36_sink_${sinkId.incrementAndGet()}",
-      df => DspOperators.amplitude(DspOperators.waveletTransform(
+      df => DspOperators.waveletAmplitude(
         StreamingOps.windowedSegmentsStream(df, NCh, Rate,
           windowDur = "48 hours", watermark = "1 hour")
           .filter(size(col("values")) >= MinN),
-        "human", hgOnly = true)))
+        "human", hgOnly = true))
     // conservative closed-window set: identical arithmetic to the oracle
     val maxKeep = (maxTu - DelayU) / WinU - 2
     streamed

@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
 
@@ -16,7 +16,10 @@ import org.apache.hadoop.fs.Path
   * Naming prefixes (`downsampled_`, `CAR_ln_`, `wvlt_amp_`, ...) are
   * preserved as table names, so a reference user's mental model maps 1:1.
   * Compression is zstd (the gzip+shuffle+fletcher32 analog — checksums are
-  * intrinsic to Parquet).
+  * intrinsic to Parquet). The sample arrays (`values`) are written without
+  * dictionary encoding: ECoG floats are nearly all distinct, so a
+  * dictionary overflows its page and Parquet falls back to plain encoding
+  * after paying for the attempt.
   */
 final class NwbStore(val root: String, spark: SparkSession) {
 
@@ -24,12 +27,15 @@ final class NwbStore(val root: String, spark: SparkSession) {
 
   private def dir(kind: String, name: String) = s"$root/$kind/$name"
 
-  def writeAcquisition(name: String, df: DataFrame): Unit =
+  private def writer(df: DataFrame) =
     df.write.mode("overwrite").option("compression", "zstd")
-      .parquet(dir("acquisition", name))
+      .option("parquet.enable.dictionary#values.list.element", "false")
+
+  def writeAcquisition(name: String, df: DataFrame): Unit =
+    writer(df).parquet(dir("acquisition", name))
 
   def writeProcessing(name: String, df: DataFrame, partitionByChannel: Boolean = false): Unit = {
-    val w = df.write.mode("overwrite").option("compression", "zstd")
+    val w = writer(df)
     (if (partitionByChannel) w.partitionBy("channel") else w)
       .parquet(dir("preprocessing", name))
   }
@@ -88,16 +94,22 @@ final class NwbStore(val root: String, spark: SparkSession) {
     df.write.mode("overwrite").parquet(s"$root/electrodes")
 
   /** Acquisition lookup with the reference's legacy-layout fallback
-    * (pipelines.py:61-65: `acquisition[name]` else `acquisition['Raw'][name]`). */
+    * (pipelines.py:61-65: `acquisition[name]` else `acquisition['Raw'][name]`).
+    * `acquisition/<name>` is read with the declared SegmentFrame schema
+    * (`Frames.SegmentSchema`, what `writeAcquisition` writes), so no job
+    * infers it from the files; the path check is the read's own. Only the
+    * legacy layout, written by other tools, is read with an inferred
+    * schema. */
   def readAcquisition(name: String): DataFrame = {
-    val primary = new Path(dir("acquisition", name))
-    val legacy = new Path(dir("acquisition/Raw", name))
-    val p =
-      if (fs.exists(primary)) primary
-      else if (fs.exists(legacy)) legacy
-      else throw new IllegalArgumentException(
-        s"acquisition series '$name' not found under $root (tried $primary, $legacy)")
-    spark.read.parquet(p.toString)
+    val primary = dir("acquisition", name)
+    try spark.read.schema(graft.model.Frames.SegmentSchema).parquet(primary)
+    catch {
+      case e: AnalysisException if e.getCondition == "PATH_NOT_FOUND" =>
+        val legacy = new Path(dir("acquisition/Raw", name))
+        if (!fs.exists(legacy)) throw new IllegalArgumentException(
+          s"acquisition series '$name' not found under $root (tried $primary, $legacy)")
+        spark.read.parquet(legacy.toString)
+    }
   }
 
   def readProcessing(name: String): DataFrame =

@@ -46,9 +46,22 @@ class InspectSpec extends AnyFunSuite {
     // the triangle census is one locally built row: only a local scan
     assert(q143.startsWith("[plan] q143_triangle_census exchanges=0 reused=0 " +
       "broadcastJoins=0 sortMergeJoins=0 fileScans=0 cartesian=0 rddScans=0 " +
-      "localScans=1 "), q143)
+      "localScans=1 udfs=0 "), q143)
     // the SSSP rounds end in a pinned frame the plan reads
     assert(q167.matches(".* fileScans=0 .* rddScans=[1-9]\\d* .*"), q167)
+  }
+
+  test("Inspect plan counts the Scala UDFs a query crosses") {
+    val out = tempDir("inspect_plan_udfs")
+    val lines = Inspect.plan(spark, sf, out,
+      Seq("q30_resample", "q31_notch", "q32_wavelet_amplitude", q21))
+    def udfs(line: String) = "udfs=(\\d+)".r.findFirstMatchIn(line).get.group(1).toInt
+    // the spectral kernels are native expressions: only the events
+    // assembly's bucket-combine UDF is left in the three spectral plans
+    assert(lines.take(3).map(udfs) == Seq(1, 1, 1), lines.mkString("\n"))
+    // q21 adds its NaN planting, the window split and CAR's two per-block
+    // UDFs
+    assert(udfs(lines(3)) == 1 + 1 + 1 + 2, lines(3))
   }
 
   test("Inspect profile records the last run's jobs with task time") {

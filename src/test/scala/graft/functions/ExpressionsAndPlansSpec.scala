@@ -73,6 +73,9 @@ class ExpressionsAndPlansSpec extends AnyFunSuite {
           "VALUES (5L, 1L, 3.0d),(1L, 2L, 1.0d),(1L, 1L, 0.5d) AS t(ts, id, v)")
         .collect().head.getSeq[Double](0)
       assert(timed == Seq(0.5, 1.0, 3.0))
+      val down = ext.sql("SELECT segment_resample(array(1d, 2d, 3d, 4d), 4d, 2d, 1.0, " +
+        "'fast', 'double') AS d").collect().head.getSeq[Double](0)
+      assert(down.length == 2)
     } finally {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()

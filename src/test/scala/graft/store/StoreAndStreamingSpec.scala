@@ -50,6 +50,46 @@ class StoreAndStreamingSpec extends AnyFunSuite {
     assert(store.readAcquisition("ECoG").count() == 4)
   }
 
+  test("acquisitions read back with the declared schema and no job; no dictionary on values") {
+    val root = Files.createTempDirectory("nwbschema").toString
+    StreamingOps.deleteOnExit(java.nio.file.Paths.get(root))
+    val store = new NwbStore(root, spark)
+    val raw = Synthetic.segments(spark, 1.0, 4, 400.0, seed = 5)
+    store.writeAcquisition("ECoG", raw)
+    raw.write.parquet(s"$root/acquisition/Raw/Old")
+    val metrics = graft.JobMetrics.attach(spark)
+    try {
+      val declared = graft.JobMetrics.phase(spark, "declared")(store.readAcquisition("ECoG"))
+      val legacy = graft.JobMetrics.phase(spark, "legacy")(store.readAcquisition("Old"))
+      metrics.settle()
+      // the declared read runs no schema-inference job; the legacy read does
+      assert(metrics.jobs("declared").isEmpty, metrics.jobs("declared").map(_.line))
+      assert(metrics.jobs("legacy").nonEmpty)
+      assert(declared.schema.simpleString == graft.model.Frames.SegmentSchema.simpleString)
+      assert(declared.collect().toSet == raw.collect().toSet)
+      assert(legacy.count() == 4)
+    } finally spark.sparkContext.removeSparkListener(metrics)
+    // every value-array column chunk is plain-encoded, with no dictionary page
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = new java.io.File(s"$root/acquisition/ECoG").listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+    assert(files.nonEmpty)
+    for (f <- files) {
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.getPath), conf))
+      val chunks = try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+        finally reader.close()
+      val values = chunks.filter(_.getPath.toDotString == "values.list.element")
+      assert(values.nonEmpty)
+      values.foreach { c =>
+        assert(!c.hasDictionaryPage && !c.getEncodings.asScala.exists(_.usesDictionary),
+          s"${f.getName}: ${c.getEncodings}")
+      }
+    }
+  }
+
   test("bucketed processing sink: channel joins read pre-partitioned, no shuffle") {
     val root = Files.createTempDirectory("nwbbucketed").toString
     graft.streaming.StreamingOps.deleteOnExit(java.nio.file.Paths.get(root))
