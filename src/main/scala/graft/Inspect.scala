@@ -25,7 +25,10 @@ import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNes
   *  - `profile` runs Bench's warm-up, then times each query best-of-2 on
   *    `count()`'s own plan, prints one summary line per query and writes
   *    the last run's per-job breakdown (`<name>.jobs.txt`, from
-  *    [[JobMetrics]]) and AQE-final plan (`<name>.final.txt`).
+  *    [[JobMetrics]]) and AQE-final plan (`<name>.final.txt`). The
+  *    summary's `forks=<n>(program:count,...)` counts the child processes
+  *    the JVM started during both runs ([[ProcessStarts]]), a cost no
+  *    listener sees.
   *
   * Queries whose builder itself runs jobs (streaming sinks, iterative
   * loops, tier-dispatch counts) run those while being built, as in Bench;
@@ -79,7 +82,7 @@ object Inspect {
       Bench.warmUp(spark, sfDir)
       names.flatMap { name =>
         try {
-          val runs = (1 to 2).map { i =>
+          val (runs, forks) = ProcessStarts.during((1 to 2).map { i =>
             JobMetrics.phase(spark, s"$name#$i") {
               val t0 = System.nanoTime()
               // Dataset.count() is this aggregate, collected
@@ -87,7 +90,7 @@ object Inspect {
               val rows = counted.collect().head.getLong(0)
               ((System.nanoTime() - t0) / 1e9, rows, counted)
             }
-          }
+          })
           metrics.settle()
           val jobs = metrics.jobs(s"$name#2")
           metrics.clear()
@@ -102,7 +105,8 @@ object Inspect {
             s"jobs=${jobs.size} stages=${t.stages} tasks=${t.tasks} " +
             f"task=${t.taskMs / 1000.0}%.2fs sr=${t.shuffleRead / 1e6}%.1fMB " +
             f"sw=${t.shuffleWrite / 1e6}%.1fMB spill=${t.spill / 1e6}%.1fMB " +
-            f"maxResult=${t.maxResultBytes / 1024.0}%.0fKiB")
+            f"maxResult=${t.maxResultBytes / 1024.0}%.0fKiB forks=${forks.size}" +
+            forkCensus(forks))
           Some(name -> jobs)
         } catch { case e: Throwable =>
           System.err.println(s"[profile] $name failed: ${e.getMessage}")
@@ -112,6 +116,13 @@ object Inspect {
       }
     } finally spark.sparkContext.removeSparkListener(metrics)
   }
+
+  /** `(chmod:3,rm:1)`: the programs of `commands` with their counts, or
+    * nothing when no process started. */
+  private def forkCensus(commands: Seq[String]): String =
+    if (commands.isEmpty) ""
+    else commands.groupBy(ProcessStarts.program).toSeq.sortBy(_._1)
+      .map { case (p, cs) => s"$p:${cs.size}" }.mkString("(", ",", ")")
 
   /** Exchanges (shuffle + broadcast), reused exchanges, broadcast and
     * sort-merge joins, file scans, cartesian products, RDD scans and local

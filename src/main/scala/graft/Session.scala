@@ -8,7 +8,10 @@ import org.apache.spark.sql.SparkSession
   * UTC session time zone, UI off, AQE on, nanosecond parquet timestamps
   * read as longs, and a raised ObjectHashAggregate fallback threshold.
   * Any other `spark.*` conf can still be set per run as a JVM system
-  * property (`GRAFT_JAVA_OPTS="-Dspark.x=y"`, see build.sbt). */
+  * property (`GRAFT_JAVA_OPTS="-Dspark.x=y"`, see build.sbt). The local
+  * filesystem is not set here but in `src/main/resources/core-site.xml`
+  * (`graft/store/LocalFs.scala`), which every Hadoop configuration on the
+  * classpath loads. */
 object Session {
 
   /** Cores of the local master, `SPARK_GRAFT_CPUS` (default 4). */

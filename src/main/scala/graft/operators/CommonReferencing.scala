@@ -18,10 +18,10 @@ import graft.store.NwbStore.isSingle
   * Shape: segments are cut into fixed `blockSize`-sample time blocks
   * (narrow), the blocks of all channels for one time range meet in one
   * shuffle keyed on (series, band, rate, startingTime, block_idx) — nBlocks
-  * rows, not nSamples — and a JVM loop (`carOfBlock`) computes the trimmed
-  * mean per time point. A second shuffle reassembles the blocks into
-  * segments. `Signal.trimmedMean` is the plain-Scala reference the specs
-  * check this kernel against.
+  * rows, not nSamples, placed by block id (`perBlock`) — and a JVM loop
+  * (`carOfBlock`) computes the trimmed mean per time point. A second
+  * shuffle reassembles the blocks into segments. `Signal.trimmedMean` is
+  * the plain-Scala reference the specs check this kernel against.
   *
   * Placement of the referenced segments: the reassembly shuffle of
   * `subtractCarSegments` decides the parallelism of everything downstream
@@ -115,20 +115,37 @@ object CommonReferencing {
   /** Columns of one time block across channels: the CAR shuffle's key. */
   private val BlockKey = Seq("series", "band", "rate", "startingTime", "block_idx")
 
+  /** `pmod(hash(series, band, rate, startingTime), n) + k`: the partition
+    * id (mod `n`) of item `k` of a series, so one series' items take
+    * consecutive partitions from a hashed start. */
+  private def placed(k: Column, n: Int): Column =
+    pmod(hash(col("series"), col("band"), col("rate"), col("startingTime")), lit(n)) + k
+
   /** The CAR shuffle: segments are cut into `blockSize`-sample blocks
     * (narrow), blocks of every channel for the same time range meet in one
     * row per `BlockKey`, and `f` maps their (channel, block) pairs to one
-    * value. Output columns: `BlockKey`, then `out` applied to that value. */
+    * value. Output columns: `BlockKey`, then `out` applied to that value.
+    *
+    * The exchange is placed by block id (`_bid = placed(block_idx)`, `n` =
+    * shuffle partitions), for the reason the reassembly is placed by
+    * channel: hashed, its few MB are coalesced by AQE onto one task that
+    * then runs the kernel for every block of the recording. `_bid` is a
+    * grouping key too, dropped after the aggregate. `f` sees the channels
+    * in shuffle order; the kernels sort each time point's values, so no
+    * output bit depends on it. */
   private def perBlock[T: TypeTag](segments: DataFrame, blockSize: Int)(
       f: Array[(Int, Array[Double])] => T)(out: Column => Column): DataFrame = {
     val toBlocks = udf { (values: Array[Double]) => values.grouped(blockSize).toArray }
     val byBlock = udf { (chBlocks: Seq[Row]) =>
       f(chBlocks.map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).toArray)
     }
+    val n = segments.sparkSession.sessionState.conf.numShufflePartitions
     segments.select(
         col("series"), col("channel"), col("band"), col("rate"), col("startingTime"),
         posexplode(toBlocks(col("values"))).as(Seq("block_idx", "block")))
-      .groupBy(BlockKey.map(col): _*)
+      .withColumn("_bid", placed(col("block_idx"), n))
+      .repartitionById(n, col("_bid"))
+      .groupBy((BlockKey :+ "_bid").map(col): _*)
       .agg(collect_list(struct(col("channel"), col("block"))).as("chBlocks"))
       .select(BlockKey.map(col) :+ out(byBlock(col("chBlocks"))): _*)
   }
@@ -170,11 +187,10 @@ object CommonReferencing {
         col("rate"), col("startingTime"), col("block_idx"), col("cb._2").as("block"))
 
     val n = math.min(nChannels, segments.sparkSession.sessionState.conf.numShufflePartitions)
-    val placed = referenced
-      .withColumn("_pid", pmod(hash(col("series"), col("band"), col("rate"),
-        col("startingTime")), lit(n)) + col("channel"))
+    val byChannel = referenced
+      .withColumn("_pid", placed(col("channel"), n))
       .repartitionById(n, col("_pid"))
-    reassemble(placed, Seq("series", "channel", "band", "rate", "startingTime", "_pid"),
+    reassemble(byChannel, Seq("series", "channel", "band", "rate", "startingTime", "_pid"),
       blockSize).drop("_pid")
   }
 

@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
 
 /** The library entry points of the mains: `Inspect plan|profile` (plan
   * file, census line with pinned and locally built inputs, per-job metrics,
-  * name check) and `Bench.run`'s summary pointer to the persisted
+  * child-process count, name check) and `Bench.run`'s summary pointer to the persisted
   * per-query file. */
 class InspectSpec extends AnyFunSuite {
 
@@ -73,6 +73,24 @@ class InspectSpec extends AnyFunSuite {
     assert(jobs.forall(_.wallMs >= 0))
     assert(Files.readString(out.resolve(s"$q21.final.txt")).contains("isFinalPlan=true"))
     assert(Files.readAllLines(out.resolve(s"$q21.jobs.txt")).size == jobs.size)
+  }
+
+  test("Inspect profile counts the processes its timed runs start: no chmod or readlink") {
+    val out = tempDir("inspect_forks")
+    val printed = new java.io.ByteArrayOutputStream()
+    Console.withOut(printed)(
+      Inspect.profile(spark, sf, out, Seq(q21, "q343_rocksdb_state_dedup")))
+    val lines = printed.toString.linesIterator.filter(_.startsWith("[profile]")).toSeq
+    assert(lines.size == 2, printed.toString)
+    for (line <- lines) {
+      // forks=<n>, then (program:count,...) when n > 0
+      val m = "forks=(\\d+)(\\((\\S+)\\))?$".r.findFirstMatchIn(line)
+      assert(m.isDefined, line)
+      val census = Option(m.get.group(3)).toSeq.flatMap(_.split(","))
+        .map { pc => val Array(p, c) = pc.split(":"); p -> c.toInt }.toMap
+      assert(census.values.sum == m.get.group(1).toInt, line)
+      assert(!census.contains("chmod") && !census.contains("readlink"), line)
+    }
   }
 
   test("Inspect and Bench reject an unknown query name before anything runs") {

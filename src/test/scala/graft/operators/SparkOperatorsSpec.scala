@@ -15,8 +15,9 @@ import graft.dsp.Signal
   * (tests/test_pipeline.py, tests/test_utils.py) plus parity of the blocked
   * CAR kernel (`subtractCarSegments`/`carSegments`) with the plain-Scala
   * reference `Signal.trimmedMean`, computed per time point, and with an
-  * independent long-form SQL CAR subtracted through a join; and the
-  * channel-id placement of the post-CAR reassembly shuffle. */
+  * independent long-form SQL CAR subtracted through a join; and the id
+  * placement of CAR's two shuffles (blocks by block, the post-CAR
+  * reassembly by channel). */
 class SparkOperatorsSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -275,10 +276,36 @@ class SparkOperatorsSpec extends AnyFunSuite {
       case p => p
     }).collect { case e: ShuffleExchangeLike => e.outputPartitioning }
     assert(partitionings.size == 2, partitionings.mkString("\n"))
+    // the reassembly is placed by channel, the CAR block exchange by block
     assert(partitionings.collect { case p: ShufflePartitionIdPassThrough => p.numPartitions }
-      == Seq(4), partitionings.mkString("\n"))
-    assert(partitionings.count(_.isInstanceOf[HashPartitioning]) == 1,
+      == Seq(4, 4), partitionings.mkString("\n"))
+    assert(!partitionings.exists(_.isInstanceOf[HashPartitioning]),
       partitionings.mkString("\n"))
+  }
+
+  test("CAR's block exchange is id-placed: a 4-block input runs its block stage on 4 tasks") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val segs = (0 until 8).map(ch => ("s0", ch, null: Integer, 400.0, 0.0,
+        Array.fill(1024)(rnd.nextGaussian())))
+      .toDF("series", "channel", "band", "rate", "startingTime", "values")
+    val car = CommonReferencing.subtractCarSegments(segs, 8, 0.95, blockSize = 256)
+    val partitionings = (car.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }).collect { case e: ShuffleExchangeLike => e.outputPartitioning }
+    assert(partitionings.collect { case p: ShufflePartitionIdPassThrough => p.numPartitions }
+      == Seq(4, 4), partitionings.mkString("\n"))
+    val metrics = graft.JobMetrics.attach(spark)
+    try {
+      val rows = graft.JobMetrics.phase(spark, "car-blocks")(car.collect())
+      assert(rows.length == 8 && rows.forall(_.getSeq[Double](5).length == 1024))
+      metrics.settle()
+      // AQE runs each map stage as its own job: the local scan, then the
+      // block stage (per-block kernel), then the reassembly
+      val jobs = metrics.jobs("car-blocks")
+      assert(jobs.size == 3 && jobs(1).tasks == 4, jobs.map(_.line).mkString("\n"))
+    } finally spark.sparkContext.removeSparkListener(metrics)
   }
 
   test("preprocessBlock's post-CAR stage runs one task per shuffle partition under AQE") {
