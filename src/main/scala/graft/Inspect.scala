@@ -3,7 +3,9 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.catalyst.expressions.{Expression, LambdaFunction, NamedLambdaVariable, ScalaUDF, UserDefinedExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode, LocalTableScanExec, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, FileScan}
@@ -132,7 +134,14 @@ object Inspect {
     * collected and rebuilt as a local relation (q143's census row).
     * Without them the plan of such a query reads as all zeros. `udfs`
     * counts the Scala UDF expressions in the nodes' expressions: each one
-    * is a boxed boundary its input and output cross row by row. */
+    * is a boxed boundary its input and output cross row by row.
+    * `fallbacks` counts the other expressions that generate no code
+    * (`CodegenFallback`, e.g. a higher-order function such as
+    * `array_compact`'s `ArrayFilter`): a code-generated stage evaluates
+    * each of them interpreted, boxing its values. A higher-order function
+    * counts once, without its lambda and lambda variables. Aggregate
+    * functions are left out: an aggregate operator calls an imperative
+    * aggregate's update methods whether or not it generates code. */
   def census(plan: SparkPlan): String = {
     def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
@@ -150,9 +159,14 @@ object Inspect {
     val rddScans = n { case _: RDDScanExec => }
     val localScans = n { case _: LocalTableScanExec => }
     val cartesian = n { case _: CartesianProductExec => }
-    val udfs = all.map(_.expressions.map(_.collect { case u: ScalaUDF => u }.size).sum).sum
+    def exprs(f: PartialFunction[Expression, Unit]) =
+      all.map(_.expressions.map(_.collect(f).size).sum).sum
+    val udfs = exprs { case _: ScalaUDF => }
+    val fallbacks = exprs { case e: CodegenFallback if !(e.isInstanceOf[AggregateFunction] ||
+      e.isInstanceOf[UserDefinedExpression] || e.isInstanceOf[LambdaFunction] ||
+      e.isInstanceOf[NamedLambdaVariable]) => }
     s"exchanges=$exchanges reused=$reused broadcastJoins=$bcastJoins " +
       s"sortMergeJoins=$smJoins fileScans=$scans cartesian=$cartesian " +
-      s"rddScans=$rddScans localScans=$localScans udfs=$udfs"
+      s"rddScans=$rddScans localScans=$localScans udfs=$udfs fallbacks=$fallbacks"
   }
 }

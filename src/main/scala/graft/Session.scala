@@ -11,7 +11,8 @@ import org.apache.spark.sql.SparkSession
   * property (`GRAFT_JAVA_OPTS="-Dspark.x=y"`, see build.sbt). The local
   * filesystem is not set here but in `src/main/resources/core-site.xml`
   * (`graft/store/LocalFs.scala`), which every Hadoop configuration on the
-  * classpath loads. */
+  * classpath loads; `build()` warns once when that registration is
+  * missing. */
 object Session {
 
   /** Cores of the local master, `SPARK_GRAFT_CPUS` (default 4). */
@@ -32,6 +33,20 @@ object Session {
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    reportLocalFs(spark.sparkContext.hadoopConfiguration,
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(_))
     spark
   }
+
+  private val localFsReported = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  /** Passes [[graft.store.LocalFs.report]] of `conf` to `warn`, once per
+    * JVM; true when it did. */
+  private[graft] def reportLocalFs(conf: org.apache.hadoop.conf.Configuration,
+                                   warn: String => Unit): Boolean =
+    graft.store.LocalFs.report(conf).exists { msg =>
+      val first = localFsReported.compareAndSet(false, true)
+      if (first) warn(msg)
+      first
+    }
 }

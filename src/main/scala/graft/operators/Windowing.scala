@@ -114,8 +114,8 @@ object Windowing {
   /** The narrow map-side level of the two-level ingest: pack consecutive
     * samples into membership-uniform runs (<= FragCap) per trace, one open
     * buffer per trace per partition. */
-  private def fragments(long: DataFrame, stride: Int,
-                        context: Int): org.apache.spark.sql.Dataset[Frag] = {
+  private[graft] def fragments(long: DataFrame, stride: Int,
+                               context: Int): org.apache.spark.sql.Dataset[Frag] = {
     val spark = long.sparkSession
     import spark.implicits._
     // CONTRACT: this cast canonicalizes the LongFrame metadata column types —
@@ -199,10 +199,13 @@ object Windowing {
         val r = pmod(col("t0"), lit(stride))
         frags.toDF()
           .join(broadcast(nWins), Seq("series", "channel"))
-          .withColumn("_w", explode(array_compact(array(
+          // a null filter after the explode, not array_compact: that one
+          // is an interpreted higher-order function (ArrayFilter) per row
+          .withColumn("_w", explode(array(
             core,
             when(r < context && col("t0") >= stride, core - 1),
-            when(r >= stride - context && core + 1 < col("_nw"), core + 1)))))
+            when(r >= stride - context && core + 1 < col("_nw"), core + 1))))
+          .filter(col("_w").isNotNull)
       }
     wins
       .groupBy("series", "channel", "band", "rate", "startingTime", "_w")

@@ -7,7 +7,7 @@ import java.nio.file.attribute.PosixFilePermission
 import java.nio.file.attribute.PosixFilePermission._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FileSystem, FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -81,5 +81,30 @@ object NioLocalFs {
     override def getServerDefaults: FsServerDefaults = LocalConfigKeys.getServerDefaults
     override def getServerDefaults(f: Path): FsServerDefaults = LocalConfigKeys.getServerDefaults
     override def isValidName(src: String): Boolean = true
+  }
+}
+
+/** Whether a Hadoop configuration registers the classes above for `file:`. */
+object LocalFs {
+
+  /** None when both Hadoop APIs resolve `file:` to these classes under
+    * `conf`; otherwise a report naming both `core-site.xml` properties and
+    * what each resolves to. Resolving loads classes but creates no
+    * filesystem. */
+  def report(conf: Configuration): Option[String] = {
+    def name(c: => Class[_]): String =
+      try Option(c).fold("nothing")(_.getName)
+      catch { case e: Exception => s"an error (${e.getMessage})" }
+    val found = Seq(
+      ("fs.file.impl", classOf[NioLocalFileSystem],
+        name(FileSystem.getFileSystemClass("file", conf))),
+      ("fs.AbstractFileSystem.file.impl", classOf[NioLocalFs],
+        name(conf.getClass("fs.AbstractFileSystem.file.impl", null))))
+    if (found.forall { case (_, want, got) => want.getName == got }) None
+    else Some("the file: filesystem is not graft.store's, so every chmod and " +
+      "readlink of a local write starts a child process; another core-site.xml " +
+      "earlier on the classpath must carry both properties: " +
+      found.map { case (k, want, got) => s"$k=${want.getName} (resolves to $got)" }
+        .mkString(", "))
   }
 }

@@ -17,9 +17,7 @@ import org.apache.hadoop.fs.Path
   * preserved as table names, so a reference user's mental model maps 1:1.
   * Compression is zstd (the gzip+shuffle+fletcher32 analog — checksums are
   * intrinsic to Parquet). The sample arrays (`values`) are written without
-  * dictionary encoding: ECoG floats are nearly all distinct, so a
-  * dictionary overflows its page and Parquet falls back to plain encoding
-  * after paying for the attempt.
+  * dictionary encoding ([[NwbStore.NoValuesDictionary]]).
   */
 final class NwbStore(val root: String, spark: SparkSession) {
 
@@ -29,7 +27,7 @@ final class NwbStore(val root: String, spark: SparkSession) {
 
   private def writer(df: DataFrame) =
     df.write.mode("overwrite").option("compression", "zstd")
-      .option("parquet.enable.dictionary#values.list.element", "false")
+      .option(NwbStore.NoValuesDictionary, "false")
 
   def writeAcquisition(name: String, df: DataFrame): Unit =
     writer(df).parquet(dir("acquisition", name))
@@ -135,6 +133,15 @@ final class NwbStore(val root: String, spark: SparkSession) {
 }
 
 object NwbStore {
+
+  /** The Parquet property that turns dictionary encoding off for the
+    * elements of the `values` arrays, set to "false" by every writer of
+    * sample arrays (this store and the stream sink of
+    * `graft.streaming.StreamingOps`). ECoG floats are nearly all distinct,
+    * so a dictionary overflows its page and Parquet falls back to plain
+    * encoding after paying for the attempt: the bytes written are the
+    * same either way. */
+  val NoValuesDictionary = "parquet.enable.dictionary#values.list.element"
 
   /** The one precision rule, shared by every op with a `precision`
     * argument and by the storage cast: the reference's `dtype(X, precision)`

@@ -526,27 +526,32 @@ object StreamingOps {
     val membered =
       if (ctxU == 0) base.withColumn("member_time", timestamp_micros(col("_tu")))
       else base
-        .withColumn("_off", explode(array_compact(array(
+        // a null filter after the explode, not array_compact: that one
+        // is an interpreted higher-order function (ArrayFilter) per event
+        .withColumn("_off", explode(array(
           lit(0L),
           when(pmod(col("_tu"), lit(winU)) < ctxU, lit(-winU)),
-          when(pmod(col("_tu"), lit(winU)) >= winU - ctxU, lit(winU))))))
+          when(pmod(col("_tu"), lit(winU)) >= winU - ctxU, lit(winU)))))
+        .filter(col("_off").isNotNull)
         .withColumn("member_time", timestamp_micros(col("_tu") + col("_off")))
-    membered
+    // native sort-assembly (packed buffers) instead of
+    // array_sort(collect_list(struct)) with its interpreted comparator;
+    // same (ts, event_id, value) order, and it emits the sample_ts array
+    // the downstream crossfade needs without a second transform
+    val assembled = graft.functions.SeriesAssembleFunctions.assembleTimed(
+      events.sparkSession, col("ts").cast("long"), col("event_id").cast("long"),
+      col("value").cast("double")).as("_a")
+    val grouped = membered
       .withWatermark("member_time", watermark)
       .groupBy(org.apache.spark.sql.functions.window(col("member_time"), windowDur),
         col("channel"))
-      // native sort-assembly (packed buffers) instead of
-      // array_sort(collect_list(struct)) with its interpreted comparator;
-      // same (ts, event_id, value) order, and it emits the sample_ts array
-      // the downstream crossfade needs without a second transform
-      .agg(graft.functions.SeriesAssembleFunctions.assembleTimed(events.sparkSession,
-        col("ts").cast("long"), col("event_id").cast("long"),
-        col("value").cast("double")).as("_a"))
+    // a row whose samples are ALL borrowed context (stream edge) is a stub:
+    // a window's own samples are exactly its `_off = 0` members
+    val windows =
+      if (ctxU == 0) grouped.agg(assembled)
+      else grouped.agg(assembled, max(col("_off") === 0L).as("_core")).filter(col("_core"))
+    windows
       .withColumn("_startU", unix_micros(col("window.start")))
-      // a row whose samples are ALL borrowed context (stream edge) is a stub
-      .filter(exists(col("_a.ts"), t =>
-        (t / 1000).cast("long")
-          .between(col("_startU"), col("_startU") + winU - 1)))
       .select(
         concat(lit(series), lit("#w"), (col("_startU") / winU).cast("long")).as("series"),
         col("channel"), lit(null).cast("int").as("band"), lit(rate).as("rate"),
@@ -712,21 +717,29 @@ object StreamingOps {
     }
   }
 
-  /** Starts `query` with [[stateParts]] state partitions. Spark clones the
+  /** Starts `query` with [[stateParts]] state partitions and, for a file
+    * sink, no dictionary on the `values` arrays
+    * ([[graft.store.NwbStore.NoValuesDictionary]]). Spark clones the
     * session when it builds the query (the `StreamExecution` constructor)
-    * and reads the stateful partition count from that clone, so the conf
-    * is set only around `start()`: the caller's session keeps its own
-    * count while the query runs. A fresh checkpoint records the count in
-    * its offset log; a query resumed from an existing checkpoint keeps the
-    * recorded count whatever this rule gives (every `runTo*` driver makes
-    * a fresh checkpoint). */
+    * and reads the stateful partition count from that clone; the file sink
+    * builds its Hadoop configuration from the session in its constructor,
+    * also inside `start()`. So both confs are set only around `start()`:
+    * the caller's session keeps its own values while the query runs. A
+    * fresh checkpoint records the count in its offset log; a query resumed
+    * from an existing checkpoint keeps the recorded count whatever this
+    * rule gives (every `runTo*` driver makes a fresh checkpoint). */
   private def startSized(query: DataFrame)(
       start: => org.apache.spark.sql.streaming.StreamingQuery)
       : org.apache.spark.sql.streaming.StreamingQuery = {
+    val scoped = Seq("spark.sql.shuffle.partitions" -> stateParts(query).toString,
+      graft.store.NwbStore.NoValuesDictionary -> "false")
     val conf = query.sparkSession.conf
-    val prev = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.shuffle.partitions", stateParts(query).toString)
-    try start finally conf.set("spark.sql.shuffle.partitions", prev)
+    val prev = scoped.map { case (k, _) => k -> conf.getOption(k) }
+    scoped.foreach { case (k, v) => conf.set(k, v) }
+    try start finally prev.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
   }
 
   /** Build a ts-normalized file-stream source over an events directory —
@@ -860,7 +873,15 @@ object StreamingOps {
   /** Drive an ALREADY-BUILT streaming DataFrame (e.g. a stream-stream join
     * over two sources, where the single-source `runToParquet` shape doesn't
     * fit) to a parquet sink under Trigger.AvailableNow; same sink/read-back
-    * contract as [[runToParquet]]. */
+    * contract as [[runToParquet]].
+    *
+    * The sink writes the `values` arrays without a dictionary, as
+    * `NwbStore` does. The property goes through the session (in
+    * [[startSized]]), not as a `writeStream` option: Spark's
+    * `FileStreamSink` builds its Hadoop configuration with
+    * `sessionState.newHadoopConf()`, which copies the session's SQL confs
+    * but none of the writer's options, so an option never reaches the
+    * Parquet writer. */
   def runStreamToParquet(spark: SparkSession, transformed: DataFrame,
                          queryName: String): DataFrame = {
     val out = java.nio.file.Files.createTempDirectory(s"stream_sink_$queryName")

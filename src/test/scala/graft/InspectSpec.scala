@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 
 /** The library entry points of the mains: `Inspect plan|profile` (plan
-  * file, census line with pinned and locally built inputs, per-job metrics,
+  * file, census line with pinned and locally built inputs, UDFs and
+  * interpreted expressions, per-job metrics,
   * child-process count, name check) and `Bench.run`'s summary pointer to the persisted
   * per-query file. */
 class InspectSpec extends AnyFunSuite {
@@ -62,6 +63,19 @@ class InspectSpec extends AnyFunSuite {
     // q21 adds its NaN planting, the window split and CAR's two per-block
     // UDFs
     assert(udfs(lines(3)) == 1 + 1 + 1 + 2, lines(3))
+  }
+
+  test("Inspect plan counts the expressions that generate no code") {
+    val out = tempDir("inspect_plan_fallbacks")
+    val Seq(q154, q368) = Inspect.plan(spark, sf, out,
+      Seq("q154_sequence_patterns", "q368_window_stitch_roundtrip"))
+    def fallbacks(line: String) =
+      " fallbacks=(\\d+) ".r.findFirstMatchIn(line).get.group(1).toInt
+    // the sequence census sorts with a comparator and maps with a lambda:
+    // array_sort and transform, two higher-order functions
+    assert(fallbacks(q154) == 2, q154)
+    // the windowing spine's membership explode and its stitch generate code
+    assert(fallbacks(q368) == 0, q368)
   }
 
   test("Inspect profile records the last run's jobs with task time") {

@@ -163,8 +163,10 @@ class DspExpressionsSpec extends AnyFunSuite {
   test("preprocessBlock's plan keeps Scala UDFs only in CAR's per-block kernel") {
     val plan = Pipeline.preprocessBlock(raw, 3, Pipeline.Config(precision = "single"))
       .queryExecution.executedPlan
-    // the two per-block UDFs of CommonReferencing (split, then rebuild)
-    assert(graft.Inspect.census(plan).endsWith(" udfs=2"), graft.Inspect.census(plan))
+    // the two per-block UDFs of CommonReferencing (split, then rebuild),
+    // and no interpreted expression
+    assert(graft.Inspect.census(plan).endsWith(" udfs=2 fallbacks=0"),
+      graft.Inspect.census(plan))
     val names = plan.toString
     Seq("segment_resample", "segment_notch", "wavelet_amplitude")
       .foreach(f => assert(names.contains(f), s"$f missing from\n$names"))

@@ -60,6 +60,49 @@ class WindowingSpec extends AnyFunSuite {
     assert(fromSegs.keySet.size == 3 * 3)
   }
 
+  /** `windowLong` with its membership explode written as before it was
+    * code-generated: `array_compact` over the three candidate windows. */
+  private def arrayCompactWindowLong(long: DataFrame, stride: Int, context: Int): DataFrame = {
+    val core = floor(col("t0") / stride).cast("long")
+    val nWins = long.groupBy("series", "channel")
+      .agg((floor(max(col("t_idx")) / stride) + 1).cast("long").as("_nw"))
+    val r = pmod(col("t0"), lit(stride))
+    Windowing.fragments(long, stride, context).toDF()
+      .join(broadcast(nWins), Seq("series", "channel"))
+      .withColumn("_w", explode(array_compact(array(
+        core,
+        when(r < context && col("t0") >= stride, core - 1),
+        when(r >= stride - context && core + 1 < col("_nw"), core + 1)))))
+      .groupBy("series", "channel", "band", "rate", "startingTime", "_w")
+      .agg(graft.functions.SeriesAssembleFunctions.assembleFragments(
+        spark, col("t0"), col("vals")).as("values"))
+      .select(concat(col("series"), lit("#w"), col("_w")).as("series"),
+        col("channel"), col("band"), col("rate"), col("startingTime"), col("values"))
+  }
+
+  test("windowLong membership is code-generated and equals the array_compact form") {
+    val (stride, context) = (256, 64)
+    // 1000 samples a trace; channel 1 ends exactly on a window boundary.
+    // Fragments are cut where membership changes, so fragment starts fall
+    // on every core and context boundary (r = 0, 64, 192).
+    val long = Frames.toLong(Synthetic.segments(spark, 1.0, 3, 1000.0, seed = 13))
+      .select(col("series"), col("channel"), col("band"), col("rate"),
+        col("startingTime"), col("t_idx"), col("value"))
+      .filter(!(col("channel") === 1 && col("t_idx") >= 3 * stride))
+    def fallbacks(df: DataFrame) = " fallbacks=(\\d+)".r
+      .findFirstMatchIn(graft.Inspect.census(df.queryExecution.executedPlan)).get.group(1).toInt
+    def rows(df: DataFrame) = df.collect().map { r =>
+      (r.getString(0), r.getInt(1), r.getDouble(3), r.getDouble(4), r.getSeq[Double](5))
+    }.sortBy(r => (r._1, r._2))
+    val got = Windowing.windowLong(long, stride, context)
+    val want = arrayCompactWindowLong(long, stride, context)
+    assert(fallbacks(got) == 0)
+    assert(fallbacks(want) > 0)
+    val (g, w) = (rows(got), rows(want))
+    assert(g.length == 3 * 4 - 1, g.map(_._1).mkString(","))
+    assert(g sameElements w)
+  }
+
   test("identity pipeline: stitch(window(x)) == x exactly") {
     val segs = Synthetic.segments(spark, 4.0, 2, 1000.0, seed = 8)
     val back = stitchedTraces(Windowing.stitch(

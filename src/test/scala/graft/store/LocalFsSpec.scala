@@ -171,6 +171,33 @@ class LocalFsSpec extends AnyFunSuite {
       new FsPermission(oct("644"))))
   }
 
+  test("a configuration without the registration is reported once, naming both properties") {
+    assert(LocalFs.report(spark.sparkContext.hadoopConfiguration).isEmpty)
+    assert(LocalFs.report(new Configuration()).isEmpty)
+    // a deployment's own core-site.xml without the two properties
+    val bare = new Configuration()
+    bare.unset("fs.file.impl")
+    bare.unset("fs.AbstractFileSystem.file.impl")
+    val report = LocalFs.report(bare)
+    assert(report.isDefined)
+    for (p <- Seq("fs.file.impl", "fs.AbstractFileSystem.file.impl"))
+      assert(report.get.contains(s"$p="), report.get)
+    assert(!report.get.contains("resolves to graft."), report.get)
+    // one property missing is reported too
+    val half = new Configuration()
+    half.unset("fs.AbstractFileSystem.file.impl")
+    assert(LocalFs.report(half).isDefined)
+    // Session.build() passes the report on once per JVM, and never for a
+    // registered configuration
+    val warned = scala.collection.mutable.ArrayBuffer.empty[String]
+    assert(!graft.Session.reportLocalFs(spark.sparkContext.hadoopConfiguration, warned += _))
+    assert(graft.Session.reportLocalFs(bare, warned += _))
+    assert(!graft.Session.reportLocalFs(bare, warned += _))
+    assert(warned == Seq(report.get))
+    // the check changes nothing: the checksumming filesystems stay in place
+    assert(FileSystem.getLocal(bare).isInstanceOf[LocalFileSystem])
+  }
+
   test("the file: scheme resolves to the graft classes for both Hadoop APIs") {
     val conf = spark.sparkContext.hadoopConfiguration
     assert(FileSystem.get(URI.create("file:///"), conf).isInstanceOf[NioLocalFileSystem])

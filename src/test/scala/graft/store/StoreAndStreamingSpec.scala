@@ -69,25 +69,123 @@ class StoreAndStreamingSpec extends AnyFunSuite {
       assert(declared.collect().toSet == raw.collect().toSet)
       assert(legacy.count() == 4)
     } finally spark.sparkContext.removeSparkListener(metrics)
-    // every value-array column chunk is plain-encoded, with no dictionary page
+    assertNoValuesDictionary(spark.read.parquet(s"$root/acquisition/ECoG"))
+  }
+
+  /** Every `values` column chunk in the files behind a parquet read-back is
+    * plain-encoded, with no dictionary page (read from the footers). */
+  private def assertNoValuesDictionary(parquet: org.apache.spark.sql.DataFrame): Unit = {
     import scala.jdk.CollectionConverters._
     val conf = spark.sparkContext.hadoopConfiguration
-    val files = new java.io.File(s"$root/acquisition/ECoG").listFiles()
-      .filter(_.getName.endsWith(".parquet"))
-    assert(files.nonEmpty)
-    for (f <- files) {
+    val values = parquet.inputFiles.toSeq.flatMap { f =>
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.getPath), conf))
+          new org.apache.hadoop.fs.Path(f), conf))
       val chunks = try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
         finally reader.close()
-      val values = chunks.filter(_.getPath.toDotString == "values.list.element")
-      assert(values.nonEmpty)
-      values.foreach { c =>
-        assert(!c.hasDictionaryPage && !c.getEncodings.asScala.exists(_.usesDictionary),
-          s"${f.getName}: ${c.getEncodings}")
-      }
+      chunks.filter(_.getPath.toDotString == "values.list.element").map(f -> _)
     }
+    // a micro-batch that emitted no row writes a file without row groups
+    assert(values.nonEmpty)
+    for ((f, c) <- values)
+      assert(!c.hasDictionaryPage && !c.getEncodings.asScala.exists(_.usesDictionary),
+        s"$f: ${c.getEncodings}")
+  }
+
+  /** 4 ch at 1 kHz for `seconds` s, one 1 s file per micro-batch, then a
+    * far-future flush file that closes the data windows and an empty one
+    * that evicts them; returns the staging directory. */
+  private def stageRecording(name: String, seconds: Int,
+                             value: org.apache.spark.sql.Column): java.nio.file.Path = {
+    val stage = Files.createTempDirectory(name)
+    StreamingOps.deleteOnExit(stage)
+    val events = spark.range(4000L * seconds).select($"id".as("event_id"),
+      ($"id" % 4).as("user_id"), ($"id" / 4).cast("long").multiply(1000000L).as("ts"),
+      value.as("value"))
+    val t0 = System.currentTimeMillis() - 60000L
+    for (f <- 0 until seconds)
+      StreamingOps.stageFileAs(events.filter($"ts" >= f * 1000000000L &&
+        $"ts" < (f + 1) * 1000000000L), stage, s"b$f.parquet", t0 + 1000L * f)
+    val flush = events.limit(4).select(($"event_id" + 100000L).as("event_id"), $"user_id",
+      lit(1000500000000L).as("ts"), lit(0.0).as("value"))
+    StreamingOps.stageFileAs(flush, stage, "flush.parquet", t0 + 1000L * seconds)
+    StreamingOps.stageFileAs(flush.filter(lit(false)), stage, "z_evict.parquet",
+      t0 + 1000L * (seconds + 1))
+    stage
+  }
+
+  /** The windowed stream of the staged recordings: 1 s windows, 100 ms
+    * context. */
+  private def shortWindows(df: org.apache.spark.sql.DataFrame) =
+    StreamingOps.windowedSegmentsStream(df, nChannels = 4, rate = 1000.0,
+      windowDur = "1 second", watermark = "2 seconds", contextDur = "100 milliseconds")
+
+  test("the stream sink writes values without a dictionary; the caller's session keeps no such key") {
+    // four distinct values: a dictionary fits, so only the property keeps it out
+    val stage = stageRecording("dict_stream", 2, ($"id" % 4).cast("double"))
+    def dictionaryKeys = spark.conf.getAll.keys.filter(_.startsWith("parquet.enable.dictionary"))
+    assert(dictionaryKeys.isEmpty)
+    val sink = StreamingOps.runToParquetOrdered(spark, stage.toString, "dict_stream",
+      shortWindows)
+    assert(sink.count() == 4 * 2)
+    assertNoValuesDictionary(sink)
+    assert(dictionaryKeys.isEmpty, dictionaryKeys)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+  }
+
+  /** `windowedSegmentsStream`'s context membership written as before it
+    * was code-generated: `array_compact` over the three candidate offsets,
+    * then a stub filter with `exists` over the assembled sample times. */
+  private def arrayCompactWindows(events: org.apache.spark.sql.DataFrame,
+                                  winU: Long, ctxU: Long) =
+    graft.model.Frames.normalizeTsNanos(events)
+      .withColumn("channel", pmod($"user_id", lit(4)).cast("int"))
+      .withColumn("_tu", ($"ts" / 1000).cast("long"))
+      .withColumn("_off", explode(array_compact(array(
+        lit(0L),
+        when(pmod($"_tu", lit(winU)) < ctxU, lit(-winU)),
+        when(pmod($"_tu", lit(winU)) >= winU - ctxU, lit(winU))))))
+      .withColumn("member_time", timestamp_micros($"_tu" + $"_off"))
+      .groupBy(window($"member_time", s"$winU microseconds"), $"channel")
+      .agg(graft.functions.SeriesAssembleFunctions.assembleTimed(spark,
+        $"ts".cast("long"), $"event_id".cast("long"), $"value".cast("double")).as("_a"))
+      .withColumn("_startU", unix_micros($"window.start"))
+      .filter(exists($"_a.ts", t =>
+        (t / 1000).cast("long").between($"_startU", $"_startU" + winU - 1)))
+      .select(concat(lit("events#w"), ($"_startU" / winU).cast("long")).as("series"),
+        $"channel", ($"_startU".cast("double") / 1e6).as("startingTime"),
+        $"_a.values".as("values"), $"_a.ts".as("sample_ts"))
+
+  test("windowedSegmentsStream membership is code-generated and equals the array_compact form") {
+    // events on, just before and just after every window and context
+    // boundary of 1 s windows with 100 ms context (offsets in micros), and
+    // a lone event in the right margin of window 5, whose copy in window 6
+    // is a stub
+    val offsets = Seq(0L, 1L, 99999L, 100000L, 100001L, 500000L,
+      899999L, 900000L, 900001L, 999999L)
+    val tsUs = (for (w <- 0L until 3L; o <- offsets) yield w * 1000000L + o) :+ 5950000L
+    val dir = Files.createTempDirectory("membership_batch")
+    StreamingOps.deleteOnExit(dir)
+    tsUs.zipWithIndex.flatMap { case (us, i) =>
+      (0 until 4).map(ch => (i * 4L + ch, ch.toLong, us * 1000L, (i * 4 + ch) * 0.5))
+    }.toDF("event_id", "user_id", "ts", "value")
+      .write.mode("overwrite").parquet(dir.resolve("events").toString)
+    val events = spark.read.parquet(dir.resolve("events").toString)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("series", "channel", "startingTime", "values", "sample_ts").collect()
+        .map(r => (r.getString(0), r.getInt(1), r.getDouble(2), r.getSeq[Double](3),
+          r.getSeq[Long](4))).sortBy(r => (r._1, r._2))
+    val got = shortWindows(events)
+    val want = arrayCompactWindows(events, 1000000L, 100000L)
+    def fallbacks(df: org.apache.spark.sql.DataFrame) = " fallbacks=(\\d+)".r
+      .findFirstMatchIn(graft.Inspect.census(df.queryExecution.executedPlan)).get.group(1).toInt
+    assert(fallbacks(got) == 0)
+    assert(fallbacks(want) > 0)
+    val (g, w) = (rows(got), rows(want))
+    // windows -1, 3 and 6 hold only borrowed context: stubs, dropped
+    assert(g.map(_._1).distinct.toSeq ==
+      Seq("events#w0", "events#w1", "events#w2", "events#w5"))
+    assert(g sameElements w)
   }
 
   test("bucketed processing sink: channel joins read pre-partitioned, no shuffle") {
@@ -358,21 +456,7 @@ class StoreAndStreamingSpec extends AnyFunSuite {
   test("stream state partitions are sized from the staged input; the caller's count is untouched") {
     import org.apache.spark.sql.streaming.StreamingQueryListener
     import org.apache.spark.sql.streaming.StreamingQueryListener._
-    // 4 ch x 3 s at 1 kHz, one 1 s file per micro-batch, then a far-future
-    // flush file that closes the data windows and an empty one to evict them
-    val stage = Files.createTempDirectory("sized_stream")
-    StreamingOps.deleteOnExit(stage)
-    val events = spark.range(12000).select($"id".as("event_id"),
-      ($"id" % 4).as("user_id"), ($"id" / 4).cast("long").multiply(1000000L).as("ts"),
-      (sin($"id" / 40.0) + $"id" % 4).as("value"))
-    val t0 = System.currentTimeMillis() - 60000L
-    for (f <- 0 until 3)
-      StreamingOps.stageFileAs(events.filter($"ts" >= f * 1000000000L &&
-        $"ts" < (f + 1) * 1000000000L), stage, s"b$f.parquet", t0 + 1000L * f)
-    val flush = events.limit(4).select(($"event_id" + 100000L).as("event_id"), $"user_id",
-      lit(1000500000000L).as("ts"), lit(0.0).as("value"))
-    StreamingOps.stageFileAs(flush, stage, "flush.parquet", t0 + 3000L)
-    StreamingOps.stageFileAs(flush.filter(lit(false)), stage, "z_evict.parquet", t0 + 4000L)
+    val stage = stageRecording("sized_stream", 3, sin($"id" / 40.0) + $"id" % 4)
     val bytes = stage.toFile.listFiles.map(_.length).sum
 
     val seen = scala.collection.mutable.ArrayBuffer.empty[(Seq[Int], String)]
@@ -389,9 +473,7 @@ class StoreAndStreamingSpec extends AnyFunSuite {
     // caller's count seen while it ran, stitched values per channel)
     def run(name: String) = {
       seen.clear(); done = new java.util.concurrent.CountDownLatch(1)
-      val out = StreamingOps.runToParquetOrdered(spark, stage.toString, name,
-        df => StreamingOps.windowedSegmentsStream(df, nChannels = 4, rate = 1000.0,
-          windowDur = "1 second", watermark = "2 seconds", contextDur = "100 milliseconds"))
+      val out = StreamingOps.runToParquetOrdered(spark, stage.toString, name, shortWindows)
       assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
       val stitched = StreamingOps.stitchTimeWindows(out, "1 second", "100 milliseconds")
         .select($"channel", $"win_idx", $"values").collect().groupBy(_.getInt(0))
