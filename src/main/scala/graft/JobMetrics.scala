@@ -5,8 +5,8 @@ import org.apache.spark.sql.SparkSession
 
 /** The one per-job metrics listener. For every Spark job it records the
   * wall, the stages and tasks that ran, summed task time, shuffle read and
-  * write, spill (memory + disk), and the largest task result sent to the
-  * driver — each under the phase label that was set (with [[JobMetrics.phase]])
+  * write, spill (memory + disk), the longest task, and the largest task
+  * result sent to the driver — each under the phase label that was set (with [[JobMetrics.phase]])
   * on the thread that submitted the job.
   *
   * The label travels as a job property, so attribution is exact even
@@ -21,9 +21,9 @@ final class JobMetrics extends SparkListener {
                           val start: Long) {
     var end = -1L
     var stages, tasks = 0
-    var taskMs, shuffleRead, shuffleWrite, spill, maxResult = 0L
+    var taskMs, shuffleRead, shuffleWrite, spill, maxResult, maxTaskMs = 0L
     def job: Job = Job(id, phase, desc, if (end < 0) -1L else end - start,
-      stages, tasks, taskMs, shuffleRead, shuffleWrite, spill, maxResult)
+      stages, tasks, taskMs, shuffleRead, shuffleWrite, spill, maxResult, maxTaskMs)
   }
 
   private val recs = scala.collection.mutable.LinkedHashMap.empty[Int, Rec]
@@ -57,6 +57,7 @@ final class JobMetrics extends SparkListener {
       r.shuffleWrite += m.shuffleWriteMetrics.bytesWritten
       r.spill += m.memoryBytesSpilled + m.diskBytesSpilled
       r.maxResult = math.max(r.maxResult, m.resultSize)
+      r.maxTaskMs = math.max(r.maxTaskMs, m.executorRunTime)
     }
   }
 
@@ -92,26 +93,29 @@ object JobMetrics {
   /** Job property that carries the phase label. */
   val PhaseKey = "graft.phase"
 
-  /** One job's record (times in ms, sizes in bytes). */
+  /** One job's record (times in ms, sizes in bytes); `maxTaskMs` is the
+    * run time of its longest task. */
   final case class Job(id: Int, phase: String, desc: String, wallMs: Long,
                        stages: Int, tasks: Int, taskMs: Long,
                        shuffleRead: Long, shuffleWrite: Long, spill: Long,
-                       maxResultBytes: Long) {
+                       maxResultBytes: Long, maxTaskMs: Long) {
     def line: String =
       f"job $id%4d ${wallMs / 1000.0}%7.3fs stages=$stages%2d tasks=$tasks%4d " +
-        f"task=${taskMs / 1000.0}%8.2fs sr=${shuffleRead / 1e6}%8.1fMB " +
+        f"task=${taskMs / 1000.0}%8.2fs maxTask=${maxTaskMs / 1000.0}%7.2fs " +
+        f"sr=${shuffleRead / 1e6}%8.1fMB " +
         f"sw=${shuffleWrite / 1e6}%8.1fMB spill=${spill / 1e6}%6.1fMB " +
         f"maxResult=${maxResultBytes / 1024.0}%7.0fKiB  ${desc.take(90)}"
   }
 
-  /** Sums a set of jobs into one record (max for the result size); its
-    * `id` is the job count. */
+  /** Sums a set of jobs into one record (max for the result size and the
+    * longest task); its `id` is the job count. */
   def total(jobs: Seq[Job]): Job =
-    jobs.foldLeft(Job(0, "", "", 0L, 0, 0, 0L, 0L, 0L, 0L, 0L)) { (a, j) =>
+    jobs.foldLeft(Job(0, "", "", 0L, 0, 0, 0L, 0L, 0L, 0L, 0L, 0L)) { (a, j) =>
       Job(a.id + 1, "", "", a.wallMs + math.max(j.wallMs, 0L),
         a.stages + j.stages, a.tasks + j.tasks, a.taskMs + j.taskMs,
         a.shuffleRead + j.shuffleRead, a.shuffleWrite + j.shuffleWrite,
-        a.spill + j.spill, math.max(a.maxResultBytes, j.maxResultBytes))
+        a.spill + j.spill, math.max(a.maxResultBytes, j.maxResultBytes),
+        math.max(a.maxTaskMs, j.maxTaskMs))
     }
 
   /** Registers a new listener on the session's context. */

@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one session conf of the mains (`Bench`, `Verify`, `Inspect`,
-  * `tools.PreprocessFolder`, and the test-scope `SessionSoak`/`StreamSoak`):
-  * `local[$SPARK_GRAFT_CPUS]` (default 4) with shuffle partitions = cpus,
+  * `tools.PreprocessFolder`) and of test scope: every spec takes it from
+  * the `graft.SessionSuite` trait and every soak from the `graft.Soak`
+  * runner. `local[$SPARK_GRAFT_CPUS]` (default 4) with shuffle partitions = cpus,
   * UTC session time zone, UI off, AQE on, nanosecond parquet timestamps
   * read as longs, and a raised ObjectHashAggregate fallback threshold.
   * Any other `spark.*` conf can still be set per run as a JVM system

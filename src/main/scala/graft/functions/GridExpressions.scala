@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -161,10 +160,5 @@ object GridFunctions {
       val p = math.pow(10, decimals)
       floor(c * lit(p) + lit(0.5)) / lit(p)
     }
-  }
-
-  def floorDotE9(df: org.apache.spark.sql.DataFrame, a: Column, b: Column): Column = {
-    register(df.sparkSession)
-    call_function("floor_dot_e9", a, b)
   }
 }

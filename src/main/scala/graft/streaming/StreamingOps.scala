@@ -819,8 +819,10 @@ object StreamingOps {
     * start, so wrapping just the streaming run is sufficient and nothing
     * leaks into later queries on a shared session. */
   def withRocksDbState[T](spark: SparkSession)(f: => T): T = {
-    val prevP = spark.conf.getOption(ProviderKey)
-    val prevC = spark.conf.getOption(ChangelogKey)
+    // the keys set on the session: getOption would return the provider's
+    // default and restore it as a set key
+    val set = spark.conf.getAll
+    val (prevP, prevC) = (set.get(ProviderKey), set.get(ChangelogKey))
     spark.conf.set(ProviderKey, RocksDbProvider)
     spark.conf.set(ChangelogKey, "true")
     try f finally {

@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, Column, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (`array<float>`).
@@ -36,13 +36,6 @@ object Similarity {
     }
     if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
   }
-
-  private def cosineUdf = udf((a: Seq[Float], b: Seq[Float]) => cosine(a, b))
-
-  /** Exact cosine of two `array<float>` columns — the public column surface
-    * over [[cosine]] (round it on the shared 4-decimal grid for
-    * engine-exact readouts). */
-  def cosineCol(a: Column, b: Column): Column = cosineUdf(a, b)
 
   /** Exact top-k cosine neighbors of `query` (excluding `excludeId`);
     * `sim` is the engine-exact e9-grid 4-decimal cosine ([[gridSimE4]],

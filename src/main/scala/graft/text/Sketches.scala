@@ -245,14 +245,6 @@ object Sketches {
     (bucket, rho)
   }
 
-  /** Per-group estimates from an externally-maintained grouped register
-    * table `(groupCol, bucket, reg)` — the grouped sibling of
-    * [[hllEstimateFromRegisters]]. */
-  def hllEstimateForGroupedRegisters(regs: DataFrame,
-                                     groupCol: String): DataFrame =
-    hllEstimateFromRegs(regs.withColumnRenamed(groupCol, "_g"), Seq("_g"))
-      .select(col("_g").as(groupCol), col("zero_buckets"), col("estimate"))
-
   /** Estimate from an externally-maintained register table — the surface a
     * STREAMING register state needs: the (bucket, reg) frame is the whole
     * sketch, so a stateful stream that maintains per-bucket max-rho can

@@ -9,15 +9,6 @@ import org.apache.spark.sql.functions._
   */
 object TextAnalysis {
 
-  /** Occurrences of `needle` as a standalone word in `textCol` (padded
-    * non-overlapping replace-count — identical semantics in any engine). */
-  def wordCount(textCol: Column, needle: String): Column = {
-    val padded = concat(lit(" "), textCol, lit(" "))
-    val token = s" $needle "
-    ((length(padded) - length(regexp_replace(padded, java.util.regex.Pattern.quote(token), ""))) /
-      token.length).cast("long")
-  }
-
   /** Plain substring replace-count (no regex). */
   def substrCount(textCol: Column, needle: String): Column =
     ((length(textCol) - length(replace(textCol, lit(needle), lit("")))) / needle.length)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,13 +22,7 @@ import graft.functions.GridFunctions
   *    membership, bounds, and the zero-norm guard, via the public
   *    bruteForceTopK surface.
   */
-class GridContractSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GridContractSpec extends AnyFunSuite with SessionSuite {
 
   private def evalGrid(x: Double, k: Int): Double = {
     import spark.implicits._

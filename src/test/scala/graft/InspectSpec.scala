@@ -3,22 +3,13 @@ package graft
 import java.nio.file.{Files, Path}
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 
 /** The library entry points of the mains: `Inspect plan|profile` (plan
   * file, census line with pinned and locally built inputs, UDFs and
   * interpreted expressions, per-job metrics,
   * child-process count, name check) and `Bench.run`'s summary pointer to the persisted
   * per-query file. */
-class InspectSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("inspect-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+class InspectSpec extends AnyFunSuite with SessionSuite {
 
   private val sf = "/root/testdata/sf0.001"
   private val q21 = "q21_car_trimmed_mean"
@@ -84,6 +75,8 @@ class InspectSpec extends AnyFunSuite {
     assert(name == q21)
     assert(jobs.nonEmpty && jobs.forall(_.phase == s"$q21#2"))
     assert(jobs.exists(_.taskMs > 0), jobs.map(_.line).mkString("\n"))
+    assert(jobs.exists(_.maxTaskMs > 0) && jobs.forall(j => j.maxTaskMs <= j.taskMs),
+      jobs.map(_.line).mkString("\n"))
     assert(jobs.forall(_.wallMs >= 0))
     assert(Files.readString(out.resolve(s"$q21.final.txt")).contains("isFinalPlan=true"))
     assert(Files.readAllLines(out.resolve(s"$q21.jobs.txt")).size == jobs.size)

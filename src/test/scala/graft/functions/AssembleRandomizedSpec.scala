@@ -1,21 +1,13 @@
 package graft.functions
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Randomized (seeded, reproducible) model checks for the assembly
   * aggregates: random index sets — dense, gappy, duplicated, negative,
   * offset — shuffled into random partition counts so partial/merge paths
   * vary, compared against the plain-Scala reference model (sort). */
-class AssembleRandomizedSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("assemble-randomized")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AssembleRandomizedSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.dsp.{Kernels, Signal, Signal32}
@@ -13,14 +13,7 @@ import graft.operators.{DspOperators, Pipeline}
   * `Signal32` kernels called on the driver, under codegen and interpreted;
   * the amplitude-only wavelet equal to `amplitude(waveletTransform(...))`;
   * null-safe; and the UDFs left in `preprocessBlock`'s plan. */
-class DspExpressionsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("dsp-expressions-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DspExpressionsSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 
@@ -46,13 +39,8 @@ class DspExpressionsSpec extends AnyFunSuite {
   /** Runs `f` with whole-stage codegen, then fully interpreted. */
   private def bothModes(f: => Unit): Unit = {
     f
-    val conf = spark.conf
-    conf.set("spark.sql.codegen.wholeStage", "false")
-    conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try f finally {
-      conf.unset("spark.sql.codegen.wholeStage")
-      conf.unset("spark.sql.codegen.factoryMode")
-    }
+    withConf("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(f)
   }
 
   private val f32 = (x: Array[Float]) => x.map(_.toDouble)

@@ -8,15 +8,7 @@ import org.apache.spark.sql.execution.SparkPlan
 /** Native expression correctness (eval == codegen == built-in composition)
   * and physical-plan discipline: pruned scans, broadcast dims, codegen'd
   * amplitude path. */
-class ExpressionsAndPlansSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("expr-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+class ExpressionsAndPlansSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 
@@ -56,7 +48,8 @@ class ExpressionsAndPlansSpec extends AnyFunSuite {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      // new session over the same SparkContext, extensions applied at build
+      // a second session over the suite's SparkContext, not the suite's
+      // own: session extensions apply only when a session is built
       val ext = SparkSession.builder().master("local[4]").appName("ext-spec")
         .withExtensions(new graft.GraftExtensions())
         .config("spark.ui.enabled", "false")
@@ -100,15 +93,14 @@ class ExpressionsAndPlansSpec extends AnyFunSuite {
     // regresses (this pinned 4 -> 1 in round 10). AQE off: static
     // ReuseExchange is what makes the sharing visible in the plan string
     // (at runtime AQE's stage cache reuses the same canonicalized stages)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       val q = graft.SparkEntry.queries("q95_pmi_collocations")(spark, "/root/testdata/sf0.001")
       val plan = physical(q)
       val scans = "FileScan parquet".r.findAllIn(plan).length
       assert(scans == 1, s"expected 1 documents scan, found $scans in:\n$plan")
       assert("ReusedExchange".r.findAllIn(plan).length >= 3,
         "the gram aggregation exchange should be reused by all consumers")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   test("q05 joins its dimensions by broadcast") {

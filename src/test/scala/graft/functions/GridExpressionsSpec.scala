@@ -7,14 +7,7 @@ import org.apache.spark.sql.functions._
 /** floor_dot_e9: the codegen exact-grid inner product must produce the
   * SAME longs as the interpreted aggregate/zip_with HOF it replaces, and
   * mirror its null chain. */
-class GridExpressionsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("grid-expr-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GridExpressionsSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 
@@ -80,6 +73,8 @@ class GridExpressionsSpec extends AnyFunSuite {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
+      // a second session over the suite's SparkContext, not the suite's
+      // own: session extensions (the rewrite rule) apply only at build
       val ext = SparkSession.builder().master("local[4]")
         .appName("rewrite-rule-spec")
         .withExtensions(new graft.GraftExtensions())
@@ -133,11 +128,7 @@ class GridExpressionsSpec extends AnyFunSuite {
       val ovDir = s"$dir/ov"
       Seq((Seq(3e9, 3e9), Seq(1e9, 1e9))).toDF("a", "b")
         .write.mode("overwrite").parquet(ovDir)
-      def ansiConf(on: Boolean): Unit =
-        ext.conf.set("spark.sql.ansi.enabled", on.toString)
-      val prevAnsi = ext.conf.get("spark.sql.ansi.enabled")
-      try {
-        ansiConf(true)
+      graft.SessionSuite.withConf(ext, "spark.sql.ansi.enabled" -> "true") {
         val ansi = ext.read.parquet(ovDir).select(expr(hof).as("d"))
         val opt = ansi.queryExecution.optimizedPlan.toString
         assert(opt.contains("floor_dot_e9"),
@@ -148,12 +139,13 @@ class GridExpressionsSpec extends AnyFunSuite {
             Option(t.getMessage).exists(_.toLowerCase.contains("overflow")) ||
             overflowy(t.getCause))
         assert(overflowy(ex), s"expected overflow failure, got $ex")
-        ansiConf(false)
+      }
+      graft.SessionSuite.withConf(ext, "spark.sql.ansi.enabled" -> "false") {
         val legacy = ext.read.parquet(ovDir).select(expr(hof).as("d"))
         assert(legacy.queryExecution.optimizedPlan.toString.contains("floor_dot_e9"))
         // wrapping parity: 2 * Long.MaxValue wraps to -2 in both forms
         assert(legacy.head().getLong(0) === -2L)
-      } finally ext.conf.set("spark.sql.ansi.enabled", prevAnsi)
+      }
     } finally {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
@@ -171,9 +163,7 @@ class GridExpressionsSpec extends AnyFunSuite {
     // and every floor_dot_e9 plan silently ran interpreted. fallback=false
     // turns any such failure into a hard error instead of a fallback.
     GridFunctions.register(spark)
-    val prev = spark.conf.get("spark.sql.codegen.fallback")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
+    withConf("spark.sql.codegen.fallback" -> "false") {
       // range's id is non-nullable, so the built arrays are non-nullable —
       // exactly the shape that used to break compilation.
       val got = spark.range(4)
@@ -183,6 +173,6 @@ class GridExpressionsSpec extends AnyFunSuite {
       val want = (0L until 4L).map(i => 3L * i * 1000000000L +
         2L * i * 1000000000L).sorted.toArray
       assert(got.sameElements(want))
-    } finally spark.conf.set("spark.sql.codegen.fallback", prev)
+    }
   }
 }

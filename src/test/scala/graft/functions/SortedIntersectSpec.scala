@@ -1,20 +1,12 @@
 package graft.functions
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** sorted_intersect_size: the two-pointer merge must equal
   * size(array_intersect(...)) on every sorted duplicate-free input, mirror
   * the null chain, and compile under whole-stage codegen. */
-class SortedIntersectSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("sorted-intersect-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SortedIntersectSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 
@@ -25,9 +17,7 @@ class SortedIntersectSpec extends AnyFunSuite {
       (0 until r.nextInt(40)).map(_ => s"w${r.nextInt(60)}").distinct.sorted
     val rows = (0 until 300).map(i => (i.toLong, randSet(), randSet()))
     val df = rows.toDF("id", "a", "b")
-    val prev = spark.conf.get("spark.sql.codegen.fallback")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
+    withConf("spark.sql.codegen.fallback" -> "false") {
       val bad = df.select(
           expr(s"${SortedIntersectFunctions.registeredName}(a, b)").as("fast"),
           size(array_intersect(col("a"), col("b"))).as("builtin"))
@@ -41,7 +31,7 @@ class SortedIntersectSpec extends AnyFunSuite {
       val got = edge.select(expr(s"${SortedIntersectFunctions.registeredName}(a, b)"))
         .collect().map(_.getInt(0)).toSeq
       assert(got === Seq(0, 0, 3))
-    } finally spark.conf.set("spark.sql.codegen.fallback", prev)
+    }
   }
 
   test("null arrays yield NULL (null-intolerant chain)") {

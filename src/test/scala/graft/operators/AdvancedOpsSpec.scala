@@ -1,22 +1,13 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Semantics pins for the round-10 Advanced operators: Welch PSD (spectral
   * peak location, Parseval-level power accounting, one-sided density
   * scaling) and bounded-hop Bellman-Ford (exact distances on a known
   * graph, hop-bound truncation). */
-class AdvancedOpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("advanced-ops-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class AdvancedOpsSpec extends AnyFunSuite with graft.SessionSuite {
 
   private def sineSegments(freq: Double, rate: Double, n: Int) = {
     import spark.implicits._

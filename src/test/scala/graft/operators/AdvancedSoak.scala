@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.JobMetrics.phase
+
 /** Scale soak for the round-10 Advanced family's scale-critical shapes,
   * with CLOSED-FORM invariants (no oracle, no tolerance):
   *
@@ -18,29 +20,14 @@ import org.apache.spark.sql.expressions.Window
   *      everywhere; a series with one planted +delta step of length L at
   *      the end has max cusum == L*(delta - drift) on the integer grid.
   *
-  * Run: sbt "Test/runMain graft.operators.AdvancedSoak [N] [days] [M]"
+  * Run: sbt "Test/runMain graft.Soak AdvancedSoak [N] [days] [M]"
   */
 object AdvancedSoak {
 
-  def main(args: Array[String]): Unit = {
-    val n = if (args.length > 0) args(0).toLong else 20000000L
-    val days = if (args.length > 1) args(1).toInt else 200
-    val m = if (args.length > 2) args(2).toInt else 50000
-
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("advanced-soak")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def timed[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[soak] $label: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      r
-    }
+  def run(spark: SparkSession, args: graft.Soak.Args): Unit = {
+    val n = args.long(0, 20000000L)
+    val days = args.int(1, 200)
+    val m = args.int(2, 50000)
 
     // --- 1. two-level global rank on a 20M permutation -------------------
     // v = id * 48271 mod n with gcd(48271, n) = 1 (n even, 48271 odd prime
@@ -52,7 +39,7 @@ object AdvancedSoak {
     val ranked = graft.model.Frames.denseIndexByKey(perm, Seq.empty,
       bucketCol = expr(s"v div ${math.max(n / 4096, 1)}"),
       orderCols = Seq(col("v")), as = "rank")
-    val mismatch = timed(s"global rank of $n-row permutation")(
+    val mismatch = phase(spark, "globalRank")(
       ranked.agg(sum(abs(col("rank") - col("v")))).head().getLong(0))
     require(mismatch == 0L, s"rank != v somewhere: $mismatch")
     println(s"[soak] rank permutation exact at n=$n")
@@ -71,7 +58,7 @@ object AdvancedSoak {
       .unionAll(iv.select(col("day"), col("en").as("t"), lit(-1L).as("d")))
     val w = Window.partitionBy("day").orderBy(col("t"), col("d").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val maxima = timed(s"sweep over ${2L * days * m} boundaries")(
+    val maxima = phase(spark, "sweepLine")(
       b.withColumn("cum", sum("d").over(w))
         .groupBy("day").agg(max("cum").as("mx"))
         .agg(min("mx").as("lo"), max("mx").as("hi")).head())
@@ -102,7 +89,7 @@ object AdvancedSoak {
     val mu = series.groupBy("grp").agg(expr("sum(vm) div count(*)").as("mu"))
     val cw = Window.partitionBy("grp").orderBy("t")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cus = timed(s"cusum over ${2 * nB + l} rows")(
+    val cus = phase(spark, "cusum")(
       series.join(broadcast(mu), "grp")
         .withColumn("cs", sum(col("vm") - col("mu")).over(cw))
         .withColumn("s", col("cs") - least(lit(0L), min("cs").over(cw)))
@@ -113,6 +100,5 @@ object AdvancedSoak {
     println(s"[soak] cusum closed forms exact (peak=$peak)")
 
     println("[soak] AdvancedSoak PASS")
-    spark.stop()
   }
 }

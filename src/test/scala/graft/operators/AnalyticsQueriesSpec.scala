@@ -1,21 +1,13 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 /** Semantics invariants for the growth/bars analytics shapes (q145-q147):
   * cohort identities, growth accounting conservation, and the max-struct
   * OHLC idiom vs an explicit sort. */
-class AnalyticsQueriesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("analytics-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AnalyticsQueriesSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 

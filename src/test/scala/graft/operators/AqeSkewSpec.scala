@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Certifies AQE's RUNTIME skew split — the second half of the engine's
@@ -16,25 +15,9 @@ import org.apache.spark.sql.functions._
   * instead of 256 MB) — the MECHANISM is identical; only the trigger
   * sizes differ — and restores every conf it touches.
   */
-class AqeSkewSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("aqe-skew-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AqeSkewSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
-
-  private def withConfs[T](kv: (String, String)*)(f: => T): T = {
-    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 
   test("AQE switches a sort-merge join to broadcast when runtime stats shrink a side") {
     // right side LOOKS big statically (2 M rows, ~16 MB estimate — above
@@ -60,7 +43,7 @@ class AqeSkewSpec extends AnyFunSuite {
         sum(pmod(xxhash64(col("key"), col("payload"), col("rval")),
           lit(1000000007L))).as("checksum"))
 
-    val (planStr, rows) = withConfs(
+    val (planStr, rows) = withConf(
       "spark.sql.adaptive.enabled" -> "true") {
       val df = joined
       val row = df.collect().head
@@ -74,7 +57,7 @@ class AqeSkewSpec extends AnyFunSuite {
       s"AQE did not re-plan to broadcast:\n${finalPlan.take(1200)}")
 
     // ground truth with AQE off entirely (pure SMJ execution)
-    val plain = withConfs("spark.sql.adaptive.enabled" -> "false") {
+    val plain = withConf("spark.sql.adaptive.enabled" -> "false") {
       val row = joined.collect().head
       (row.getLong(0), row.getLong(1))
     }
@@ -112,7 +95,7 @@ class AqeSkewSpec extends AnyFunSuite {
           lit(1000000007L))).as("checksum"),
         sum(when(col("key") === "hot", 1L).otherwise(0L)).as("hot_n"))
 
-    val (skewPlanStr, skewRows) = withConfs(
+    val (skewPlanStr, skewRows) = withConf(
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
@@ -135,7 +118,7 @@ class AqeSkewSpec extends AnyFunSuite {
       "hot partition was not split by AQEShuffleRead")
 
     // ground truth: same join with the skew optimization off
-    val plain = withConfs(
+    val plain = withConf(
       "spark.sql.adaptive.skewJoin.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
@@ -158,7 +141,7 @@ class AqeSkewSpec extends AnyFunSuite {
     def agg = data.groupBy("key")
       .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
 
-    val (planOn, partsOn, rowsOn) = withConfs(
+    val (planOn, partsOn, rowsOn) = withConf(
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
       "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
@@ -173,7 +156,7 @@ class AqeSkewSpec extends AnyFunSuite {
     assert(partsOn < 8,
       s"64 configured reducers should coalesce to a handful, got $partsOn")
 
-    val rowsOff = withConfs(
+    val rowsOff = withConf(
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.shuffle.partitions" -> "64") {
       agg.collect().map(r =>

@@ -1,20 +1,12 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** As-of join composition: hand-computed matches, no-match nulls, equal-ts
   * tie policy (right row at the left's exact ts matches), tie-break among
   * equal right ord values, and partition invariance. */
-class AsOfSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("asof-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AsOfSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 

@@ -1,19 +1,11 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Association mining: hand-computed lift on a tiny basket set, support
   * threshold, and duplicate-row insensitivity. */
-class AssociationSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("association-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AssociationSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 

@@ -1,19 +1,11 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 
 /** Bloom-pruned join: row-for-row equal to the plain join at any filter
   * size (no false negatives; positives die in the join), and the filter
   * actually prunes. */
-class BloomJoinSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("bloomjoin-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BloomJoinSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 

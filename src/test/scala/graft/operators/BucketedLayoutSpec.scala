@@ -1,22 +1,13 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 
 /** Bucketed layout: the join over two same-bucketed tables must plan with
   * ZERO exchanges (the layout's whole point — the shuffle was paid at
   * write time), and the join result must equal the plain shuffle join. */
-class BucketedLayoutSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("bucketed-layout-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_bl_spec_warehouse")
-    .getOrCreate()
+class BucketedLayoutSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 

@@ -1,20 +1,12 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 
 /** The pin() policy switch: identical results under executor-memory
   * localCheckpoint (default) and reliable directory-backed checkpointing
   * (the 100 TB / lost-executor setting), and the reliable mode actually
   * writes to the configured directory. */
-class CheckpointsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("checkpoints-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CheckpointsSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 
@@ -30,8 +22,7 @@ class CheckpointsSpec extends AnyFunSuite {
     val local = run()
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
     graft.streaming.StreamingOps.deleteOnExit(java.nio.file.Paths.get(dir))
-    spark.conf.set(Checkpoints.DirKey, dir)
-    try {
+    withConf(Checkpoints.DirKey -> dir) {
       val reliable = run()
       assert(reliable === local)
       // reliable mode materialized rounds into the configured directory
@@ -39,20 +30,15 @@ class CheckpointsSpec extends AnyFunSuite {
         if (p.isDirectory) p.listFiles().map(countFiles).sum else 1
       assert(countFiles(new java.io.File(dir)) > 0,
         s"no checkpoint files written under $dir")
-    } finally {
-      spark.conf.unset(Checkpoints.DirKey)
     }
   }
 
   test("pin: empty conf value falls back to localCheckpoint") {
-    spark.conf.set(Checkpoints.DirKey, "  ")
-    try {
+    withConf(Checkpoints.DirKey -> "  ") {
       val out = Graph.boundedKCorePeel(
         edgesDf(Seq((1L, 2L), (2L, 3L))), k = 2, rounds = 2)
         .collect()
       assert(out.nonEmpty)
-    } finally {
-      spark.conf.unset(Checkpoints.DirKey)
     }
   }
 }

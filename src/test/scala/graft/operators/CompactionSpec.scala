@@ -1,19 +1,11 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Compaction: latest-wins per key, tombstone drops, version counting,
   * and the plan stays a single aggregate (no window sort). */
-class CompactionSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("compaction-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CompactionSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 

@@ -1,19 +1,11 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Chi-square: hand-computed 2x2 statistic, independence near zero, and
   * dof bookkeeping. */
-class ContingencySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("contingency-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ContingencySpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 

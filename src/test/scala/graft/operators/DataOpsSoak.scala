@@ -3,34 +3,21 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.JobMetrics.phase
+
 /** Data-ops soak (dev main, not a test): drives the round-10 operator
   * family (compaction, gap fill, bloom-pruned join, association lift,
   * BM25) one to two orders of magnitude past sf0.1, with invariants that
   * are computable in closed form on the synthetic inputs — the "does the
   * scale argument hold when the data is actually big" check.
   *
-  * Run: sbt "Test/runMain graft.operators.DataOpsSoak [scale]"
+  * Run: sbt "Test/runMain graft.Soak DataOpsSoak [scale]"
   *   (scale multiplies the base sizes; default 1 => ~25 M generated rows)
   */
 object DataOpsSoak {
 
-  private def timed[T](name: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    println(f"[soak] $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-    r
-  }
-
-  def main(args: Array[String]): Unit = {
-    val scale = if (args.nonEmpty) args(0).toInt else 1
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("dataops-soak")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  def run(spark: SparkSession, args: graft.Soak.Args): Unit = {
+    val scale = args.int(0, 1)
     import spark.implicits._
 
     // --- CDC compaction: 20M updates, 100k keys, one hot key owning 20%
@@ -42,7 +29,7 @@ object DataOpsSoak {
       col("id").as("seq"),
       (col("id") % 1000).cast("double").as("v"),
       when(col("id") % 97 === 0, lit("del")).otherwise(lit("set")).as("op"))
-    val compacted = timed("compaction 20M/100k hot20%") {
+    val compacted = phase(spark, "compaction") {
       val out = Compaction.compactLatest(updates, Seq("k"), Seq("seq"),
         Seq("op", "v"), tombstone = col("last.op") === "del")
       out.count()
@@ -68,7 +55,7 @@ object DataOpsSoak {
       pmod(col("id"), lit(2000L)).as("user_id"),
       (pmod(expr("id div 2000") * 48271L, lit(1000L)) * 3600000000000L +
         col("id") % 1000).as("ts"))
-    val census = timed("gapfill 2M/2k users") {
+    val census = phase(spark, "gapfill") {
       GapFill.gapCensus(ev).agg(sum("n_hours"), sum("n_events")).collect()
     }
     println(s"[soak] gapfill totals = ${census.head}")
@@ -78,10 +65,10 @@ object DataOpsSoak {
       pmod(col("id") * 2654435761L, lit(1000000L)).as("k"), col("id").as("v"))
     val dims = spark.range(1000000L).filter(col("id") % 200 === 0)
       .select(col("id").as("dk"), (col("id") * 2).as("payload"))
-    val plainCount = timed("plain join 20M x 5k") {
+    val plainCount = phase(spark, "plainJoin") {
       facts.join(dims, facts("k") === dims("dk")).count()
     }
-    val prunedCount = timed("bloom-pruned join 20M x 5k") {
+    val prunedCount = phase(spark, "bloomPrunedJoin") {
       BloomJoin.bloomPrunedEquiJoin(facts, dims, "k", "dk").count()
     }
     assert(plainCount == prunedCount, s"$plainCount != $prunedCount")
@@ -94,7 +81,7 @@ object DataOpsSoak {
       pmod(col("id"), lit(1000000L)).as("b"),
       pmod(pmod(col("id"), lit(1000000L)) * 48271L +
         expr("id div 1000000") * 7919L, lit(10000L)).as("i"))
-    val topLift = timed("association 10M lines") {
+    val topLift = phase(spark, "association") {
       Association.liftPairs(lines, col("b"), col("i"),
         minPairCount = 3L, topK = 20).count()
     }
@@ -107,10 +94,9 @@ object DataOpsSoak {
         when(col("id") % 3 === 0, lit("join")).otherwise(lit("beta")),
         when(col("id") % 7 === 0, lit("hash")).otherwise(lit("gamma")),
         lit("delta epsilon")).as("text"))
-    val top = timed("bm25 1M docs") {
+    val top = phase(spark, "bm25") {
       graft.text.Curation.bm25Rank(docs, Seq("join", "hash"), topK = 20).count()
     }
     assert(top == 20L)
-    spark.stop()
   }
 }

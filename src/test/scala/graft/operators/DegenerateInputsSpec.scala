@@ -1,21 +1,13 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Degenerate inputs for the round-10 operator family: empty frames,
   * all-tombstone logs, lone categories, disjoint sketches, all-null
   * columns — every operator must return a well-formed (often empty)
   * result, never throw or emit NaN rows. */
-class DegenerateInputsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("degenerate-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DegenerateInputsSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
   import graft.text.{Curation, Sketches, EntityResolution}

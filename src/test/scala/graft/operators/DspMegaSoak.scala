@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.JobMetrics.phase
 import graft.dsp.Signal
 import graft.functions.SeriesAssembleFunctions
 import graft.operators.Checkpoints.Pinnable
@@ -106,9 +107,9 @@ import graft.operators.Checkpoints.Pinnable
   *     channels — mean divergence <1% of band rms (the
   *     tests/test_pipeline.py rtol law at scale), worst sample <35%;
   *  6. scale shape: no task result >64 MiB to the driver, zero spill,
-  *     per-stage shuffle/skew profile printed for NOTES.
+  *     per-phase shuffle/skew profile printed for NOTES.
   *
-  * Run: SPARK_DRIVER_MEM=64g sbt "Test/runMain graft.operators.DspMegaSoak
+  * Run: SPARK_DRIVER_MEM=64g sbt "Test/runMain graft.Soak DspMegaSoak
   *   [nChannels] [nWindows] [parityChannels] [stride] [context] [precision]"
   * Defaults 64 ch × 8 windows × 2097152 = 1.074e9 raw samples (mega)
   * + 64 ch × 2 windows (calib parity control).
@@ -215,19 +216,11 @@ object DspMegaSoak {
         noise).as("value"))
   }
 
-  def run(spark: SparkSession, p: Params,
-          phase: String => Unit = _ => ()): Census = {
-    def t[T](label: String)(f: => T): T = {
-      phase(label)
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[soak] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
+  def run(spark: SparkSession, p: Params): Census = {
     val mega = planted(spark, p, p.nWindows, lines = true, "mega")
     val calib = planted(spark, p, p.cleanWindows, lines = false, "calib")
-    val points = t("generatorCensus") { mega.count() }
-    val cleanPoints = calib.count()
+    val (points, cleanPoints) =
+      phase(spark, "generatorCensus")((mega.count(), calib.count()))
 
     val newFreq = p.rate / 4
     // wavelet norm pinned to the CALIB whole-trace padded length so the
@@ -237,7 +230,7 @@ object DspMegaSoak {
       Signal.padPlan(p.cleanNRes.toInt, Signal.FastPad).padTotal
 
     // ---------------- windowed chain (both series) ----------------
-    val car = t("winResampleNotchCar") {
+    val car = phase(spark, "winResampleNotchCar") {
       val w = Windowing.windowLong(mega.unionAll(calib), p.stride, p.context)
       val r = DspOperators.resample(w, newFreq, precision = p.precision)
       val nch = DspOperators.applyLinenoiseNotch(r, continuousProfile = true,
@@ -251,7 +244,7 @@ object DspMegaSoak {
     // time-domain census tap: the cleaned (resampled, notched, CAR'd)
     // signal stitched back — Goertzel projections read the planted tones
     val twoPi = 2.0 * math.Pi
-    val tones = t("carStitchTap") {
+    val tones = phase(spark, "carStitchTap") {
       val carStitched = Windowing.stitch(car, p.strideP, p.contextP)
       val cl = Windowing.stitchedToLong(carStitched, p.strideP)
         .filter(col("series") === "mega")
@@ -273,7 +266,7 @@ object DspMegaSoak {
     }
 
     // wavelet amplitude -> stitch -> interior-block-0-baseline z-score
-    val zStitched = t("waveletStitchZ") {
+    val zStitched = phase(spark, "waveletStitchZ") {
       val amp = DspOperators.amplitude(DspOperators.waveletTransform(
         car, "rat", hgOnly = true, Signal.FastPad, Some(cleanWholePadded),
         precision = p.precision))
@@ -301,7 +294,6 @@ object DspMegaSoak {
 
     // burst census over the mega z output (same integer layout math as
     // the generator, recomputed from t_idx — no join needed)
-    phase("burstCensus")
     val zl = Windowing.stitchedToLong(
         zStitched.filter(col("series") === "mega"), p.strideP)
       .withColumn("pair", floor(col("channel") / lit(2)).cast("long"))
@@ -319,21 +311,21 @@ object DspMegaSoak {
       (pmod(rel2, col("cyc")) < lit((p.burstLen + 2 * p.fpPad).toLong))
     // one bounded collect (nCh × ≤7 core maxima) + one aggregate scan for
     // the complement — also surfaces the z SEPARATION the thresholds ride on
-    val coreMax = zl.filter(inCore)
+    val coreMax = phase(spark, "burstCensus")(zl.filter(inCore)
       .withColumn("k", floor(col("rel").cast("double") / col("cyc").cast("double")))
       .groupBy("channel", "k").agg(max("value").as("zmax"))
       .collect().map(r => (r.getAs[Number]("channel").intValue(),
-        r.getAs[Double]("zmax")))
+        r.getAs[Double]("zmax"))))
     val minCoreZ = coreMax.map(_._2).min
     val det = coreMax.filter(_._2 >= p.thrDet)
       .groupBy(_._1).view.mapValues(_.length.toLong).toMap
     val bursts = (0 until p.nCh).map { c =>
       BurstRow(c, det.getOrElse(c, 0L), p.nBursts(c / 2).toLong)
     }.toArray
-    val outside = zl.filter(!inPadded &&
+    val outside = phase(spark, "burstCensus")(zl.filter(!inPadded &&
         col("t_idx") >= p.edgeTrim && col("t_idx") < p.nRes - p.edgeTrim)
       .agg(sum(when(col("value") >= p.thrFp, 1L).otherwise(0L)).as("fp"),
-        max("value").as("mz")).head()
+        max("value").as("mz")).head())
     val falsePositives = outside.getLong(0)
     val maxOutsideZ = outside.getDouble(1)
     println(f"[soak]   burst z separation: min core zmax $minCoreZ%.1f " +
@@ -341,7 +333,7 @@ object DspMegaSoak {
       f"(thrFp ${p.thrFp}%.0f)")
 
     // ------- whole-trace parity on the line-free calib series -------
-    val whole = t("wholeTrace") {
+    val whole = {
       val segs = calib
         .groupBy("channel")
         .agg(SeriesAssembleFunctions.assembleSeries(spark,
@@ -374,7 +366,8 @@ object DspMegaSoak {
         posexplode(col("values")).as(Seq("t_idx", "vb")))
       .select(col("channel"), col("band"),
         col("t_idx").cast("long").as("t_idx"), col("vb"))
-    val parity = a.join(b, Seq("channel", "band", "t_idx"))
+    // the whole-trace chain runs inside the parity join's jobs
+    val parity = phase(spark, "wholeTrace")(a.join(b, Seq("channel", "band", "t_idx"))
       .filter(col("t_idx") >= margin && col("t_idx") < p.cleanNRes - margin)
       .groupBy("channel", "band")
       .agg(count(lit(1)).as("n"),
@@ -383,7 +376,7 @@ object DspMegaSoak {
         max(abs(col("va") - col("vb"))).as("max_err"))
       .orderBy("channel", "band")
       .collect().map(r => ParityRow(r.getInt(0), r.getInt(1), r.getLong(2),
-        r.getDouble(3), r.getDouble(4), r.getDouble(5)))
+        r.getDouble(3), r.getDouble(4), r.getDouble(5))))
 
     Census(points, cleanPoints, tones, bursts, falsePositives,
       minCoreZ, maxOutsideZ, parity)
@@ -433,36 +426,20 @@ object DspMegaSoak {
     }
   }
 
-  def main(args: Array[String]): Unit = {
-    val nCh = if (args.length > 0) args(0).toInt else 64
-    val nWindows = if (args.length > 1) args(1).toInt else 8
-    val parityCh = if (args.length > 2) args(2).toInt else 2
-    val stride = if (args.length > 3) args(3).toInt else 2097152
-    val context = if (args.length > 4) args(4).toInt else 262144
-    val precision = if (args.length > 5) args(5) else "double"
-    val p = Params(nCh = nCh, nWindows = nWindows, parityCh = parityCh,
-      stride = stride, context = context, precision = precision)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  def run(spark: SparkSession, args: graft.Soak.Args): Unit = {
+    val p = Params(nCh = args.int(0, 64), nWindows = args.int(1, 8),
+      parityCh = args.int(2, 2), stride = args.int(3, 2097152),
+      context = args.int(4, 262144), precision = args.str(5, "double"))
     // RELIABLE checkpoints: the executor-loss-safe pin mode at full volume
     val ckpt = java.nio.file.Files.createTempDirectory("dsp_mega_ckpt")
     graft.streaming.StreamingOps.deleteOnExit(ckpt)
     spark.conf.set(Checkpoints.DirKey, ckpt.toString)
     println(s"[soak] reliable checkpoints -> $ckpt")
-    val prof = new ScaleSoak.Profile
-    spark.sparkContext.addSparkListener(prof)
     println(f"[soak] ${p.nCh} ch x ${p.n} samples @ ${p.rate}%.0f Hz = " +
       f"${p.nCh * p.n / 1e9}%.2f B mega points (+ ${p.nCh * p.cleanN / 1e6}%.0f M calib); " +
       s"stride=${p.stride} context=${p.context}, resample 1/4, " +
       s"bursts ${(0 until p.nCh / 2).map(p.nBursts).sum} planted")
-    val t0 = System.nanoTime()
-    val census = run(spark, p, prof.setPhase)
-    println(f"[soak] chain + census: ${(System.nanoTime() - t0) / 1e9}%.1f s")
+    val census = run(spark, p)
     census.tones.take(4).foreach(t => println(
       f"[soak]   ch${t.channel} tone30=${t.a30}%.4f hz60=${t.a60}%.2e " +
         f"hz120=${t.a120}%.2e hz180=${t.a180}%.2e hz7=${t.a7}%.4f"))
@@ -473,11 +450,6 @@ object DspMegaSoak {
       f"[soak]   parity ch${r.channel} band${r.band} n=${r.n} " +
         f"mean_err/rms=${r.meanErr / r.rms}%.5f max_err/rms=${r.maxErr / r.rms}%.4f"))
     check(census, p)
-    prof.report()
-    assert(prof.maxResultBytes.get < 64L * 1024 * 1024,
-      "a task shipped >64 MiB to the driver — driver materialization leak")
-    println(f"[soak] PASS: planted census exact at ${p.nCh * p.n / 1e9}%.2f B samples " +
-      f"(spill ${prof.spill.sum / 1e9}%.2f GB)")
-    spark.stop()
+    println(f"[soak] PASS: planted census exact at ${p.nCh * p.n / 1e9}%.2f B samples")
   }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 
 /** Suite-scale pin of [[DspMegaSoak]] — the composed reference pipeline
   * (windowLong → resample → notch → CAR → wavelet → z-score, overlap-add
@@ -13,15 +12,7 @@ import org.apache.spark.sql.SparkSession
   * (2440 vs 12200 Hz), which keeps every law's physics intact — window
   * SECONDS (what the notch depth rides on, see the soak's window-sizing
   * law) are unchanged at 215 s per stride. */
-class DspPipelineSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("dsp-pipeline-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-    .getOrCreate()
+class DspPipelineSpec extends AnyFunSuite with graft.SessionSuite {
 
   test("composed windowed DSP chain: planted census exact at suite scale") {
     val p = DspMegaSoak.Params(nCh = 4, nWindows = 2, stride = 524288,

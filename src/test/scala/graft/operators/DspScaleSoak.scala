@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.JobMetrics.phase
+
 import graft.dsp.Signal
 import graft.functions.SeriesAssembleFunctions
 import graft.operators.Checkpoints.Pinnable
@@ -35,53 +37,37 @@ import graft.operators.Checkpoints.Pinnable
   * RELIABLE checkpoint path (graft.checkpoint.dir) instead of
   * localCheckpoint — the executor-loss-safe mode at full DSP volume.
   *
-  * Run: SPARK_DRIVER_MEM=64g sbt "Test/runMain graft.operators.DspScaleSoak
+  * Run: SPARK_DRIVER_MEM=64g sbt "Test/runMain graft.Soak DspScaleSoak
   *   [nChannels] [nWindows] [parityChannels] [checkpointDir]"
   * (nWindows=186 -> 12.19 M samples/channel -> 780 M points total)
   */
 object DspScaleSoak {
-  def main(args: Array[String]): Unit = {
-    val nCh = if (args.length > 0) args(0).toInt else 64
-    val nWindows = if (args.length > 1) args(1).toInt else 186
-    val parityCh = if (args.length > 2) args(2).toInt else 2
-    val ckptDir = if (args.length > 3) Some(args(3)) else None
+  def run(spark: SparkSession, args: graft.Soak.Args): Unit = {
+    val nCh = args.int(0, 64)
+    val nWindows = args.int(1, 186)
+    val parityCh = args.int(2, 2)
+    val ckptDir = args.all.lift(3)
     val stride = 65536
     val context = 8192
     val rate = 12200.0
     val newFreq = rate / 4 // 3050 Hz; 1/4 keeps window lengths integral
     val n = nWindows.toLong * stride
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     ckptDir.foreach { d =>
       spark.conf.set(Checkpoints.DirKey, d)
       println(s"[soak] reliable checkpoints -> $d")
     }
-    val prof = new ScaleSoak.Profile
-    spark.sparkContext.addSparkListener(prof)
     println(f"[soak] $nCh ch x $n samples @ $rate%.0f Hz = ${nCh * n / 1e6}%.1f M points; " +
       s"windowed stride=$stride context=$context, resample 1/4")
-    def time[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[soak] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
 
     // deterministic distributed LongFrame -> assembled segments (the soaked
     // ingest path): per-channel phase offsets keep channels distinct so the
     // CAR subtracts a genuine cross-channel median band, plus hash noise
-    prof.setPhase("assemble")
     val long = spark.range(nCh * n).select(
       (col("id") % nCh).cast("int").as("channel"),
       (col("id") / nCh).cast("long").as("t_idx"),
       (sin(col("id") / nCh / 800.0) + sin(col("id") / nCh / 37.0) * 0.3 +
         (pmod(xxhash64(col("id")), lit(10000)) / 10000.0 - 0.5) * 0.1).as("value"))
-    val segs = time("assemble 780M samples -> 64 segment rows") {
+    val segs = phase(spark, "assemble") {
       val s = long.groupBy("channel")
         .agg(SeriesAssembleFunctions.assembleSeries(spark,
           col("t_idx"), col("value")).as("values"))
@@ -98,8 +84,7 @@ object DspScaleSoak {
     val wholePadded = nRes + Signal.padPlan(nRes, Signal.FastPad).padTotal
 
     // ---------------- windowed (bounded-memory) path ----------------
-    prof.setPhase("winResampleNotchCar")
-    val car = time("windowSegments -> resample -> notch -> blocked CAR (pinned)") {
+    val car = phase(spark, "winResampleNotchCar") {
       val w = Windowing.windowSegments(segs, stride, context)
       val r = DspOperators.resample(w, newFreq)
       val nch = DspOperators.applyLinenoiseNotch(r, continuousProfile = true)
@@ -107,8 +92,7 @@ object DspScaleSoak {
       println(s"[soak]   -> ${c.count()} CAR'd window rows")
       c
     }
-    prof.setPhase("waveletStitch")
-    val stitched = time("wavelet amp (rat, hgOnly) -> crossfade stitch") {
+    val stitched = phase(spark, "waveletStitch") {
       val amp = DspOperators.amplitude(DspOperators.waveletTransform(
         car, "rat", hgOnly = true, Signal.FastPad, Some(wholePadded)))
       val st = Windowing.stitch(amp, stride / 4, context / 4)
@@ -122,8 +106,7 @@ object DspScaleSoak {
     // ---------------- whole-trace reference path ----------------
     // CAR must see all channels; the expensive per-channel wavelet runs only
     // on the parity sample (per-channel math is channel-independent)
-    prof.setPhase("wholeTrace")
-    val whole = time(s"whole-trace chain (12.2M-sample FFTs, wavelet on $parityCh ch)") {
+    val whole = phase(spark, "wholeTrace") {
       val r = DspOperators.resample(segs, newFreq)
       val nch = DspOperators.applyLinenoiseNotch(r, continuousProfile = true)
       val c = CommonReferencing.subtractCarSegments(nch, nCh)
@@ -136,8 +119,7 @@ object DspScaleSoak {
     }
 
     // ---------------- parity: windowed == whole-trace ----------------
-    prof.setPhase("parity")
-    time("interior parity join (windowed vs whole)") {
+    phase(spark, "parity") {
       val margin = 256
       val a = Windowing.stitchedToLong(
         stitched.filter(col("channel") < parityCh), stride / 4)
@@ -175,9 +157,5 @@ object DspScaleSoak {
       println(s"[soak]   parity holds on ${stats.length} (channel, band) traces")
     }
 
-    prof.report()
-    assert(prof.maxResultBytes.get < 64L * 1024 * 1024,
-      "a task shipped >64 MiB to the driver — driver materialization leak")
-    spark.stop()
   }
 }

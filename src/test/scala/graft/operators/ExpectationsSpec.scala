@@ -1,19 +1,11 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 
 /** Hand-computed fixtures for the expectation suite: completeness under
   * nulls, predicate nulls counting as failures, uniqueness with duplicate
   * and null keys, and the exact-integer verdict boundary. */
-class ExpectationsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("expectations-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ExpectationsSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 

@@ -1,18 +1,10 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 
 /** Gap fill: dense grid extent, zero fill, and longest-run census against
   * hand-computed ground truth. */
-class GapFillSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("gapfill-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GapFillSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** r19 optimization internals:
@@ -17,15 +16,7 @@ import org.apache.spark.sql.functions._
   *    distributed round loops on the same graph, and a local-tier cap
   *    their Int-indexed arrays cannot hold is rejected at call time.
   */
-class GraphPinSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graph-pin-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GraphPinSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 
@@ -45,43 +36,41 @@ class GraphPinSpec extends AnyFunSuite {
     }.filter { case (a, b) => a != b }.distinct
 
   test("pinByKey: layout pinned, session AQE untouched, sized partitions") {
-    val df = graph(500, 3000).toDF("a", "b")
-    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
-    spark.conf.set(Graph.PinRowsPerPartitionKey, "1000")
-    val pinned =
-      try Graph.pinByKey(df, "a", rows = 3000L)
-      finally spark.conf.unset(Graph.PinRowsPerPartitionKey)
-    // the bracket must not leak to the shared session
-    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
-    val plan = pinned.queryExecution.executedPlan
-    val part = plan.outputPartitioning
-    assert(part.isInstanceOf[
-      org.apache.spark.sql.catalyst.plans.physical.HashPartitioning],
-      s"expected HashPartitioning, got $part")
-    // ceil(3000 / 1000) = 3 partitions, under the session's 4
-    assert(part.numPartitions == 3, s"expected 3 partitions, got $part")
-    assert(plan.outputOrdering.nonEmpty, "expected pinned in-partition ordering")
-    // rows <= 0 falls back to the session conf
-    val pinnedDefault = Graph.pinByKey(df, "a")
-    assert(pinnedDefault.queryExecution.executedPlan
-      .outputPartitioning.numPartitions == 4)
+    // the pin takes min(shuffle partitions, ceil(rows / per-partition)):
+    // 4 partitions keep the asserted counts on any core count
+    withConf("spark.sql.shuffle.partitions" -> "4") {
+      val df = graph(500, 3000).toDF("a", "b")
+      assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+      val pinned = withConf(Graph.PinRowsPerPartitionKey -> "1000")(
+        Graph.pinByKey(df, "a", rows = 3000L))
+      // the bracket must not leak to the shared session
+      assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+      val plan = pinned.queryExecution.executedPlan
+      val part = plan.outputPartitioning
+      assert(part.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.physical.HashPartitioning],
+        s"expected HashPartitioning, got $part")
+      // ceil(3000 / 1000) = 3 partitions, under the session's 4
+      assert(part.numPartitions == 3, s"expected 3 partitions, got $part")
+      assert(plan.outputOrdering.nonEmpty, "expected pinned in-partition ordering")
+      // rows <= 0 falls back to the session conf
+      val pinnedDefault = Graph.pinByKey(df, "a")
+      assert(pinnedDefault.queryExecution.executedPlan
+        .outputPartitioning.numPartitions == 4)
+    }
   }
 
   test("triangle tiers agree: broadcast wedge joins == shuffled wedge joins") {
     val edges = graph(120, 900).toDF("a", "b")
     val viaBroadcast = Graph.triangleStats(edges).collect()(0)
-    spark.conf.set(Graph.BroadcastEdgeCapKey, "0")
-    val viaShuffle =
-      try Graph.triangleStats(edges).collect()(0)
-      finally spark.conf.unset(Graph.BroadcastEdgeCapKey)
+    val viaShuffle = withConf(Graph.BroadcastEdgeCapKey -> "0")(
+      Graph.triangleStats(edges).collect()(0))
     assert(viaBroadcast.toSeq === viaShuffle.toSeq)
     assert(viaBroadcast.getLong(3) > 0L, "graph should contain triangles")
 
     val lcB = Graph.localClustering(edges).orderBy("v").collect().map(_.toSeq)
-    spark.conf.set(Graph.BroadcastEdgeCapKey, "0")
-    val lcS =
-      try Graph.localClustering(edges).orderBy("v").collect().map(_.toSeq)
-      finally spark.conf.unset(Graph.BroadcastEdgeCapKey)
+    val lcS = withConf(Graph.BroadcastEdgeCapKey -> "0")(
+      Graph.localClustering(edges).orderBy("v").collect().map(_.toSeq))
     assert(lcB === lcS)
   }
 
@@ -89,11 +78,9 @@ class GraphPinSpec extends AnyFunSuite {
     val edges = graph(200, 2400).toDF("a", "b")
     val local = Graph.boundedKCorePeel(edges, k = 8, rounds = 6)
       .orderBy("round").collect().map(_.toSeq)
-    spark.conf.set(Graph.LocalEdgeCapKey, "0")
-    val dist =
-      try Graph.boundedKCorePeel(edges, k = 8, rounds = 6)
-        .orderBy("round").collect().map(_.toSeq)
-      finally spark.conf.unset(Graph.LocalEdgeCapKey)
+    val dist = withConf(Graph.LocalEdgeCapKey -> "0")(
+      Graph.boundedKCorePeel(edges, k = 8, rounds = 6)
+        .orderBy("round").collect().map(_.toSeq))
     assert(local === dist)
   }
 
@@ -103,11 +90,9 @@ class GraphPinSpec extends AnyFunSuite {
     val seeds = Seq(0L, 7L, 13L).toDF("v")
     val local = Graph.boundedSssp(edges, seeds, iters = 4)
       .orderBy("v").collect().map(_.toSeq)
-    spark.conf.set(Graph.LocalEdgeCapKey, "0")
-    val dist =
-      try Graph.boundedSssp(edges, seeds, iters = 4)
-        .orderBy("v").collect().map(_.toSeq)
-      finally spark.conf.unset(Graph.LocalEdgeCapKey)
+    val dist = withConf(Graph.LocalEdgeCapKey -> "0")(
+      Graph.boundedSssp(edges, seeds, iters = 4)
+        .orderBy("v").collect().map(_.toSeq))
     assert(local === dist)
     assert(local.nonEmpty)
   }
@@ -116,10 +101,9 @@ class GraphPinSpec extends AnyFunSuite {
     val edges = graph(20, 40).toDF("a", "b")
       .withColumn("w", lit(1L))
     val seeds = Seq(0L).toDF("v")
-    spark.conf.set(Graph.LocalEdgeCapKey, "2000000000")
-    try {
+    withConf(Graph.LocalEdgeCapKey -> "2000000000") {
       intercept[IllegalArgumentException](Graph.boundedSssp(edges, seeds, iters = 2))
       intercept[IllegalArgumentException](Graph.boundedKCorePeel(edges, k = 2, rounds = 2))
-    } finally spark.conf.unset(Graph.LocalEdgeCapKey)
+    }
   }
 }

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{SparkSession, DataFrame}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.JobMetrics.phase
 
 /** Scale soak for the graph family with CLOSED-FORM invariants:
   *
@@ -15,7 +17,7 @@ import org.apache.spark.sql.functions._
   * wedges and the star costs nothing. The soak asserts the exact triangle
   * count and PageRank leaf-uniformity/mass invariants at ~1M-edge scale.
   *
-  * Run: sbt "Test/runMain graft.operators.GraphSoak [K] [k] [H] [iters] [ckptDir]"
+  * Run: sbt "Test/runMain graft.Soak GraphSoak [K] [k] [H] [iters] [ckptDir]"
   *
   * A non-empty 5th arg switches every iterative pin from executor-memory
   * localCheckpoint to RELIABLE checkpointing into that directory
@@ -24,19 +26,12 @@ import org.apache.spark.sql.functions._
   */
 object GraphSoak {
 
-  def main(args: Array[String]): Unit = {
-    val cliques = if (args.length > 0) args(0).toInt else 2000
-    val k = if (args.length > 1) args(1).toInt else 6
-    val leaves = if (args.length > 2) args(2).toLong else 1000000L
-    val iters = if (args.length > 3) args(3).toInt else 5
-    val ckptDir = if (args.length > 4) args(4).trim else ""
-
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graph-soak")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+  def run(spark: SparkSession, args: graft.Soak.Args): Unit = {
+    val cliques = args.int(0, 2000)
+    val k = args.int(1, 6)
+    val leaves = args.long(2, 1000000L)
+    val iters = args.int(3, 5)
+    val ckptDir = args.str(4, "").trim
     if (ckptDir.nonEmpty) {
       spark.conf.set(Checkpoints.DirKey, ckptDir)
       println(s"pin mode: RELIABLE checkpoint -> $ckptDir")
@@ -58,23 +53,21 @@ object GraphSoak {
     val expectTri = cliques.toLong * (k.toLong * (k - 1) * (k - 2) / 6)
     val nEdges = cliques.toLong * k * (k - 1) / 2 + leaves
 
-    var t0 = System.nanoTime()
-    val tri = Graph.triangleStats(edges).collect()(0)
-    val triSec = (System.nanoTime() - t0) / 1e9
-    println(f"triangleStats: ${triSec}%.1f s  nodes=${tri.getLong(0)} edges=${tri.getLong(1)} " +
+    val tri = phase(spark, "triangleStats")(Graph.triangleStats(edges).collect()(0))
+    println(f"triangleStats: nodes=${tri.getLong(0)} edges=${tri.getLong(1)} " +
       f"wedges=${tri.getLong(2)} triangles=${tri.getLong(3)}")
     assert(tri.getLong(3) == expectTri,
       s"triangles ${tri.getLong(3)} != expected $expectTri")
     assert(tri.getLong(1) == nEdges, s"edges ${tri.getLong(1)} != $nEdges")
 
-    t0 = System.nanoTime()
-    val ranks = Graph.pageRankScaled(edges, iters = iters)
-    val leafRanks = ranks.filter(col("v") > hub).select(col("rank_scaled"))
-      .distinct().collect().map(_.getLong(0))
-    val hubRank = ranks.filter(col("v") === hub).collect()(0).getLong(1)
-    val mass = ranks.agg(sum("rank_scaled")).collect()(0).getLong(0)
-    val prSec = (System.nanoTime() - t0) / 1e9
-    println(f"pageRank($iters): ${prSec}%.1f s  hubRank=$hubRank " +
+    val (leafRanks, hubRank, mass) = phase(spark, "pageRank") {
+      val ranks = Graph.pageRankScaled(edges, iters = iters)
+      (ranks.filter(col("v") > hub).select(col("rank_scaled"))
+        .distinct().collect().map(_.getLong(0)),
+        ranks.filter(col("v") === hub).collect()(0).getLong(1),
+        ranks.agg(sum("rank_scaled")).collect()(0).getLong(0))
+    }
+    println(f"pageRank($iters): hubRank=$hubRank " +
       f"distinctLeafRanks=${leafRanks.length} mass=$mass")
     // all star leaves are symmetric -> identical ranks
     assert(leafRanks.length == 1, s"leaves not uniform: ${leafRanks.length} values")
@@ -83,7 +76,5 @@ object GraphSoak {
     val nNodes = cliques.toLong * k + 1 + leaves
     assert(mass <= 1000000000000L && mass > 1000000000000L - (iters + 1).toLong * nNodes,
       s"mass $mass outside floor-loss envelope")
-
-    spark.stop()
   }
 }

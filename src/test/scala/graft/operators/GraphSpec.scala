@@ -1,19 +1,11 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Graph operators: co-occurrence edge build, degree-oriented triangle
   * census (vs brute force), and integer-grid PageRank invariants. */
-class GraphSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graph-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GraphSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 
@@ -172,10 +164,7 @@ class GraphSpec extends AnyFunSuite {
     // function. Graph: a hashed pseudo-random core (tests clique-ish
     // structure + duplicate-free dispatch) plus a 30-node pendant chain
     // (tests the round-bounded frontier the local tier must NOT outrun).
-    def withCapZero[T](f: => T): T = {
-      spark.conf.set(Graph.LocalEdgeCapKey, "0")
-      try f finally spark.conf.unset(Graph.LocalEdgeCapKey)
-    }
+    def withCapZero[T](f: => T): T = withConf(Graph.LocalEdgeCapKey -> "0")(f)
     val nodes = spark.range(0, 60).select(col("id").as("a"))
     val rand = nodes.crossJoin(spark.range(0, 60).select(col("id").as("b")))
       .filter(col("a") < col("b"))

@@ -1,20 +1,12 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Incremental aggregate states: any split-and-merge tree equals direct
   * aggregation; null values stay out of every state component. Secondary
   * index: probe == direct scan and the probe plan is partition-pruned. */
-class IncrementalAggSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("incragg-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IncrementalAggSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 

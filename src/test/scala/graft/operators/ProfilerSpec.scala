@@ -1,19 +1,11 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Profiler: orphan accounting and per-column stats against hand-built
   * frames with known nulls/dupes/orphans. */
-class ProfilerSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("profiler-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ProfilerSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 

@@ -1,20 +1,12 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Distributed rank-selection quantiles against Spark's built-in exact
   * `percentile` aggregate (same linear-interpolation definition) and
   * against hand-computed values; partition-count invariance. */
-class QuantilesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("quantiles-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class QuantilesSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 

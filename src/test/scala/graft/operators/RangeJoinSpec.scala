@@ -1,20 +1,12 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Binned range join vs a brute-force cross-join reference: exact window
   * semantics (inclusive bounds), bin-boundary cases, negative windows,
   * and nano-scale ords that would round through a double. */
-class RangeJoinSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("rangejoin-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RangeJoinSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Certifies Spark's RUNTIME Bloom-filter join injection
@@ -20,23 +19,7 @@ import org.apache.spark.sql.functions._
   * feature-disabled run, and that a non-selective build side does NOT
   * trigger injection. Every touched conf round-trips its observed value.
   */
-class RuntimeBloomFilterSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("runtime-bloom-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private def withConfs[T](kv: (String, String)*)(f: => T): T = {
-    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+class RuntimeBloomFilterSpec extends AnyFunSuite with graft.SessionSuite {
 
   private lazy val (factPath, dimPath) = {
     val root = java.nio.file.Files.createTempDirectory("bloomrf").toFile
@@ -54,7 +37,7 @@ class RuntimeBloomFilterSpec extends AnyFunSuite {
   }
 
   private def runJoin(bloomOn: Boolean): (String, String, (Long, Long)) = {
-    withConfs(
+    withConf(
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> bloomOn.toString,
       // fact parquet is ~a few MB; the default 10GB floor exists to keep
       // tiny scans from paying the filter cost — lower it, don't disable it
@@ -93,7 +76,7 @@ class RuntimeBloomFilterSpec extends AnyFunSuite {
   }
 
   test("non-selective build side does not trigger injection") {
-    withConfs(
+    withConf(
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1024",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",

@@ -1,19 +1,11 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 
 /** Hand-computed fixtures for the capped-sessionization fold: gap splits,
   * cap splits (clock restarts at the first event past the cap — NOT
   * aligned buckets), strict boundaries, single-event keys. */
-class SessionizeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("sessionize-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SessionizeSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 

@@ -1,20 +1,12 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Salted join: row-for-row equal to the plain join on skewed data, salt
   * actually splits the hot key, and the forced plan is the salted
   * shuffle join (not a broadcast that would make the salt pointless). */
-class SkewJoinSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("skewjoin-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SkewJoinSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 

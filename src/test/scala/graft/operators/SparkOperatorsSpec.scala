@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{SparkSession, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, ShufflePartitionIdPassThrough}
@@ -18,18 +18,7 @@ import graft.dsp.Signal
   * independent long-form SQL CAR subtracted through a join; and the id
   * placement of CAR's two shuffles (blocks by block, the post-CAR
   * reassembly by channel). */
-class SparkOperatorsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("operators-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    // harness events.parquet carries TIMESTAMP(NANOS); read as long nanos
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+class SparkOperatorsSpec extends AnyFunSuite with graft.SessionSuite {
 
   private def collectTraces(df: DataFrame): Map[(Int, Option[Int]), Array[Double]] =
     df.select(col("channel"), col("band"), col("values")).collect().map { r =>
@@ -270,71 +259,85 @@ class SparkOperatorsSpec extends AnyFunSuite {
       finalRate = Some(250.0), filters = "human", hgOnly = true, scaling = 1.0))
   }
 
+  /** The exchanges below are placed on min(channels or blocks, shuffle
+    * partitions); 4 partitions give the counts these tests assert on any
+    * core count. */
+  private def onFourPartitions[T](body: => T): T =
+    withConf("spark.sql.shuffle.partitions" -> "4")(body)
+
   test("preprocessBlock plans two exchanges; the reassembly one is id-placed on 4 partitions") {
-    val partitionings = (preprocessed8ch.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }).collect { case e: ShuffleExchangeLike => e.outputPartitioning }
-    assert(partitionings.size == 2, partitionings.mkString("\n"))
-    // the reassembly is placed by channel, the CAR block exchange by block
-    assert(partitionings.collect { case p: ShufflePartitionIdPassThrough => p.numPartitions }
-      == Seq(4, 4), partitionings.mkString("\n"))
-    assert(!partitionings.exists(_.isInstanceOf[HashPartitioning]),
-      partitionings.mkString("\n"))
+    onFourPartitions {
+      val partitionings = (preprocessed8ch.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }).collect { case e: ShuffleExchangeLike => e.outputPartitioning }
+      assert(partitionings.size == 2, partitionings.mkString("\n"))
+      // the reassembly is placed by channel, the CAR block exchange by block
+      assert(partitionings.collect { case p: ShufflePartitionIdPassThrough => p.numPartitions }
+        == Seq(4, 4), partitionings.mkString("\n"))
+      assert(!partitionings.exists(_.isInstanceOf[HashPartitioning]),
+        partitionings.mkString("\n"))
+    }
   }
 
   test("CAR's block exchange is id-placed: a 4-block input runs its block stage on 4 tasks") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    val segs = (0 until 8).map(ch => ("s0", ch, null: Integer, 400.0, 0.0,
-        Array.fill(1024)(rnd.nextGaussian())))
-      .toDF("series", "channel", "band", "rate", "startingTime", "values")
-    val car = CommonReferencing.subtractCarSegments(segs, 8, 0.95, blockSize = 256)
-    val partitionings = (car.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }).collect { case e: ShuffleExchangeLike => e.outputPartitioning }
-    assert(partitionings.collect { case p: ShufflePartitionIdPassThrough => p.numPartitions }
-      == Seq(4, 4), partitionings.mkString("\n"))
-    val metrics = graft.JobMetrics.attach(spark)
-    try {
-      val rows = graft.JobMetrics.phase(spark, "car-blocks")(car.collect())
-      assert(rows.length == 8 && rows.forall(_.getSeq[Double](5).length == 1024))
-      metrics.settle()
-      // AQE runs each map stage as its own job: the local scan, then the
-      // block stage (per-block kernel), then the reassembly
-      val jobs = metrics.jobs("car-blocks")
-      assert(jobs.size == 3 && jobs(1).tasks == 4, jobs.map(_.line).mkString("\n"))
-    } finally spark.sparkContext.removeSparkListener(metrics)
+    onFourPartitions {
+      import spark.implicits._
+      val rnd = new scala.util.Random(7)
+      val segs = (0 until 8).map(ch => ("s0", ch, null: Integer, 400.0, 0.0,
+          Array.fill(1024)(rnd.nextGaussian())))
+        .toDF("series", "channel", "band", "rate", "startingTime", "values")
+      val car = CommonReferencing.subtractCarSegments(segs, 8, 0.95, blockSize = 256)
+      val partitionings = (car.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }).collect { case e: ShuffleExchangeLike => e.outputPartitioning }
+      assert(partitionings.collect { case p: ShufflePartitionIdPassThrough => p.numPartitions }
+        == Seq(4, 4), partitionings.mkString("\n"))
+      val metrics = graft.JobMetrics.attach(spark)
+      try {
+        val rows = graft.JobMetrics.phase(spark, "car-blocks")(car.collect())
+        assert(rows.length == 8 && rows.forall(_.getSeq[Double](5).length == 1024))
+        metrics.settle()
+        // AQE runs each map stage as its own job: the local scan, then the
+        // block stage (per-block kernel), then the reassembly
+        val jobs = metrics.jobs("car-blocks")
+        assert(jobs.size == 3 && jobs(1).tasks == 4, jobs.map(_.line).mkString("\n"))
+      } finally spark.sparkContext.removeSparkListener(metrics)
+    }
   }
 
   test("preprocessBlock's post-CAR stage runs one task per shuffle partition under AQE") {
-    val metrics = graft.JobMetrics.attach(spark)
-    try {
-      val rows = graft.JobMetrics.phase(spark, "post-car")(preprocessed8ch.collect())
-      assert(rows.length == 8 * 8)
-      metrics.settle()
-      // the last job is the result stage: reassembly, wavelet, amplitude,
-      // final resample (the map stages before it ran as their own jobs)
-      val last = metrics.jobs("post-car").last
-      assert(last.tasks == 4, metrics.jobs("post-car").map(_.line).mkString("\n"))
-    } finally spark.sparkContext.removeSparkListener(metrics)
+    onFourPartitions {
+      val metrics = graft.JobMetrics.attach(spark)
+      try {
+        val rows = graft.JobMetrics.phase(spark, "post-car")(preprocessed8ch.collect())
+        assert(rows.length == 8 * 8)
+        metrics.settle()
+        // the last job is the result stage: reassembly, wavelet, amplitude,
+        // final resample (the map stages before it ran as their own jobs)
+        val last = metrics.jobs("post-car").last
+        assert(last.tasks == 4, metrics.jobs("post-car").map(_.line).mkString("\n"))
+      } finally spark.sparkContext.removeSparkListener(metrics)
+    }
   }
 
   test("subtractCarSegments puts one channel of every series in each partition") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(5)
-    val segs = (for (s <- 0 until 8; ch <- 0 until 4)
-      yield (s"s$s", ch, null: Integer, 400.0, 0.0, Array.fill(100)(rnd.nextDouble())))
-      .toDF("series", "channel", "band", "rate", "startingTime", "values")
-    val perPartition = CommonReferencing.subtractCarSegments(segs, 4, 0.95)
-      .select(spark_partition_id().as("pid"), col("series"), col("channel"))
-      .collect().groupBy(_.getInt(0))
-    assert(perPartition.keySet == Set(0, 1, 2, 3), perPartition.keySet)
-    assert(perPartition.values.forall(_.length == 8),
-      perPartition.map { case (p, rs) => p -> rs.length })
-    // each partition holds one channel of each series
-    assert(perPartition.values.forall(_.map(_.getString(1)).toSet.size == 8))
+    onFourPartitions {
+      import spark.implicits._
+      val rnd = new scala.util.Random(5)
+      val segs = (for (s <- 0 until 8; ch <- 0 until 4)
+        yield (s"s$s", ch, null: Integer, 400.0, 0.0, Array.fill(100)(rnd.nextDouble())))
+        .toDF("series", "channel", "band", "rate", "startingTime", "values")
+      val perPartition = CommonReferencing.subtractCarSegments(segs, 4, 0.95)
+        .select(spark_partition_id().as("pid"), col("series"), col("channel"))
+        .collect().groupBy(_.getInt(0))
+      assert(perPartition.keySet == Set(0, 1, 2, 3), perPartition.keySet)
+      assert(perPartition.values.forall(_.length == 8),
+        perPartition.map { case (p, rs) => p -> rs.length })
+      // each partition holds one channel of each series
+      assert(perPartition.values.forall(_.map(_.getString(1)).toSet.size == 8))
+    }
   }
 
   // --- end-to-end physics: the minimum slice of SURVEY.md §7 ---------------

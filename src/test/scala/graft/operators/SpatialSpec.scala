@@ -1,21 +1,13 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Losslessness + exactness invariants for the grid-bucketed spatial
   * neighbor join (q216's operator): the 3x3 cell probe must reproduce the
   * naive all-pairs answer whenever radius <= cell size, emit each pair
   * exactly once, and carry exact integer squared distances. */
-class SpatialSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("spatial-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SpatialSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 

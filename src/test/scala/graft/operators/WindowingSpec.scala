@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{SparkSession, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.model.{Frames, Synthetic}
@@ -9,14 +9,7 @@ import graft.model.{Frames, Synthetic}
 /** Overlap-add windowing: bounded-row processing of unbounded recordings must
   * reproduce the whole-trace pipeline within the same rtol the reference
   * accepts for its chunked iterator (tests/test_pipeline.py:102-154). */
-class WindowingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("windowing-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WindowingSpec extends AnyFunSuite with graft.SessionSuite {
 
   // context must cover the longest filter support riding through the windows
   // (the hg wavelet kernels span ~50 samples; the notch ~1 s dominates —

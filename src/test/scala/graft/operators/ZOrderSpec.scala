@@ -1,20 +1,12 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Z-order: the Morton key interleaves bits exactly, the expression stays
   * pure codegen (no UDF), and the layout actually clusters both dims —
   * per-partition bounding boxes shrink vs the unclustered layout. */
-class ZOrderSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("zorder-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ZOrderSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 

@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Estimator invariants for the q278 join-cardinality audit:
@@ -10,14 +9,7 @@ import org.apache.spark.sql.functions._
   * (b) true_pairs is the hand-computable sum of per-user count products;
   * (c) under one-key skew the uniform estimate is off while the end-biased
   *     one stays exact — the reason end-biased histograms exist. */
-class CardinalityAuditSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("cardinality-audit-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CardinalityAuditSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 

@@ -1,22 +1,13 @@
 package graft.queries
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 
 /** q326's engine assertion: the day-partitioned fact scan must carry a
   * DYNAMIC partition-pruning filter injected from the dim side at runtime
   * — the mechanism that makes dim-filtered fact joins read 1/k of a
   * partitioned lake instead of all of it. The value certification lives in
   * the q326 DuckDB oracle; this spec pins the plan shape. */
-class DppSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("dpp-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+class DppSpec extends AnyFunSuite with graft.SessionSuite {
 
   test("q326 fact scan is dynamically partition-pruned by the dim join") {
     val df = graft.SparkEntry.queries("q326_dpp_partitioned_join")(

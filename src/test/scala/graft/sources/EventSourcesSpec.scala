@@ -1,22 +1,12 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Format-agnostic ingestion: the same events land on the same normalized
   * frame whether they arrive as parquet (timestamp column), CSV, or JSON
   * (ISO strings or integer epochs at any unit). */
-class EventSourcesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("event-sources-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+class EventSourcesSpec extends AnyFunSuite with graft.SessionSuite {
 
   private def canon(df: org.apache.spark.sql.DataFrame) =
     df.select("event_id", "ts", "user_id", "event_type", "value", "props")

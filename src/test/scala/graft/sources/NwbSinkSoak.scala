@@ -3,28 +3,22 @@ package graft.sources
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.JobMetrics.phase
+
 /** DSv2 sink scale soak (dev main, not a test): pushes a generated
   * multi-million-row frame through the graft-nwb two-phase-commit sink and
   * through Spark's stock parquet writer, compares wall time and verifies
   * the round-trip census — the number that says the commit protocol and
   * the Group-API encoding don't tax the write path.
   *
-  * Run: sbt "Test/runMain graft.sources.NwbSinkSoak [nRows]"
+  * Run: sbt "Test/runMain graft.Soak NwbSinkSoak [nRows]"
+  *
+  * The writes keep their own wall clock: a write commits on the driver
+  * after its job ends, outside every job's wall.
   */
 object NwbSinkSoak {
-  def main(args: Array[String]): Unit = {
-    val nRows = if (args.length > 0) args(0).toLong else 5000000L
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    def time[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[soak] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
+  def run(spark: SparkSession, args: graft.Soak.Args): Unit = {
+    val nRows = args.long(0, 5000000L)
     val df = spark.range(nRows).select(
       col("id"),
       (col("id") % 997).cast("int").as("ch"),
@@ -40,18 +34,19 @@ object NwbSinkSoak {
     // interleaved best-of-2 so JIT/codec warmup does not bias whichever
     // writer happens to run first
     def best(label: String)(f: => Unit): Unit = {
-      val ts = (1 to 2).map { _ =>
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
+      val ts = (1 to 2).map { i =>
+        val t0 = System.nanoTime(); phase(spark, s"$label#$i")(f); (System.nanoTime() - t0) / 1e9
       }
       println(f"[soak] $label: best ${ts.min}%.2f s (runs: ${ts.map(t => f"$t%.2f").mkString(", ")})")
     }
-    best("graft-nwb DSv2 sink (two-phase commit, zstd RecordConsumer)") {
+    // graft-nwb: DSv2 two-phase commit, zstd RecordConsumer
+    best("nwbSink") {
       df.write.format("graft-nwb").mode("overwrite").save(sinkDir)
     }
-    best("stock parquet writer (zstd, baseline)") {
+    best("stockParquet") { // zstd, the baseline
       df.write.mode("overwrite").option("compression", "zstd").parquet(stockDir)
     }
-    time("round-trip census (sink vs stock)") {
+    phase(spark, "roundTripCensus") {
       def census(p: String) = spark.read.parquet(p)
         .agg(count(lit(1)), sum("id"), sum("v"), countDistinct("tag"))
         .head()
@@ -64,6 +59,5 @@ object NwbSinkSoak {
       d.listFiles().filter(_.isFile).map(_.length()).sum
     }
     println(f"[soak] bytes: sink ${dirSize(sinkDir) / 1e6}%.1f MB, stock ${dirSize(stockDir) / 1e6}%.1f MB")
-    spark.stop()
   }
 }

@@ -3,19 +3,11 @@ package graft.sources
 import java.io.File
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 
 /** DSv2 write-path contract: round-trip fidelity (primitives + arrays),
   * two-phase commit hygiene (_SUCCESS, no staging residue), truncate
   * semantics for overwrite, and driver-side schema validation. */
-class NwbSinkSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("nwb-sink-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class NwbSinkSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
@@ -14,32 +14,20 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
   * byte-identical to the shuffled plan. This is the V2 analogue of
   * co-located bucketed tables: at 100 TB the channel-keyed join's shuffle
   * simply never happens. */
-class SpjSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("spj-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SpjSpec extends AnyFunSuite with graft.SessionSuite {
 
   // Confs scoped per test (saved/restored) so nothing leaks into other
   // suites sharing the JVM session. AQE off: a deterministic plan tree
   // that tree-collect can count (AdaptiveSparkPlanExec hides stages behind
   // leaf-like nodes); the AQE-on behavior is certified by the q361 driver
   // query, whose exchange-count column comes from the final adaptive plan.
-  private def withSpjConfs[A](extra: (String, String)*)(body: => A): A = {
-    val confs = Seq(
+  private def withSpjConfs[A](extra: (String, String)*)(body: => A): A =
+    withConf(Seq(
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true"
-    ) ++ extra
-    val saved = confs.map { case (k, _) => k -> spark.conf.get(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
-  }
+    ) ++ extra: _*)(body)
 
   private def synth(seed: Int, chPerPart: Int = 1, nCh: Int = 8): DataFrame =
     spark.read.format("graft.sources.SyntheticSource")

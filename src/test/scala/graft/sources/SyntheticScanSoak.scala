@@ -3,34 +3,25 @@ package graft.sources
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.JobMetrics.phase
+
 /** Scan-path soak for the DSv2 synthetic source (dev main, not a test):
   * measures the vectorized ColumnarBatch reader against the row iterator
   * on a large lattice walk — the exact shape that cost ~2.5 s per 640M
   * points row-based (round-12 q351 investigation). Both paths must agree
   * on a full checksum, not just a count.
   *
-  * Run: sbt "Test/runMain graft.sources.SyntheticScanSoak [nCh] [nTime]"
+  * Run: sbt "Test/runMain graft.Soak SyntheticScanSoak [nCh] [nTime]"
   */
 object SyntheticScanSoak {
-  def main(args: Array[String]): Unit = {
-    val nCh = if (args.length > 0) args(0).toInt else 64
-    val nTime = if (args.length > 1) args(1).toInt else 10000000
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  def run(spark: SparkSession, args: graft.Soak.Args): Unit = {
+    val nCh = args.int(0, 64)
+    val nTime = args.int(1, 10000000)
     def src(columnar: Boolean) = spark.read
       .format("graft.sources.SyntheticSource")
       .option("nchannels", nCh).option("ntime", nTime).option("seed", 5)
       .option("channelsperpartition", 2)
       .option("columnar", columnar).load()
-    def time[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[soak] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
     val pts = nCh.toLong * nTime
     println(s"[soak] lattice $nCh x $nTime = $pts points")
     // lattice-only walk (no trace generation): the row-iterator tax itself
@@ -40,8 +31,8 @@ object SyntheticScanSoak {
     // interleave best-of-2 per path (JIT warm both)
     var rowS = 0L; var colS = 0L
     for (round <- 1 to 2) {
-      time(s"lattice walk ROW iterator (round $round)") { rowS = latticeSum(false) }
-      time(s"lattice walk COLUMNAR batches (round $round)") { colS = latticeSum(true) }
+      phase(spark, s"latticeRow#$round") { rowS = latticeSum(false) }
+      phase(spark, s"latticeColumnar#$round") { colS = latticeSum(true) }
     }
     assert(rowS == colS, s"checksum mismatch: $rowS vs $colS")
     println(s"[soak] lattice checksum agree: $rowS")
@@ -54,11 +45,10 @@ object SyntheticScanSoak {
       .head().getLong(0)
     var rowV = 0L; var colV = 0L
     for (round <- 1 to 2) {
-      time(s"value scan ROW iterator (round $round, $vCh x $vT)") { rowV = valueSum(false) }
-      time(s"value scan COLUMNAR batches (round $round, $vCh x $vT)") { colV = valueSum(true) }
+      phase(spark, s"valueRow#$round") { rowV = valueSum(false) }
+      phase(spark, s"valueColumnar#$round") { colV = valueSum(true) }
     }
     assert(rowV == colV, s"value checksum mismatch: $rowV vs $colV")
     println(s"[soak] value checksum agree: $rowV")
-    spark.stop()
   }
 }

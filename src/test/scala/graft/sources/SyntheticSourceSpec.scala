@@ -1,21 +1,14 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 
 /** The DSv2 synthetic source: value fidelity vs the library generator,
   * planning-time partition pruning from pushed channel predicates, and
   * column pruning reaching the scan. */
-class SyntheticSourceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("synthetic-source-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SyntheticSourceSpec extends AnyFunSuite with graft.SessionSuite {
 
   private def src(nCh: Int = 8, nTime: Int = 64): DataFrame =
     spark.read.format("graft.sources.SyntheticSource")

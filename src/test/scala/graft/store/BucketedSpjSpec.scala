@@ -3,7 +3,7 @@ package graft.store
 import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
@@ -18,29 +18,17 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
   * ZERO Exchange and matches the shuffled control byte-for-byte; (c)
   * column pruning through the projection, including the force-read of the
   * pruned bucketing key that keeps the parquet predicate evaluable. */
-class BucketedSpjSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("bucketed-spj-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BucketedSpjSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 
-  private def withSpjConfs[A](extra: (String, String)*)(body: => A): A = {
-    val confs = Seq(
+  private def withSpjConfs[A](extra: (String, String)*)(body: => A): A =
+    withConf(Seq(
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true"
-    ) ++ extra
-    val saved = confs.map { case (k, _) => k -> spark.conf.get(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
-  }
+    ) ++ extra: _*)(body)
 
   private def series(seed: Int, nCh: Int = 8, nT: Int = 64): DataFrame =
     spark.range(nCh.toLong * nT).select(

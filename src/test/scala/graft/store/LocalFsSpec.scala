@@ -11,7 +11,6 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.io.nativeio.NativeIO
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ProcessStarts
@@ -22,15 +21,7 @@ import graft.streaming.StreamingOps
   * the engine's writes start no `chmod`/`readlink` process, and every
   * override gives the stock `RawLocalFileSystem` result: modes, link
   * status, errors, and the stock call itself for a sticky-bit mode. */
-class LocalFsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("localfs-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+class LocalFsSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 

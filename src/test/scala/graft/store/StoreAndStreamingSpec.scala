@@ -1,7 +1,6 @@
 package graft.store
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -11,15 +10,7 @@ import graft.streaming.StreamingOps
 
 /** Store layout (S1-S3, S8), folder driver (S7), precision cast (F1),
   * store==functional equivalence, and the streaming surface (ST3). */
-class StoreAndStreamingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("store-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+class StoreAndStreamingSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 
@@ -125,12 +116,13 @@ class StoreAndStreamingSpec extends AnyFunSuite {
     val stage = stageRecording("dict_stream", 2, ($"id" % 4).cast("double"))
     def dictionaryKeys = spark.conf.getAll.keys.filter(_.startsWith("parquet.enable.dictionary"))
     assert(dictionaryKeys.isEmpty)
+    val callerParts = spark.conf.get("spark.sql.shuffle.partitions")
     val sink = StreamingOps.runToParquetOrdered(spark, stage.toString, "dict_stream",
       shortWindows)
     assert(sink.count() == 4 * 2)
     assertNoValuesDictionary(sink)
     assert(dictionaryKeys.isEmpty, dictionaryKeys)
-    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == callerParts)
   }
 
   /** `windowedSegmentsStream`'s context membership written as before it
@@ -482,22 +474,23 @@ class StoreAndStreamingSpec extends AnyFunSuite {
         stitched))
     }
     spark.streams.addListener(listener)
+    val callerParts = spark.conf.get("spark.sql.shuffle.partitions")
     try {
       val (parts1, callerConf1, out1) = run("sized_default")
       assert(parts1 == Seq(1), s"a $bytes B input should run on 1 state partition")
-      assert(callerConf1 == Seq("4"), "the caller's shuffle partitions moved while the query ran")
-      assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+      assert(callerConf1 == Seq(callerParts),
+        "the caller's shuffle partitions moved while the query ran")
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == callerParts)
       assert(out1.keySet == Set(0, 1, 2, 3) && out1.values.forall(_.length == 3000))
-      // a smaller advisory size: min(cores, ceil(bytes / advisory)) partitions
+      // a smaller advisory size: min(shuffle partitions, ceil(bytes / advisory))
       val advisory = (bytes + 2) / 3
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", advisory.toString)
       val (parts3, callerConf3, out3) =
-        try run("sized_small_advisory")
-        finally spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-      assert(parts3 == Seq(math.min(4L, (bytes + advisory - 1) / advisory).toInt))
+        withConf("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> advisory.toString)(
+          run("sized_small_advisory"))
+      assert(parts3 == Seq(math.min(callerParts.toLong, (bytes + advisory - 1) / advisory).toInt))
       assert(parts3.head > 1)
-      assert(callerConf3 == Seq("4"))
-      assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+      assert(callerConf3 == Seq(callerParts))
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == callerParts)
       assert(out3 == out1, "stitched output depends on the state partition count")
     } finally spark.streams.removeListener(listener)
   }

@@ -36,6 +36,10 @@ import graft.sources.NwbFailpoints
   * exactly-once census.
   *
   * Run: SPARK_DRIVER_MEM=8g sbt -batch "Test/runMain graft.streaming.FaultInjectionSoak"
+  *
+  * The one soak with its own main and session instead of the `graft.Soak`
+  * runner: in local mode only the master string (`local[n, maxFailures]`)
+  * sets the task-retry count, and scenario B needs task retries.
   */
 object FaultInjectionSoak {
 

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Forced multi-batch certification of the watermark DROP rule (the q341
@@ -16,15 +15,7 @@ import org.apache.spark.sql.functions._
   * Asserts rows beyond the watermark are DROPPED (absent from their closed
   * window AND counted by numRowsDroppedByWatermark) while within-delay late
   * rows are RETAINED. */
-class LateDataSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("late-data-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class LateDataSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 

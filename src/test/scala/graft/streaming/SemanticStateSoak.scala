@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
-import graft.operators.ScaleSoak
+import graft.JobMetrics.phase
 
 /** Semantic-dedup state-scale soak (dev main, not a test): drives the
   * q377/q383 streaming shape — `StreamingOps.runningNearDupPairs`' capped
@@ -36,7 +36,7 @@ import graft.operators.ScaleSoak
   * and the report prints per-stage walls, spill, state row counts and
   * RocksDB SST/memory metrics.
   *
-  * Run: SPARK_DRIVER_MEM=32g sbt "Test/runMain graft.streaming.SemanticStateSoak
+  * Run: SPARK_DRIVER_MEM=32g sbt "Test/runMain graft.Soak SemanticStateSoak
   *   [nVectors] [nCells] [cap] [floodSize]"
   * Defaults: 8 M vectors over 1 M cells (8 per cell -> 28 M pairs), cap 64,
   * 1 M-event hot-bucket flood; run once at 4 micro-batches and once at 2.
@@ -45,24 +45,16 @@ object SemanticStateSoak {
 
   val FloodBase = 3000000000000L
 
-  def main(args: Array[String]): Unit = {
-    val nVectors = if (args.length > 0) args(0).toLong else 8000000L
-    val nCells = if (args.length > 1) args(1).toLong else 1000000L
-    val cap = if (args.length > 2) args(2).toInt else 64
-    val floodSize = if (args.length > 3) args(3).toLong else 1000000L
+  def run(spark: SparkSession, args: graft.Soak.Args): Unit = {
+    val nVectors = args.long(0, 8000000L)
+    val nCells = args.long(1, 1000000L)
+    val cap = args.int(2, 64)
+    val floodSize = args.long(3, 1000000L)
     require(nVectors % nCells == 0,
       s"nVectors must divide by nCells for the closed-form census " +
         s"(got $nVectors / $nCells)")
     val perCell = (nVectors / nCells).toInt
 
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val prof = new ScaleSoak.Profile
-    spark.sparkContext.addSparkListener(prof)
     import spark.implicits._
 
     val kEff = math.min(perCell, cap)
@@ -75,7 +67,6 @@ object SemanticStateSoak {
     // expected pair set, built distributively: per cell all (i < j) among
     // the first kEff arrivals (member i of cell c is id c + i*nCells),
     // plus the flood bucket's first-cap pairs
-    prof.setPhase("expected")
     val ij = (for (i <- 0 until kEff; j <- (i + 1) until kEff) yield (i, j))
       .toDF("i", "j")
     val expectedMain = spark.range(nCells).select(col("id").as("c"))
@@ -86,7 +77,7 @@ object SemanticStateSoak {
       yield (FloodBase + i, FloodBase + j)).toDF("doc_a", "doc_b")
     val expected = expectedMain.unionAll(expectedFlood)
       .withColumn("band_idx", lit(0)).persist()
-    println(s"[sem-soak] expected frame: ${expected.count()} pairs")
+    println(s"[sem-soak] expected frame: ${phase(spark, "expected")(expected.count())} pairs")
 
     def stage(nBatches: Int): java.nio.file.Path = {
       val dir = java.nio.file.Files.createTempDirectory(s"sem_soak_$nBatches")
@@ -123,8 +114,7 @@ object SemanticStateSoak {
     }
 
     def run(nBatches: Int): Double = {
-      prof.setPhase(s"stage-b$nBatches")
-      val dir = stage(nBatches)
+      val dir = phase(spark, s"stage-b$nBatches")(stage(nBatches))
       val nFilesPerBatch = new java.io.File(dir.toString).listFiles()
         .count(_.getName.startsWith("batch00"))
       val ckpt = java.nio.file.Files.createTempDirectory(s"sem_ck_$nBatches")
@@ -132,9 +122,8 @@ object SemanticStateSoak {
       val out = java.nio.file.Files.createTempDirectory(s"sem_out_$nBatches")
       StreamingOps.deleteOnExit(out)
       val schema = spark.read.parquet(dir.toString).schema
-      prof.setPhase(s"stream-b$nBatches")
       val t0 = System.nanoTime()
-      val q = StreamingOps.withRocksDbState(spark) {
+      val q = phase(spark, s"stream-b$nBatches")(StreamingOps.withRocksDbState(spark) {
         val qq = StreamingOps.runningNearDupPairs(
           spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", nFilesPerBatch.toString)
@@ -149,7 +138,7 @@ object SemanticStateSoak {
           .start()
         qq.awaitTermination()
         qq
-      }
+      })
       val wall = (System.nanoTime() - t0) / 1e9
       val metrics = q.recentProgress.toSeq.flatMap(_.stateOperators.toSeq)
         .lastOption.map { so =>
@@ -162,16 +151,14 @@ object SemanticStateSoak {
         }.getOrElse(Seq("no state operator progress"))
       println(f"[sem-soak] b$nBatches stream: $wall%.1f s; ${metrics.mkString("; ")}")
 
-      prof.setPhase(s"census-b$nBatches")
       val got = spark.read.parquet(out.toString)
         .select(col("doc_a"), col("doc_b"), col("band_idx"))
-      val nGot = got.count()
-      val missing = expected.except(got).count()
-      val extra = got.except(expected).count()
+      val (nGot, missing, extra) = phase(spark, s"census-b$nBatches")(
+        (got.count(), expected.except(got).count(), got.except(expected).count()))
       require(nGot == expectPairs && missing == 0L && extra == 0L,
         s"pair census BROKEN at b$nBatches: got $nGot (expected $expectPairs), " +
           s"missing $missing, extra $extra")
-      val hot = got.filter(col("doc_a") >= FloodBase).count()
+      val hot = phase(spark, s"census-b$nBatches")(got.filter(col("doc_a") >= FloodBase).count())
       require(hot == cap.toLong * (cap - 1) / 2,
         s"flood cap BROKEN: $hot hot-bucket pairs, expected C($cap,2)")
       println(f"[sem-soak] b$nBatches census EXACT: $nGot%d pairs " +
@@ -183,7 +170,5 @@ object SemanticStateSoak {
     val w2 = run(2)
     println(f"[sem-soak] SLICING-INVARIANT: b4 $w4%.1f s, b2 $w2%.1f s — " +
       "both runs equal the closed-form pair set")
-    prof.report()
-    spark.stop()
   }
 }

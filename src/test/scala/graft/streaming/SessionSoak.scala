@@ -1,6 +1,7 @@
 package graft.streaming
 
-import graft.{JobMetrics, Session}
+import graft.JobMetrics.phase
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Soak for the round-10 stateful streaming operators (dev main, not a
@@ -10,33 +11,22 @@ import org.apache.spark.sql.functions._
   * rows can't: spill, driver materialization, and batch equivalence of the
   * session count.
   *
-  * Run: sbt "Test/runMain graft.streaming.SessionSoak [nUsers] [nEvents]"
-  * on `graft.Session`'s session (`local[$SPARK_GRAFT_CPUS]`, default 4);
+  * Run: sbt "Test/runMain graft.Soak SessionSoak [nUsers] [nEvents]";
   * the stream's state partitions are sized from its staged input
   * (`StreamingOps`).
   */
 object SessionSoak {
 
-  def main(args: Array[String]): Unit = {
-    val nUsers = if (args.length > 0) args(0).toInt else 100000
-    val nEvents = if (args.length > 1) args(1).toLong else 20000000L
-    val spark = Session.build()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    val metrics = JobMetrics.attach(spark)
-    def time[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[sessoak] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
+  def run(spark: SparkSession, args: graft.Soak.Args): Unit = {
+    val nUsers = args.int(0, 100000)
+    val nEvents = args.long(1, 20000000L)
     println(s"[sessoak] $nEvents events across $nUsers users")
 
     // synthetic: per-user event times stride ~17 min with a deterministic
     // jitter, so >30 min gaps (session breaks) occur regularly; micros ts
     val dir = java.nio.file.Files.createTempDirectory("session_soak").toString
     StreamingOps.deleteOnExit(java.nio.file.Paths.get(dir))
-    time("generate events parquet") {
+    phase(spark, "generateEvents") {
       spark.range(nEvents)
         .select(
           col("id").as("event_id"),
@@ -51,7 +41,7 @@ object SessionSoak {
     }
 
     // --- q103 shape: session_window sessionization ---
-    val sessions = time("streaming session_window -> parquet sink") {
+    val sessions = phase(spark, "sessionWindowStream") {
       StreamingOps.runToParquet(spark, dir, "session_soak",
         df => df
           .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
@@ -60,13 +50,13 @@ object SessionSoak {
           .groupBy(session_window(col("event_time"), "30 minutes"), col("user_id"))
           .agg(count(lit(1)).as("n"), sum("vmilli").as("vmilli")))
     }
-    val nStreamed = time("count streamed sessions")(sessions.count())
+    val nStreamed = phase(spark, "countSessions")(sessions.count())
 
     // batch gap-merge over the same data; the streamed (watermark-closed)
     // set must be a prefix of it — and at least the conservative prefix
     import org.apache.spark.sql.expressions.Window
     val gapU = 1800000000L
-    val batchSessions = time("batch gap-merge count") {
+    val batchSessions = phase(spark, "batchGapMerge") {
       val e = graft.model.Frames.normalizeTsNanos(spark.read.parquet(dir))
         .select(col("user_id"), expr("ts div 1000").as("us"))
       val w = Window.partitionBy("user_id").orderBy("us")
@@ -88,7 +78,7 @@ object SessionSoak {
       .select(col("user_id").as("c_user_id"), col("event_id").as("click_id"),
         timestamp_micros(expr("ts div 1000")).as("ct"))
       .withWatermark("ct", "4 hours")
-    val joined = time("stream-stream interval join -> parquet sink") {
+    val joined = phase(spark, "intervalJoinStream") {
       StreamingOps.runStreamToParquet(spark,
         errors.join(clicks,
           col("user_id") === col("c_user_id") &&
@@ -96,15 +86,9 @@ object SessionSoak {
             col("ct") < col("et")),
         "session_soak_join")
     }
-    val nJoined = time("count joined matches")(joined.count())
+    val nJoined = phase(spark, "countJoined")(joined.count())
     println(s"[sessoak] interval-join matches: $nJoined")
 
-    metrics.settle()
-    val all = JobMetrics.total(metrics.jobs)
-    println(f"[sessoak] max task result -> driver: ${all.maxResultBytes / 1024.0}%.0f KiB; " +
-      f"spill ${all.spill / 1e9}%.2f GB")
-    assert(all.maxResultBytes < 64L * 1024 * 1024, "driver materialization leak")
     assert(nStreamed > 0 && nJoined > 0)
-    spark.stop()
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
+import graft.JobMetrics.phase
+
 /** State-store scale soak (dev main, not a test): drives the running-dedup
   * state through MILLIONS of distinct keys across forced micro-batches and
   * compares the two providers the engine certifies:
@@ -18,22 +20,17 @@ import org.apache.spark.sql.streaming.{OutputMode, Trigger}
   * histogram compared exactly), so the soak doubles as a provider-parity
   * certification at a scale the spec can't touch.
   *
-  * Run: SPARK_DRIVER_MEM=32g sbt "Test/runMain graft.streaming.StateScaleSoak
+  * Run: SPARK_DRIVER_MEM=32g sbt "Test/runMain graft.Soak StateScaleSoak
   *   [nEvents] [nDistinct] [nBatches]"
   * Defaults: 12 M events over 4 M distinct keys in 4 micro-batches
   * (~3x copies per key on average; state ends at 4 M entries/shard set).
   */
 object StateScaleSoak {
 
-  def main(args: Array[String]): Unit = {
-    val nEvents = if (args.length > 0) args(0).toLong else 12000000L
-    val nDistinct = if (args.length > 1) args(1).toLong else 4000000L
-    val nBatches = if (args.length > 2) args(2).toInt else 4
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  def run(spark: SparkSession, args: graft.Soak.Args): Unit = {
+    val nEvents = args.long(0, 12000000L)
+    val nDistinct = args.long(1, 4000000L)
+    val nBatches = args.int(2, 4)
     import spark.implicits._
 
     println(s"[state-soak] $nEvents events, $nDistinct distinct keys, " +
@@ -125,8 +122,9 @@ object StateScaleSoak {
       (wall, census, metrics)
     }
 
-    val (wallH, censusH, _) = run("hdfs-backed")
-    val (wallR, censusR, _) = StreamingOps.withRocksDbState(spark)(run("rocksdb"))
+    val (wallH, censusH, _) = phase(spark, "hdfs-backed")(run("hdfs-backed"))
+    val (wallR, censusR, _) = phase(spark, "rocksdb")(
+      StreamingOps.withRocksDbState(spark)(run("rocksdb")))
 
     require(censusH == censusR,
       s"provider parity BROKEN: $censusH vs $censusR")
@@ -135,7 +133,6 @@ object StateScaleSoak {
       s"census covers ${censusH.values.sum} hashes, expected $expectTotal")
     println(f"[state-soak] PARITY OK — hdfs $wallH%.1f s vs rocksdb $wallR%.1f s " +
       f"over ${censusH.values.sum} distinct keys")
-    spark.stop()
   }
 
   private def dirBytes(p: java.nio.file.Path): Long = {

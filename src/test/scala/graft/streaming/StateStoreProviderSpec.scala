@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
@@ -21,14 +20,7 @@ import org.apache.spark.sql.streaming.{OutputMode, Trigger}
   *     when the body throws — a shared Verify/Bench session must not leak
   *     the provider into later queries.
   */
-class StateStoreProviderSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("state-store-provider-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StateStoreProviderSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import graft.{JobMetrics, Session}
+import graft.JobMetrics.phase
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Streaming soak (dev main, not a test): drives the streaming ingest at
@@ -12,28 +13,17 @@ import org.apache.spark.sql.functions._
   * (packed triple buffers), so streaming state is packed arrays, not boxed
   * sample rows; the stitch ships array-level block slices.
   *
-  * Run: SPARK_DRIVER_MEM=32g sbt "Test/runMain graft.streaming.StreamSoak
-  *   [nChannels] [nSamplesPerChannel]"
-  * on `graft.Session`'s session (`local[$SPARK_GRAFT_CPUS]`, default 4);
+  * Run: SPARK_DRIVER_MEM=32g sbt "Test/runMain graft.Soak StreamSoak
+  *   [nChannels] [nSamplesPerChannel]";
   * the stream's state partitions are sized from its staged input
   * (`StreamingOps`).
   */
 object StreamSoak {
 
-  def main(args: Array[String]): Unit = {
-    val nCh = if (args.length > 0) args(0).toInt else 8
-    val nSamples = if (args.length > 1) args(1).toLong else 2000000L
+  def run(spark: SparkSession, args: graft.Soak.Args): Unit = {
+    val nCh = args.int(0, 8)
+    val nSamples = args.long(1, 2000000L)
     val rate = 1000.0 // 1 kHz -> 1 ms = 1e6 ns between samples
-    val spark = Session.build()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    val metrics = JobMetrics.attach(spark)
-    def time[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[ssoak] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
     println(s"[ssoak] $nCh ch x $nSamples samples = ${nCh * nSamples / 1e6} M points")
 
     // synthetic events: channel-interleaved, strictly increasing per-channel
@@ -43,7 +33,7 @@ object StreamSoak {
     // ingestion path, not the legacy long-nanos one
     val dir = java.nio.file.Files.createTempDirectory("stream_soak").toString
     StreamingOps.deleteOnExit(java.nio.file.Paths.get(dir))
-    time("generate events parquet") {
+    phase(spark, "generateEvents") {
       spark.range(nCh * nSamples)
         .select(
           col("id").as("event_id"),
@@ -56,13 +46,13 @@ object StreamSoak {
 
     // 64-second core windows (~65k samples), 1 s crossfade context;
     // watermark > windowDur as the context shift requires
-    val sinkDf = time("streaming windows -> parquet sink (AvailableNow)") {
+    val sinkDf = phase(spark, "windowsStream") {
       StreamingOps.runToParquet(spark, dir, "stream_soak",
         df => StreamingOps.windowedSegmentsStream(df, nCh, rate,
           windowDur = "64 seconds", watermark = "130 seconds",
           contextDur = "1 second"))
     }
-    val nWindows = time("count sink windows") { sinkDf.count() }
+    val nWindows = phase(spark, "countWindows") { sinkDf.count() }
     println(s"[ssoak]   -> $nWindows window rows")
 
     // identity round trip over the conservatively-closed prefix (q37's
@@ -76,19 +66,11 @@ object StreamSoak {
     val winSamples = 64000L
     val stitched = StreamingOps.stitchTimeWindows(sinkDf, "64 seconds", "1 second")
       .filter(col("win_idx") <= maxKeep - 1)
-    val total = time("crossfade stitch -> blocks") {
+    val total = phase(spark, "stitch") {
       stitched.select(sum(size(col("values")))).head().getLong(0)
     }
     val expected = nCh * maxKeep * winSamples
     println(s"[ssoak] stitched samples in closed blocks: $total (expect $expected)")
-    metrics.settle()
-    val all = JobMetrics.total(metrics.jobs)
-    println(f"[ssoak] task time: ${all.taskMs / 1000.0}%.1f s; " +
-      f"max task result -> driver: ${all.maxResultBytes / 1024.0}%.0f KiB; " +
-      f"shuffle write ${all.shuffleWrite / 1e9}%.2f GB; " +
-      f"spill ${all.spill / 1e9}%.2f GB")
     assert(total == expected, s"lost samples: $total != $expected")
-    assert(all.maxResultBytes < 64L * 1024 * 1024, "driver materialization leak")
-    spark.stop()
   }
 }

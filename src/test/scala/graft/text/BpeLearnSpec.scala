@@ -1,19 +1,11 @@
 package graft.text
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 
 /** Bpe.learnMerges vs the hand-traced Sennrich learn_bpe sequence on the
   * classic low/lower/newest/widest corpus (weights chosen so every argmax
   * is unique), plus greedy-overlap and early-exhaustion edge cases. */
-class BpeLearnSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("bpe-learn-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BpeLearnSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 

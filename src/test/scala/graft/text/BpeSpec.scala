@@ -1,20 +1,12 @@
 package graft.text
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Fixed-merge-table BPE: hand-traced merge chains, priority-order
   * observability, null/empty edges, and the tokenizer-aware packing
   * variant's equivalence to its whitespace twin under a unit cost. */
-class BpeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("bpe-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BpeSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.operators.ScaleSoak
+import graft.JobMetrics.phase
 
 /** Connected-components tier-parity soak (dev main, not a test): certifies
   * the DISTRIBUTED label-propagation tier on an edge list ABOVE
@@ -25,36 +25,21 @@ import graft.operators.ScaleSoak
   * the union-find tier runs the SAME edges with a raised cap and the two
   * outputs are compared with except() both ways.
   *
-  * Run: sbt "Test/runMain graft.text.CcScaleSoak [nClusters] [nChains] [chainLen]"
+  * Run: sbt "Test/runMain graft.Soak CcScaleSoak [nClusters] [nChains] [chainLen]"
   * Defaults: 125000 clusters (2 M edges) + 16 x 62500 chains (1 M edges)
   * = 3 M edges, 2 M nodes — above the 2 M default cap.
   */
 object CcScaleSoak {
-  def main(args: Array[String]): Unit = {
-    val nClusters = if (args.length > 0) args(0).toLong else 125000L
-    val nChains = if (args.length > 1) args(1).toLong else 16L
-    val chainLen = if (args.length > 2) args(2).toLong else 62500L
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  def run(spark: SparkSession, args: graft.Soak.Args): Unit = {
+    val nClusters = args.long(0, 125000L)
+    val nChains = args.long(1, 16L)
+    val chainLen = args.long(2, 62500L)
     // GRAFT_CKPT_DIR switches every per-round pin from localCheckpoint to
     // RELIABLE checkpointing (the 1000-executor setting — executor loss
     // costs one round re-read, not the iteration history)
     sys.env.get("GRAFT_CKPT_DIR").foreach { d =>
       spark.conf.set(graft.operators.Checkpoints.DirKey, d)
       println(s"[soak] reliable checkpoint mode: $d")
-    }
-    val prof = new ScaleSoak.Profile
-    spark.sparkContext.addSparkListener(prof)
-    def time[T](label: String)(f: => T): T = {
-      prof.setPhase(label)
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[soak] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
     }
 
     // chain node ids live at 1e12 + chain*1e8 + pos — disjoint from the
@@ -82,12 +67,12 @@ object CcScaleSoak {
       s"($nClusters dense clusters + $nChains chains of $chainLen)")
 
     // --- distributed tier (edge count above the default 2 M cap) ---
-    val dist = time("label-propagation tier") {
+    val dist = phase(spark, "labelPropagationTier") {
       val cc = TextOps.connectedComponents(edges)
       cc.count() // pin is eager, but count makes the wall explicit
       cc
     }
-    val census = time("census validation") {
+    val census = phase(spark, "census") {
       dist.groupBy("component").count()
         .groupBy("count").agg(count("*").as("n_components"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -98,19 +83,16 @@ object CcScaleSoak {
     require(census.size == 2, s"unexpected component sizes: $census")
 
     // --- union-find tier on the SAME edges, cap raised past the count ---
-    val uf = time("union-find tier") {
-      spark.conf.set(TextOps.CcLocalEdgeCapKey, (nEdges + 1).toString)
-      val cc = try TextOps.connectedComponents(edges)
-      finally spark.conf.unset(TextOps.CcLocalEdgeCapKey)
+    val uf = phase(spark, "unionFindTier") {
+      val cc = graft.SessionSuite.withConf(spark,
+        TextOps.CcLocalEdgeCapKey -> (nEdges + 1).toString)(TextOps.connectedComponents(edges))
       cc.count()
       cc
     }
-    val diff = time("tier parity (except both ways)") {
+    val diff = phase(spark, "tierParity") {
       dist.exceptAll(uf).count() + uf.exceptAll(dist).count()
     }
     require(diff == 0, s"tiers disagree on $diff rows")
     println(s"[soak] PARITY: both tiers identical on $nNodes nodes")
-    prof.report()
-    spark.stop()
   }
 }

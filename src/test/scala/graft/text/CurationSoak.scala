@@ -3,14 +3,14 @@ package graft.text
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.operators.ScaleSoak
+import graft.JobMetrics.phase
 
 /** Curation-family scale soak (dev main, not a test): drives the text
   * pipeline's 100 TB shapes on a generated corpus an order of magnitude past
   * the sf0.1 bench — deterministic distributed word-soup docs (pure codegen,
   * no driver data), ~10% planted exact-dup groups, 5 languages — and
-  * measures what the plan arguments only reason about: per-stage wall time,
-  * max single task (skew), max task result (driver-materialization guard),
+  * measures what the plan arguments only reason about: per-phase wall time,
+  * longest task over mean task (skew), max task result (driver-materialization guard),
   * shuffle volume, and spill.
   *
   * Stages: curate (one scan + one narrow metric shuffle), packSequences
@@ -20,31 +20,17 @@ import graft.operators.ScaleSoak
   * (the signature UDF's md5-per-shingle dominates; the slice keeps the soak
   * minutes-scale while exercising the identical plan).
   *
-  * Run: sbt "Test/runMain graft.text.CurationSoak [nDocs] [wordsPerDoc] [stages]"
+  * Run: sbt "Test/runMain graft.Soak CurationSoak [nDocs] [wordsPerDoc] [stages]"
   * (stages = comma list of phase names to run, default all)
   */
 object CurationSoak {
-  def main(args: Array[String]): Unit = {
-    val nDocs = if (args.length > 0) args(0).toLong else 1000000L
-    val wordsPerDoc = if (args.length > 1) args(1).toInt else 60
-    val only: Set[String] = if (args.length > 2) args(2).split(",").toSet else Set.empty
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val prof = new ScaleSoak.Profile
-    spark.sparkContext.addSparkListener(prof)
+  def run(spark: SparkSession, args: graft.Soak.Args): Unit = {
+    val nDocs = args.long(0, 1000000L)
+    val wordsPerDoc = args.int(1, 60)
+    val only: Set[String] = args.all.lift(2).fold(Set.empty[String])(_.split(",").toSet)
     println(s"[soak] $nDocs docs x $wordsPerDoc words")
-    def time[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[soak] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
     def stage(name: String)(f: => Unit): Unit =
-      if (only.isEmpty || only(name)) { prof.setPhase(name); f }
+      if (only.isEmpty || only(name)) phase(spark, name)(f)
     // ids with id%10==0 share a text seed in blocks of 100 -> exact-dup
     // groups of 10; vocab of 500 words keeps realistic repetition levels
     val docs = spark.range(nDocs).select(
@@ -57,25 +43,25 @@ object CurationSoak {
         "cast(pmod(id, 7) + 1 as int))").as("lang"),
       expr("concat('src', pmod(id, 4))").as("source"))
 
-    stage("curate") { time("curate (1 scan + 1 narrow shuffle)") {
+    stage("curate") {
       val byReason = Curation.curate(docs, minTokens = 10, maxTokens = 10000)
         .groupBy("drop_reason").count().collect()
         .map(r => s"${r.getString(0)}=${r.getLong(1)}").sorted.mkString(" ")
       println(s"[soak]   -> $byReason")
-    } }
-    stage("packSequences") { time("packSequences (two-level prefix sum)") {
+    }
+    stage("packSequences") {
       val r = Curation.packSequences(docs, seqTokens = 2048, shardSize = 1 << 14)
         .agg(max("seq_id"), sum("n_tokens"), count(lit(1))).head()
       println(s"[soak]   -> maxSeq=${r.getLong(0)} tokens=${r.getLong(1)} docs=${r.getLong(2)}")
-    } }
-    stage("decontamination") { time("decontamination (broadcast eval side, 1% slice, 5-grams)") {
+    }
+    stage("decontamination") {
       val isEval = col("doc_id") % 101 === 0
       val n = Curation.decontaminationReport(
           docs.filter(!isEval), docs.filter(isEval), n = 5)
         .filter(col("contamination") > 0).count()
       println(s"[soak]   -> $n contaminated train docs")
-    } }
-    stage("bloomDecontamination") { time("bloom decontamination (broadcast bitset, same eval slice)") {
+    }
+    stage("bloomDecontamination") {
       // the scale tier for the stage above: the eval side collapses to a
       // 2^28-bit bitset (32 MiB) instead of a multi-GB broadcast string
       // set. Capacity sizing is load-bearing: the ~22 M distinct eval
@@ -91,21 +77,20 @@ object CurationSoak {
           docs.filter(!isEval), docs.filter(isEval), n = 5, mBits = 1 << 28)
         .filter(col("contamination_ub") >= 0.1).count()
       println(s"[soak]   -> $n bloom-flagged train docs (ub >= 0.1)")
-    } }
-    stage("stratifiedSample") { time("stratifiedSample (WindowGroupLimit)") {
+    }
+    stage("stratifiedSample") {
       val n = Curation.stratifiedSample(docs, perGroup = 10000).count()
       println(s"[soak]   -> $n sampled")
-    } }
-    stage("vocabulary") { time("vocabulary (word-keyed agg)") {
+    }
+    stage("vocabulary") {
       val n = Curation.vocabulary(docs, topK = 100).count()
       println(s"[soak]   -> $n vocab rows")
-    } }
+    }
     // minhash + dupClusters: dupClusters consumes minhash's candidates, so
     // requesting either stage runs the candidate generation (timed under
     // its own phase)
     if (only.isEmpty || only("minhashLsh") || only("dupClusters")) {
-      prof.setPhase("minhashLsh")
-      val cands = time("minhash signatures -> LSH candidates (1/4 slice)") {
+      val cands = phase(spark, "minhashLsh") { // 1/4 slice
         val slice = docs.filter(col("doc_id") % 4 === 0)
         val sigs = TextOps.minhashSignatures(slice)
         val c = TextOps.minhashCandidates(sigs)
@@ -118,8 +103,7 @@ object CurationSoak {
       // (per-round persist/unpersist, one action per round) — the distinct
       // cost profile VERDICT r7 flagged (CC rounds x edge-list shuffles)
       if (only.isEmpty || only("dupClusters")) {
-        prof.setPhase("dupClusters")
-        time("dupClusters (iterative CC over candidates, 1/4 slice)") {
+        phase(spark, "dupClusters") { // 1/4 slice
           val slice = docs.filter(col("doc_id") % 4 === 0)
           val clusters = TextOps.dupClusters(slice,
             cands.select(col("doc_a"), col("doc_b")))
@@ -129,12 +113,12 @@ object CurationSoak {
       }
       cands.unpersist()
     }
-    stage("substringDedup") { time("substring overlap pairs k=8 (1/4 slice)") {
+    stage("substringDedup") {
       val slice = docs.filter(col("doc_id") % 4 === 0)
       val n = TextOps.substringOverlapPairs(slice, k = 8).count()
       println(s"[soak]   -> $n substring pairs")
-    } }
-    stage("skewStress") { time("skew stress: 10% of docs are ONE text (flooded LSH bucket)") {
+    }
+    stage("skewStress") {
       // adversarial worst case for every bucketed candidate generator: a
       // boilerplate text repeated nDocs/10 times floods one (band, bucket)
       // per band. The maxBucketSize cap must hold the worst task bounded
@@ -150,10 +134,6 @@ object CurationSoak {
       val nSub = TextOps.substringOverlapPairs(boiler, k = 8).count()
       println(s"[soak]   -> flooded-bucket run: $nPairs minhash candidate pairs, " +
         s"$nSub substring pairs (caps held)")
-    } }
-    prof.report()
-    assert(prof.maxResultBytes.get < 64L * 1024 * 1024,
-      "a task shipped >64 MiB to the driver — driver materialization leak")
-    spark.stop()
+    }
   }
 }

@@ -1,20 +1,12 @@
 package graft.text
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Corpus-curation operators (decontamination, repetition metrics, mixture
   * sampling) against hand-computed ground truth.
   */
-class CurationSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("curation-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CurationSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 

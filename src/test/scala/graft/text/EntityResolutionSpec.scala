@@ -1,19 +1,11 @@
 package graft.text
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Blocked fuzzy matching: pairs only inside blocks, edit-distance
   * threshold, and census bookkeeping against hand-computed truth. */
-class EntityResolutionSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("entity-resolution-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class EntityResolutionSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 

@@ -1,7 +1,6 @@
 package graft.text
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Pins `minhashCandidatesIncremental`'s contract: the incremental result
@@ -10,14 +9,7 @@ import org.apache.spark.sql.functions._
   * combined bucket occupancy, same estimate, same threshold. Uses the
   * mega-soak's planted corpus generator so ground truth is known by
   * construction. */
-class IncrementalDedupSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("incremental-dedup-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IncrementalDedupSpec extends AnyFunSuite with graft.SessionSuite {
 
   private val nClusters = 40L
 

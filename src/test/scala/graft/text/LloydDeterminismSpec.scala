@@ -1,7 +1,6 @@
 package graft.text
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 
 /** The order-invariance law for the embedding-family Lloyd trainers: the
   * centroid/codebook moments accumulate on the e9 integer grid (long sums),
@@ -13,14 +12,7 @@ import org.apache.spark.sql.SparkSession
   * (q52/q108/q307/q315/q340/q350/q352/q362/q373-q379) rests on the trained
   * centroids being a pure function of the data. Bitwise comparison via
   * doubleToRawLongBits — "close" is exactly the failure mode being banned. */
-class LloydDeterminismSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("lloyd-determinism-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LloydDeterminismSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 
@@ -57,12 +49,9 @@ class LloydDeterminismSpec extends AnyFunSuite {
 
   test("kmeansCentroids: bit-identical across shuffle-partition counts") {
     val emb = corpus(500, 8, seed = 41)
-    def withParts(p: Int): Seq[Long] = {
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", p.toString)
-      try bits(Similarity.kmeansCentroids(emb.repartition(11), k = 6, iters = 2))
-      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    }
+    def withParts(p: Int): Seq[Long] =
+      withConf("spark.sql.shuffle.partitions" -> p.toString)(
+        bits(Similarity.kmeansCentroids(emb.repartition(11), k = 6, iters = 2)))
     val a = withParts(2); val b = withParts(17); val c = withParts(32)
     assert(a == b && b == c,
       "centroids must not depend on the aggregate's shuffle width")

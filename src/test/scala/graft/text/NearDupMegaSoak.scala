@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.operators.ScaleSoak
+import graft.JobMetrics.phase
 
 /** Composed near-dup pipeline soak (dev main, not a test): the actual
   * 100 TB curation workload — shingle -> MinHash -> LSH band buckets ->
@@ -47,7 +47,7 @@ import graft.operators.ScaleSoak
   * (the 1000-executor setting). Reference scope: near-dedup beyond the
   * reference's DSP core — the LLM-curation surface SURVEY.md §2 adds.
   *
-  * Run: SPARK_DRIVER_MEM=64g sbt "Test/runMain graft.text.NearDupMegaSoak
+  * Run: SPARK_DRIVER_MEM=64g sbt "Test/runMain graft.Soak NearDupMegaSoak
   *   [nUnique] [nClusters] [clusterSize] [floodSize]"
   * Defaults: 18 M unique + 500 k x 4 planted + 5000 flood = 20,005,000 docs,
   * 3 M planted pairs (above the 2 M union-find cap -> distributed CC tier).
@@ -134,30 +134,19 @@ object NearDupMegaSoak {
                     afterExactDedup: Long)
 
   /** Runs shingle -> MinHash -> LSH -> CC -> qualityKeeper -> exact dedup
-    * over the planted corpus and returns the full census. `phase` labels
-    * each action for an attached profiler; `verbose` prints per-stage wall
-    * times (the spec runs quiet, the soak main loud). */
+    * over the planted corpus and returns the full census; each action runs
+    * under its own [[graft.JobMetrics.phase]]. */
   def run(spark: SparkSession, nUnique: Long, nClusters: Long,
-          clusterSize: Int, floodSize: Long, maxBucketSize: Int = 64,
-          phase: String => Unit = _ => (),
-          verbose: Boolean = false): Census = {
-    def t[T](label: String)(f: => T): T = {
-      phase(label)
-      val s0 = System.nanoTime()
-      val r = f
-      if (verbose)
-        println(f"[soak] $label%-14s ${(System.nanoTime() - s0) / 1e9}%7.2f s")
-      r
-    }
+          clusterSize: Int, floodSize: Long, maxBucketSize: Int = 64): Census = {
     val docs = corpus(spark, nUnique, nClusters, clusterSize, floodSize)
 
     // stage 1: one corpus scan -> signatures, persisted so the bucket-cap
     // census and the candidate stage share the md5 work (the dominant cost)
     val sigs = TextOps.minhashSignatures(docs).persist(StorageLevel.MEMORY_AND_DISK)
-    val nDocs = t("signatures")(sigs.count())
+    val nDocs = phase(spark, "signatures")(sigs.count())
 
     // stage 2: skew-cap census — buckets the candidate stage will DROP
-    val capped = t("bucketCensus")(
+    val capped = phase(spark, "bucketCensus")(
       TextOps.bandBuckets(sigs)
         .groupBy("band_idx", "bucket").count()
         .filter(col("count") > maxBucketSize).count())
@@ -166,7 +155,7 @@ object NearDupMegaSoak {
     // band-bucket group once); audited against the planted layout
     val edges = TextOps.minhashCandidates(sigs, maxBucketSize = maxBucketSize)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nEdges = t("lshPairs")(edges.count())
+    val nEdges = phase(spark, "lshPairs")(edges.count())
     val isPlanted = (c: org.apache.spark.sql.Column) =>
       c >= ClusterBase && c < FloodBase
     // offsets stay < 5e9, exact in the double division `/` produces on longs
@@ -175,25 +164,24 @@ object NearDupMegaSoak {
     val samePlantedCluster =
       isPlanted(col("doc_a")) && isPlanted(col("doc_b")) &&
         clusterOf(col("doc_a")) === clusterOf(col("doc_b"))
-    val plantedFound = t("edgeAudit")(edges.filter(samePlantedCluster).count())
+    val plantedFound = phase(spark, "edgeAudit")(edges.filter(samePlantedCluster).count())
 
     // stage 3b: the sparse (ids-through-the-shuffle) pair architecture,
     // A/B'd against the dense form — must be RESULT-IDENTICAL; its win is
     // the signature payload staying out of the band-bucket shuffle
     val sparse = TextOps.minhashCandidatesAtScale(sigs, maxBucketSize = maxBucketSize)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    t("lshPairsSparse")(sparse.count())
-    val sparseMismatch = t("sparseParity")(
+    phase(spark, "lshPairsSparse")(sparse.count())
+    val sparseMismatch = phase(spark, "sparseParity")(
       edges.exceptAll(sparse).count() + sparse.exceptAll(edges).count())
     sparse.unpersist()
 
     // stage 4: components (edge count decides the CC tier) + cluster census
     val cap = spark.conf.getOption(TextOps.CcLocalEdgeCapKey).map(_.toLong).getOrElse(2000000L)
-    if (verbose)
-      println(s"[soak] CC tier: ${if (nEdges <= cap) "union-find (single task)" else "distributed pointer-jump"} ($nEdges edges vs cap $cap)")
+    println(s"[soak] CC tier: ${if (nEdges <= cap) "union-find (single task)" else "distributed pointer-jump"} ($nEdges edges vs cap $cap)")
     val clusters = TextOps.dupClusters(docs.select("doc_id"), edges)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val sizeCensus = t("components")(
+    val sizeCensus = phase(spark, "components")(
       clusters.groupBy("cluster").count()
         .groupBy(col("count").as("sz")).agg(count(lit(1)).as("n"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
@@ -207,21 +195,21 @@ object NearDupMegaSoak {
       (pmod(xxhash64(col("doc_id")), lit(1000000L)) / 1e6).as("quality_score"))
     val keep = TextOps.qualityKeeper(clusters, quality)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val kept = t("qualityKeeper")(keep.filter(col("kept") === 1).count())
+    val kept = phase(spark, "qualityKeeper")(keep.filter(col("kept") === 1).count())
     val actualKeepers = keep
       .filter(col("kept") === 1 && isPlanted(col("doc_id")))
       .select(clusterOf(col("doc_id")).as("c"), col("doc_id").as("actual"))
     val expectedKeepers = quality.filter(isPlanted(col("doc_id")))
       .groupBy(clusterOf(col("doc_id")).as("c"))
       .agg(expr("max_by(doc_id, struct(quality_score, -doc_id))").as("expected"))
-    val plantedKeepers = t("keeperAudit")(actualKeepers.count())
+    val plantedKeepers = phase(spark, "keeperAudit")(actualKeepers.count())
     val mismatches = actualKeepers.join(expectedKeepers, "c")
       .filter(col("actual") =!= col("expected")).count()
 
     // stage 6: exact dedup over the kept docs collapses the flood the
     // near-dup cap deliberately left alone
     val keptDocs = docs.join(keep.filter(col("kept") === 1).select("doc_id"), "doc_id")
-    val afterExact = t("exactDedup")(TextOps.dedupExact(keptDocs).count())
+    val afterExact = phase(spark, "exactDedup")(TextOps.dedupExact(keptDocs).count())
 
     sigs.unpersist(); edges.unpersist(); clusters.unpersist(); keep.unpersist()
     Census(nDocs, capped, nEdges, plantedFound, nEdges - plantedFound,
@@ -273,7 +261,6 @@ object NearDupMegaSoak {
   def runIncremental(spark: SparkSession, nUnique: Long, nClusters: Long,
                      clusterSize: Int, floodSize: Long,
                      maxBucketSize: Int = 64,
-                     phase: String => Unit = _ => (),
                      batchMod: Int = 2,
                      storedBuckets: Boolean = false): Unit = {
     import graft.operators.Checkpoints.Pinnable
@@ -287,17 +274,10 @@ object NearDupMegaSoak {
       clusterSize.toLong * (clusterSize - 1) / 2 -
         oldVariants.toLong * (oldVariants - 1) / 2
     require(expectedPerCluster > 0, "no planted cluster straddles the split")
-    def t[T](label: String)(f: => T): T = {
-      phase(label)
-      val s0 = System.nanoTime()
-      val r = f
-      println(f"[soak] $label%-16s ${(System.nanoTime() - s0) / 1e9}%7.2f s")
-      r
-    }
     val docs = corpus(spark, nUnique, nClusters, clusterSize, floodSize)
-    val corpusSigs = t("corpusSigs(at rest)")(
+    val corpusSigs = phase(spark, "corpusSigs(at rest)")(
       TextOps.minhashSignatures(docs.filter(col("doc_id") % batchMod =!= 0)).pin)
-    val newSigs = t("batchSigs")(
+    val newSigs = phase(spark, "batchSigs")(
       TextOps.minhashSignatures(docs.filter(col("doc_id") % batchMod === 0)).pin)
     // stored mode = the deployment shape: ingest writes the corpus bucket
     // table ONCE (amortized over every future batch), each batch joins the
@@ -307,7 +287,7 @@ object NearDupMegaSoak {
       // recursive-delete hook: File.deleteOnExit cannot remove a non-empty
       // directory (the q367 ADVICE finding — same defect, same fix)
       graft.streaming.StreamingOps.deleteOnExit(store)
-      t("bucketStore(ingest)")(
+      phase(spark, "bucketStore(ingest)")(
         TextOps.bandBuckets(corpusSigs)
           .write.mode("overwrite").parquet(store.toString))
       TextOps.minhashCandidatesIncrementalStored(
@@ -317,7 +297,7 @@ object NearDupMegaSoak {
       TextOps.minhashCandidatesIncremental(corpusSigs, newSigs,
         maxBucketSize = maxBucketSize)
     val inc = incRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nPairs = t("incrementalPairs")(inc.count())
+    val nPairs = phase(spark, "incrementalPairs")(inc.count())
     val isPlanted = (c: org.apache.spark.sql.Column) =>
       c >= ClusterBase && c < FloodBase
     val planted = inc.filter(isPlanted(col("doc_a")) && isPlanted(col("doc_b")) &&
@@ -343,29 +323,20 @@ object NearDupMegaSoak {
     println("[soak] INCREMENTAL PASS")
   }
 
-  def main(args: Array[String]): Unit = {
-    val nUnique = if (args.length > 0) args(0).toLong else 18000000L
-    val nClusters = if (args.length > 1) args(1).toLong else 500000L
-    val clusterSize = if (args.length > 2) args(2).toInt else 4
-    val floodSize = if (args.length > 3) args(3).toLong else 5000L
-    val mode = if (args.length > 4) args(4) else "full"
+  def run(spark: SparkSession, args: graft.Soak.Args): Unit = {
+    val nUnique = args.long(0, 18000000L)
+    val nClusters = args.long(1, 500000L)
+    val clusterSize = args.int(2, 4)
+    val floodSize = args.long(3, 5000L)
+    val mode = args.str(4, "full")
     val maxBucketSize = 64
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "128")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     sys.env.get("GRAFT_CKPT_DIR").foreach { d =>
       spark.conf.set(graft.operators.Checkpoints.DirKey, d)
       println(s"[soak] reliable checkpoint mode: $d")
     }
-    val prof = new ScaleSoak.Profile
-    spark.sparkContext.addSparkListener(prof)
     println(s"[soak] ${nUnique / 1e6} M unique + $nClusters x $clusterSize planted + $floodSize flood "
       + s"= ${(nUnique + nClusters * clusterSize + floodSize) / 1e6} M docs; "
       + s"${nClusters * clusterSize * (clusterSize - 1) / 2 / 1e6} M planted pairs")
-    val t0 = System.nanoTime()
     if (mode.startsWith("incremental")) {
       // "incremental" = 50/50 split; "incremental:10" = a 1/10 batch (the
       // daily-ingest shape); "incremental:10:stored" additionally reads
@@ -373,22 +344,14 @@ object NearDupMegaSoak {
       val parts = mode.split(":")
       val m = parts.drop(1).headOption.filter(_.nonEmpty).map(_.toInt).getOrElse(2)
       runIncremental(spark, nUnique, nClusters, clusterSize, floodSize,
-        maxBucketSize, prof.setPhase, batchMod = m,
-        storedBuckets = parts.contains("stored"))
-      println(f"[soak] total ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      prof.report()
-      spark.stop()
+        maxBucketSize, batchMod = m, storedBuckets = parts.contains("stored"))
       return
     }
-    val census = run(spark, nUnique, nClusters, clusterSize, floodSize,
-      maxBucketSize, prof.setPhase, verbose = true)
+    val census = run(spark, nUnique, nClusters, clusterSize, floodSize, maxBucketSize)
     println(s"[soak] census: $census")
     println(f"[soak] planted-pair recall: ${census.plantedPairsFound.toDouble /
       (nClusters * clusterSize * (clusterSize - 1) / 2) * 100}%.4f %%")
     check(census, nUnique, nClusters, clusterSize, floodSize, maxBucketSize)
-    println(f"[soak] total ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    prof.report()
     println("[soak] PASS")
-    spark.stop()
   }
 }

@@ -1,7 +1,6 @@
 package graft.text
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 
 /** The COMPOSED near-dup pipeline (shingle -> MinHash -> LSH -> CC ->
   * qualityKeeper -> exact dedup) against planted ground truth, via the same
@@ -9,14 +8,7 @@ import org.apache.spark.sql.SparkSession
   * (skew-cap hits, zero false pairs, cluster sizes, argmax keepers, final
   * count) asserted exactly, on BOTH CC tiers. The individual stages each
   * have their own specs; this certifies their composition. */
-class NearDupPipelineSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("neardup-pipeline-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class NearDupPipelineSpec extends AnyFunSuite with graft.SessionSuite {
 
   private val nUnique = 2000L
   private val nClusters = 150L
@@ -25,7 +17,6 @@ class NearDupPipelineSpec extends AnyFunSuite {
   private val maxBucketSize = 40
 
   test("composed pipeline census matches the planted layout (union-find CC tier)") {
-    spark.conf.unset(TextOps.CcLocalEdgeCapKey)
     val c = NearDupMegaSoak.run(spark, nUnique, nClusters, clusterSize,
       floodSize, maxBucketSize)
     // 150 x 4 clusters -> 900 planted pairs, well under the 2 M cap
@@ -34,12 +25,11 @@ class NearDupPipelineSpec extends AnyFunSuite {
   }
 
   test("composed pipeline census matches on the distributed CC tier (cap=0)") {
-    spark.conf.set(TextOps.CcLocalEdgeCapKey, "0")
-    try {
+    withConf(TextOps.CcLocalEdgeCapKey -> "0") {
       val c = NearDupMegaSoak.run(spark, nUnique, nClusters, clusterSize,
         floodSize, maxBucketSize)
       NearDupMegaSoak.check(c, nUnique, nClusters, clusterSize, floodSize, maxBucketSize)
-    } finally spark.conf.unset(TextOps.CcLocalEdgeCapKey)
+    }
   }
 
   test("flood smaller than the bucket cap yields zero capped buckets and pairs survive") {

@@ -1,21 +1,13 @@
 package graft.text
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Product-quantization operator sanity: codebook shape/determinism, code
   * ranges, and the recall audit's census contract. Bit-level cross-engine
   * exactness is certified by the q350 driver oracle (full Lloyd + ADC
   * replay in SQL); this spec pins the operator-level invariants. */
-class PqSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("pq-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PqSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 
@@ -62,9 +54,7 @@ class PqSpec extends AnyFunSuite {
     val df = Seq((0, Seq(0, 1)), (1, Seq(1, 0)), (0, null),
         (0, Seq(0)), (1, Seq(0, 1, 1)))
       .toDF("qi", "codes")
-    val prev = spark.conf.get("spark.sql.codegen.fallback")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
+    withConf("spark.sql.codegen.fallback" -> "false") {
       val got = df
         .withColumn("d", graft.functions.PqFunctions.adcDotE9(
           df, col("codes"), col("qi"), lut3))
@@ -83,7 +73,7 @@ class PqSpec extends AnyFunSuite {
       // floor_dot_e9's unequal-length guard
       assert(got(3) == ((None, None)), "codes shorter than m must be NULL")
       assert(got(4) == ((None, None)), "codes longer than m must be NULL")
-    } finally spark.conf.set("spark.sql.codegen.fallback", prev)
+    }
   }
 
   test("adaptive IVF-PQ audit: census covers every query per margin, " +

@@ -3,44 +3,26 @@ package graft.text
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.operators.ScaleSoak
+import graft.JobMetrics.phase
 
 /** Embedding-similarity scale soak (dev main, not a test): drives the
   * similarity family's 100 TB shapes on a generated corpus — 1 M
   * deterministic pseudo-random vectors (pure codegen, no driver data) with
   * ~10% planted near-duplicate pairs (shared seed + 1e-3 perturbation) —
-  * and measures per-stage wall time, max task, max task result, shuffle
-  * volume, and spill.
+  * and measures per-phase wall time, longest task, max task result,
+  * shuffle volume, and spill.
   *
   * Stages: hyperplane-LSH candidate pairs (bucketed id-pair shape),
   * k-means centroids + IVF assign (broadcast quantizer, tiny moment
   * aggregate), IVF probe vs brute-force top-k, corpus norm stats.
   *
-  * Run: sbt "Test/runMain graft.text.SimilaritySoak [nVecs] [dim]"
+  * Run: sbt "Test/runMain graft.Soak SimilaritySoak [nVecs] [dim]"
   */
 object SimilaritySoak {
-  def main(args: Array[String]): Unit = {
-    val nVecs = if (args.length > 0) args(0).toLong else 1000000L
-    val dim = if (args.length > 1) args(1).toInt else 64
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val prof = new ScaleSoak.Profile
-    spark.sparkContext.addSparkListener(prof)
+  def run(spark: SparkSession, args: graft.Soak.Args): Unit = {
+    val nVecs = args.long(0, 1000000L)
+    val dim = args.int(1, 64)
     println(s"[soak] $nVecs vectors x dim $dim")
-    def time[T](label: String)(f: => T): T = {
-      prof.setPhase(label)
-      val t0 = System.nanoTime()
-      val s0 = prof.spill.sum()
-      val r = f
-      val dSpill = (prof.spill.sum() - s0) / 1e9
-      println(f"[soak] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s" +
-        (if (dSpill > 0.01) f" (spill ${dSpill}%.2f GB)" else ""))
-      r
-    }
     // ids with id%10<2 come in planted near-dup pairs (2k, 2k+1 share the
     // seed row, then a 1e-3-scale independent perturbation)
     val vecs = spark.range(nVecs).select(
@@ -51,10 +33,10 @@ object SimilaritySoak {
         AS FLOAT))""").as("embedding"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    time("materialize corpus") {
+    phase(spark, "materialize corpus") {
       println(s"[soak]   -> ${vecs.count()} vectors")
     }
-    time("hyperplane LSH candidate pairs (bucketed id-pair shape)") {
+    phase(spark, "hyperplane LSH candidate pairs (bucketed id-pair shape)") {
       // planes sized with n (log2(n/8), the rule on cosineLshPairs):
       // under-planing floods the cosine join quadratically — measured at
       // 4 M with planes=16: ~122 M pairs, 122 GB join spill; log2(n/8)
@@ -66,10 +48,10 @@ object SimilaritySoak {
       val n = pairs.count()
       println(s"[soak]   -> $n pairs >= 0.99 (planted ${nVecs / 10}, planes $planes)")
     }
-    val centroids = time("kmeans centroids (k=32, 2 iters, tiny moment agg)") {
+    val centroids = phase(spark, "kmeans centroids (k=32, 2 iters, tiny moment agg)") {
       Similarity.kmeansCentroids(vecs, k = 32, iters = 2)
     }
-    val assigned = time("ivf assign (broadcast quantizer, narrow)") {
+    val assigned = phase(spark, "ivf assign (broadcast quantizer, narrow)") {
       val a = Similarity.ivfAssign(vecs, centroids)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val cells = a.groupBy("cell").count().count()
@@ -78,17 +60,17 @@ object SimilaritySoak {
     }
     val query = vecs.filter(col("vec_id") === 12345L)
       .select("embedding").head().getSeq[Float](0).toArray
-    val exact = time("brute-force top-10 (full corpus)") {
+    val exact = phase(spark, "brute-force top-10 (full corpus)") {
       Similarity.bruteForceTopK(vecs, query, 10, excludeId = 12345L)
         .collect().map(_.getLong(0)).toSeq
     }
-    time("ivf top-10 (nprobe=4 of 32 cells)") {
+    phase(spark, "ivf top-10 (nprobe=4 of 32 cells)") {
       val got = Similarity.ivfTopK(assigned, centroids, query, 10,
         nprobe = 4, excludeId = 12345L).collect().map(_.getLong(0)).toSeq
       val recall = got.count(exact.contains) / 10.0
       println(s"[soak]   -> recall@10 vs exact: $recall")
     }
-    time("ivfTopKMulti: 256-query batch served in ONE probed join") {
+    phase(spark, "ivfTopKMulti: 256-query batch served in ONE probed join") {
       val step = math.max(1L, nVecs / 256)
       val queries = vecs.filter(col("vec_id") % step === 0)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
@@ -96,7 +78,7 @@ object SimilaritySoak {
         k = 10, nprobe = 4).count()
       println(s"[soak]   -> $n served rows (one corpus pass for the whole batch)")
     }
-    time("single-query ivfTopK loop x 16 (the shape batching replaces)") {
+    phase(spark, "single-query ivfTopK loop x 16 (the shape batching replaces)") {
       val step = math.max(1L, nVecs / 16)
       val qs = vecs.filter(col("vec_id") % step === 0)
         .select("vec_id", "embedding").collect()
@@ -107,7 +89,7 @@ object SimilaritySoak {
       }
       println(s"[soak]   -> ${qs.length} sequential queries (16x fewer than the batch)")
     }
-    time("IVF-PQ 256-query batch (train both quantizers + encode + ADC shortlist + exact rerank)") {
+    phase(spark, "IVF-PQ 256-query batch (train both quantizers + encode + ADC shortlist + exact rerank)") {
       // the memory-tier serving path: candidates in probed cells score by
       // m=8 LUT reads + integer adds over the 8-byte codes — never a
       // dim-length dot — and only the per-query shortlist touches vectors
@@ -116,7 +98,7 @@ object SimilaritySoak {
         nQueries = 256).count()
       println(s"[soak]   -> $n served rows from code-only candidate scoring")
     }
-    time("PQ serve-only: ADC codes vs full vectors over the SAME probed candidates") {
+    phase(spark, "PQ serve-only: ADC codes vs full vectors over the SAME probed candidates") {
       // isolates the fine-quantizer claim from training cost: both passes
       // rank the same probed candidate set top-10 per query; the exact
       // pass reads 64-float vectors, the ADC pass reads 8-int codes + a
@@ -167,11 +149,8 @@ object SimilaritySoak {
       val qp = qFrame.withColumn("cell", explode(probesU(col("qv"))))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("qid").orderBy(col("score").desc, col("cid"))
-      def t(label: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val n = f
-        println(f"[soak]   $label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
-      }
+      def t(label: String)(f: => Long): Unit =
+        println(s"[soak]   $label: ${phase(spark, label)(f)} rows")
       for (round <- 1 to 2) {
         t(s"exact full-vector top-10 (round $round)") {
           broadcast(qp.select("qid", "qv", "cell")).join(withVec, Seq("cell"))
@@ -198,13 +177,13 @@ object SimilaritySoak {
       }
       encoded.unpersist(); withVec.unpersist()
     }
-    time("corpus norm stats") {
+    phase(spark, "corpus norm stats") {
       val r = vecs.select(
         avg(sqrt(aggregate(transform(col("embedding"), x => x * x),
           lit(0.0), (acc, x) => acc + x))).as("mean_norm")).head()
       println(f"[soak]   -> mean norm ${r.getDouble(0)}%.4f")
     }
-    time("semDedup (1024 cells, in-group pairwise, keep-the-outlier)") {
+    phase(spark, "semDedup (1024 cells, in-group pairwise, keep-the-outlier)") {
       // SemDeDup's 100 TB shape at soak scale: cells sized so the in-group
       // quadratic is the budgeted cost (avg cell ~ n/1024; the 4096 cap
       // bounds the worst group). Planted near-dup pairs (2k, 2k+1 at
@@ -255,7 +234,7 @@ object SimilaritySoak {
           planted.count())
       }
       var flatRec = (0L, 0L)
-      time("semDedup FLAT at k=2048 (assignment-bound regime)") {
+      phase(spark, "semDedup FLAT at k=2048 (assignment-bound regime)") {
         val sd = Similarity.semDedup(vecs, nCells = 2048, iters = 1,
             minSim = 0.99, maxCellSize = 4096)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -263,7 +242,7 @@ object SimilaritySoak {
         println(s"[soak]   -> flat k=2048 planted recall ${flatRec._1}/${flatRec._2}")
         sd.unpersist()
       }
-      time("semDedup PRODUCTION shape at k=2048: 10% sampled train + two-level assign") {
+      phase(spark, "semDedup PRODUCTION shape at k=2048: 10% sampled train + two-level assign") {
         // what a 100 TB deployment actually runs: the quantizer trains on
         // a bounded deterministic sample (training cost decoupled from
         // corpus size), the super-quantizer compresses the frozen table,
@@ -288,7 +267,7 @@ object SimilaritySoak {
           s"production-shape planted recall under the 85% floor: $paired/$total")
         prod.unpersist()
       }
-      time("semDedupApprox at k=2048 (64-super, probe=4) end to end") {
+      phase(spark, "semDedupApprox at k=2048 (64-super, probe=4) end to end") {
         val sd = Similarity.semDedupApprox(vecs, nCells = 2048, nSuper = 64,
             probe = 4, iters = 1, minSim = 0.99, maxCellSize = 4096)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -313,15 +292,15 @@ object SimilaritySoak {
       // corpus-batch crosser.
       val corpus = vecs.filter(col("vec_id") % 1000 =!= 0)
       val batch = vecs.filter(col("vec_id") % 1000 === 0)
-      val centroids2 = time("incremental prep: frozen quantizer (k=2048, 1 iter) on the corpus") {
+      val centroids2 = phase(spark, "incremental prep: frozen quantizer (k=2048, 1 iter) on the corpus") {
         Similarity.kmeansCentroids(corpus, k = 2048, iters = 1)
       }
-      val atRest = time("incremental prep: corpus assignment at rest (paid once at ingest)") {
+      val atRest = phase(spark, "incremental prep: corpus assignment at rest (paid once at ingest)") {
         val a = Similarity.assignWith(corpus, centroids2)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         a.count(); a
       }
-      time("two-level assignment: flat k=2048 scan vs 64-super probe") {
+      phase(spark, "two-level assignment: flat k=2048 scan vs 64-super probe") {
         // at deployment scale k grows with the corpus (corpus/1e4 cells),
         // so the FLAT k x dim scan becomes the assignment bottleneck; the
         // super-quantizer cuts it to (nSuper + probe*k/nSuper) x dim.
@@ -380,7 +359,7 @@ object SimilaritySoak {
         agreementRun("clustered", clustered, cCents)
         clustered.unpersist()
       }
-      time("incremental semDedup: ONE 0.1% batch against the corpus at rest") {
+      phase(spark, "incremental semDedup: ONE 0.1% batch against the corpus at rest") {
         val pairs = Similarity.semDedupIncrementalPairs(atRest,
           Similarity.assignWith(batch, centroids2),
           minSim = 0.99, maxCellSize = 4096)
@@ -399,9 +378,5 @@ object SimilaritySoak {
       }
       atRest.unpersist()
     }
-    prof.report()
-    assert(prof.maxResultBytes.get < 64L * 1024 * 1024,
-      "a task shipped >64 MiB to the driver — driver materialization leak")
-    spark.stop()
   }
 }

@@ -1,18 +1,10 @@
 package graft.text
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dedup/similarity/text-analysis operators against planted ground truth. */
-class TextOpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("text-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TextOpsSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
 
@@ -162,8 +154,7 @@ class TextOpsSpec extends AnyFunSuite {
       TextOps.connectedComponents(edges, maxIter = 50).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val local = run() // default cap: union-find tier
-    spark.conf.set(TextOps.CcLocalEdgeCapKey, "0") // force distributed tier
-    val dist = try run() finally spark.conf.unset(TextOps.CcLocalEdgeCapKey)
+    val dist = withConf(TextOps.CcLocalEdgeCapKey -> "0")(run()) // distributed tier
     assert(local == dist, s"tiers disagree: ${local.toSeq.diff(dist.toSeq)}")
     assert((0L to 39L).forall(local(_) == 0L), "chain must close to min id 0")
     assert((100L to 104L).forall(local(_) == 100L))

@@ -1,20 +1,12 @@
 package graft.text
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 
 /** Hand-computed fixtures for the unigram-LM Viterbi kernel (the q356
   * oracle pins full-pipeline cross-engine exactness; this pins the DP's
   * local contracts: packed (cost, n_pieces) ordering, smallest-split
   * tie-break, vocabulary misses). */
-class UnigramSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("unigram-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class UnigramSpec extends AnyFunSuite with graft.SessionSuite {
 
   private def seg(w: String, cost: (String, Long)*): Seq[String] =
     Unigram.viterbi(w, cost.toMap).toSeq
