@@ -24,7 +24,9 @@ import graft.functions.{AssembleSeries, AssembleTimed, ComplexAmplitude, Complex
   *    energy norms)
   *  - `segment_resample`, `segment_notch`, `wavelet_bands`,
   *    `wavelet_amplitude` — the per-segment spectral kernels over
-  *    (values, rate) with literal parameters (graft.functions.DspFunctions)
+  *    (values, rate) with literal parameters; `segment_blocks` and the
+  *    `car_block` / `car_subtract_block` aggregates — CAR's block cut and
+  *    per-block trimmed mean (graft.functions.DspFunctions)
   *
   * ONE optimizer rule is injected — [[graft.functions.RewriteFloorDotE9]],
   * which substitutes the native codegen'd `floor_dot_e9` for the portable

@@ -39,6 +39,21 @@ object Session {
     spark
   }
 
+  /** Runs `body` with each `key -> value` set on `spark`, then puts every
+    * key back to its prior value, or unsets it if it had none, also when
+    * `body` throws. */
+  def withConf[T](spark: SparkSession)(kv: (String, String)*)(body: => T): T = {
+    // getAll holds the keys set on the session; getOption would also
+    // return a default and turn it into a set key on restore
+    val set = spark.conf.getAll
+    val prior = kv.map { case (k, _) => k -> set.get(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prior.reverse.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   private val localFsReported = new java.util.concurrent.atomic.AtomicBoolean(false)
 
   /** Passes [[graft.store.LocalFs.report]] of `conf` to `warn`, once per

@@ -5,7 +5,8 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -13,12 +14,14 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.dsp.{Kernels, Signal, Signal32}
 import graft.dsp.Signal.{AutoPad, ExactPad, FastPad, PadSpec}
+import graft.operators.CommonReferencing
 import graft.store.NwbStore.isSingle
 
 /** Native Catalyst expressions for the per-segment spectral kernels:
-  * resample and notch ([[SegmentMap]], one trace in, one out) and the
+  * resample and notch ([[SegmentMap]], one trace in, one out), the
   * named-filterbank wavelet ([[WaveletBands]], one trace in, one struct per
-  * band out). Each reads its `array<double>` input with one bulk
+  * band out), and CAR's block cut ([[SegmentBlocks]]) and per-block
+  * aggregate ([[CarBlock]]). Each reads its `array<double>` input with one bulk
   * `ArrayData.toDoubleArray()`, runs the unchanged `Signal` / `Signal32`
   * kernel, and writes primitive `UnsafeArrayData`. A typed Scala UDF over
   * the same kernel deserializes its input through `MapObjects`, boxing
@@ -220,6 +223,99 @@ object WaveletBands {
        else Seq(StructField("re", trace), StructField("im", trace)))))
 }
 
+/** `values` cut into consecutive `blockSize`-sample runs, the last one
+  * short: `array<array<double>>`, null on a null input. CAR's block cut,
+  * exploded with `posexplode`. */
+case class SegmentBlocks(child: Expression, blockSize: Int)
+    extends UnaryExpression with ImplicitCastInputTypes {
+  require(blockSize > 0, s"blockSize=$blockSize must be positive")
+
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
+  override def dataType: DataType =
+    ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false)
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "segment_blocks"
+
+  def cut(values: ArrayData): ArrayData = {
+    val x = values.toDoubleArray()
+    val blocks = new Array[Any]((x.length + blockSize - 1) / blockSize)
+    var b = 0
+    while (b < blocks.length) {
+      val from = b * blockSize
+      blocks(b) = UnsafeArrayData.fromPrimitiveArray(
+        java.util.Arrays.copyOfRange(x, from, math.min(from + blockSize, x.length)))
+      b += 1
+    }
+    new GenericArrayData(blocks)
+  }
+
+  override def nullSafeEval(values: Any): Any = cut(values.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("segmentBlocks", this)
+    nullSafeCodeGen(ctx, ev, v => s"${ev.value} = $self.cut($v);")
+  }
+
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+/** CAR of one time block: collects the block's (channel, samples) pairs
+  * ([[BlockBufAggregate]], the channel in the index slot) and runs
+  * `CommonReferencing.carOfBlock` over them, trimming
+  * `ceil(m*(1-meanFrac)/2)` of the `m` channels present from each end. It
+  * emits the CAR block (`car_block`), or with `referenced` every channel's
+  * block minus it (`car_subtract_block`,
+  * `array<struct<channel, block>>`). A block of too few channels to trim
+  * fails its task. */
+case class CarBlock(channel: Expression, block: Expression, meanFrac: Double,
+                    single: Boolean, referenced: Boolean,
+                    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
+  extends BlockBufAggregate {
+
+  override def left: Expression = channel
+  override def right: Expression = block
+  override def dataType: DataType =
+    if (referenced) CarBlock.Referenced else ArrayType(DoubleType, containsNull = false)
+  override def nullable: Boolean = true
+  override def prettyName: String = if (referenced) "car_subtract_block" else "car_block"
+
+  override def checkInputDataTypes(): TypeCheckResult = block.dataType match {
+    case ArrayType(DoubleType, _) if channel.dataType == IntegerType =>
+      TypeCheckResult.TypeCheckSuccess
+    case _ => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects (int, array<double>), got " +
+        s"(${channel.dataType.simpleString}, ${block.dataType.simpleString})")
+  }
+
+  override protected def index(c: Any): Long = c.asInstanceOf[Int].toLong
+
+  override def eval(buf: BlockBuf): Any = {
+    if (buf.n == 0) return null
+    val byCh = Array.tabulate(buf.n)(i => (buf.idx(i).toInt, buf.blocks(i)))
+    val nExclude = CommonReferencing.nExcludeFor(buf.n, meanFrac)
+    if (referenced)
+      new GenericArrayData(CommonReferencing.subtractOfBlock(byCh, nExclude, single).map {
+        case (c, b) => InternalRow(c, UnsafeArrayData.fromPrimitiveArray(b))
+      })
+    else UnsafeArrayData.fromPrimitiveArray(CommonReferencing.carOfBlock(byCh, nExclude, single))
+  }
+
+  override def withNewMutableAggBufferOffset(offset: Int): CarBlock =
+    copy(mutableAggBufferOffset = offset)
+  override def withNewInputAggBufferOffset(offset: Int): CarBlock =
+    copy(inputAggBufferOffset = offset)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): CarBlock =
+    copy(channel = l, block = r)
+}
+
+object CarBlock {
+  /** The referenced blocks as the Scala UDF this replaces typed them, so
+    * the exploded `channel` keeps its nullability. */
+  val Referenced: DataType = ArrayType(StructType(Seq(
+    StructField("channel", IntegerType, nullable = false),
+    StructField("block", ArrayType(DoubleType, containsNull = false)))))
+}
+
 /** Column API + SQL registration. The SQL forms take the kernel parameters
   * as literals after (values, rate); `npad` is `'fast'`, `'auto'` or the
   * exact pad count, `precision` is `'single'` or `'double'`:
@@ -228,15 +324,19 @@ object WaveletBands {
   *  - `segment_notch(values, rate, noise_hz, npad, continuous_profile, precision)`
   *  - `wavelet_bands(values, rate, filters, hg_only, npad, fft_norm_length, precision)`
   *  - `wavelet_amplitude(values, rate, filters, hg_only, npad, fft_norm_length, precision)`
+  *  - `segment_blocks(values, block_size)`
+  *  - `car_block(channel, block, mean_frac, precision)` and
+  *    `car_subtract_block(channel, block, mean_frac, precision)` (aggregates)
   *
   * `fft_norm_length` is NULL for none. Each name is registered once per
   * session ([[registerIfAbsent]]); [[graft.GraftExtensions]] injects the
   * same builders. */
 object DspFunctions {
 
-  private def params(name: String, exprs: Seq[Expression], n: Int): IndexedSeq[Any] = {
+  private def params(name: String, exprs: Seq[Expression], n: Int,
+                     inputs: Int = 2): IndexedSeq[Any] = {
     require(exprs.length == n, s"$name takes $n arguments, got ${exprs.length}")
-    exprs.drop(2).map { e =>
+    exprs.drop(inputs).map { e =>
       require(e.foldable, s"$name: parameter $e must be a literal")
       e.eval() match {
         case s: UTF8String => s.toString
@@ -258,6 +358,11 @@ object DspFunctions {
       amplitudeOnly))
   }
 
+  private def car(name: String, referenced: Boolean)(exprs: Seq[Expression]): Expression = {
+    val p = params(name, exprs, 4)
+    CarBlock(exprs(0), exprs(1), num(p(0)), isSingle(p(1).toString), referenced)
+  }
+
   /** (name, expression class, builder) of every function here. */
   val builders: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
     ("segment_resample", classOf[SegmentMap], { exprs =>
@@ -271,7 +376,12 @@ object DspFunctions {
         DspKernels.parsePad(p(1).toString), p(2).asInstanceOf[Boolean], isSingle(p(3).toString)))
     }),
     ("wavelet_bands", classOf[WaveletBands], wavelet("wavelet_bands", amplitudeOnly = false)),
-    ("wavelet_amplitude", classOf[WaveletBands], wavelet("wavelet_amplitude", amplitudeOnly = true)))
+    ("wavelet_amplitude", classOf[WaveletBands], wavelet("wavelet_amplitude", amplitudeOnly = true)),
+    ("segment_blocks", classOf[SegmentBlocks], { exprs =>
+      SegmentBlocks(exprs(0), num(params("segment_blocks", exprs, 2, inputs = 1)(0)).toInt)
+    }),
+    ("car_block", classOf[CarBlock], car("car_block", referenced = false)),
+    ("car_subtract_block", classOf[CarBlock], car("car_subtract_block", referenced = true)))
 
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
     builders.foreach { case (name, _, build) => registerIfAbsent(spark, name)(build) }
@@ -304,5 +414,15 @@ object DspFunctions {
     call(df, if (amplitudeOnly) "wavelet_amplitude" else "wavelet_bands", values, rate,
       lit(filters), lit(hgOnly), lit(DspKernels.padName(npad)),
       fftNormLength.fold(lit(null).cast(IntegerType))(n => lit(n)), lit(precision))
+  }
+
+  def blocks(df: org.apache.spark.sql.DataFrame, values: Column, blockSize: Int): Column =
+    call(df, "segment_blocks", values, lit(blockSize))
+
+  def car(df: org.apache.spark.sql.DataFrame, channel: Column, block: Column,
+          meanFrac: Double, precision: String, referenced: Boolean): Column = {
+    isSingle(precision)
+    call(df, if (referenced) "car_subtract_block" else "car_block", channel, block,
+      lit(meanFrac), lit(precision))
   }
 }

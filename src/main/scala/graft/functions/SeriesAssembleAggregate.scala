@@ -396,6 +396,43 @@ object BlockBuf {
   }
 }
 
+/** An aggregate that collects (`left`, `right`) = (index, block) pairs
+  * into a [[BlockBuf]]: a null index or block is no row (collect_list's
+  * null policy), null samples become NaN, the missing-sample encoding. */
+trait BlockBufAggregate extends TypedImperativeAggregate[BlockBuf] with BinaryLike[Expression] {
+
+  /** The non-null value of `left` as the buffer's index. */
+  protected def index(i: Any): Long
+
+  override def createAggregationBuffer(): BlockBuf =
+    new BlockBuf(new Array[Long](16), new Array[Array[Double]](16), 0)
+
+  override def update(buf: BlockBuf, input: InternalRow): BlockBuf = {
+    val i = left.eval(input)
+    val v = right.eval(input)
+    if (i != null && v != null) {
+      val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+      val out = new Array[Double](arr.numElements())
+      var k = 0
+      while (k < out.length) {
+        out(k) = if (arr.isNullAt(k)) Double.NaN else arr.getDouble(k)
+        k += 1
+      }
+      buf.add(index(i), out)
+    }
+    buf
+  }
+
+  override def merge(a: BlockBuf, b: BlockBuf): BlockBuf = {
+    var i = 0
+    while (i < b.n) { a.add(b.idx(i), b.blocks(i)); i += 1 }
+    a
+  }
+
+  override def serialize(buf: BlockBuf): Array[Byte] = BlockBuf.write(buf)
+  override def deserialize(bytes: Array[Byte]): BlockBuf = BlockBuf.read(bytes)
+}
+
 /** Native fragment assembly: inputs are (sample offset, packed value-run)
   * pairs where each run covers offsets [off, off+len); eval emits the
   * samples ordered by offset. Two callers: the reduce side of the two-level
@@ -412,7 +449,7 @@ object BlockBuf {
 case class AssembleFragments(off: Expression, vals: Expression,
                              mutableAggBufferOffset: Int = 0,
                              inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[BlockBuf] with BinaryLike[Expression] {
+  extends BlockBufAggregate {
 
   override def left: Expression = off
   override def right: Expression = vals
@@ -428,33 +465,7 @@ case class AssembleFragments(off: Expression, vals: Expression,
         s"(${off.dataType.simpleString}, ${vals.dataType.simpleString})")
   }
 
-  override def createAggregationBuffer(): BlockBuf =
-    new BlockBuf(new Array[Long](16), new Array[Array[Double]](16), 0)
-
-  override def update(buf: BlockBuf, input: InternalRow): BlockBuf = {
-    val i = off.eval(input)
-    val v = vals.eval(input)
-    if (i != null && v != null) {
-      val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      val out = new Array[Double](arr.numElements())
-      var k = 0
-      while (k < out.length) {
-        out(k) = if (arr.isNullAt(k)) Double.NaN else arr.getDouble(k)
-        k += 1
-      }
-      buf.add(i.asInstanceOf[Long], out)
-    }
-    buf
-  }
-
-  override def merge(a: BlockBuf, b: BlockBuf): BlockBuf = {
-    var i = 0
-    while (i < b.n) { a.add(b.idx(i), b.blocks(i)); i += 1 }
-    a
-  }
-
-  override def serialize(buf: BlockBuf): Array[Byte] = BlockBuf.write(buf)
-  override def deserialize(bytes: Array[Byte]): BlockBuf = BlockBuf.read(bytes)
+  override protected def index(i: Any): Long = i.asInstanceOf[Long]
 
   override def eval(buf: BlockBuf): Any = {
     val n = buf.n

@@ -1,27 +1,36 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import scala.reflect.runtime.universe.TypeTag
-
-import graft.store.NwbStore.isSingle
 
 /** Common average referencing (CAR), the engine's one cross-channel
   * reduction (SURVEY.md §1.3).
   *
   * Semantics (ref common_referencing.py:11-68): per time point, sort the
   * channel values with NaN last (like np.sort), drop
-  * `nExclude = ceil(nChannels*(1-meanFrac)/2)` from each end, and nanmean
-  * the middle; `meanFrac = 1` degenerates to the plain nanmean. The CAR is
-  * subtracted from every channel at that time point.
+  * `nExclude = ceil(m*(1-meanFrac)/2)` from each end, and nanmean the
+  * middle; `meanFrac = 1` degenerates to the plain nanmean. The CAR is
+  * subtracted from every channel at that time point. `m` is the number of
+  * channels present in the time block, as the reference takes it from
+  * `data.shape[1]`: no job counts channels up front. On a rectangular
+  * frame that is every channel; a series missing a channel, or a channel
+  * whose trace ends before a block starts, trims the blocks it lacks from
+  * the channels they hold. A trace that ends inside a block cuts that
+  * block of every channel to its length (`carOfBlock` runs to the
+  * shortest block). A block too narrow to trim (`2·nExclude ≥ m`) fails
+  * its task with the same message `meanFrac` gets when it excludes every
+  * channel.
   *
   * Shape: segments are cut into fixed `blockSize`-sample time blocks
-  * (narrow), the blocks of all channels for one time range meet in one
-  * shuffle keyed on (series, band, rate, startingTime, block_idx) — nBlocks
-  * rows, not nSamples, placed by block id (`perBlock`) — and a JVM loop
-  * (`carOfBlock`) computes the trimmed mean per time point. A second
-  * shuffle reassembles the blocks into segments. `Signal.trimmedMean` is
-  * the plain-Scala reference the specs check this kernel against.
+  * (narrow, the native `segment_blocks` + `posexplode`), the blocks of all
+  * channels for one time range meet in one shuffle keyed on (series, band,
+  * rate, startingTime, block_idx) — nBlocks rows, not nSamples, placed by
+  * block id (`perBlock`) — and a native aggregate (`car_block` /
+  * `car_subtract_block`, [[graft.functions.CarBlock]]) collects each
+  * block's (channel, samples) pairs in packed buffers and runs `carOfBlock`
+  * on them. A second shuffle reassembles the blocks into segments. No
+  * Scala UDF is on the path. `Signal.trimmedMean` is the plain-Scala
+  * reference the specs check this kernel against.
   *
   * Placement of the referenced segments: the reassembly shuffle of
   * `subtractCarSegments` decides the parallelism of everything downstream
@@ -29,19 +38,22 @@ import graft.store.NwbStore.isSingle
   * of the preprocessing chain, one channel row at a time). A hash exchange
   * is wrong there: it carries only a few MB, so AQE coalesces it by bytes
   * onto 1–3 tasks, and channels that do hash apart can still collide. The
-  * exchange is therefore placed by channel id (`repartitionById`) onto
-  * `min(nChannels, shuffle partitions)` partitions: an explicit partition
-  * count that AQE never coalesces, with channel `c` of a series at
-  * partition `(h + c) mod n`, `h` a hash of the series keys, so one series
-  * puts one channel per task and several series rotate over all `n`
-  * partitions. Balance assumes dense channel ids (0..nChannels-1), the
-  * SegmentFrame convention; sparse ids stay correct, only less even.
+  * exchange is therefore placed by channel id (`repartitionById`) onto the
+  * shuffle partitions: an explicit partition count that AQE never
+  * coalesces, with channel `c` of a series at partition `(h + c) mod n`,
+  * `h` a hash of the series keys, so one series puts one channel per task
+  * and several series rotate over all `n` partitions. Balance assumes dense
+  * channel ids (0..m-1), the SegmentFrame convention; sparse ids stay
+  * correct, only less even.
   */
 object CommonReferencing {
 
-  /** Trim count per end: the reference's `round_func` default, np.ceil. */
-  private def nExcludeFor(nChannels: Int, meanFrac: Double): Int = {
+  private def checkMeanFrac(meanFrac: Double): Unit =
     require(meanFrac > 0.0 && meanFrac <= 1.0, s"meanFrac=$meanFrac outside (0, 1]")
+
+  /** Trim count per end: the reference's `round_func` default, np.ceil. */
+  private[graft] def nExcludeFor(nChannels: Int, meanFrac: Double): Int = {
+    checkMeanFrac(meanFrac)
     val nExclude = math.ceil(nChannels * (1.0 - meanFrac) / 2.0).toInt
     require(2 * nExclude < nChannels,
       s"meanFrac=$meanFrac excludes all $nChannels channels")
@@ -54,8 +66,8 @@ object CommonReferencing {
     * accumulates the nanmean in float32 — the reference's
     * precision='single' compute mode (common_referencing.py:11-23 via
     * utils.py:9-31). */
-  private def carOfBlock(byCh: Array[(Int, Array[Double])], nExclude: Int,
-                         single: Boolean): Array[Double] = {
+  private[graft] def carOfBlock(byCh: Array[(Int, Array[Double])], nExclude: Int,
+                                single: Boolean): Array[Double] = {
     val m = byCh.length // channels present in this block (nChannels if rectangular)
     val len = byCh.map(_._2.length).min
     val car = new Array[Double](len)
@@ -99,6 +111,22 @@ object CommonReferencing {
     car
   }
 
+  /** Each channel's block minus the block's CAR; `single` subtracts in
+    * float32, like `X.astype(f32) - avg`. */
+  private[graft] def subtractOfBlock(byCh: Array[(Int, Array[Double])], nExclude: Int,
+                                     single: Boolean): Array[(Int, Array[Double])] = {
+    val car = carOfBlock(byCh, nExclude, single)
+    byCh.map { case (ch, b) =>
+      val out = new Array[Double](car.length)
+      var i = 0
+      if (single)
+        while (i < car.length) { out(i) = (b(i).toFloat - car(i).toFloat).toDouble; i += 1 }
+      else
+        while (i < car.length) { out(i) = b(i) - car(i); i += 1 }
+      (ch, out)
+    }
+  }
+
   /** Reassemble per-key segments from blocks in block order — native
     * assemble_fragments with each block placed at sample offset
     * `block_idx * blockSize` (packed buffers, O(n) dense placement), not
@@ -121,73 +149,59 @@ object CommonReferencing {
   private def placed(k: Column, n: Int): Column =
     pmod(hash(col("series"), col("band"), col("rate"), col("startingTime")), lit(n)) + k
 
+  private def shufflePartitions(df: DataFrame): Int =
+    df.sparkSession.sessionState.conf.numShufflePartitions
+
   /** The CAR shuffle: segments are cut into `blockSize`-sample blocks
     * (narrow), blocks of every channel for the same time range meet in one
-    * row per `BlockKey`, and `f` maps their (channel, block) pairs to one
-    * value. Output columns: `BlockKey`, then `out` applied to that value.
+    * row per `BlockKey`, and the CAR aggregate maps their (channel, block)
+    * pairs to `block`: the CAR block, or (`referenced`) every channel's
+    * block minus it as `array<struct<channel, block>>`.
     *
     * The exchange is placed by block id (`_bid = placed(block_idx)`, `n` =
     * shuffle partitions), for the reason the reassembly is placed by
     * channel: hashed, its few MB are coalesced by AQE onto one task that
     * then runs the kernel for every block of the recording. `_bid` is a
-    * grouping key too, dropped after the aggregate. `f` sees the channels
-    * in shuffle order; the kernels sort each time point's values, so no
-    * output bit depends on it. */
-  private def perBlock[T: TypeTag](segments: DataFrame, blockSize: Int)(
-      f: Array[(Int, Array[Double])] => T)(out: Column => Column): DataFrame = {
-    val toBlocks = udf { (values: Array[Double]) => values.grouped(blockSize).toArray }
-    val byBlock = udf { (chBlocks: Seq[Row]) =>
-      f(chBlocks.map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).toArray)
-    }
-    val n = segments.sparkSession.sessionState.conf.numShufflePartitions
+    * grouping key too, dropped after the aggregate. The aggregate sees the
+    * channels in shuffle order; the kernel sorts each time point's values,
+    * so no output bit depends on it. */
+  private def perBlock(segments: DataFrame, meanFrac: Double, blockSize: Int,
+                       precision: String, referenced: Boolean): DataFrame = {
+    checkMeanFrac(meanFrac)
+    val n = shufflePartitions(segments)
+    val fns = graft.functions.DspFunctions
     segments.select(
         col("series"), col("channel"), col("band"), col("rate"), col("startingTime"),
-        posexplode(toBlocks(col("values"))).as(Seq("block_idx", "block")))
+        posexplode(fns.blocks(segments, col("values"), blockSize)).as(Seq("block_idx", "block")))
       .withColumn("_bid", placed(col("block_idx"), n))
       .repartitionById(n, col("_bid"))
       .groupBy((BlockKey :+ "_bid").map(col): _*)
-      .agg(collect_list(struct(col("channel"), col("block"))).as("chBlocks"))
-      .select(BlockKey.map(col) :+ out(byBlock(col("chBlocks"))): _*)
+      .agg(fns.car(segments, col("channel"), col("block"), meanFrac, precision, referenced)
+        .as("block"))
   }
 
-  /** Subtract CAR from every channel of a SegmentFrame. Blocks are cut
-    * (narrow), met across channels in one shuffle (`perBlock`), referenced
-    * by `carOfBlock`, and reassembled into channel segments by a second
-    * shuffle — measured ~10x faster than a per-sample aggregate + join at
-    * 64ch x 1M samples. Block boundaries change nothing: the trimmed mean
-    * is per time point.
+  /** CAR subtracted from every channel, without a channel count: the one
+    * implementation behind `Pipeline.preprocessBlock`, the `Store` chain and
+    * [[subtractCarSegments]]. Blocks are cut (narrow), met across channels
+    * in one shuffle (`perBlock`), referenced by `carOfBlock`, and
+    * reassembled into channel segments by a second shuffle — measured ~10x
+    * faster than a per-sample aggregate + join at 64ch x 1M samples. Block
+    * boundaries change nothing: the trimmed mean is per time point.
     *
     * The reassembly shuffle is placed by channel id, not hashed: row
     * `_pid = pmod(hash(series, band, rate, startingTime), n) + channel`
-    * goes to partition `_pid mod n`, `n = min(nChannels, shuffle
-    * partitions)`. A hash exchange here is coalesced by AQE to 1–3 tasks
-    * (it moves a few MB), which then run every downstream per-channel
-    * stage; an explicit count is never coalesced. `_pid` is also a
-    * grouping key of the reassembly, so the id-placed exchange satisfies
-    * the aggregate and the plan keeps its two exchanges. Even balance
-    * assumes dense channel ids 0..nChannels-1. */
-  def subtractCarSegments(segments: DataFrame, nChannels: Int,
-                          meanFrac: Double = 0.95, blockSize: Int = 8192,
-                          precision: String = "double"): DataFrame = {
-    val nExclude = nExcludeFor(nChannels, meanFrac)
-    val single = isSingle(precision)
-    val referenced = perBlock(segments, blockSize) { byCh =>
-      val car = carOfBlock(byCh, nExclude, single)
-      byCh.map { case (ch, b) =>
-        val out = new Array[Double](car.length)
-        var i = 0
-        if (single) // float32 subtract, like X.astype(f32) - avg
-          while (i < car.length) { out(i) = (b(i).toFloat - car(i).toFloat).toDouble; i += 1 }
-        else
-          while (i < car.length) { out(i) = b(i) - car(i); i += 1 }
-        (ch, out)
-      }
-    }(explode(_).as("cb"))
-      .select(col("series"), col("cb._1").as("channel"), col("band"),
-        col("rate"), col("startingTime"), col("block_idx"), col("cb._2").as("block"))
-
-    val n = math.min(nChannels, segments.sparkSession.sessionState.conf.numShufflePartitions)
-    val byChannel = referenced
+    * goes to partition `_pid mod n`, `n` = shuffle partitions. A hash
+    * exchange here is coalesced by AQE to 1–3 tasks (it moves a few MB),
+    * which then run every downstream per-channel stage; an explicit count
+    * is never coalesced. `_pid` is also a grouping key of the reassembly,
+    * so the id-placed exchange satisfies the aggregate and the plan keeps
+    * its two exchanges. Even balance assumes dense channel ids. */
+  private[graft] def subtractCar(segments: DataFrame, meanFrac: Double = 0.95,
+                                 blockSize: Int = 8192,
+                                 precision: String = "double"): DataFrame = {
+    val n = shufflePartitions(segments)
+    val byChannel = perBlock(segments, meanFrac, blockSize, precision, referenced = true)
+      .select(BlockKey.map(col) :+ inline(col("block")): _*)
       .withColumn("_pid", placed(col("channel"), n))
       .repartitionById(n, col("_pid"))
     reassemble(byChannel, Seq("series", "channel", "band", "rate", "startingTime", "_pid"),
@@ -199,17 +213,30 @@ object CommonReferencing {
     * `CAR_of_<name>` in store_linenoise_notch_CAR (pipelines.py:159-170) and
     * the literal `CAR` series in store_subtract_CAR
     * (common_referencing.py:116-128). Same blocked two-shuffle shape as
-    * subtractCarSegments, but the cross-channel aggregate emits ONE array
-    * per block, so the reassembly side is nBlocks rows per series — tiny. */
+    * [[subtractCar]], but the cross-channel aggregate emits ONE array per
+    * block, so the reassembly side is nBlocks rows per series — tiny. */
+  private[graft] def car(segments: DataFrame, meanFrac: Double = 0.95,
+                         blockSize: Int = 8192, precision: String = "double"): DataFrame =
+    reassemble(perBlock(segments, meanFrac, blockSize, precision, referenced = false),
+        Seq("series", "band", "rate", "startingTime"), blockSize)
+      .select(col("series"), lit(null).cast("int").as("channel"), col("band"),
+        col("rate"), col("startingTime"), col("values"))
+
+  /** [[subtractCar]], with `nChannels` checked against `meanFrac` when it
+    * is called. The trim itself counts the channels of each block. */
+  def subtractCarSegments(segments: DataFrame, nChannels: Int,
+                          meanFrac: Double = 0.95, blockSize: Int = 8192,
+                          precision: String = "double"): DataFrame = {
+    nExcludeFor(nChannels, meanFrac)
+    subtractCar(segments, meanFrac, blockSize, precision)
+  }
+
+  /** [[car]], with `nChannels` checked against `meanFrac` when it is
+    * called. The trim itself counts the channels of each block. */
   def carSegments(segments: DataFrame, nChannels: Int,
                   meanFrac: Double = 0.95, blockSize: Int = 8192,
                   precision: String = "double"): DataFrame = {
-    val nExclude = nExcludeFor(nChannels, meanFrac)
-    val single = isSingle(precision)
-    val carBlocks =
-      perBlock(segments, blockSize)(carOfBlock(_, nExclude, single))(_.as("block"))
-    reassemble(carBlocks, Seq("series", "band", "rate", "startingTime"), blockSize)
-      .select(col("series"), lit(null).cast("int").as("channel"), col("band"),
-        col("rate"), col("startingTime"), col("values"))
+    nExcludeFor(nChannels, meanFrac)
+    car(segments, meanFrac, blockSize, precision)
   }
 }

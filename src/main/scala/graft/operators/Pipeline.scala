@@ -40,8 +40,7 @@ object Pipeline {
 
   /** Full pipeline over a SegmentFrame of raw acquisition data. Returns the
     * wavelet-amplitude SegmentFrame (one row per channel × band). */
-  def preprocessBlock(raw: DataFrame, nChannels: Int,
-                      config: Config = Config()): DataFrame = {
+  def preprocessBlock(raw: DataFrame, config: Config = Config()): DataFrame = {
     // unit scaling (V -> µV) rides inside the resample UDF's array pass —
     // a separate `transform` HOF would run interpreted (NOTES.md sharp edge)
     val downsampled =
@@ -49,7 +48,7 @@ object Pipeline {
         preScale = config.scaling, precision = config.precision)
     val notched = DspOperators.applyLinenoiseNotch(downsampled, config.noiseHz, config.npad,
       precision = config.precision)
-    val referenced = CommonReferencing.subtractCarSegments(notched, nChannels, config.meanFrac,
+    val referenced = CommonReferencing.subtractCar(notched, config.meanFrac,
       precision = config.precision)
     val amp = DspOperators.waveletAmplitude(referenced, config.filters, config.hgOnly,
       config.npad, precision = config.precision)
@@ -161,14 +160,14 @@ object Store {
     * runs once — then unpersisted; the RETURNED frame reads the stored
     * table, so chaining after the unpersist does not recompute lineage. */
   def storeSubtractCar(segments: DataFrame, root: String, series: String,
-                       nChannels: Int, meanFrac: Double = 0.95,
+                       meanFrac: Double = 0.95,
                        precision: String = "double"): DataFrame = {
     val cached = segments.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     try {
-      write(CommonReferencing.carSegments(cached, nChannels, meanFrac, precision = precision),
+      write(CommonReferencing.car(cached, meanFrac, precision = precision),
         root, "CAR", precision)
-      writeRead(CommonReferencing.subtractCarSegments(cached, nChannels, meanFrac,
-        precision = precision), root, s"CAR_$series", precision)
+      writeRead(CommonReferencing.subtractCar(cached, meanFrac, precision = precision),
+        root, s"CAR_$series", precision)
     } finally cached.unpersist()
   }
 
@@ -178,16 +177,16 @@ object Store {
     * persisted DISK_ONLY so both writes share one notch computation; the
     * returned frame reads the stored table (see writeRead). */
   def storeLinenoiseNotchCar(segments: DataFrame, root: String, series: String,
-                             nChannels: Int, meanFrac: Double = 0.95,
+                             meanFrac: Double = 0.95,
                              noiseHz: Double = 60.0, npad: PadSpec = FastPad,
                              precision: String = "double"): DataFrame = {
     val notched = DspOperators.applyLinenoiseNotch(segments, noiseHz, npad, precision = precision)
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     try {
-      write(CommonReferencing.carSegments(notched, nChannels, meanFrac, precision = precision),
+      write(CommonReferencing.car(notched, meanFrac, precision = precision),
         root, s"CAR_of_$series", precision)
-      writeRead(CommonReferencing.subtractCarSegments(notched, nChannels, meanFrac,
-        precision = precision), root, s"CAR_ln_$series", precision)
+      writeRead(CommonReferencing.subtractCar(notched, meanFrac, precision = precision),
+        root, s"CAR_ln_$series", precision)
     } finally notched.unpersist()
   }
 
@@ -202,12 +201,12 @@ object Store {
     * stored tables equal the functional path's intermediates (stored as
     * float32 under "single"). Returns the
     * amplitude frame (read from its stored table). */
-  def storePreprocessBlock(raw: DataFrame, root: String, series: String, nChannels: Int,
+  def storePreprocessBlock(raw: DataFrame, root: String, series: String,
                            config: Pipeline.Config = Pipeline.Config()): DataFrame = {
     val ds = storeResample(raw, root, series, config.initialRate,
       config.npad, preScale = config.scaling, precision = config.precision)
     val referenced = storeLinenoiseNotchCar(ds, root, s"downsampled_$series",
-      nChannels, config.meanFrac, noiseHz = config.noiseHz, npad = config.npad,
+      config.meanFrac, noiseHz = config.noiseHz, npad = config.npad,
       precision = config.precision)
     storeWaveletTransform(referenced, root, s"CAR_ln_downsampled_$series",
       config.filters, config.hgOnly, absOnly = true,

@@ -57,9 +57,9 @@ object DspRelational {
         // is already assembled segments, so re-deriving a long frame just to
         // re-shuffle it back into windows would pay a second sample-level
         // shuffle
-        val referenced = CommonReferencing.subtractCarSegments(
+        val referenced = CommonReferencing.subtractCar(
           Windowing.windowSegments(planted, stride = 8192, context = 0),
-          nChannels = 8, meanFrac = 0.95, blockSize = 8192)
+          meanFrac = 0.95, blockSize = 8192)
         Windowing.windowedToLong(referenced, stride = 8192)
           .select(col("t_idx"), col("channel"), round(col("value"), 6).as("referenced"))
           .orderBy("t_idx", "channel")

@@ -166,7 +166,7 @@ object Spectral {
 
     QueryDef("q33_pipeline_high_gamma", "S1-S3/ST1-ST2 full preprocess_block + tutorial tail",
       (s, dir) => {
-        val amp = Pipeline.preprocessBlock(segments(s, dir), 8,
+        val amp = Pipeline.preprocessBlock(segments(s, dir),
           Pipeline.Config(initialRate = 1000.0, finalRate = Some(250.0),
             filters = "human", hgOnly = true, scaling = 1.0))
         toLongRounded(Pipeline.highGammaTrace(amp, baselineSamples = 50))
@@ -374,7 +374,7 @@ FROM rect GROUP BY 1, 2 ORDER BY 1, 2""")),
         graft.streaming.StreamingOps.deleteOnExit(root)
         val segs = Frames.eventsToSegments(table(s, dir, "events"), 8, 1000.0)
         graft.operators.Store.storePreprocessBlock(segs, root.toString,
-          "events", 8, graft.operators.Pipeline.Config(
+          "events", graft.operators.Pipeline.Config(
             initialRate = 500.0, finalRate = Some(250.0)))
         val tables = new java.io.File(s"$root/preprocessing")
           .listFiles().map(_.getName).sorted.toSeq

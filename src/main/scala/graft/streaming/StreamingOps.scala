@@ -730,17 +730,10 @@ object StreamingOps {
     * rule gives (every `runTo*` driver makes a fresh checkpoint). */
   private def startSized(query: DataFrame)(
       start: => org.apache.spark.sql.streaming.StreamingQuery)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val scoped = Seq("spark.sql.shuffle.partitions" -> stateParts(query).toString,
-      graft.store.NwbStore.NoValuesDictionary -> "false")
-    val conf = query.sparkSession.conf
-    val prev = scoped.map { case (k, _) => k -> conf.getOption(k) }
-    scoped.foreach { case (k, v) => conf.set(k, v) }
-    try start finally prev.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
-    }
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    graft.Session.withConf(query.sparkSession)(
+      "spark.sql.shuffle.partitions" -> stateParts(query).toString,
+      graft.store.NwbStore.NoValuesDictionary -> "false")(start)
 
   /** Build a ts-normalized file-stream source over an events directory —
     * THE way to open a raw events stream: the normalizeTsNanos wrap is what
@@ -818,18 +811,8 @@ object StreamingOps {
     * restore the previous provider conf. The conf is read per-query at
     * start, so wrapping just the streaming run is sufficient and nothing
     * leaks into later queries on a shared session. */
-  def withRocksDbState[T](spark: SparkSession)(f: => T): T = {
-    // the keys set on the session: getOption would return the provider's
-    // default and restore it as a set key
-    val set = spark.conf.getAll
-    val (prevP, prevC) = (set.get(ProviderKey), set.get(ChangelogKey))
-    spark.conf.set(ProviderKey, RocksDbProvider)
-    spark.conf.set(ChangelogKey, "true")
-    try f finally {
-      prevP.fold(spark.conf.unset(ProviderKey))(spark.conf.set(ProviderKey, _))
-      prevC.fold(spark.conf.unset(ChangelogKey))(spark.conf.set(ChangelogKey, _))
-    }
-  }
+  def withRocksDbState[T](spark: SparkSession)(f: => T): T =
+    graft.Session.withConf(spark)(ProviderKey -> RocksDbProvider, ChangelogKey -> "true")(f)
 
   /** Drive an append-mode streaming query from a static events directory to
     * a parquet file sink under Trigger.AvailableNow and return a lazy
@@ -896,15 +879,16 @@ object StreamingOps {
       .option("path", dataDir)
       .option("checkpointLocation", out.resolve("ckpt").toString)
       .start()).awaitTermination()
-    // a query that closed no windows writes only _spark_metadata — return
-    // an empty frame of the right schema instead of failing parquet schema
-    // inference (the memory sink this replaced returned an empty table)
+    // the sink holds the query's rows, so it reads back with the query's
+    // schema: no job infers it from the files. A query that closed no
+    // windows writes only _spark_metadata — return an empty frame of that
+    // schema (the memory sink this replaced returned an empty table)
     val hasData = {
       val d = new java.io.File(dataDir)
       d.exists && d.listFiles != null &&
         d.listFiles.exists(f => f.getName.endsWith(".parquet"))
     }
-    if (hasData) spark.read.parquet(dataDir)
+    if (hasData) spark.read.schema(transformed.schema).parquet(dataDir)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       transformed.schema)
   }

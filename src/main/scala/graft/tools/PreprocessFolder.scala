@@ -1,5 +1,7 @@
 package graft.tools
 
+import org.apache.spark.sql.DataFrame
+
 import graft.store.NwbStore
 import graft.operators.{Pipeline, Store}
 
@@ -12,6 +14,12 @@ import graft.operators.{Pipeline, Store}
   * rescaled. Where the reference loops files serially in one process, each
   * session here is one lazy Spark DAG over partition-parallel channel rows;
   * sessions are independent so a scheduler can also run them concurrently.
+  *
+  * No job counts the channels: CAR trims each time block by the channels
+  * it holds, as the reference trims by `data.shape[1]`. The fused write
+  * runs as ONE Spark job per session ([[FusedWrite]]: the acquisition
+  * read, the two CAR shuffles and the partitioned write are the stages of
+  * that job).
   *
   * Usage: PreprocessFolder <root> [--initial-rate R] [--final-rate R]
   *        [--filters rat|human|changlab] [--all-steps] [--acq-name NAME]
@@ -46,23 +54,35 @@ object PreprocessFolder {
     a
   }
 
+  /** The confs of the fused write, set around it alone. Both of its
+    * exchanges are `repartitionById` with an explicit count, which AQE
+    * never coalesces or splits; with AQE on, all it would do is run each
+    * shuffle map stage as a job of its own and re-plan between them. */
+  val FusedWrite: Seq[(String, String)] = Seq("spark.sql.adaptive.enabled" -> "false")
+
+  private def config(a: Args): Pipeline.Config =
+    Pipeline.Config(initialRate = a.initialRate, finalRate = Some(a.finalRate),
+      filters = a.filters, scaling = 1.0, precision = a.precision)
+
+  /** The frame the fused path writes: `Pipeline.preprocessBlock` of the
+    * acquisition at the storage width of `--precision`. */
+  def fused(store: NwbStore, a: Args): DataFrame =
+    NwbStore.withPrecision(Pipeline.preprocessBlock(store.readAcquisition(a.acqName), config(a)),
+      a.precision)
+
   /** One session: `--precision` selects the compute precision of every
     * step and the storage width of every table. */
-  def preprocessStore(store: NwbStore, a: Args): Unit = {
-    val raw = store.readAcquisition(a.acqName)
-    // one job: distinct().count() runs three under AQE; null counts as one
-    // value, as it does there
-    val nCh = raw.select("channel").collect().map(_.get(0)).distinct.length
-    val config = Pipeline.Config(initialRate = a.initialRate, finalRate = Some(a.finalRate),
-      filters = a.filters, scaling = 1.0, precision = a.precision)
-    if (a.allSteps) Store.storePreprocessBlock(raw, store.root, a.acqName, nCh, config)
-    else
+  def preprocessStore(store: NwbStore, a: Args): Unit =
+    if (a.allSteps)
+      Store.storePreprocessBlock(store.readAcquisition(a.acqName), store.root, a.acqName,
+        config(a))
+    else {
+      val df = fused(store, a)
       // reference naming accretes the consumed series name:
       // wvlt_amp_ + CAR_ln_downsampled_<acq> (wavelet_transform.py:389,410)
-      store.writeProcessing(s"wvlt_amp_CAR_ln_downsampled_${a.acqName}",
-        NwbStore.withPrecision(Pipeline.preprocessBlock(raw, nCh, config), a.precision),
-        partitionByChannel = true)
-  }
+      graft.Session.withConf(df.sparkSession)(FusedWrite: _*)(store.writeProcessing(
+        s"wvlt_amp_CAR_ln_downsampled_${a.acqName}", df, partitionByChannel = true))
+    }
 
   def main(argv: Array[String]): Unit = {
     val a = parse(argv)

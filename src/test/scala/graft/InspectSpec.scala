@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The library entry points of the mains: `Inspect plan|profile` (plan
   * file, census line with pinned and locally built inputs, UDFs and
   * interpreted expressions, per-job metrics,
-  * child-process count, name check) and `Bench.run`'s summary pointer to the persisted
+  * child-process count, name check, session stores) and `Bench.run`'s summary pointer to the persisted
   * per-query file. */
 class InspectSpec extends AnyFunSuite with SessionSuite {
 
@@ -51,9 +51,8 @@ class InspectSpec extends AnyFunSuite with SessionSuite {
     // the spectral kernels are native expressions: only the events
     // assembly's bucket-combine UDF is left in the three spectral plans
     assert(lines.take(3).map(udfs) == Seq(1, 1, 1), lines.mkString("\n"))
-    // q21 adds its NaN planting, the window split and CAR's two per-block
-    // UDFs
-    assert(udfs(lines(3)) == 1 + 1 + 1 + 2, lines(3))
+    // q21 adds its NaN planting and the window split; CAR is native
+    assert(udfs(lines(3)) == 1 + 1 + 1, lines(3))
   }
 
   test("Inspect plan counts the expressions that generate no code") {
@@ -98,6 +97,27 @@ class InspectSpec extends AnyFunSuite with SessionSuite {
       assert(census.values.sum == m.get.group(1).toInt, line)
       assert(!census.contains("chmod") && !census.contains("readlink"), line)
     }
+  }
+
+  test("Inspect plan and profile take a session store: one job, no UDF, two id-placed exchanges") {
+    val root = tempDir("inspect_store")
+    val dir = root.resolve("sess8")
+    new graft.store.NwbStore(dir.toString, spark).writeAcquisition("ECoG",
+      graft.model.Synthetic.segments(spark, 0.5, 8, 12207.03125, seed = 3))
+    assert(Inspect.isStore(dir.toString) && !Inspect.isStore(sf))
+    val out = root.resolve("out")
+    val line = Inspect.planStore(spark, dir.toString, out)
+    assert(line.exists(_.startsWith("[plan] sess8 exchanges=2 reused=0 broadcastJoins=0 " +
+      "sortMergeJoins=0 fileScans=1 cartesian=0 rddScans=0 localScans=0 udfs=0 fallbacks=0 ")),
+      line)
+    val plan = Files.readString(out.resolve("sess8.txt"))
+    assert(!plan.contains("AdaptiveSparkPlan"), plan.take(500))
+    assert("Arguments: shufflepartitionidpassthrough".r.findAllIn(plan).size == 2, plan)
+    val Some((name, jobs)) = Inspect.profileStore(spark, dir.toString, out)
+    assert(name == "sess8" && jobs.size == 1, jobs.map(_.line).mkString("\n"))
+    assert(Files.readAllLines(out.resolve("sess8.jobs.txt")).size == 1)
+    intercept[IllegalArgumentException](
+      Inspect.main(Array("plan", dir.toString, out.toString, q21)))
   }
 
   test("Inspect and Bench reject an unknown query name before anything runs") {

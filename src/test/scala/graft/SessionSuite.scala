@@ -30,25 +30,10 @@ trait SessionSuite extends BeforeAndAfterAll { this: Suite =>
     } finally super.afterAll()
 
   def withConf[T](kv: (String, String)*)(body: => T): T =
-    SessionSuite.withConf(spark, kv: _*)(body)
+    Session.withConf(spark)(kv: _*)(body)
 }
 
 object SessionSuite {
-
-  /** Runs `body` with each `key -> value` set on `spark`, then puts every
-    * key back to its prior value, or unsets it if it had none, also when
-    * `body` throws. */
-  def withConf[T](spark: SparkSession, kv: (String, String)*)(body: => T): T = {
-    // getAll holds the keys set on the session; getOption would also
-    // return a default and turn it into a set key on restore
-    val set = spark.conf.getAll
-    val prior = kv.map { case (k, _) => k -> set.get(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally prior.reverse.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 
   /** Every key whose value differs between the two conf snapshots, as
     * `key: before -> after`, sorted by key. */

@@ -65,7 +65,7 @@ object Soak {
     spark.sparkContext.setLogLevel("ERROR")
     val metrics = JobMetrics.attach(spark)
     val t0 = System.nanoTime()
-    SessionSuite.withConf(spark, soak.confs: _*)(soak.run(spark, new Args(args)))
+    Session.withConf(spark)(soak.confs: _*)(soak.run(spark, new Args(args)))
     val wallS = (System.nanoTime() - t0) / 1e9
     metrics.settle()
     val jobs = metrics.jobs

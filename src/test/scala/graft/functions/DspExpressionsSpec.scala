@@ -12,7 +12,7 @@ import graft.operators.{DspOperators, Pipeline}
   * `wavelet_bands`, `wavelet_amplitude`): bit-identical to the `Signal` /
   * `Signal32` kernels called on the driver, under codegen and interpreted;
   * the amplitude-only wavelet equal to `amplitude(waveletTransform(...))`;
-  * null-safe; and the UDFs left in `preprocessBlock`'s plan. */
+  * null-safe; and no UDF left in `preprocessBlock`'s plan. */
 class DspExpressionsSpec extends AnyFunSuite with graft.SessionSuite {
 
   import spark.implicits._
@@ -148,15 +148,13 @@ class DspExpressionsSpec extends AnyFunSuite with graft.SessionSuite {
     assert((1 to 4).forall(sql(1).isNullAt))
   }
 
-  test("preprocessBlock's plan keeps Scala UDFs only in CAR's per-block kernel") {
-    val plan = Pipeline.preprocessBlock(raw, 3, Pipeline.Config(precision = "single"))
+  test("preprocessBlock's plan holds no Scala UDF and no interpreted expression") {
+    val plan = Pipeline.preprocessBlock(raw, Pipeline.Config(precision = "single"))
       .queryExecution.executedPlan
-    // the two per-block UDFs of CommonReferencing (split, then rebuild),
-    // and no interpreted expression
-    assert(graft.Inspect.census(plan).endsWith(" udfs=2 fallbacks=0"),
+    assert(graft.Inspect.census(plan).endsWith(" udfs=0 fallbacks=0"),
       graft.Inspect.census(plan))
     val names = plan.toString
-    Seq("segment_resample", "segment_notch", "wavelet_amplitude")
-      .foreach(f => assert(names.contains(f), s"$f missing from\n$names"))
+    Seq("segment_resample", "segment_notch", "segment_blocks", "car_subtract_block",
+      "wavelet_amplitude").foreach(f => assert(names.contains(f), s"$f missing from\n$names"))
   }
 }

@@ -128,7 +128,7 @@ class GridExpressionsSpec extends AnyFunSuite with graft.SessionSuite {
       val ovDir = s"$dir/ov"
       Seq((Seq(3e9, 3e9), Seq(1e9, 1e9))).toDF("a", "b")
         .write.mode("overwrite").parquet(ovDir)
-      graft.SessionSuite.withConf(ext, "spark.sql.ansi.enabled" -> "true") {
+      graft.Session.withConf(ext)("spark.sql.ansi.enabled" -> "true") {
         val ansi = ext.read.parquet(ovDir).select(expr(hof).as("d"))
         val opt = ansi.queryExecution.optimizedPlan.toString
         assert(opt.contains("floor_dot_e9"),
@@ -140,7 +140,7 @@ class GridExpressionsSpec extends AnyFunSuite with graft.SessionSuite {
             overflowy(t.getCause))
         assert(overflowy(ex), s"expected overflow failure, got $ex")
       }
-      graft.SessionSuite.withConf(ext, "spark.sql.ansi.enabled" -> "false") {
+      graft.Session.withConf(ext)("spark.sql.ansi.enabled" -> "false") {
         val legacy = ext.read.parquet(ovDir).select(expr(hof).as("d"))
         assert(legacy.queryExecution.optimizedPlan.toString.contains("floor_dot_e9"))
         // wrapping parity: 2 * Long.MaxValue wraps to -2 in both forms

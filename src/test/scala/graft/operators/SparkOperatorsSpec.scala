@@ -233,8 +233,8 @@ class SparkOperatorsSpec extends AnyFunSuite with graft.SessionSuite {
     val raw = Synthetic.segments(spark, 1.0, 8, 2000.0, seed = 3)
     val cfg = Pipeline.Config(initialRate = 1000.0, finalRate = Some(250.0),
       filters = "human", hgOnly = true, scaling = 1.0)
-    val one = Pipeline.preprocessBlock(raw.coalesce(1), 8, cfg)
-    val many = Pipeline.preprocessBlock(raw.repartition(8), 8, cfg)
+    val one = Pipeline.preprocessBlock(raw.coalesce(1), cfg)
+    val many = Pipeline.preprocessBlock(raw.repartition(8), cfg)
     val a = collectTraces(one)
     val b = collectTraces(many)
     assert(a.keySet == b.keySet)
@@ -255,7 +255,7 @@ class SparkOperatorsSpec extends AnyFunSuite with graft.SessionSuite {
     val synthetic = Synthetic.segments(spark, 1.0, 8, 2000.0, seed = 3)
     val raw = spark.createDataFrame(
       java.util.Arrays.asList(synthetic.collect(): _*), synthetic.schema)
-    Pipeline.preprocessBlock(raw, 8, Pipeline.Config(initialRate = 1000.0,
+    Pipeline.preprocessBlock(raw, Pipeline.Config(initialRate = 1000.0,
       finalRate = Some(250.0), filters = "human", hgOnly = true, scaling = 1.0))
   }
 
@@ -354,7 +354,7 @@ class SparkOperatorsSpec extends AnyFunSuite with graft.SessionSuite {
     val notched = collectTraces(DspOperators.applyLinenoiseNotch(raw))((0, None))
     assert(power60(before, rate) / power60(notched, rate) > 100.0, "60 Hz not removed")
 
-    val amp = Pipeline.preprocessBlock(raw, 8,
+    val amp = Pipeline.preprocessBlock(raw,
       Pipeline.Config(initialRate = 1000.0, finalRate = None, filters = "human",
         hgOnly = true, scaling = 1.0))
     val hg = Pipeline.highGammaTrace(amp, baselineSamples = 125)

@@ -125,6 +125,30 @@ class StoreAndStreamingSpec extends AnyFunSuite with graft.SessionSuite {
     assert(spark.conf.get("spark.sql.shuffle.partitions") == callerParts)
   }
 
+  test("the stream sink reads back with the query's schema: equal to the inferred one, no job") {
+    import graft.operators.DspOperators
+    val stage = stageRecording("schema_stream", 2, sin($"id" / 40.0) + $"id" % 4)
+    def amplitude(events: org.apache.spark.sql.DataFrame) =
+      DspOperators.amplitude(DspOperators.waveletTransform(
+        DspOperators.applyLinenoiseNotch(shortWindows(events), continuousProfile = true,
+          precision = "single"), "human", hgOnly = true, precision = "single"))
+    val metrics = graft.JobMetrics.attach(spark)
+    try {
+      val sink = graft.JobMetrics.phase(spark, "stream")(
+        StreamingOps.runToParquetOrdered(spark, stage.toString, "schema_stream", amplitude))
+      metrics.settle()
+      // from the first micro-batch on, every job ran inside one: none
+      // inferred the sink's schema (the one before is the events source's)
+      val jobs = metrics.jobs("stream").dropWhile(!_.desc.contains("batch = "))
+      assert(jobs.nonEmpty && jobs.forall(_.desc.contains("batch = ")),
+        metrics.jobs("stream").map(_.line).mkString("\n"))
+      val inferred = spark.read.parquet(sink.inputFiles.head.replaceAll("/[^/]+$", ""))
+      assert(sink.schema == inferred.schema, s"${sink.schema.treeString}\n${inferred.schema.treeString}")
+      assert(sink.collect().map(_.toString).sorted.sameElements(
+        inferred.collect().map(_.toString).sorted))
+    } finally spark.sparkContext.removeSparkListener(metrics)
+  }
+
   /** `windowedSegmentsStream`'s context membership written as before it
     * was code-generated: `array_compact` over the three candidate offsets,
     * then a stub filter with `exists` over the assembled sample times. */
@@ -251,10 +275,19 @@ class StoreAndStreamingSpec extends AnyFunSuite with graft.SessionSuite {
       graft.streaming.StreamingOps.deleteOnExit(java.nio.file.Paths.get(root))
       val store = new NwbStore(s"$root/sess0", spark)
       store.writeAcquisition("ECoG", raw)
-      PreprocessFolder.preprocessStore(store, PreprocessFolder.parse(Array(root,
-        "--initial-rate", "1000", "--final-rate", "250", "--filters", "human",
-        "--precision", precision)))
-      val expected = NwbStore.withPrecision(Pipeline.preprocessBlock(raw, 4,
+      val metrics = graft.JobMetrics.attach(spark)
+      try {
+        graft.JobMetrics.phase(spark, "fused")(
+          PreprocessFolder.preprocessStore(store, PreprocessFolder.parse(Array(root,
+            "--initial-rate", "1000", "--final-rate", "250", "--filters", "human",
+            "--precision", precision))))
+        metrics.settle()
+        // no channel count, and the write's two shuffles are stages of one job
+        val jobs = metrics.jobs("fused")
+        assert(jobs.size == 1 && jobs.head.stages == 3, jobs.map(_.line).mkString("\n"))
+      } finally spark.sparkContext.removeSparkListener(metrics)
+      assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+      val expected = NwbStore.withPrecision(Pipeline.preprocessBlock(raw,
         Pipeline.Config(initialRate = 1000.0, finalRate = Some(250.0), filters = "human",
           scaling = 1.0, precision = precision)), precision)
       val stored = traces(store.readProcessing("wvlt_amp_CAR_ln_downsampled_ECoG"))
@@ -271,7 +304,7 @@ class StoreAndStreamingSpec extends AnyFunSuite with graft.SessionSuite {
     val root = Files.createTempDirectory("subcar").toString
     graft.streaming.StreamingOps.deleteOnExit(java.nio.file.Paths.get(root))
     val raw = Synthetic.segments(spark, 0.5, 6, 1000.0, seed = 21)
-    Store.storeSubtractCar(raw, root, "ECoG", nChannels = 6)
+    Store.storeSubtractCar(raw, root, "ECoG")
     // reference table names (common_referencing.py:104,117): CAR_<name> for
     // the referenced data, the literal name CAR for the average series
     val referenced = spark.read.parquet(s"$root/preprocessing/CAR_ECoG")
@@ -295,7 +328,7 @@ class StoreAndStreamingSpec extends AnyFunSuite with graft.SessionSuite {
     val root = Files.createTempDirectory("allsteps").toString
     graft.streaming.StreamingOps.deleteOnExit(java.nio.file.Paths.get(root))
     val raw = Synthetic.segments(spark, 0.5, 4, 2000.0, seed = 5)
-    Store.storePreprocessBlock(raw, root, "ECoG", nChannels = 4,
+    Store.storePreprocessBlock(raw, root, "ECoG",
       Pipeline.Config(initialRate = 1000.0, finalRate = Some(250.0), filters = "human"))
     val tables = new java.io.File(s"$root/preprocessing").listFiles().map(_.getName).toSet
     assert(tables == Set("downsampled_ECoG", "CAR_ln_downsampled_ECoG",

@@ -84,7 +84,7 @@ object CcScaleSoak {
 
     // --- union-find tier on the SAME edges, cap raised past the count ---
     val uf = phase(spark, "unionFindTier") {
-      val cc = graft.SessionSuite.withConf(spark,
+      val cc = graft.Session.withConf(spark)(
         TextOps.CcLocalEdgeCapKey -> (nEdges + 1).toString)(TextOps.connectedComponents(edges))
       cc.count()
       cc
